@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query against SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":N,"unit":"sec","queries":{..}}.
@@ -12,9 +11,10 @@ import org.apache.spark.sql.SparkSession
   * failures are NOT swallowed into a fast-looking time: the query gets
   * value -1 and its message lands in an "errors" object.
   *
-  * Measurement note: six gates guard an exact-regime precondition with a
-  * small aggregate memoized per (JVM, dataset dir) — Registry's
-  * `*Precondition` maps — so pass 1 pays that scan and passes 2..n skip
+  * Measurement note: seven gates guard an exact-regime precondition with
+  * a small aggregate memoized per (JVM, dataset dir) through
+  * `Registry.memoPrecondition` (six keys: q_quantile_sketch and
+  * q_winsorize share one) — so pass 1 pays that scan and passes 2..n skip
   * it; the min-over-passes therefore times the gate WITHOUT the guard
   * scan. This is a declared exclusion (the guard is an assertion about
   * the fixture, not part of the measured computation), identical across
@@ -29,31 +29,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing targets shuffle BYTES (default 1 MB minimum per
-      // partition), which serializes compute-dense, byte-light reduce
-      // stages (pair similarity, set intersection) onto a handful of
-      // tasks at small inputs. A 256 KB floor keeps such stages at
-      // near-full parallelism; at scale partitions dwarf 256 KB so the
-      // knob is inert — coalescing behaves exactly as before. 256 KB (not
-      // lower): per-task constants of sort-merge stages bite below it on
-      // tiny-shuffle graph joins — empirically the best whole-suite point
-      // (guide §2.2/§2.5: partitioning derived from input size, not a
-      // local constant).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
-      // the exact-arithmetic paths (ExactSum limb sums, long products)
-      // rely on ANSI mode RAISING on overflow rather than wrapping; it is
-      // the Spark 4.x default, but pin it so a deployment that flips the
-      // default cannot silently convert loud failure into corrupt sums
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session("graft-bench")
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"; case '\r' => "\\r"
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString

@@ -3,7 +3,7 @@ package graft
 import graft.adt._
 import graft.core.FxType
 import graft.exec.{SqlRenderer, Translator}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** A named query with its Spark implementation and (when SQL-expressible) the
   * equivalent DuckDB oracle SQL used by the driver's differential gate.
@@ -32,37 +32,81 @@ object Registry {
 
   private def scratch(name: String): String = s"$scratchRoot/$name"
 
-  /** Per-dataset-dir cache of the q_freq_items exact-regime precondition
-    * (max distinct langs per source) — a property of the files, computed
-    * once, not once per bench pass.
+  /** [[scratch]] path of a store that each run rebuilds from nothing: the
+    * store and its AtomicStore tmp and stash siblings are deleted first,
+    * so an earlier run's or an interrupted run's state cannot leak in.
     */
-  private[graft] val freqItemsPrecondition =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def freshStore(s: SparkSession, name: String): String = {
+    val store = scratch(name)
+    val p = new org.apache.hadoop.fs.Path(store)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    Seq(p, graft.sources.AtomicStore.tmpPath(p), graft.sources.AtomicStore.stashPath(p))
+      .foreach(fs.delete(_, true))
+    store
+  }
 
-  /** Per-dataset-dir cache of the q_quantile_sketch exact-regime
-    * precondition (max orders per customer) — same memoization rationale
-    * as [[freqItemsPrecondition]].
+  /** Exact-regime preconditions, memoized per (precondition, dataset dir).
+    * A gate whose exact oracle comparison needs a property of the input
+    * files (a group size below a sketch's capacity) checks it with one
+    * small aggregate; the answer belongs to the files, not to the run, so
+    * it is computed once per JVM and dir, not once per bench pass. Gates
+    * that assert the same property share one key.
     */
-  private[graft] val quantileSketchPrecondition =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val preconditions =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
 
-  /** Per-dataset-dir cache of the q_kmv_set_ops exact-regime precondition
-    * (total distinct text fingerprints) — same memoization rationale.
-    */
-  private[graft] val kmvSetPrecondition =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private[graft] def memoPrecondition(key: String, dir: String)(compute: => Long): Long =
+    preconditions.computeIfAbsent((key, dir), _ => compute)
 
-  /** Per-dataset-dir cache of the q_windowed_quantiles exact-regime
-    * precondition (max events per hourly bucket) — same rationale.
+  /** Money column as exact integer cents: through decimal(18,2), so no
+    * float rounding reaches the long. [[centsSql]] is its oracle-SQL twin.
     */
-  private[graft] val windowedQuantilesPrecondition =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private[graft] def cents(c: String): Column =
+    (org.apache.spark.sql.functions.col(c).cast("decimal(18,2)") * 100).cast("long")
 
-  /** Per-dataset-dir cache of the q_quantile_store exact-regime
-    * precondition (max documents per lang) — same rationale.
+  private[graft] def centsSql(c: String): String =
+    s"CAST(CAST($c AS DECIMAL(18,2)) * 100 AS BIGINT)"
+
+  /** Dense daily order revenue in cents per `o_orderpriority` (the
+    * time-series gates' input); [[dailyCentsSpineSql]] is its oracle body.
     */
-  private[graft] val quantileStorePrecondition =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def dailyCentsSpine(orders: DataFrame): DataFrame =
+    graft.operators.DenseSeries.denseDaily(orders.withColumn("cents", cents("o_totalprice")),
+      "o_orderpriority", "o_orderdate", "cents")
+
+  private def dailyCentsSpineSql: String =
+    graft.operators.DenseSeries.denseDailyOracleBody(
+      "orders", "o_orderpriority", "o_orderdate", centsSql("o_totalprice"))
+
+  /** Co-purchase graph edges `(src, dst)`: each pair of distinct parts on
+    * lines of one order, both lines with quantity >= `minQty`, once with
+    * src < dst. `extra` columns may read the `a` and `b` sides.
+    * [[coPurchaseEdgesSql]] is its oracle-SQL twin.
+    */
+  private[graft] def coPurchaseEdges(lineitem: DataFrame, minQty: Int,
+                                     extra: Column*): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val li = lineitem.where(col("l_quantity") >= minQty)
+      .select(col("l_orderkey"), col("l_partkey"))
+    li.as("a").join(li.as("b"),
+        col("a.l_orderkey") === col("b.l_orderkey") && col("a.l_partkey") < col("b.l_partkey"))
+      .select(Seq(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst")) ++ extra: _*)
+  }
+
+  private val coPurchaseOnSql = "a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey"
+
+  private[graft] def coPurchaseEdgesSql(minQty: Int, extra: String*): String =
+    s"""SELECT a.l_partkey AS src, b.l_partkey AS dst${extra.map(",\n    " + _).mkString}
+  FROM lineitem a JOIN lineitem b
+    ON $coPurchaseOnSql
+  WHERE a.l_quantity >= $minQty AND b.l_quantity >= $minQty"""
+
+  /** [[coPurchaseEdgesSql]] with the quantity filter inside each join side. */
+  private[graft] def coPurchaseEdgesPrefilteredSql(minQty: Int): String =
+    s"""SELECT a.l_partkey AS src, b.l_partkey AS dst
+FROM (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= $minQty) a
+JOIN (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= $minQty) b
+  ON $coPurchaseOnSql"""
 
   /** q_sample_mix quotas: uneven on purpose (some above the per-source row
     * count at small SFs — groups smaller than their quota emit all rows).
@@ -1044,12 +1088,12 @@ SELECT doc_id, ${sniffMimeSql("p")} AS mime, ${mediaKindSql("p")} AS kind,
           // memoized per dataset dir: the check is one small aggregation,
           // but gates run repeatedly (bench passes) and the answer is a
           // property of the files, not the run
-          val maxDistinct = Registry.freqItemsPrecondition.computeIfAbsent(dir, _ => {
+          val maxDistinct = memoPrecondition("freqItems", dir) {
             import org.apache.spark.sql.functions.{countDistinct, max}
             val row = docs.groupBy("source")
               .agg(countDistinct(col("lang")).as("d")).agg(max(col("d"))).head
             if (row.isNullAt(0)) 0L else row.getLong(0) // empty table: trivially fine
-          })
+          }
           require(maxDistinct <= 32,
             s"q_freq_items exact-regime precondition broken: a source has " +
               s"$maxDistinct distinct langs > k=32; counts would be approximate")
@@ -1343,8 +1387,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
           // zero; DuckDB // floors — they only agree on non-negatives)
           def side(par: Int) = c
             .where(pmod(col("c_custkey"), lit(2)) === par)
-            .withColumn("bal_c",
-              (col("c_acctbal").cast("decimal(18,2)") * 100).cast("long"))
+            .withColumn("bal_c", cents("c_acctbal"))
             .withColumn("bal_bucket",
               expr("cast(signum(bal_c) as bigint) * (abs(bal_c) div 100000)"))
             .withColumn("bal_sign", expr("cast(signum(bal_c) as bigint)"))
@@ -1362,7 +1405,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
             "SELECT c_custkey, c_nationkey, c_mktsegment, " +
               "CAST(sign(bal_c) * (abs(bal_c) // 100000) AS BIGINT) AS bal_bucket, " +
               "CAST(sign(bal_c) AS BIGINT) AS bal_sign FROM " +
-              "(SELECT *, CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS bal_c " +
+              s"(SELECT *, ${centsSql("c_acctbal")} AS bal_c " +
               s"FROM customer WHERE c_custkey % 2 = $par)"
           graft.operators.RecordLinkage.scoreOracle(sideSql(0), sideSql(1),
             blockOn = Seq("c_nationkey" -> "c_nationkey"),
@@ -1419,12 +1462,12 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
           val rev = Tables.resolve(s, dir)("orders")
             .groupBy(col("o_custkey"))
             .agg(org.apache.spark.sql.functions.sum(
-              (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+              cents("o_totalprice"))
               .as("rev_c"))
           graft.operators.Gini.gini(rev, "rev_c", "o_custkey")
         },
         Some(graft.operators.Gini.giniOracle(
-          "(SELECT o_custkey, CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c " +
+          s"(SELECT o_custkey, CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS rev_c " +
             "FROM orders GROUP BY 1)",
           "rev_c", "o_custkey"))),
 
@@ -1486,12 +1529,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
         (s, dir) => {
           import org.apache.spark.sql.functions.col
           import graft.operators.TopKStore
-          val store = scratch("topk_store")
-          val p = new org.apache.hadoop.fs.Path(store)
-          import graft.sources.AtomicStore
-          val fsys = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p))
-            .foreach(x => fsys.delete(x, true))
+          val store = freshStore(s, "topk_store")
           val o = Tables.resolve(s, dir)("orders")
           val cuts = Seq("1994-01-01", "1996-06-01")
           Seq(
@@ -1513,13 +1551,12 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
           import org.apache.spark.sql.functions.col
           graft.operators.Calibration.liftTable(
               Tables.resolve(s, dir)("orders")
-                .withColumn("price_c",
-                  (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+                .withColumn("price_c", cents("o_totalprice")),
               "price_c", "o_orderkey", col("o_orderstatus") === "F", k = 10)
             .orderBy("bucket")
         },
         Some(graft.operators.Calibration.liftOracle(
-          "orders", "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)",
+          "orders", centsSql("o_totalprice"),
           "o_orderkey", "CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END", k = 10))),
 
       // sorted-neighborhood linkage blocking: rank via the global-sort-
@@ -1527,17 +1564,15 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
       RegisteredQuery(
         "q_sorted_neighborhood",
         (s, dir) => {
-          import org.apache.spark.sql.functions.col
           graft.operators.SortedNeighborhood.candidates(
               Tables.resolve(s, dir)("customer")
-                .withColumn("bal_c",
-                  (col("c_acctbal").cast("decimal(18,2)") * 100).cast("long")),
+                .withColumn("bal_c", cents("c_acctbal")),
               "c_custkey", "bal_c", w = 3)
             .orderBy("id_a", "id_b")
         },
         Some(graft.operators.SortedNeighborhood.candidatesOracle(
           "customer", "c_custkey",
-          "CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)", w = 3))),
+          centsSql("c_acctbal"), w = 3))),
 
       // mutual-information cells between two categorical columns: the
       // dependence MEASURE beside q_chisq_cells' TEST — same one-shuffle
@@ -1598,15 +1633,14 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
       RegisteredQuery(
         "q_rfm",
         (s, dir) => {
-          import org.apache.spark.sql.functions.col
           graft.operators.Rfm.rfmScores(
               Tables.resolve(s, dir)("orders"), "o_custkey", "o_orderdate",
-              (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"), k = 5)
+              cents("o_totalprice"), k = 5)
             .orderBy("o_custkey")
         },
         Some(graft.operators.Rfm.rfmOracle(
           "orders", "o_custkey", "o_orderdate",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)", k = 5))),
+          centsSql("o_totalprice"), k = 5))),
 
       // exact containment join (quotation / wholesale-inclusion detector —
       // the asymmetric pairs Jaccard and MinHash both miss): smaller-side
@@ -2392,12 +2426,7 @@ FROM aug ORDER BY doc_id""".stripMargin
         "q_agg_incremental",
         (s, dir) => {
           import graft.operators.IncrementalAgg._
-          val store = scratch("agg_incremental")
-          val p = new org.apache.hadoop.fs.Path(store)
-          val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          import graft.sources.AtomicStore
-          Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p))
-            .foreach(d => f.delete(d, true))
+          val store = freshStore(s, "agg_incremental")
           val li = Tables.resolve(s, dir)("lineitem")
             .withColumn("qty_dec", col("l_quantity").cast("decimal(18,6)"))
           val specs = Seq(Count("cnt"), Sum("qty_dec", "sum_qty"),
@@ -2424,12 +2453,7 @@ ORDER BY l_returnflag, l_linestatus""")),
       RegisteredQuery(
         "q_metrics_ingest",
         (s, dir) => {
-          val store = scratch("metrics_ingest")
-          val p = new org.apache.hadoop.fs.Path(store)
-          val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          import graft.sources.AtomicStore
-          Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p))
-            .foreach(d => f.delete(d, true))
+          val store = freshStore(s, "metrics_ingest")
           import graft.operators.IncrementalAgg
           val ev = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
             .withColumn("value_dec", col("value").cast("decimal(18,6)"))
@@ -2468,7 +2492,7 @@ FROM events GROUP BY event_type ORDER BY event_type""")),
               pmod(col("o_orderkey"), lit(5)) === 0)
             .select(col("o_orderkey"), col("o_orderstatus"),
               lit(b.toLong).as("ver"),
-              ((col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+              (cents("o_totalprice")
                 + b).as("amount_c"))
           (0 until 3).foreach { b =>
             graft.streaming.LakeIngest.ingestBatch(batch(b), lake,
@@ -2479,9 +2503,9 @@ FROM events GROUP BY event_type ORDER BY event_type""")),
               col("amount_c"))
             .orderBy("o_orderkey")
         },
-        Some("""SELECT o_orderkey, o_orderstatus,
+        Some(s"""SELECT o_orderkey, o_orderstatus,
 CAST(CASE WHEN o_orderkey % 5 = 0 THEN 2 ELSE o_orderkey % 3 END AS BIGINT) AS ver,
-CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+${centsSql("o_totalprice")}
   + (CASE WHEN o_orderkey % 5 = 0 THEN 2 ELSE o_orderkey % 3 END) AS amount_c
 FROM orders ORDER BY o_orderkey""")),
 
@@ -2539,25 +2563,24 @@ ORDER BY doc_id""")),
         "q_quantile_sketch",
         (s, dir) => {
           val orders = Tables.resolve(s, dir)("orders")
-          val maxPerCust = Registry.quantileSketchPrecondition.computeIfAbsent(dir, _ => {
+          val maxPerCust = memoPrecondition("quantileSketch", dir) {
             val row = orders.groupBy("o_custkey").agg(count(lit(1)).as("n"))
               .agg(max(col("n"))).head
             if (row.isNullAt(0)) 0L else row.getLong(0)
-          })
+          }
           require(maxPerCust < 128,
             s"q_quantile_sketch exact-regime precondition broken: a customer has " +
               s"$maxPerCust orders >= 2k=128 — the sketch would compress and the " +
               "exact oracle comparison becomes meaningless; regenerate or raise k")
           graft.functions.Quantiles.perGroup(
-              orders.withColumn("__cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              orders.withColumn("__cents", cents("o_totalprice")),
               Seq("o_custkey"), col("__cents"),
               k = 64, qs = Seq((1L, 2L), (9L, 10L)), names = Seq("p50", "p90"))
             .orderBy("o_custkey")
         },
-        Some("""SELECT o_custkey,
-quantile_disc(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT), 0.5) AS p50,
-quantile_disc(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT), 0.9) AS p90
+        Some(s"""SELECT o_custkey,
+quantile_disc(${centsSql("o_totalprice")}, 0.5) AS p50,
+quantile_disc(${centsSql("o_totalprice")}, 0.9) AS p90
 FROM orders GROUP BY o_custkey ORDER BY o_custkey""")),
 
       // pivot with pinned values: one partial-agg'd group-by, |values|
@@ -2599,12 +2622,7 @@ UNION ALL SELECT l_orderkey, l_linenumber, 'disc', CAST(l_discount AS DOUBLE) FR
         "q_scd2",
         (s, dir) => {
           import graft.operators.Scd2
-          import graft.sources.AtomicStore
-          val store = scratch("scd2_store")
-          val p = new org.apache.hadoop.fs.Path(store)
-          val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p))
-            .foreach(x => f.delete(x, true))
+          val store = freshStore(s, "scd2_store")
           val ch = Tables.resolve(s, dir)("orders").select(
             col("o_custkey").as("k"), col("o_orderstatus").as("status"),
             col("o_orderdate").as("eff"), col("o_orderkey").as("seq"))
@@ -2659,12 +2677,11 @@ FROM orders o JOIN dim d ON o.o_custkey = d.k
         "q_resample_linear",
         (s, dir) => graft.operators.Resample.gapFillLinear(
             graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
-              .withColumn("cents",
-                (col("value").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("value")),
             "user_id", "ts", "cents", interval = "6 hours"),
         Some(graft.operators.Resample.gapFillLinearOracle(
           "events", "user_id", "ts",
-          "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)",
+          centsSql("value"),
           intervalSql = "INTERVAL 6 HOUR"))),
 
       // weekly cohort retention matrix over the event stream: date_trunc
@@ -2869,7 +2886,7 @@ WHERE p_size = 15 GROUP BY p_brand ORDER BY p_brand""")),
         (s, dir) => {
           val k = 8192
           val docs = Tables.resolve(s, dir)("documents")
-          val total = Registry.kmvSetPrecondition.computeIfAbsent(dir, _ =>
+          val total = memoPrecondition("kmvSet", dir)(
             docs.select(fingerprint(col("text"))).distinct().count())
           require(total <= k,
             s"q_kmv_set_ops exact-regime precondition broken: $total distinct " +
@@ -3009,28 +3026,27 @@ FROM p""")),
         "q_winsorize",
         (s, dir) => {
           val orders = Tables.resolve(s, dir)("orders")
-          val maxPerCust = Registry.quantileSketchPrecondition.computeIfAbsent(dir, _ => {
+          val maxPerCust = memoPrecondition("quantileSketch", dir) {
             val row = orders.groupBy("o_custkey").agg(count(lit(1)).as("n"))
               .agg(max(col("n"))).head
             if (row.isNullAt(0)) 0L else row.getLong(0)
-          })
+          }
           require(maxPerCust < 128,
             s"q_winsorize exact-regime precondition broken: a customer has " +
               s"$maxPerCust orders >= 2k=128 — the KLL summary would compress and " +
               "the exact oracle comparison becomes meaningless; raise k")
-          val cents = (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
           graft.functions.Quantiles.winsorizePerGroup(
-              orders.withColumn("__cents", cents),
+              orders.withColumn("__cents", cents("o_totalprice")),
               Seq("o_custkey"), col("__cents"),
               k = 64, lo = (1L, 10L), hi = (9L, 10L), outCol = "cents_w")
             .select(col("o_orderkey"), col("o_custkey"), col("cents_w"))
         },
-        Some("""WITH b AS (SELECT o_custkey,
-  quantile_disc(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT), 0.1) AS lo,
-  quantile_disc(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT), 0.9) AS hi
+        Some(s"""WITH b AS (SELECT o_custkey,
+  quantile_disc(${centsSql("o_totalprice")}, 0.1) AS lo,
+  quantile_disc(${centsSql("o_totalprice")}, 0.9) AS hi
   FROM orders GROUP BY o_custkey)
 SELECT o_orderkey, o.o_custkey,
-  least(greatest(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT), lo), hi) AS cents_w
+  least(greatest(${centsSql("o_totalprice")}, lo), hi) AS cents_w
 FROM orders o JOIN b ON o.o_custkey = b.o_custkey""")),
 
       // TPC-H Q3 shape (shipping priority): selective dim broadcast into a
@@ -3837,20 +3853,11 @@ ORDER BY s_name""")),
       RegisteredQuery(
         "q_triangle_count",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 30)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 30)
           graft.operators.Triangles.perVertex(edges)
         },
         Some(graft.operators.Triangles.perVertexOracle(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 30 AND b.l_quantity >= 30"""))),
+          coPurchaseEdgesSql(30)))),
 
       // BM25 relevance scoring, integer-exact: rational tf saturation as
       // one integer division, per-term ln quantized once (QuantizedDot
@@ -3919,12 +3926,11 @@ ORDER BY s_name""")),
         (s, dir) => graft.operators.GroupedTrend.slope(
           Tables.resolve(s, dir)("orders")
             .withColumn("x_days", datediff(col("o_orderdate"), lit("1992-01-01")))
-            .withColumn("cents",
-              (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+            .withColumn("cents", cents("o_totalprice")),
           Seq("o_custkey"), "x_days", "cents"),
         Some(graft.operators.GroupedTrend.oracleSql("orders", Seq("o_custkey"),
           xSql = "date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))",
-          ySql = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          ySql = centsSql("o_totalprice")))),
 
       // exact grouped Pearson correlation components (feature screening):
       // one shuffle of five decimal partials; integers gated, the IEEE-
@@ -3933,10 +3939,8 @@ ORDER BY s_name""")),
         "q_grouped_corr",
         (s, dir) => graft.operators.GroupedTrend.correlation(
             Tables.resolve(s, dir)("lineitem")
-              .withColumn("qty_c",
-                (col("l_quantity").cast("decimal(18,2)") * 100).cast("long"))
-              .withColumn("cents",
-                (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("qty_c", cents("l_quantity"))
+              .withColumn("cents", cents("l_extendedprice")),
             Seq("l_returnflag"), "qty_c", "cents")
           .drop("corr")
           // the exact moments exceed 64-bit range in general: hash their
@@ -3947,8 +3951,8 @@ ORDER BY s_name""")),
           .orderBy("l_returnflag"),
         Some(graft.operators.GroupedTrend.correlationOracle(
           "lineitem", Seq("l_returnflag"),
-          xSql = "CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)",
-          ySql = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          xSql = centsSql("l_quantity"),
+          ySql = centsSql("l_extendedprice")))),
 
       // per-class P/R/F1 report: a price-band heuristic "predicting"
       // order priority vs the actual label — one contingency collapse,
@@ -4086,8 +4090,7 @@ ORDER BY s_name""")),
                 datediff(col("o_orderdate").cast("date"),
                   lit("1970-01-01").cast("date")).cast("long").as("day"))
               .agg(count(lit(1)).cast("long").as("n_orders"),
-                sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-                  .cast("long")).as("cents")),
+                sum(cents("o_totalprice")).as("cents")),
             "o_orderpriority", "day", "n_orders", "cents", maxLag = 3)
           .drop("corr")
           .withColumn("corr_num", col("corr_num").cast("string"))
@@ -4095,10 +4098,10 @@ ORDER BY s_name""")),
           .withColumn("var_y", col("var_y").cast("string"))
           .orderBy("o_orderpriority", "lag"),
         Some(graft.operators.CrossCorr.oracleSql(
-          """(SELECT o_orderpriority,
+          s"""(SELECT o_orderpriority,
     date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day,
     count(*) AS n_orders,
-    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS cents
+    sum(${centsSql("o_totalprice")}) AS cents
   FROM orders GROUP BY 1, 2) daily""",
           "o_orderpriority", "day", "n_orders", "cents", maxLag = 3))),
 
@@ -4113,8 +4116,7 @@ ORDER BY s_name""")),
         (s, dir) => graft.operators.Spearman.correlationBucketed(
             Tables.resolve(s, dir)("lineitem")
               .withColumn("qty", col("l_quantity").cast("bigint"))
-              .withColumn("cents",
-                (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("l_extendedprice")),
             Seq("l_returnflag"), "qty", "cents",
             xBucketWidth = 8, yBucketWidth = 1000000L)
           .drop("corr")
@@ -4125,7 +4127,7 @@ ORDER BY s_name""")),
         Some(graft.operators.Spearman.oracleSql(
           "lineitem", Seq("l_returnflag"),
           xSql = "CAST(l_quantity AS BIGINT)",
-          ySql = "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          ySql = centsSql("l_extendedprice")))),
 
       // functional-dependency mining: which partkeys ship from multiple
       // suppliers — one partial-agg'd LHS groupBy, violation-sized output
@@ -4153,20 +4155,16 @@ ORDER BY s_name""")),
         "q_quantile_store",
         (s, dir) => {
           val docs = Tables.resolve(s, dir)("documents")
-          val maxPerLang = Registry.quantileStorePrecondition.computeIfAbsent(dir, _ => {
+          val maxPerLang = memoPrecondition("quantileStore", dir) {
             val row = docs.groupBy("lang").agg(count(lit(1)).as("n"))
               .agg(max(col("n"))).head
             if (row.isNullAt(0)) 0L else row.getLong(0)
-          })
+          }
           require(maxPerLang < 4096,
             s"q_quantile_store exact-regime precondition broken: a lang has " +
               s"$maxPerLang docs >= 2k=4096 — the summary would compact and the " +
               "exact oracle comparison becomes meaningless; raise k")
-          val store = scratch("quantile_store")
-          val p = new org.apache.hadoop.fs.Path(store)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          Seq(p, graft.sources.AtomicStore.tmpPath(p),
-            graft.sources.AtomicStore.stashPath(p)).foreach(fs.delete(_, true))
+          val store = freshStore(s, "quantile_store")
           (0 until 3).foreach { b =>
             graft.operators.QuantileStore.update(s, store,
               docs.where(pmod(col("doc_id"), lit(3)) === b),
@@ -4190,13 +4188,12 @@ FROM documents GROUP BY lang ORDER BY lang""")),
         "q_ab_test",
         (s, dir) => graft.operators.AbTest.compareToControl(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderstatus", "cents", controlArm = "O")
           .drop("welch_t").orderBy("arm"),
         Some(graft.operators.AbTest.oracleSql(
           "orders", "o_orderstatus",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)", "O"))),
+          centsSql("o_totalprice"), "O"))),
 
       // heterogeneous treatment effects: the A/B readout within every
       // order-priority segment; control joins back keyed by segment
@@ -4204,13 +4201,12 @@ FROM documents GROUP BY lang ORDER BY lang""")),
         "q_ab_segmented",
         (s, dir) => graft.operators.AbTest.compareToControlBySegment(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "o_orderstatus", "cents", controlArm = "O")
           .drop("welch_t").orderBy("segment", "arm"),
         Some(graft.operators.AbTest.segmentedOracleSql(
           "orders", "o_orderpriority", "o_orderstatus",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)", "O"))),
+          centsSql("o_totalprice"), "O"))),
 
       // CUPED-adjusted comparison: pooled θ from arms-sized moment sums,
       // raw and covariate-adjusted milli diffs side by side — all
@@ -4219,15 +4215,14 @@ FROM documents GROUP BY lang ORDER BY lang""")),
         "q_ab_cuped",
         (s, dir) => graft.operators.AbTest.cupedCompare(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+              .withColumn("cents", cents("o_totalprice"))
               .withColumn("x_days",
                 datediff(col("o_orderdate"), lit("1992-01-01")).cast("long")),
             "o_orderstatus", "cents", "x_days", controlArm = "O")
           .orderBy("arm"),
         Some(graft.operators.AbTest.cupedOracleSql(
           "orders", "o_orderstatus",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)",
+          centsSql("o_totalprice"),
           "date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))", "O"))),
 
       // sample-ratio-mismatch tripwire: observed arm counts vs intended
@@ -4248,11 +4243,11 @@ FROM documents GROUP BY lang ORDER BY lang""")),
         "q_windowed_quantiles",
         (s, dir) => {
           val e = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
-          val maxPerHour = Registry.windowedQuantilesPrecondition.computeIfAbsent(dir, _ => {
+          val maxPerHour = memoPrecondition("windowedQuantiles", dir) {
             val row = e.groupBy(date_trunc("hour", col("ts"))).agg(count(lit(1)).as("n"))
               .agg(max(col("n"))).head
             if (row.isNullAt(0)) 0L else row.getLong(0)
-          })
+          }
           require(maxPerHour < 256,
             s"q_windowed_quantiles exact-regime precondition broken: an hour has " +
               s"$maxPerHour events >= 2k=256 — the sketch would compress and the " +
@@ -4509,27 +4504,22 @@ FROM events GROUP BY 1 ORDER BY 1""")),
         "q_mad_outliers",
         (s, dir) => Outliers.madOutliers(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "cents", "o_orderkey", kNum = 2L, kDen = 1L)
           .orderBy("o_orderpriority", "o_orderkey"),
         Some(Outliers.madOracleSql(
-          "(SELECT o_orderkey, o_orderpriority, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders)",
+          s"(SELECT o_orderkey, o_orderpriority, ${centsSql("o_totalprice")} AS cents FROM orders)",
           "o_orderpriority", "cents", "o_orderkey", kNum = 2L, kDen = 1L))),
 
       // calendar densification: sparse (group, day) aggregate → dense
       // daily series with explicit zero rows over each group's span
       RegisteredQuery(
         "q_dense_series",
-        (s, dir) => graft.operators.DenseSeries.denseDaily(
-            Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
-            "o_orderpriority", "o_orderdate", "cents")
+        (s, dir) => dailyCentsSpine(Tables.resolve(s, dir)("orders"))
           .orderBy("o_orderpriority", "day"),
         Some(graft.operators.DenseSeries.denseDailyOracle(
           "orders", "o_orderpriority", "o_orderdate",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          centsSql("o_totalprice")))),
 
       // per-column completeness by day: one aggregate, per-column null
       // counts unstacked; nulls injected deterministically (events are
@@ -4558,13 +4548,12 @@ FROM events GROUP BY 1 ORDER BY 1""")),
         "q_wow_deltas",
         (s, dir) => graft.operators.Deltas.dayOverDay(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "o_orderdate", "cents")
           .orderBy("o_orderpriority", "day"),
         Some(graft.operators.Deltas.oracleSql(
           "orders", "o_orderpriority", "o_orderdate",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          centsSql("o_totalprice")))),
 
       // Pareto/ABC classification: exclusive-prefix share banding, exact
       // cross-multiplied thresholds, deterministic (value, id) rank
@@ -4572,13 +4561,12 @@ FROM events GROUP BY 1 ORDER BY 1""")),
         "q_abc_pareto",
         (s, dir) => graft.operators.Pareto.abcClassify(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "o_orderkey", "cents")
           .orderBy("o_orderpriority", "rank"),
         Some(graft.operators.Pareto.oracleSql(
           "orders", "o_orderpriority", "o_orderkey",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          centsSql("o_totalprice")))),
 
       // interval-union coverage: overlap-safe covered time per key via
       // the running-max sweep (derived overlapping order intervals)
@@ -4646,12 +4634,7 @@ FROM documents ORDER BY doc_id""")),
       RegisteredQuery(
         "q_distinct_store",
         (s, dir) => {
-          val store = scratch("distinct_store")
-          val p = new org.apache.hadoop.fs.Path(store)
-          val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          import graft.sources.AtomicStore
-          Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p))
-            .foreach(d => f.delete(d, true))
+          val store = freshStore(s, "distinct_store")
           val docs = Tables.resolve(s, dir)("documents")
           (0 until 3).foreach { b =>
             graft.operators.DistinctStore.update(s, store,
@@ -4685,12 +4668,11 @@ FROM documents ORDER BY doc_id""")),
         "q_trimmed_mean",
         (s, dir) => Outliers.trimmedMean(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "cents")
           .orderBy("o_orderpriority"),
         Some(Outliers.trimmedMeanOracleSql(
-          "(SELECT o_orderpriority, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders)",
+          s"(SELECT o_orderpriority, ${centsSql("o_totalprice")} AS cents FROM orders)",
           "o_orderpriority", "cents"))),
 
       // exact two-sample KS distance: distinct-value mass collapse, one
@@ -4699,16 +4681,15 @@ FROM documents ORDER BY doc_id""")),
         "q_ks_distance",
         (s, dir) => {
           val o = Tables.resolve(s, dir)("orders")
-            .withColumn("cents",
-              (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+            .withColumn("cents", cents("o_totalprice"))
           graft.operators.KsDistance.ksDistance(
             o.where(col("o_orderpriority") === "1-URGENT"),
             o.where(col("o_orderpriority") =!= "1-URGENT"),
             "cents")
         },
         Some(graft.operators.KsDistance.oracleSql(
-          "SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders WHERE o_orderpriority = '1-URGENT'",
-          "SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders WHERE o_orderpriority <> '1-URGENT'",
+          s"SELECT ${centsSql("o_totalprice")} AS cents FROM orders WHERE o_orderpriority = '1-URGENT'",
+          s"SELECT ${centsSql("o_totalprice")} AS cents FROM orders WHERE o_orderpriority <> '1-URGENT'",
           "cents"))),
 
       // Benford first-digit audit: fixed milli-expectation table, exact
@@ -4717,13 +4698,12 @@ FROM documents ORDER BY doc_id""")),
         "q_benford",
         (s, dir) => graft.operators.Benford.firstDigitAudit(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderstatus", "cents")
           .orderBy("o_orderstatus", "digit"),
         Some(graft.operators.Benford.oracleSql(
           "orders", "o_orderstatus",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          centsSql("o_totalprice")))),
 
       // activity streaks: distinct (user, day) collapse then gaps-and-
       // islands on the date-minus-rank anchor
@@ -4755,13 +4735,12 @@ FROM documents ORDER BY doc_id""")),
         "q_change_point",
         (s, dir) => graft.operators.ChangePoint.meanShiftScan(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "o_orderdate", "cents", "o_orderkey")
           .orderBy("o_orderpriority"),
         Some(graft.operators.ChangePoint.oracleSql(
           "orders", "o_orderpriority", "o_orderdate",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)", "o_orderkey"))),
+          centsSql("o_totalprice"), "o_orderkey"))),
 
       // weighted median: what the typical UNIT experienced — mass collapse
       // to distinct values, first cumulative-weight crossing, cumulative
@@ -4772,14 +4751,13 @@ FROM documents ORDER BY doc_id""")),
         "q_weighted_median",
         (s, dir) => graft.operators.WeightedStats.weightedMedianBucketed(
             Tables.resolve(s, dir)("lineitem")
-              .withColumn("cents",
-                (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))
+              .withColumn("cents", cents("l_extendedprice"))
               .withColumn("qty", col("l_quantity").cast("long")),
             "l_returnflag", "cents", "qty", bucketWidth = 100000L)
           .orderBy("l_returnflag"),
         Some(graft.operators.WeightedStats.oracleSql(
           "lineitem", "l_returnflag",
-          "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)",
+          centsSql("l_extendedprice"),
           "CAST(l_quantity AS BIGINT)"))),
 
       // per-group winsorization: discrete-quantile clip band (quantile_disc
@@ -4788,12 +4766,11 @@ FROM documents ORDER BY doc_id""")),
         "q_winsorize_disc",
         (s, dir) => Outliers.winsorize(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "cents", "o_orderkey")
           .orderBy("o_orderpriority", "o_orderkey"),
         Some(Outliers.winsorizeOracleSql(
-          "(SELECT o_orderkey, o_orderpriority, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders)",
+          s"(SELECT o_orderkey, o_orderpriority, ${centsSql("o_totalprice")} AS cents FROM orders)",
           "o_orderpriority", "cents", "o_orderkey"))),
 
       // kNN label-consistency audit: brute-force exact-integer neighbors,
@@ -4849,7 +4826,7 @@ FROM documents ORDER BY doc_id""")),
         "q_bucket_cutpoints",
         (s, dir) => {
           val docs = Tables.resolve(s, dir)("documents")
-          val n = Registry.cutpointsPrecondition.computeIfAbsent(dir, _ => docs.count())
+          val n = memoPrecondition("cutpoints", dir)(docs.count())
           require(n < 8192,
             s"q_bucket_cutpoints exact-regime precondition broken: $n documents " +
               ">= 2k=8192 — the sketch would compact and the exact oracle " +
@@ -4993,16 +4970,15 @@ ORDER BY doc_id""")),
         "q_decay_score",
         (s, dir) => graft.operators.DecayScore.withDecay(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "cents", "o_orderdate", asOfDate = "1999-01-01", halfLifeDays = 365)
           .select("o_orderkey", "cents", "decayed"),
         Some(graft.operators.DecayScore.oracleSql(
           "orders",
-          scoreSql = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)",
+          scoreSql = centsSql("o_totalprice"),
           dateSql = "o_orderdate", asOfDate = "1999-01-01", halfLifeDays = 365,
           keepCols = Seq("o_orderkey",
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents")))),
+            s"${centsSql("o_totalprice")} AS cents")))),
 
       // touch attribution: conditional min/max STRUCT aggregates over a
       // RANGE frame — one user exchange, running frame state, no
@@ -5020,17 +4996,16 @@ ORDER BY doc_id""")),
         "q_psi_drift",
         (s, dir) => {
           val o = Tables.resolve(s, dir)("orders")
-            .withColumn("cents",
-              (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+            .withColumn("cents", cents("o_totalprice"))
           graft.operators.Drift.psiByBucket(
             o.where(col("o_orderkey") % 2 === 0),
             o.where(col("o_orderkey") % 2 =!= 0),
             "cents", PsiCuts)
         },
         Some(graft.operators.Drift.oracleSql(
-          refSql = "SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents " +
+          refSql = s"SELECT ${centsSql("o_totalprice")} AS cents " +
             "FROM orders WHERE o_orderkey % 2 = 0",
-          curSql = "SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents " +
+          curSql = s"SELECT ${centsSql("o_totalprice")} AS cents " +
             "FROM orders WHERE o_orderkey % 2 <> 0",
           valueCol = "cents", cuts = PsiCuts))),
 
@@ -5218,13 +5193,12 @@ ORDER BY doc_id""")),
         "q_forecast_backtest",
         (s, dir) => graft.operators.Backtest.seasonalNaive(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "o_orderdate", "cents", season = 7)
           .orderBy("o_orderpriority"),
         Some(graft.operators.Backtest.oracleSql(
           "orders", "o_orderpriority", "o_orderdate",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)", season = 7))),
+          centsSql("o_totalprice"), season = 7))),
 
       // Markov next-event backtest: train the transition model before the
       // cut, score top-1 successor accuracy on the post-cut stream
@@ -5275,13 +5249,12 @@ ORDER BY doc_id""")),
         "q_cohort_ltv",
         (s, dir) => graft.operators.CohortLtv.curves(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_custkey", "o_orderdate", "cents")
           .orderBy("cohort_month", "age_months"),
         Some(graft.operators.CohortLtv.oracleSql(
           "orders", "o_custkey", "o_orderdate",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          centsSql("o_totalprice")))),
 
       // TRUE k-core (fixpoint peel) of the sparse co-purchase graph
       // (quantity >= 45 keeps ~1.7k edges at sf0.01): converges in 5
@@ -5292,22 +5265,13 @@ ORDER BY doc_id""")),
       RegisteredQuery(
         "q_kcore",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 45)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 45)
           graft.operators.KCore.peelToFixpoint(edges, "src", "dst", k = 3,
               maxRounds = 12)
             .orderBy("vertex")
         },
         Some(graft.operators.KCore.oracleSql(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 45 AND b.l_quantity >= 45""", k = 3, rounds = 12))),
+          coPurchaseEdgesSql(45), k = 3, rounds = 12))),
 
       // bounded nearest neighbor over the q_spatial_pairs scattered
       // points at r=200: grid-blocked rank-1 election vs the brute-force
@@ -5333,13 +5297,8 @@ ORDER BY doc_id""")),
       RegisteredQuery(
         "q_dim_enrich",
         (s, dir) => {
-          val store = scratch("dim_enrich_store")
-          val out = scratch("dim_enrich_out")
-          val sp = new org.apache.hadoop.fs.Path(store)
-          val fs = sp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          import graft.sources.AtomicStore
-          (Seq(sp, AtomicStore.tmpPath(sp), AtomicStore.stashPath(sp),
-            new org.apache.hadoop.fs.Path(out))).foreach(fs.delete(_, true))
+          val store = freshStore(s, "dim_enrich_store")
+          val out = freshStore(s, "dim_enrich_out")
           val o = Tables.resolve(s, dir)("orders")
           val c0 = lit("1997-01-01").cast("timestamp")
           val c1 = lit("1999-01-01").cast("timestamp")
@@ -5388,11 +5347,7 @@ ORDER BY o.o_orderkey""")),
           require(maxPerGroup < 512,
             s"q_quantile_ingest exact-regime precondition broken: a (lang, " +
               s"source) group has $maxPerGroup docs >= 2k=512 — raise k")
-          val store = scratch("quantile_ingest")
-          val p = new org.apache.hadoop.fs.Path(store)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          Seq(p, graft.sources.AtomicStore.tmpPath(p),
-            graft.sources.AtomicStore.stashPath(p)).foreach(fs.delete(_, true))
+          val store = freshStore(s, "quantile_ingest")
           (0 until 4).foreach { b =>
             graft.operators.QuantileStore.update(s, store,
               docs.where(pmod(col("doc_id"), lit(4)) === b),
@@ -5434,13 +5389,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_bfs_hops",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 45)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 45)
           val seeds = Tables.resolve(s, dir)("part")
             .where(expr("p_partkey % 97 = 0"))
             .select(col("p_partkey").as("seed"))
@@ -5449,10 +5398,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
             .orderBy("vertex")
         },
         Some(graft.operators.BfsHops.oracleSql(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 45 AND b.l_quantity >= 45""",
+          coPurchaseEdgesSql(45),
           "SELECT p_partkey AS seed FROM part WHERE p_partkey % 97 = 0",
           maxHops = 3))),
 
@@ -5463,13 +5409,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_shortest_path",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 45)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"),
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 45,
               expr("(a.l_partkey + b.l_partkey) % 7 + 1").as("w"))
           val seeds = Tables.resolve(s, dir)("part")
             .where(expr("p_partkey % 97 = 0"))
@@ -5479,11 +5419,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
             .orderBy("vertex")
         },
         Some(graft.operators.ShortestPath.oracleSql(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst,
-    (a.l_partkey + b.l_partkey) % 7 + 1 AS w
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 45 AND b.l_quantity >= 45""",
+          coPurchaseEdgesSql(45, "(a.l_partkey + b.l_partkey) % 7 + 1 AS w"),
           "SELECT p_partkey AS seed FROM part WHERE p_partkey % 97 = 0",
           maxHops = 4))),
 
@@ -5497,13 +5433,12 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
               .withColumn("t", expr("o_custkey % 2 = 0"))
               .withColumn("p",
                 col("o_orderdate") >= lit("1998-01-01").cast("timestamp"))
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "t", "p", "cents"),
         Some(graft.operators.DiffInDiff.oracleSql(
           "orders", "o_custkey % 2 = 0",
           "o_orderdate >= TIMESTAMP '1998-01-01'",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          centsSql("o_totalprice")))),
 
       // lag-7 autocorrelation of daily order counts per priority — the
       // weekly-rhythm screen; exact pair-join moments, integer index
@@ -5566,21 +5501,12 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_clustering_coeff",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 30)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 30)
           graft.operators.Triangles.clusteringCoefficient(edges)
             .orderBy("id")
         },
         Some(graft.operators.Triangles.clusteringOracle(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 30 AND b.l_quantity >= 30"""))),
+          coPurchaseEdgesSql(30)))),
 
       // personalized PageRank seeded at the %97 parts over the
       // bidirectional part-supplier graph: restart mass only on seeds,
@@ -5613,13 +5539,12 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
         "q_target_smoothed",
         (s, dir) => graft.operators.TargetEncode.smoothedMean(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "cents", m = 20)
           .orderBy("category"),
         Some(graft.operators.TargetEncode.smoothedOracle(
           "orders", "o_orderpriority",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)",
+          centsSql("o_totalprice"),
           m = 20))),
 
       // leave-one-out target encoding per order row — the leakage-safe
@@ -5628,13 +5553,12 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
         "q_target_loo",
         (s, dir) => graft.operators.TargetEncode.looMean(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderkey", "o_orderpriority", "cents")
           .orderBy("id"),
         Some(graft.operators.TargetEncode.looOracle(
           "orders", "o_orderkey", "o_orderpriority",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          centsSql("o_totalprice")))),
 
       // class-imbalance audit + sklearn-style balanced weights over the
       // corpus language labels, exact 1e-8 integers
@@ -5660,15 +5584,14 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
         "q_weighted_p90",
         (s, dir) => graft.operators.WeightedStats.weightedQuantileBucketed(
             Tables.resolve(s, dir)("lineitem")
-              .withColumn("cents",
-                (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))
+              .withColumn("cents", cents("l_extendedprice"))
               .withColumn("qty", col("l_quantity").cast("long")),
             "l_returnflag", "cents", "qty", qNum = 9, qDen = 10,
             bucketWidth = 100000L)
           .orderBy("l_returnflag"),
         Some(graft.operators.WeightedStats.quantileOracleSql(
           "lineitem", "l_returnflag",
-          "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)",
+          centsSql("l_extendedprice"),
           "CAST(l_quantity AS BIGINT)", qNum = 9, qDen = 10))),
 
       // U-shaped multi-touch attribution at a 2h lookback: every touch
@@ -5689,22 +5612,13 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_connected_components",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 42)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 42)
           graft.operators.MinLabel.components(edges, "src", "dst",
               maxRounds = 14)
             .orderBy("vertex")
         },
         Some(graft.operators.MinLabel.oracleSql(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 42 AND b.l_quantity >= 42""", rounds = 14))),
+          coPurchaseEdgesSql(42), rounds = 14))),
 
       // validity-interval conformance over deterministically messy
       // synthetic versions (order spans per customer bucket): overlap /
@@ -5731,21 +5645,12 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_neighbor_stats",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 45)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 45)
           graft.operators.NeighborStats.degreeStats(edges, "src", "dst")
             .orderBy("vertex")
         },
         Some(graft.operators.NeighborStats.oracleSql(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 45 AND b.l_quantity >= 45"""))),
+          coPurchaseEdgesSql(45)))),
 
       // CDC net-effect compaction over a deterministic synthetic op log
       // (orderkey%7 picks the op): one net op per key, I-then-D vanishes
@@ -5757,13 +5662,12 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
               .withColumn("op", expr(
                 "CASE WHEN o_orderkey % 7 = 0 THEN 'D' " +
                   "WHEN o_orderkey % 7 IN (1, 2) THEN 'I' ELSE 'U' END"))
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "k", "o_orderkey", "op", Seq("o_orderstatus", "cents"))
           .orderBy("key"),
         Some(graft.operators.CdcCompact.oracleSql(
           "(SELECT o_custkey % 2000 AS k, o_orderkey, o_orderstatus, " +
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, " +
+            s"${centsSql("o_totalprice")} AS cents, " +
             "CASE WHEN o_orderkey % 7 = 0 THEN 'D' " +
             "WHEN o_orderkey % 7 IN (1, 2) THEN 'I' ELSE 'U' END AS op " +
             "FROM orders) cdc",
@@ -5775,13 +5679,12 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
         "q_share_of_parent",
         (s, dir) => graft.operators.ShareOfParent.shares(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderstatus", "o_orderpriority", "cents")
           .orderBy("parent", "child"),
         Some(graft.operators.ShareOfParent.oracleSql(
           "orders", "o_orderstatus", "o_orderpriority",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          centsSql("o_totalprice")))),
 
       // embedding-space outlier screen: per-row exact n-scaled distance
       // to the declared stratum's centroid (vec_id%7 synthetic strata) —
@@ -5805,13 +5708,12 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
             Tables.resolve(s, dir)("orders")
               .withColumn("bucket", expr("o_custkey % 500"))
               .withColumn("yr", year(col("o_orderdate")).cast("string"))
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "bucket", "yr", "cents", "1996", "1997")
           .orderBy("entity"),
         Some(graft.operators.RankMovers.oracleSql(
           "orders", "o_custkey % 500", "CAST(year(o_orderdate) AS VARCHAR)",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)",
+          centsSql("o_totalprice"),
           "1996", "1997"))),
 
       // impossible-travel screen over deterministically scattered event
@@ -5943,8 +5845,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
         "q_double_charge",
         (s, dir) => {
           val o = Tables.resolve(s, dir)("orders")
-            .withColumn("cents",
-              (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+            .withColumn("cents", cents("o_totalprice"))
           val left = o.select(col("o_orderkey").as("first_key"),
             col("o_custkey").as("cust_a"), col("cents").as("cents_a"),
             col("o_orderdate").as("__t0"))
@@ -5961,8 +5862,8 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
               col("first_key"), col("second_key"))
             .orderBy("custkey", "first_key", "second_key")
         },
-        Some("""SELECT a.o_custkey AS custkey,
-  CAST(CAST(a.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+        Some(s"""SELECT a.o_custkey AS custkey,
+  ${centsSql("a.o_totalprice")} AS cents,
   a.o_orderkey AS first_key, b.o_orderkey AS second_key
 FROM orders a JOIN orders b
   ON a.o_custkey = b.o_custkey
@@ -5992,15 +5893,14 @@ ORDER BY custkey, first_key, second_key""")),
         "q_seasonal_idx",
         (s, dir) => graft.operators.Seasonal.indexes(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+              .withColumn("cents", cents("o_totalprice"))
               .withColumn("mon", month(col("o_orderdate")).cast("long")),
             Seq("o_orderpriority"), "mon", "cents")
           .orderBy("o_orderpriority", "pos"),
         Some(graft.operators.Seasonal.oracleSql(
           "orders", Seq("o_orderpriority"),
           "CAST(month(CAST(o_orderdate AS DATE)) AS BIGINT)",
-          "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))),
+          centsSql("o_totalprice")))),
 
       // HLL distinct: the full Flajolet estimator replayed exactly —
       // md5 registers, HUGEINT harmonic sum, cross-multiplied branch;
@@ -6040,12 +5940,7 @@ ORDER BY metric, o_orderpriority"""
       RegisteredQuery(
         "q_exp_smooth",
         (s, dir) => graft.operators.ExpSmooth.smooth(
-            graft.operators.DenseSeries.denseDaily(
-                Tables.resolve(s, dir)("orders")
-                  .withColumn("cents",
-                    (col("o_totalprice").cast("decimal(18,2)") * 100)
-                      .cast("long")),
-                "o_orderpriority", "o_orderdate", "cents")
+            dailyCentsSpine(Tables.resolve(s, dir)("orders"))
               .select(col("o_orderpriority"),
                 datediff(col("day"), lit("1970-01-01")).cast("long").as("i"),
                 col("sum_value").as("x")),
@@ -6054,9 +5949,7 @@ ORDER BY metric, o_orderpriority"""
         Some(graft.operators.ExpSmooth.oracleSql(
           s"""SELECT o_orderpriority AS grp,
   CAST(day - DATE '1970-01-01' AS BIGINT) AS i, sum_value AS x
-FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
-            "orders", "o_orderpriority", "o_orderdate",
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")})""",
+FROM (${dailyCentsSpineSql})""",
           "o_orderpriority", alphaNum = 3, alphaDen = 10))),
 
       // per-doc corpus-duplicated shingle share: the duplication profile
@@ -6076,17 +5969,16 @@ FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
         "q_regression_eval",
         (s, dir) => graft.operators.ModelEval.regressionReport(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+              .withColumn("cents", cents("o_totalprice"))
               .withColumn("pred",
                 call_function("div", col("cents"), lit(1000L)) * 1000L +
                   pmod(col("o_orderkey"), lit(997L)) * 100L - lit(49850L)),
             Seq("o_orderpriority"), "cents", "pred")
           .orderBy("o_orderpriority"),
         Some(graft.operators.ModelEval.regressionOracle(
-          """(SELECT o_orderpriority,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-  (CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 1000) * 1000
+          s"""(SELECT o_orderpriority,
+  ${centsSql("o_totalprice")} AS cents,
+  (${centsSql("o_totalprice")} // 1000) * 1000
     + (o_orderkey % 997) * 100 - 49850 AS pred
 FROM orders)""",
           Seq("o_orderpriority"), "cents", "pred"))),
@@ -6096,12 +5988,7 @@ FROM orders)""",
       RegisteredQuery(
         "q_holt_smooth",
         (s, dir) => graft.operators.ExpSmooth.holt(
-            graft.operators.DenseSeries.denseDaily(
-                Tables.resolve(s, dir)("orders")
-                  .withColumn("cents",
-                    (col("o_totalprice").cast("decimal(18,2)") * 100)
-                      .cast("long")),
-                "o_orderpriority", "o_orderdate", "cents")
+            dailyCentsSpine(Tables.resolve(s, dir)("orders"))
               .select(col("o_orderpriority"),
                 datediff(col("day"), lit("1970-01-01")).cast("long").as("i"),
                 col("sum_value").as("x")),
@@ -6111,9 +5998,7 @@ FROM orders)""",
         Some(graft.operators.ExpSmooth.holtOracleSql(
           s"""SELECT o_orderpriority AS grp,
   CAST(day - DATE '1970-01-01' AS BIGINT) AS i, sum_value AS x
-FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
-            "orders", "o_orderpriority", "o_orderdate",
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")})""",
+FROM (${dailyCentsSpineSql})""",
           "o_orderpriority", alphaNum = 3, alphaDen = 10,
           betaNum = 1, betaDen = 10))),
 
@@ -6123,22 +6008,13 @@ FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
       RegisteredQuery(
         "q_link_pred",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 30)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 30)
           graft.operators.LinkPredict.adamicAdar(
               edges, maxDeg = 40, minCommon = 3)
             .orderBy("src", "dst")
         },
         Some(graft.operators.LinkPredict.oracleSql(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 30 AND b.l_quantity >= 30""",
+          coPurchaseEdgesSql(30),
           maxDeg = 40, minCommon = 3))),
 
       // Zipf rank-frequency slope per language — corpus health against
@@ -6200,12 +6076,7 @@ FROM documents))""",
       RegisteredQuery(
         "q_cusum",
         (s, dir) => graft.operators.Cusum.twoSided(
-            graft.operators.DenseSeries.denseDaily(
-                Tables.resolve(s, dir)("orders")
-                  .withColumn("cents",
-                    (col("o_totalprice").cast("decimal(18,2)") * 100)
-                      .cast("long")),
-                "o_orderpriority", "o_orderdate", "cents")
+            dailyCentsSpine(Tables.resolve(s, dir)("orders"))
               .select(col("o_orderpriority"), datediff(col("day"),
                 lit("1970-01-01")).cast("long").as("i"),
                 col("sum_value").as("x")),
@@ -6215,9 +6086,7 @@ FROM documents))""",
         Some(graft.operators.Cusum.oracleSql(
           s"""SELECT o_orderpriority,
   CAST(day - DATE '1970-01-01' AS BIGINT) AS i, sum_value AS x
-FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
-            "orders", "o_orderpriority", "o_orderdate",
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")})""",
+FROM (${dailyCentsSpineSql})""",
           "o_orderpriority", k = 20000000L, h = 100000000L))),
 
       // BH-FDR decisions over an id-derived p-value fleet per language:
@@ -6284,9 +6153,7 @@ FROM orders""",
         (s, dir) => CorrMatrix.matrix(
             Tables.resolve(s, dir)("lineitem")
               .withColumn("qty", col("l_quantity").cast("long"))
-              .withColumn("cents",
-                (col("l_extendedprice").cast("decimal(18,2)") * 100)
-                  .cast("long"))
+              .withColumn("cents", cents("l_extendedprice"))
               .withColumn("disc_bp",
                 (col("l_discount").cast("decimal(9,4)") * 10000)
                   .cast("long"))
@@ -6296,7 +6163,7 @@ FROM orders""",
           .orderBy("l_returnflag", "col_a", "col_b"),
         Some(CorrMatrix.oracleSql("lineitem", Seq("l_returnflag"), Seq(
           "qty" -> "CAST(l_quantity AS BIGINT)",
-          "cents" -> "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)",
+          "cents" -> centsSql("l_extendedprice"),
           "disc_bp" -> "CAST(CAST(l_discount AS DECIMAL(9,4)) * 10000 AS BIGINT)",
           "tax_bp" -> "CAST(CAST(l_tax AS DECIMAL(9,4)) * 10000 AS BIGINT)")))),
 
@@ -6320,22 +6187,9 @@ FROM orders""",
       RegisteredQuery(
         "q_alarm_ingest",
         (s, dir) => {
-          val store = scratch("alarm_ingest_gate_store")
-          val lake = scratch("alarm_ingest_gate_lake")
-          val conf = s.sparkContext.hadoopConfiguration
-          Seq(store, lake).foreach { d =>
-            val p = new org.apache.hadoop.fs.Path(d)
-            val f = p.getFileSystem(conf)
-            Seq(p, graft.sources.AtomicStore.tmpPath(p),
-              graft.sources.AtomicStore.stashPath(p))
-              .foreach(f.delete(_, true))
-          }
-          val dense = graft.operators.DenseSeries.denseDaily(
-              Tables.resolve(s, dir)("orders")
-                .withColumn("cents",
-                  (col("o_totalprice").cast("decimal(18,2)") * 100)
-                    .cast("long")),
-              "o_orderpriority", "o_orderdate", "cents")
+          val store = freshStore(s, "alarm_ingest_gate_store")
+          val lake = freshStore(s, "alarm_ingest_gate_lake")
+          val dense = dailyCentsSpine(Tables.resolve(s, dir)("orders"))
             .select(col("o_orderpriority"),
               datediff(col("day"), lit("1970-01-01")).cast("long").as("i"),
               col("sum_value").as("x"))
@@ -6355,9 +6209,7 @@ FROM orders""",
         Some(graft.operators.Cusum.oracleSql(
           s"""SELECT o_orderpriority,
   CAST(day - DATE '1970-01-01' AS BIGINT) AS i, sum_value AS x
-FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
-            "orders", "o_orderpriority", "o_orderdate",
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")})""",
+FROM (${dailyCentsSpineSql})""",
           "o_orderpriority", k = 20000000L, h = 100000000L))),
 
       // per-key lifetime counters, driver-faced: three event-id chunks
@@ -6368,12 +6220,7 @@ FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
       RegisteredQuery(
         "q_stateful_ingest",
         (s, dir) => {
-          val store = scratch("stateful_ingest_gate_store")
-          val conf = s.sparkContext.hadoopConfiguration
-          val p = new org.apache.hadoop.fs.Path(store)
-          val f = p.getFileSystem(conf)
-          Seq(p, graft.sources.AtomicStore.tmpPath(p),
-            graft.sources.AtomicStore.stashPath(p)).foreach(f.delete(_, true))
+          val store = freshStore(s, "stateful_ingest_gate_store")
           val ev = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
             .localCheckpoint(true)
           Seq(col("event_id") % 3 === 0, col("event_id") % 3 === 1,
@@ -6397,15 +6244,8 @@ FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
       RegisteredQuery(
         "q_stream_join_ingest",
         (s, dir) => {
-          val store = scratch("stream_join_gate_store")
-          val lake = scratch("stream_join_gate_lake")
-          val conf = s.sparkContext.hadoopConfiguration
-          Seq(store, lake).foreach { d =>
-            val p = new org.apache.hadoop.fs.Path(d)
-            val f = p.getFileSystem(conf)
-            Seq(p, graft.sources.AtomicStore.tmpPath(p),
-              graft.sources.AtomicStore.stashPath(p)).foreach(f.delete(_, true))
-          }
+          val store = freshStore(s, "stream_join_gate_store")
+          val lake = freshStore(s, "stream_join_gate_lake")
           val ev = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
             .localCheckpoint(true)
           val clicks = ev.where(col("event_type") === "click")
@@ -6444,15 +6284,14 @@ FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
             .groupBy(col("o_orderpriority"),
               (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
                 .cast("long").as("m"))
-            .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-              .cast("long")).as("x"))
+            .agg(sum(cents("o_totalprice")).as("x"))
           graft.operators.Isotonic.fit(monthly, "o_orderpriority", "m", "x")
             .orderBy("o_orderpriority", "idx")
         },
         Some(graft.operators.Isotonic.oracleSql(
-          """SELECT o_orderpriority AS grp,
+          s"""SELECT o_orderpriority AS grp,
   CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS i,
-  CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS x
+  CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS x
 FROM orders GROUP BY 1, 2""", "o_orderpriority"))),
 
       // HITS hubs/authorities over the directed part -> supplier
@@ -6481,14 +6320,13 @@ FROM orders GROUP BY 1, 2""", "o_orderpriority"))),
         "q_percentile_rank",
         (s, dir) => graft.operators.PercentileRank.transform(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+              .withColumn("cents", cents("o_totalprice"))
               .select("o_orderkey", "o_orderpriority", "cents"),
             Seq("o_orderpriority"), "cents", bucketWidth = 1000000L)
           .orderBy("o_orderkey"),
         Some(graft.operators.PercentileRank.oracleSql(
           "(SELECT o_orderkey, o_orderpriority, " +
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents " +
+            s"${centsSql("o_totalprice")} AS cents " +
             "FROM orders)",
           Seq("o_orderpriority"), "o_orderkey", "cents",
           Seq("o_orderkey", "o_orderpriority", "cents")))),
@@ -6501,12 +6339,7 @@ FROM orders GROUP BY 1, 2""", "o_orderpriority"))),
       RegisteredQuery(
         "q_hll_ingest",
         (s, dir) => {
-          val store = scratch("hll_ingest_gate_store")
-          val conf = s.sparkContext.hadoopConfiguration
-          val p = new org.apache.hadoop.fs.Path(store)
-          val f = p.getFileSystem(conf)
-          Seq(p, graft.sources.AtomicStore.tmpPath(p),
-            graft.sources.AtomicStore.stashPath(p)).foreach(f.delete(_, true))
+          val store = freshStore(s, "hll_ingest_gate_store")
           val o = Tables.resolve(s, dir)("orders").localCheckpoint(true)
           Seq(col("o_orderkey") % 3 === 0, col("o_orderkey") % 3 === 1,
             col("o_orderkey") % 3 === 2).foreach { cut =>
@@ -6526,12 +6359,7 @@ FROM orders GROUP BY 1, 2""", "o_orderpriority"))),
       RegisteredQuery(
         "q_seasonal_decomp",
         (s, dir) => graft.operators.SeasonalDecomp.decompose(
-            graft.operators.DenseSeries.denseDaily(
-                Tables.resolve(s, dir)("orders")
-                  .withColumn("cents",
-                    (col("o_totalprice").cast("decimal(18,2)") * 100)
-                      .cast("long")),
-                "o_orderpriority", "o_orderdate", "cents")
+            dailyCentsSpine(Tables.resolve(s, dir)("orders"))
               .select(col("o_orderpriority"),
                 datediff(col("day"), lit("1970-01-01")).cast("long").as("i"),
                 col("sum_value").as("x")),
@@ -6540,9 +6368,7 @@ FROM orders GROUP BY 1, 2""", "o_orderpriority"))),
         Some(graft.operators.SeasonalDecomp.oracleSql(
           s"""SELECT o_orderpriority AS grp,
   CAST(day - DATE '1970-01-01' AS BIGINT) AS i, sum_value AS x
-FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
-            "orders", "o_orderpriority", "o_orderdate",
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")})""",
+FROM (${dailyCentsSpineSql})""",
           "o_orderpriority", period = 7, halfWindow = 3))),
 
       // exact Kendall tau-b pair counts: distinct-cell dominance join
@@ -6785,14 +6611,13 @@ FROM s ORDER BY doc_id""")),
               .groupBy(col("l_suppkey"),
                 datediff(col("l_shipdate"), lit("1970-01-01")).cast("long")
                   .as("day"))
-              .agg(min((col("l_extendedprice").cast("decimal(18,2)") * 100)
-                .cast("long")).as("cents")),
+              .agg(min(cents("l_extendedprice")).as("cents")),
             "l_suppkey", "day", "cents", endIdx = 11688L)
           .orderBy("l_suppkey"),
         Some(graft.operators.Twap.oracleSql(
-          """SELECT l_suppkey AS grp,
+          s"""SELECT l_suppkey AS grp,
   CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS t,
-  min(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS v
+  min(${centsSql("l_extendedprice")}) AS v
 FROM lineitem GROUP BY 1, 2""",
           "l_suppkey", endIdx = 11688L))),
 
@@ -6809,18 +6634,18 @@ FROM lineitem GROUP BY 1, 2""",
                 .as("d0"),
               (datediff(col("o_orderdate"), lit("1970-01-01")).cast("long") +
                 1L + col("o_orderkey") % 28).as("d1"),
-              (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+              cents("o_totalprice")
                 .as("cents"))
           graft.operators.Prorate.daily(o, "d0", "d1", "cents")
             .select("o_orderkey", "period", "share")
             .orderBy("o_orderkey", "period")
         },
         Some(graft.operators.Prorate.oracleSql(
-          """SELECT o_orderkey,
+          s"""SELECT o_orderkey,
   CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d0,
   CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
     + 1 + o_orderkey % 28 AS d1,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+  ${centsSql("o_totalprice")} AS cents
 FROM orders WHERE o_orderkey % 20 = 0""",
           startE = "d0", endE = "d1", valueE = "cents",
           keepCols = Seq("o_orderkey")))),
@@ -6847,12 +6672,7 @@ FROM orders WHERE o_orderkey % 20 = 0""",
         "q_seasonal_anomaly",
         (s, dir) => {
           val decomposed = graft.operators.SeasonalDecomp.decompose(
-            graft.operators.DenseSeries.denseDaily(
-                Tables.resolve(s, dir)("orders")
-                  .withColumn("cents",
-                    (col("o_totalprice").cast("decimal(18,2)") * 100)
-                      .cast("long")),
-                "o_orderpriority", "o_orderdate", "cents")
+            dailyCentsSpine(Tables.resolve(s, dir)("orders"))
               .select(col("o_orderpriority"),
                 datediff(col("day"), lit("1970-01-01")).cast("long").as("i"),
                 col("sum_value").as("x")),
@@ -6866,9 +6686,7 @@ FROM orders WHERE o_orderkey % 20 = 0""",
           s"""(${graft.operators.SeasonalDecomp.oracleSql(
             s"""SELECT o_orderpriority AS grp,
   CAST(day - DATE '1970-01-01' AS BIGINT) AS i, sum_value AS x
-FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
-              "orders", "o_orderpriority", "o_orderdate",
-              "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")})""",
+FROM (${dailyCentsSpineSql})""",
             "o_orderpriority", period = 7, halfWindow = 3)}) seas""",
           "o_orderpriority", "remainder_q6", "idx", kNum = 4L, kDen = 1L))),
 
@@ -7023,15 +6841,14 @@ FROM orders WHERE o_orderkey % 3 = 0""",
               .groupBy(col("o_orderpriority"),
                 ((year(col("o_orderdate")) - 1970) * 12 +
                   month(col("o_orderdate")) - 1).cast("long").as("mon"))
-              .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")).as("cents")),
+              .agg(sum(cents("o_totalprice")).as("cents")),
             "o_orderpriority", "mon", "cents")
           .orderBy("o_orderpriority"),
         Some(TheilSen.oracleSql(
-          """SELECT o_orderpriority AS grp,
+          s"""SELECT o_orderpriority AS grp,
   (date_part('year', CAST(o_orderdate AS DATE)) - 1970) * 12
     + date_part('month', CAST(o_orderdate AS DATE)) - 1 AS x,
-  sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS y
+  sum(${centsSql("o_totalprice")}) AS y
 FROM orders GROUP BY 1, 2""",
           "o_orderpriority"))),
 
@@ -7040,12 +6857,7 @@ FROM orders GROUP BY 1, 2""",
       RegisteredQuery(
         "q_rolling_corr",
         (s, dir) => CrossCorr.rolling(
-            graft.operators.DenseSeries.denseDaily(
-                Tables.resolve(s, dir)("orders")
-                  .withColumn("cents",
-                    (col("o_totalprice").cast("decimal(18,2)") * 100)
-                      .cast("long")),
-                "o_orderpriority", "o_orderdate", "cents")
+            dailyCentsSpine(Tables.resolve(s, dir)("orders"))
               .select(col("o_orderpriority"),
                 datediff(col("day"), lit("1970-01-01")).cast("long").as("i"),
                 col("n_rows").as("x"), col("sum_value").as("y")),
@@ -7054,9 +6866,7 @@ FROM orders GROUP BY 1, 2""",
         Some(CrossCorr.rollingOracle(
           s"""SELECT o_orderpriority AS grp,
   CAST(day - DATE '1970-01-01' AS BIGINT) AS i, n_rows AS x, sum_value AS y
-FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
-            "orders", "o_orderpriority", "o_orderdate",
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")})""",
+FROM (${dailyCentsSpineSql})""",
           "o_orderpriority", window = 28))),
 
       // bitemporal as-of: order-derived assertion log (validity from
@@ -7072,16 +6882,16 @@ FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
                 .as("vt"),
               expr("date_add(o_orderdate, CAST(o_orderkey % 5 AS INT))")
                 .as("tx"),
-              (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+              cents("o_totalprice")
                 .as("cents")),
             "k", "vf", "vt", "tx", Seq("cents"),
             txAsOf = "1998-01-01", validAt = "1997-06-01")
           .orderBy("k"),
         Some(graft.operators.Bitemporal.oracleSql(
-          """SELECT o_custkey AS k, o_orderdate AS vf,
+          s"""SELECT o_custkey AS k, o_orderdate AS vf,
   CAST(o_orderdate AS DATE) + (CAST(o_orderkey % 90 AS INT) + 30) AS vt,
   CAST(o_orderdate AS DATE) + CAST(o_orderkey % 5 AS INT) AS tx,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+  ${centsSql("o_totalprice")} AS cents
 FROM orders""",
           "k", Seq("cents"), txAsOf = "1998-01-01", validAt = "1997-06-01"))),
 
@@ -7091,16 +6901,15 @@ FROM orders""",
         "q_emd",
         (s, dir) => {
           val o = Tables.resolve(s, dir)("orders")
-            .withColumn("cents",
-              (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+            .withColumn("cents", cents("o_totalprice"))
           graft.operators.KsDistance.emd(
             o.where(col("o_orderpriority") === "1-URGENT"),
             o.where(col("o_orderpriority") =!= "1-URGENT"),
             "cents")
         },
         Some(graft.operators.KsDistance.emdOracle(
-          "SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders WHERE o_orderpriority = '1-URGENT'",
-          "SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders WHERE o_orderpriority <> '1-URGENT'",
+          s"SELECT ${centsSql("o_totalprice")} AS cents FROM orders WHERE o_orderpriority = '1-URGENT'",
+          s"SELECT ${centsSql("o_totalprice")} AS cents FROM orders WHERE o_orderpriority <> '1-URGENT'",
           "cents"))),
 
       // RBO@20 between two id-derived document rankings per language —
@@ -7184,15 +6993,14 @@ FROM orders""",
               .where(year(col("o_orderdate")).isin(1996, 1997))
               .select(year(col("o_orderdate")).cast("string").as("p"),
                 col("o_orderpriority").as("seg"),
-                (col("o_totalprice").cast("decimal(18,2)") * 100)
-                  .cast("long").as("num"),
+                cents("o_totalprice").as("num"),
                 lit(1L).as("den")),
             "p", "seg", "num", "den", periodA = "1996", periodB = "1997")
           .orderBy("seg"),
         Some(MetricBridge.oracleSql(
-          """SELECT CAST(date_part('year', CAST(o_orderdate AS DATE)) AS VARCHAR) AS period,
+          s"""SELECT CAST(date_part('year', CAST(o_orderdate AS DATE)) AS VARCHAR) AS period,
   o_orderpriority AS seg,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS num,
+  ${centsSql("o_totalprice")} AS num,
   1 AS den
 FROM orders
 WHERE date_part('year', CAST(o_orderdate AS DATE)) IN (1996, 1997)""",
@@ -7223,9 +7031,9 @@ WHERE date_part('year', CAST(o_orderdate AS DATE)) IN (1996, 1997)""",
       RegisteredQuery(
         "q_drawdown",
         (s, dir) => {
-          val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
-          val signed = when(pmod(col("event_id"), lit(2)) === 0, cents)
-            .otherwise(-cents)
+          val amount = cents("value")
+          val signed = when(pmod(col("event_id"), lit(2)) === 0, amount)
+            .otherwise(-amount)
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("grp")).orderBy(col("event_id"))
             .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -7238,11 +7046,11 @@ WHERE date_part('year', CAST(o_orderdate AS DATE)) IN (1996, 1997)""",
             .orderBy("grp")
         },
         Some(graft.operators.Drawdown.oracleSql(
-          """SELECT user_id % 25 AS grp, event_id AS t,
+          s"""SELECT user_id % 25 AS grp, event_id AS t,
   sum(CASE WHEN event_id % 2 = 0 THEN c ELSE -c END)
     OVER (PARTITION BY user_id % 25 ORDER BY event_id ROWS UNBOUNDED PRECEDING) AS v
 FROM (SELECT user_id, event_id,
-  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c FROM events)""",
+  ${centsSql("value")} AS c FROM events)""",
           "grp"))),
 
       // referential-integrity audit: four declared FKs — two clean, a
@@ -7370,12 +7178,7 @@ FROM lineitem WHERE l_linenumber % 2 = 1 GROUP BY 1, 2""",
       RegisteredQuery(
         "q_holt_winters",
         (s, dir) => graft.operators.ExpSmooth.holtWinters(
-            graft.operators.DenseSeries.denseDaily(
-                Tables.resolve(s, dir)("orders")
-                  .withColumn("cents",
-                    (col("o_totalprice").cast("decimal(18,2)") * 100)
-                      .cast("long")),
-                "o_orderpriority", "o_orderdate", "cents")
+            dailyCentsSpine(Tables.resolve(s, dir)("orders"))
               .select(col("o_orderpriority"),
                 datediff(col("day"), lit("1970-01-01")).cast("long").as("i"),
                 col("sum_value").as("x")),
@@ -7386,9 +7189,7 @@ FROM lineitem WHERE l_linenumber % 2 = 1 GROUP BY 1, 2""",
         Some(graft.operators.ExpSmooth.holtWintersOracleSql(
           s"""SELECT o_orderpriority AS grp,
   CAST(day - DATE '1970-01-01' AS BIGINT) AS i, sum_value AS x
-FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
-            "orders", "o_orderpriority", "o_orderdate",
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")})""",
+FROM (${dailyCentsSpineSql})""",
           "o_orderpriority", period = 7, alphaNum = 3, alphaDen = 10,
           betaNum = 1, betaDen = 10, gammaNum = 2, gammaDen = 10))),
 
@@ -7425,13 +7226,12 @@ FROM (${graft.operators.DenseSeries.denseDailyOracleBody(
         (s, dir) => {
           val rev = Tables.resolve(s, dir)("orders")
             .groupBy(col("o_custkey"))
-            .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-              .cast("long")).as("rev_c"))
+            .agg(sum(cents("o_totalprice")).as("rev_c"))
           graft.operators.Lorenz.curve(rev, "rev_c", "o_custkey", k = 10)
             .orderBy("bucket")
         },
         Some(graft.operators.Lorenz.oracleSql(
-          "(SELECT o_custkey, CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_c " +
+          s"(SELECT o_custkey, CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS rev_c " +
             "FROM orders GROUP BY 1)",
           "rev_c", "o_custkey", k = 10))),
 
@@ -7487,16 +7287,15 @@ FROM orders""",
                 datediff(col("o_orderdate").cast("date"),
                   lit("1970-01-01").cast("date")).cast("long"),
                 lit(7L)).as("wk"))
-            .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-              .cast("long")).as("x"))
+            .agg(sum(cents("o_totalprice")).as("x"))
           graft.operators.Dtw.pairwiseMatrix(
               weekly, "o_orderpriority", "wk", "x")
             .orderBy("group_a", "group_b")
         },
         Some(graft.operators.Dtw.pairwiseOracle(
-          """SELECT o_orderpriority AS grp,
+          s"""SELECT o_orderpriority AS grp,
   (CAST(o_orderdate AS DATE) - DATE '1970-01-01') // 7 AS i,
-  CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS x
+  CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS x
 FROM orders GROUP BY 1, 2""",
           "group_a", "group_b"))),
 
@@ -7589,15 +7388,13 @@ FROM documents ORDER BY doc_id""")),
         "q_runs_test",
         (s, dir) => graft.operators.RunsTest.runsTest(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100)
-                  .cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "o_orderkey", "cents",
             threshold = 15000000L)
           .orderBy("o_orderpriority"),
         Some(graft.operators.RunsTest.oracleSql(
-          """SELECT o_orderpriority AS grp, o_orderkey AS i,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+          s"""SELECT o_orderpriority AS grp, o_orderkey AS i,
+  ${centsSql("o_totalprice")} AS v
 FROM orders""",
           "o_orderpriority", threshold = 15000000L))),
 
@@ -7612,14 +7409,13 @@ FROM orders""",
               .groupBy(col("o_orderpriority"),
                 (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
                   .cast("long").as("m"))
-              .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")).as("rev")),
+              .agg(sum(cents("o_totalprice")).as("rev")),
             "o_orderpriority", "m", "rev")
           .orderBy("o_orderpriority"),
         Some(graft.operators.MannKendall.oracleSql(
-          """SELECT o_orderpriority AS grp,
+          s"""SELECT o_orderpriority AS grp,
   CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS i,
-  CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+  CAST(sum(${centsSql("o_totalprice")})
     AS BIGINT) AS v
 FROM orders GROUP BY 1, 2""",
           "o_orderpriority"))),
@@ -7744,16 +7540,15 @@ SELECT '0.0.0.0/0', 'default'""",
               .select(col("o_orderkey"), array(
                 col("o_orderkey") % 97,
                 col("o_custkey") % 89,
-                (col("o_totalprice").cast("decimal(18,2)") * 100)
-                  .cast("long") % 83,
+                cents("o_totalprice") % 83,
                 datediff(col("o_orderdate"), lit("1992-01-01"))
                   .cast("long") % 79).as("v")),
             "o_orderkey", "v", k = 5, rounds = 3, dim = 4)
           .orderBy("o_orderkey"),
         Some(graft.operators.KMeans.assignOracle(
-          """SELECT o_orderkey AS id, [
+          s"""SELECT o_orderkey AS id, [
   o_orderkey % 97, o_custkey % 89,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) % 83,
+  ${centsSql("o_totalprice")} % 83,
   CAST(CAST(o_orderdate AS DATE) - DATE '1992-01-01' AS BIGINT) % 79] AS v
 FROM orders""",
           "o_orderkey", k = 5, rounds = 3, dim = 4))),
@@ -7834,16 +7629,8 @@ FROM events WHERE event_type = 'purchase' GROUP BY 1, 2""",
       RegisteredQuery(
         "q_bucket_ingest",
         (s, dir) => {
-          val store = scratch("bucket_ingest_gate_store")
-          val lake = scratch("bucket_ingest_gate_lake")
-          val conf = s.sparkContext.hadoopConfiguration
-          Seq(store, lake).foreach { d =>
-            val p = new org.apache.hadoop.fs.Path(d)
-            val f = p.getFileSystem(conf)
-            Seq(p, graft.sources.AtomicStore.tmpPath(p),
-              graft.sources.AtomicStore.stashPath(p))
-              .foreach(f.delete(_, true))
-          }
+          val store = freshStore(s, "bucket_ingest_gate_store")
+          val lake = freshStore(s, "bucket_ingest_gate_lake")
           val ev = s.read.parquet(s"$dir/events.parquet")
             .select(col("user_id"),
               expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000L")
@@ -8002,9 +7789,7 @@ FROM events""",
         (s, dir) => {
           val li = Tables.resolve(s, dir)("lineitem")
             .withColumn("t", when(col("l_quantity") > 25, 1L).otherwise(0L))
-            .withColumn("cents",
-              (col("l_extendedprice").cast("decimal(18,2)") * 100)
-                .cast("long"))
+            .withColumn("cents", cents("l_extendedprice"))
           graft.operators.StratifiedAte.byStratum(li, "l_linestatus",
               "t", "cents")
             .unionByName(
@@ -8021,9 +7806,9 @@ FROM events""",
             .orderBy("l_linestatus")
         },
         Some {
-          val rows = """SELECT l_linestatus AS grp,
+          val rows = s"""SELECT l_linestatus AS grp,
   CASE WHEN l_quantity > 25 THEN 1 ELSE 0 END AS t,
-  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+  ${centsSql("l_extendedprice")} AS y
 FROM lineitem"""
           s"""SELECT * FROM (${graft.operators.StratifiedAte
             .byStratumOracle(rows, "l_linestatus")})
@@ -8043,15 +7828,13 @@ ORDER BY 1"""
             Tables.resolve(s, dir)("lineitem")
               .withColumn("t", expr("l_orderkey % 2"))
               .withColumn("qty", col("l_quantity").cast("long"))
-              .withColumn("cents",
-                (col("l_extendedprice").cast("decimal(18,2)") * 100)
-                  .cast("long")),
+              .withColumn("cents", cents("l_extendedprice")),
             "l_linestatus", "t", "qty", "cents")
           .orderBy("l_linestatus"),
         Some(graft.operators.Cuped.oracleSql(
-          """SELECT l_linestatus AS grp, l_orderkey % 2 AS t,
+          s"""SELECT l_linestatus AS grp, l_orderkey % 2 AS t,
   CAST(l_quantity AS BIGINT) AS x,
-  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+  ${centsSql("l_extendedprice")} AS y
 FROM lineitem""",
           "l_linestatus"))),
 
@@ -8080,16 +7863,8 @@ FROM documents""",
       RegisteredQuery(
         "q_session_ingest",
         (s, dir) => {
-          val store = scratch("session_ingest_gate_store")
-          val lake = scratch("session_ingest_gate_lake")
-          val conf = s.sparkContext.hadoopConfiguration
-          Seq(store, lake).foreach { d =>
-            val p = new org.apache.hadoop.fs.Path(d)
-            val f = p.getFileSystem(conf)
-            Seq(p, graft.sources.AtomicStore.tmpPath(p),
-              graft.sources.AtomicStore.stashPath(p))
-              .foreach(f.delete(_, true))
-          }
+          val store = freshStore(s, "session_ingest_gate_store")
+          val lake = freshStore(s, "session_ingest_gate_lake")
           val ev = s.read.parquet(s"$dir/events.parquet")
             .select(col("user_id"), col("ts"),
               expr("event_id % 9 + 1").as("v"))
@@ -8118,23 +7893,13 @@ FROM documents""",
       RegisteredQuery(
         "q_ktruss",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 45)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"),
-              col("b.l_partkey").as("dst"))
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 45)
           graft.operators.KTruss.trussToFixpoint(edges, "src", "dst",
               k = 3, maxRounds = 10)
             .orderBy("src", "dst")
         },
         Some(graft.operators.KTruss.oracleSql(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst
-FROM (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45) a
-JOIN (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45) b
-  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey""",
+          coPurchaseEdgesPrefilteredSql(45),
           k = 3, rounds = 10))),
 
       // fixed-width (positional) flat-file round-trip: nation through a
@@ -8214,14 +7979,13 @@ FROM documents ORDER BY doc_id""")),
               .groupBy(col("o_orderpriority"),
                 (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
                   .cast("long").as("m"))
-              .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")).as("rev")),
+              .agg(sum(cents("o_totalprice")).as("rev")),
             "o_orderpriority", "m", "rev")
           .orderBy("o_orderpriority"),
         Some(graft.operators.Siegel.oracleSql(
-          """SELECT o_orderpriority AS grp,
+          s"""SELECT o_orderpriority AS grp,
   CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS x,
-  CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+  CAST(sum(${centsSql("o_totalprice")})
     AS BIGINT) AS y
 FROM orders GROUP BY 1, 2""",
           "o_orderpriority"))),
@@ -8275,16 +8039,15 @@ FROM documents""",
               .withColumn("day", datediff(col("o_orderdate").cast("date"),
                 lit("1990-01-01")).cast("long"))
               .withColumn("amt",
-                (col("o_totalprice").cast("decimal(18,2)") * 100)
-                  .cast("long") *
+                cents("o_totalprice") *
                   when(expr("o_orderkey % 3 = 0"), -2L).otherwise(1L)),
             "o_custkey", "day", "o_orderkey", "amt")
           .orderBy("o_custkey"),
         Some(graft.operators.Ledger.runningBalanceOracle(
-          """SELECT o_custkey AS acct,
+          s"""SELECT o_custkey AS acct,
   CAST(CAST(o_orderdate AS DATE) - DATE '1990-01-01' AS BIGINT) AS i,
   o_orderkey AS id,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+  ${centsSql("o_totalprice")}
     * CASE WHEN o_orderkey % 3 = 0 THEN -2 ELSE 1 END AS a
 FROM orders""",
           "o_custkey"))),
@@ -8295,9 +8058,7 @@ FROM orders""",
         "q_double_entry",
         (s, dir) => {
           val o = Tables.resolve(s, dir)("orders")
-            .withColumn("cents",
-              (col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long"))
+            .withColumn("cents", cents("o_totalprice"))
           val legs = o.select(col("o_orderkey").as("txn"),
               col("cents").as("amt"))
             .unionByName(o.select(col("o_orderkey").as("txn"),
@@ -8308,12 +8069,12 @@ FROM orders""",
             .orderBy("txn")
         },
         Some(graft.operators.Ledger.doubleEntryOracle(
-          """SELECT o_orderkey AS txn,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS a
+          s"""SELECT o_orderkey AS txn,
+  ${centsSql("o_totalprice")} AS a
 FROM orders
 UNION ALL
 SELECT o_orderkey,
-  -CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+  -${centsSql("o_totalprice")}
     + CASE WHEN o_orderkey % 97 = 0 THEN 1 ELSE 0 END
 FROM orders""",
           "txn"))),
@@ -8328,15 +8089,14 @@ FROM orders""",
               .groupBy(col("o_orderpriority"),
                 (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
                   .cast("long").as("m"))
-              .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")).as("rev")),
+              .agg(sum(cents("o_totalprice")).as("rev")),
             "o_orderpriority", "m", "rev",
             minSize = 6, minDev = 20000000000L, maxDepth = 3)
           .orderBy("o_orderpriority", "split_pos"),
         Some(graft.operators.BinarySeg.oracleSql(
-          """SELECT o_orderpriority AS grp,
+          s"""SELECT o_orderpriority AS grp,
   CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS i,
-  CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+  CAST(sum(${centsSql("o_totalprice")})
     AS BIGINT) AS x
 FROM orders GROUP BY 1, 2""",
           "o_orderpriority", minSize = 6, minDev = 20000000000L,
@@ -8363,14 +8123,12 @@ FROM orders GROUP BY 1, 2""",
         "q_ktrim_mean",
         (s, dir) => graft.operators.TrimmedMean.trimmedMean(
             Tables.resolve(s, dir)("orders")
-              .withColumn("cents",
-                (col("o_totalprice").cast("decimal(18,2)") * 100)
-                  .cast("long")),
+              .withColumn("cents", cents("o_totalprice")),
             "o_orderpriority", "cents", k = 25)
           .orderBy("o_orderpriority"),
         Some(graft.operators.TrimmedMean.oracleSql(
-          """SELECT o_orderpriority AS grp,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+          s"""SELECT o_orderpriority AS grp,
+  ${centsSql("o_totalprice")} AS v
 FROM orders""",
           "o_orderpriority", k = 25))),
 
@@ -8413,23 +8171,13 @@ FROM nation ORDER BY n_nationkey""")),
       RegisteredQuery(
         "q_rich_club",
         (s, dir) => {
-          val li = Tables.resolve(s, dir)("lineitem")
-            .where(col("l_quantity") >= 45)
-            .select(col("l_orderkey"), col("l_partkey"))
-          val edges = li.as("a").join(li.as("b"),
-              col("a.l_orderkey") === col("b.l_orderkey") &&
-                col("a.l_partkey") < col("b.l_partkey"))
-            .select(col("a.l_partkey").as("src"),
-              col("b.l_partkey").as("dst"))
+          val edges = coPurchaseEdges(Tables.resolve(s, dir)("lineitem"), 45)
           graft.operators.RichClub.coefficients(edges, "src", "dst",
               Seq(0L, 1L, 2L, 3L, 5L, 8L))
             .orderBy("k")
         },
         Some(graft.operators.RichClub.oracleSql(
-          """SELECT a.l_partkey AS src, b.l_partkey AS dst
-FROM (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45) a
-JOIN (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45) b
-  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey""",
+          coPurchaseEdgesPrefilteredSql(45),
           Seq(0L, 1L, 2L, 3L, 5L, 8L)))),
 
       // quantile-shift table: WHERE did the 1995-vs-1996 order-value
@@ -8439,9 +8187,7 @@ JOIN (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45) b
         "q_quantile_shift",
         (s, dir) => {
           val o = Tables.resolve(s, dir)("orders")
-            .withColumn("cents",
-              (col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long"))
+            .withColumn("cents", cents("o_totalprice"))
           graft.operators.QuantileShift.shiftTable(
               o.where(year(col("o_orderdate")) === 1995),
               o.where(year(col("o_orderdate")) === 1996),
@@ -8450,11 +8196,11 @@ JOIN (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 45) b
             .orderBy("o_orderpriority", "q_num", "q_den")
         },
         Some(graft.operators.QuantileShift.oracleSql(
-          """SELECT o_orderpriority AS grp,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+          s"""SELECT o_orderpriority AS grp,
+  ${centsSql("o_totalprice")} AS v
 FROM orders WHERE year(o_orderdate) = 1995""",
-          """SELECT o_orderpriority AS grp,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+          s"""SELECT o_orderpriority AS grp,
+  ${centsSql("o_totalprice")} AS v
 FROM orders WHERE year(o_orderdate) = 1996""",
           "o_orderpriority",
           Seq((1L, 4L), (1L, 2L), (3L, 4L), (9L, 10L))))),
@@ -8530,15 +8276,14 @@ FROM orders""",
               col("l_returnflag"),
               concat(col("l_orderkey").cast("string"), lit("-"),
                 col("l_linenumber").cast("string")).as("rid"),
-              (col("l_extendedprice").cast("decimal(18,2)") * 100)
-                .cast("long").as("cents")),
+              cents("l_extendedprice").as("cents")),
             "l_returnflag", "rid", "cents", reps = 32, loRank = 2,
             hiRank = 31)
           .orderBy("l_returnflag"),
         Some(PoissonBoot.summaryOracle(
-          """SELECT l_returnflag AS grp,
+          s"""SELECT l_returnflag AS grp,
   CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR) AS id,
-  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
+  ${centsSql("l_extendedprice")} AS x
 FROM lineitem""",
           "l_returnflag", reps = 32, loRank = 2, hiRank = 31))),
 
@@ -8550,13 +8295,12 @@ FROM lineitem""",
             Tables.resolve(s, dir)("orders").select(
               col("o_orderpriority"),
               col("o_orderkey").cast("string").as("rid"),
-              (col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long").as("cents")),
+              cents("o_totalprice").as("cents")),
             "o_orderpriority", "rid", "cents", reps = 8)
           .orderBy("o_orderpriority", "rep"),
         Some(PoissonBoot.replicatesOracle(
-          """SELECT o_orderpriority AS grp, CAST(o_orderkey AS VARCHAR) AS id,
-  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
+          s"""SELECT o_orderpriority AS grp, CAST(o_orderkey AS VARCHAR) AS id,
+  ${centsSql("o_totalprice")} AS x
 FROM orders""",
           "o_orderpriority", reps = 8))),
 
@@ -8700,13 +8444,12 @@ FROM (SELECT count(*) AS c FROM nation GROUP BY n_regionkey)""")),
         "q_winsorized_mean",
         (s, dir) => TrimmedMean.winsorizedMean(
             Tables.resolve(s, dir)("lineitem").select(col("l_returnflag"),
-              (col("l_extendedprice").cast("decimal(18,2)") * 100)
-                .cast("long").as("cents")),
+              cents("l_extendedprice").as("cents")),
             "l_returnflag", "cents", k = 25)
           .orderBy("l_returnflag"),
         Some(TrimmedMean.winsorizedOracleSql(
-          """SELECT l_returnflag AS grp,
-  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+          s"""SELECT l_returnflag AS grp,
+  ${centsSql("l_extendedprice")} AS v
 FROM lineitem""",
           "l_returnflag", k = 25))),
 
@@ -8885,12 +8628,6 @@ FROM orders""",
     */
   private def GateWeights: Array[Long] =
     Array.tabulate(64)(b => ((b * 2654435761L) % 1001L) - 500L)
-
-  /** Per-dataset-dir cache of the q_bucket_cutpoints exact-regime
-    * precondition (corpus row count ≤ sketch capacity).
-    */
-  private[graft] val cutpointsPrecondition =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   def all: Seq[RegisteredQuery] = {
     val qs = relational ++ rowOps ++ sourceOps ++ llmOps ++ corpusOps ++ scaleOps ++ featureOps

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query profiler: run one registry gate N times against a
   * dataset dir, print wall times and the formatted plan — the iterate
   * loop behind bench-outlier hunts (`sbt "runMain graft.tools.Profile
@@ -13,21 +11,7 @@ object Profile {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val showPlan = args.length > 3 && args(3) == "plan"
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", Runtime.getRuntime.availableProcessors())
-      // match Bench's AQE coalescing floor so profiled plans are the
-      // benched plans (rationale in Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
-      // pin ANSI overflow-raising for the exact-arithmetic paths
-      // (rationale in Bench.scala)
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("graft-profile")
     val q = graft.Registry.all.find(_.name == name)
       .getOrElse(sys.error(s"unknown query $name"))
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, Int)]()

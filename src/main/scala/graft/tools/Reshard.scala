@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Re-shard a test dataset directory so scans can parallelize: every
   * `<table>.parquet` input is rewritten as a DIRECTORY of `n` part files
   * under the output dir (same name, so `Tables.resolve` /
@@ -21,13 +19,7 @@ object Reshard {
     val inDir = args(0)
     val outDir = args(1)
     val n = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .appName("graft-reshard")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("graft-reshard")
     val in = new org.apache.hadoop.fs.Path(inDir)
     val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(in).filter(_.getPath.getName.endsWith(".parquet")).foreach { st =>

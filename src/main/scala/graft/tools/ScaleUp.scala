@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Timing-only synthetic scale-up of the TPC-H-shaped test tables:
@@ -21,13 +21,7 @@ object ScaleUp {
     val outDir = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
     val files = if (args.length > 3) args(3).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .appName("graft-scaleup")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("graft-scaleup")
     val Shift = 1000000000000L // far above any key at these SFs
     // per-table key columns to shift per copy (keeps keys globally
     // distinct across copies -> linear growth everywhere)

@@ -20,7 +20,7 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       // pin ANSI overflow-raising for the exact-arithmetic paths
-      // (rationale in Bench.scala)
+      // (rationale in Harness.scala)
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

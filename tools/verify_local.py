@@ -6,7 +6,9 @@ Usage: python3 tools/verify_local.py [sf_dir] [out_dir]
 Assumes `sbt "runMain graft.Verify <sf_dir> <out_dir>"` has already run (or
 pass --run to run it). For every query output parquet in out_dir, runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the sf parquet tables,
-sorts columns by name and rows by value, and compares cell-by-cell.
+sorts columns by name and rows by value, and compares cell-by-cell. An
+oracle_sql.json key with no output dir is reported as MISSING-OUTPUT and
+counts as a failure.
 """
 import json, os, subprocess, sys
 
@@ -125,6 +127,12 @@ def main():
                 results[name] = f"FLOAT-NOISE row {bad[0]}: got={bad[1]} exp={bad[2]}"
             else:
                 results[name] = f"VALUE-MISMATCH row {bad[0]}: got={bad[1]} exp={bad[2]}"
+
+    # Verify only logs a gate that throws, so its output dir never appears:
+    # count every oracle key without output as a failure, not as absent.
+    for name in oracle:
+        if name not in results and (not only or name in only):
+            results[name] = "MISSING-OUTPUT (no result dir; the gate failed in Verify)"
 
     width = max(len(n) for n in results) if results else 0
     n_ok = sum(1 for v in results.values() if v.startswith("OK"))
