@@ -2795,9 +2795,9 @@ FROM orders o JOIN dim d ON o.o_custkey = d.k
       RegisteredQuery(
         "q_json_extract",
         (s, dir) => {
-          // readEvents, not Tables.resolve: the events parquet carries
-          // TIMESTAMP(NANOS), which Spark's reader rejects at schema
-          // resolution even for queries that never touch ts
+          // readEvents, like the other event gates: it normalizes historical
+          // NANOS / instant-typed ts files. Every current scale factor stores
+          // ts as micros TIMESTAMP_NTZ, which Tables.resolve reads as well
           val ev = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
           val k = get_json_object(col("props"), "$.k").cast("long")
           val k2 = from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
@@ -7482,7 +7482,7 @@ SELECT '0.0.0.0/0', 'default'""",
       RegisteredQuery(
         "q_phrase_search",
         (s, dir) => graft.text.PhraseSearch.phraseMatches(
-            s.read.parquet(s"$dir/documents.parquet"),
+            Tables.resolve(s, dir)("documents"),
             "doc_id", "text", Seq("table", "table"))
           .orderBy("doc_id", "start_pos"),
         Some(graft.text.PhraseSearch.matchesOracle(
@@ -7492,7 +7492,7 @@ SELECT '0.0.0.0/0', 'default'""",
       RegisteredQuery(
         "q_phrase_counts",
         (s, dir) => graft.text.PhraseSearch.phraseCounts(
-            s.read.parquet(s"$dir/documents.parquet"),
+            Tables.resolve(s, dir)("documents"),
             "doc_id", "text", Seq("fast", "table"))
           .orderBy("doc_id"),
         Some(graft.text.PhraseSearch.countsOracle(
@@ -7521,7 +7521,7 @@ SELECT '0.0.0.0/0', 'default'""",
       RegisteredQuery(
         "q_pps_sample",
         (s, dir) => graft.operators.PpsSample.ppsN(
-            s.read.parquet(s"$dir/documents.parquet"),
+            Tables.resolve(s, dir)("documents"),
             Seq("lang"), col("doc_id").cast("string"), col("doc_id"),
             "n_chars", n = 10)
           .orderBy("lang", "rank"),
@@ -7559,7 +7559,7 @@ FROM orders""",
       RegisteredQuery(
         "q_croston",
         (s, dir) => graft.operators.Croston.method(
-            s.read.parquet(s"$dir/events.parquet")
+            Tables.resolve(s, dir)("events")
               .where(col("event_type") === "purchase")
               .groupBy(col("user_id"),
                 datediff(col("ts").cast("date"), lit("2023-12-31"))
@@ -7581,7 +7581,7 @@ FROM events WHERE event_type = 'purchase' GROUP BY 1, 2""",
       RegisteredQuery(
         "q_token_bucket",
         (s, dir) => graft.operators.TokenBucket.replay(
-            s.read.parquet(s"$dir/events.parquet")
+            Tables.resolve(s, dir)("events")
               .withColumn("sec",
                 expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000L")),
             "user_id", "sec", "event_id",
@@ -7631,7 +7631,7 @@ FROM events WHERE event_type = 'purchase' GROUP BY 1, 2""",
         (s, dir) => {
           val store = freshStore(s, "bucket_ingest_gate_store")
           val lake = freshStore(s, "bucket_ingest_gate_lake")
-          val ev = s.read.parquet(s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
             .select(col("user_id"),
               expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000L")
                 .as("sec"), col("event_id"))
@@ -7668,7 +7668,7 @@ FROM events WHERE event_type = 'purchase' GROUP BY 1, 2""",
               concat(lit(pII), orHex, lit("000000" + "00000000")))
               .otherwise(concat(lit(pMM), lit("00"), orHex,
                 lit("0000" + "00000000"))))
-          s.read.parquet(s"$dir/documents.parquet")
+          Tables.resolve(s, dir)("documents")
             .select(col("doc_id"),
               graft.functions.ExifMeta(payload).as("m"))
             .select(col("doc_id"), col("m.byte_order").as("byte_order"),
@@ -7687,7 +7687,7 @@ FROM documents ORDER BY doc_id""")),
       // DuckDB's own nfc_normalize (same Unicode tables)
       RegisteredQuery(
         "q_nfc_audit",
-        (s, dir) => s.read.parquet(s"$dir/documents.parquet")
+        (s, dir) => Tables.resolve(s, dir)("documents")
           .select(col("doc_id"),
             graft.functions.NfcStats(
               when(expr("doc_id % 3 = 0"),
@@ -7773,7 +7773,7 @@ FROM orders ORDER BY o_orderkey"""
       RegisteredQuery(
         "q_shapley",
         (s, dir) => graft.llm.ShapleyAttribution.shapley(
-            s.read.parquet(s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "user_id", "event_type", "ts", "purchase")
           .orderBy("channel"),
         Some(graft.llm.ShapleyAttribution.oracleSql(
@@ -7843,7 +7843,7 @@ FROM lineitem""",
       RegisteredQuery(
         "q_brier_decomp",
         (s, dir) => graft.operators.BrierDecomp.decompose(
-            s.read.parquet(s"$dir/documents.parquet")
+            Tables.resolve(s, dir)("documents")
               .withColumn("p", expr("(doc_id * 37) % 1001"))
               .withColumn("y", expr(
                 "CASE WHEN (doc_id * 2654435761L) % 1000 < " +
@@ -7865,7 +7865,7 @@ FROM documents""",
         (s, dir) => {
           val store = freshStore(s, "session_ingest_gate_store")
           val lake = freshStore(s, "session_ingest_gate_lake")
-          val ev = s.read.parquet(s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
             .select(col("user_id"), col("ts"),
               expr("event_id % 9 + 1").as("v"))
             .withColumn("us", unix_micros(col("ts").cast("timestamp")))
@@ -7931,7 +7931,7 @@ FROM nation ORDER BY n_nationkey""")),
       RegisteredQuery(
         "q_beaconing",
         (s, dir) => graft.operators.Beaconing.screen(
-            s.read.parquet(s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             Seq("user_id", "event_type"), "ts",
             minGaps = 5L, maxFanoQ6 = 60000000L)
           .orderBy("user_id", "event_type"),
@@ -7955,7 +7955,7 @@ FROM nation ORDER BY n_nationkey""")),
             when(expr("doc_id % 2 = 0"), netscape).otherwise(lit("")),
             expr(s"repeat(concat('21F90400', lpad(hex(10 + doc_id % 5), 2, '0'), '000000', '$frameUnit'), CAST(doc_id % 4 + 1 AS INT))"),
             lit("3B"))
-          s.read.parquet(s"$dir/documents.parquet")
+          Tables.resolve(s, dir)("documents")
             .select(col("doc_id"),
               graft.functions.GifAnim(unhex(hexStr)).as("m"))
             .select(col("doc_id"), col("m.n_frames").as("n_frames"),
@@ -7995,7 +7995,7 @@ FROM orders GROUP BY 1, 2""",
       RegisteredQuery(
         "q_multilabel_eval",
         (s, dir) => graft.operators.MultiLabelEval.evaluate(
-            s.read.parquet(s"$dir/documents.parquet")
+            Tables.resolve(s, dir)("documents")
               .withColumn("g", expr("filter(array(" +
                 "CASE WHEN doc_id % 2 = 0 THEN 'a' END, " +
                 "CASE WHEN doc_id % 3 = 0 THEN 'b' END, " +
@@ -8024,7 +8024,7 @@ FROM documents""",
       RegisteredQuery(
         "q_concordance",
         (s, dir) => graft.text.Concordance.kwic(
-            s.read.parquet(s"$dir/documents.parquet"),
+            Tables.resolve(s, dir)("documents"),
             "doc_id", "text", "vector", window = 3)
           .orderBy("doc_id", "pos"),
         Some(graft.text.Concordance.oracleSql(
@@ -8210,7 +8210,7 @@ FROM orders WHERE year(o_orderdate) = 1996""",
       RegisteredQuery(
         "q_zero_inflation",
         (s, dir) => graft.operators.ZeroInflation.audit(
-            s.read.parquet(s"$dir/events.parquet")
+            Tables.resolve(s, dir)("events")
               .where(col("event_type") === "purchase")
               .groupBy(col("user_id"),
                 datediff(col("ts").cast("date"), lit("2023-12-31"))
@@ -8240,7 +8240,7 @@ LEFT JOIN (SELECT user_id, CAST(ts AS DATE) - DATE '2023-12-31' AS d,
       RegisteredQuery(
         "q_keyness",
         (s, dir) => graft.text.Keyness.keyness(
-            s.read.parquet(s"$dir/documents.parquet"),
+            Tables.resolve(s, dir)("documents"),
             "text", col("lang") === "en", minCount = 50L)
           .orderBy("term"),
         Some(graft.text.Keyness.oracleSql(
@@ -8329,7 +8329,7 @@ FROM orders GROUP BY 1, 2""",
       RegisteredQuery(
         "q_temperature_mix",
         (s, dir) => graft.llm.TemperatureMix.mix(
-            s.read.parquet(s"$dir/documents.parquet").select(
+            Tables.resolve(s, dir)("documents").select(
               col("source"),
               graft.text.TextFunctions.nTokens(col("text")).cast("long")
                 .as("tok")),
@@ -8385,7 +8385,7 @@ FROM orders""",
       RegisteredQuery(
         "q_chunker",
         (s, dir) => graft.text.Chunker.chunks(
-            s.read.parquet(s"$dir/documents.parquet"),
+            Tables.resolve(s, dir)("documents"),
             "doc_id", "text", chunkLen = 50, overlap = 10)
           .orderBy("doc_id", "chunk_idx"),
         Some(graft.text.Chunker.oracleSql(
@@ -8397,7 +8397,7 @@ FROM orders""",
       RegisteredQuery(
         "q_freq_of_freq",
         (s, dir) => graft.text.GoodTuring.freqOfFreq(
-            s.read.parquet(s"$dir/documents.parquet").select(col("lang"),
+            Tables.resolve(s, dir)("documents").select(col("lang"),
               explode(graft.text.TextFunctions.tokens(col("text")))
                 .as("term")),
             "lang", "term")
@@ -8412,7 +8412,7 @@ FROM documents""",
       RegisteredQuery(
         "q_good_turing",
         (s, dir) => graft.text.GoodTuring.unseenMass(
-            s.read.parquet(s"$dir/documents.parquet").select(col("lang"),
+            Tables.resolve(s, dir)("documents").select(col("lang"),
               explode(graft.text.TextFunctions.tokens(col("text")))
                 .as("term")),
             "lang", "term")
@@ -8458,7 +8458,7 @@ FROM lineitem""",
       RegisteredQuery(
         "q_holm",
         (s, dir) => Fdr.holmDecisions(
-            s.read.parquet(s"$dir/documents.parquet")
+            Tables.resolve(s, dir)("documents")
               .withColumn("p_raw",
                 expr("(doc_id * 2654435761L) % 1000001"))
               .withColumn("p", expr(

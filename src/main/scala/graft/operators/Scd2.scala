@@ -66,7 +66,8 @@ object Scd2 {
   }
 
   /** Fold one in-order change batch into the dimension store at `storeDir`
-    * (bootstraps on first use). After n folds the store equals [[build]]
+    * (bootstraps on first use; an empty batch leaves an existing store
+    * unwritten). After n folds the store equals [[build]]
     * over the concatenation — exactly, given the in-order contract.
     */
   def update(spark: SparkSession, storeDir: String, batch: DataFrame,
@@ -85,6 +86,10 @@ object Scd2 {
     // source evaluates once per fold (the LakeMerge `aligned` posture)
     val b = batch.persist()
     try {
+      // an empty batch changes nothing: return before the rebuild, so the
+      // strict check's unbounded Observation.get never waits on a plan
+      // that an empty input may have let the optimizer cut away
+      if (b.isEmpty) return
       val keys = b.select(col(keyCol)).distinct()
       val affected = dim.join(keys, Seq(keyCol), "left_semi")
       // stored versions ARE the key's surviving change log: replay them with

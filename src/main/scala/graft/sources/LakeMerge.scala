@@ -209,6 +209,18 @@ object LakeMerge {
     * already-moved one is gone from it, and its lake copy stays), and a
     * crash between a per-directory delete and its rename just re-runs
     * that pair.
+    *
+    * Filesystem contract: a directory rename is atomic — a staged
+    * partition is either still wholly in the stage or wholly in the lake,
+    * as on HDFS and local filesystems; replay relies on it. On object
+    * stores (S3A, GCS, ABFS without hierarchical namespace) rename
+    * degrades to copy-then-delete. That costs a copy of every staged byte
+    * instead of O(1) metadata per partition, and it is not atomic: a crash
+    * during the copy is replayed correctly (the partial lake dir is
+    * deleted and the full staged dir copied again), but a crash partway
+    * through deleting the staged source leaves a partial staged dir that
+    * replay would copy over the complete lake one. Such a lake needs a
+    * filesystem or committer with atomic directory rename.
     */
   private[sources] def applyStage(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
                                   lake: Path): Unit = {
@@ -234,20 +246,27 @@ object LakeMerge {
 
   /** The stage's leaf partition directories as relative hive paths
     * (`a=v/b=w`), discovered from the directory layout: walk `name=value`
-    * directories down; a hive dir with no hive subdirs is a leaf.
+    * directories down; a hive dir with no hive subdirs is a leaf only if it
+    * holds data files. An apply that renamed every leaf under `a=1` away
+    * leaves `a=1` behind empty — replaying it as a leaf would delete the
+    * lake's `a=1`, data just applied included, and rename nothing over it.
     */
   private[sources] def stagedPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
                                            stage: Path): Seq[String] = {
     if (!fs.exists(stage)) return Nil
     def walk(p: Path, rel: List[String]): Seq[String] = {
-      val subs = fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      if (subs.isEmpty) {
-        if (rel.isEmpty) Nil else Seq(rel.reverse.mkString("/"))
-      } else subs.toSeq.flatMap(st => walk(st.getPath, st.getPath.getName :: rel))
+      val (dirs, files) = fs.listStatus(p).partition(_.isDirectory)
+      val subs = dirs.filter(_.getPath.getName.contains("="))
+      if (subs.nonEmpty) subs.toSeq.flatMap(st => walk(st.getPath, st.getPath.getName :: rel))
+      else if (rel.nonEmpty && files.exists(st => visible(st.getPath.getName)))
+        Seq(rel.reverse.mkString("/"))
+      else Nil
     }
     walk(stage, Nil)
   }
+
+  private def visible(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
 
   private val EmptiedMarker = "_graft_emptied_partitions"
   private[sources] val CommitMarker = "_graft_commit"
@@ -313,8 +332,7 @@ object LakeMerge {
     fs.exists(dir) && {
       def any(p: Path): Boolean = fs.listStatus(p).exists { st =>
         val n = st.getPath.getName
-        if (st.isDirectory) !n.startsWith("_") && !n.startsWith(".") && any(st.getPath)
-        else !n.startsWith("_") && !n.startsWith(".")
+        visible(n) && (!st.isDirectory || any(st.getPath))
       }
       any(dir)
     }

@@ -23,7 +23,9 @@ object StreamStage {
     * ORDER-SENSITIVE — the copy to ascending chunk names and the mtime
     * stamps that pin the file source's replay order — stays sequential
     * and driver-side, so the staged layout is byte-identical to the
-    * sequential form.
+    * sequential form. A failed cut cancels its sibling chunk jobs, and no
+    * `<dir>__stage_tmp_*` sibling outlives the call, whether it succeeds
+    * or fails.
     */
   def stageChunks(df: DataFrame, cuts: Seq[Column], dir: String): Unit = {
     val spark = df.sparkSession
@@ -36,16 +38,19 @@ object StreamStage {
       math.max(1, math.min(3, cuts.length)))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
+    // tags this call's chunk jobs, so a failed cut can cancel its siblings
+    val tag = s"graft-stage-chunks-${java.util.UUID.randomUUID()}"
     try {
-      val staged = cuts.zipWithIndex.map { case (cut, i) =>
-        val tmp = new org.apache.hadoop.fs.Path(dir + s"__stage_tmp_$i")
-        scala.concurrent.Future {
-          fs.delete(tmp, true)
-          df.where(cut).coalesce(1).write.parquet(tmp.toString)
-          tmp
-        }
-      }.map(f => scala.concurrent.Await.result(
-        f, scala.concurrent.duration.Duration.Inf))
+      val staged = scala.concurrent.Await.result(
+        scala.concurrent.Future.sequence(cuts.zipWithIndex.map { case (cut, i) =>
+          val tmp = new org.apache.hadoop.fs.Path(dir + s"__stage_tmp_$i")
+          scala.concurrent.Future {
+            spark.sparkContext.addJobTag(tag)
+            fs.delete(tmp, true)
+            df.where(cut).coalesce(1).write.parquet(tmp.toString)
+            tmp
+          }
+        }), scala.concurrent.duration.Duration.Inf)
       staged.zipWithIndex.foreach { case (tmp, i) =>
         val part = fs.listStatus(tmp)
           .map(_.getPath).find(_.getName.startsWith("part-"))
@@ -54,9 +59,22 @@ object StreamStage {
         org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, dest, false, conf)
         // ascending mtimes pin the file source's processing order
         fs.setTimes(dest, 1700000000000L + i * 60000L, -1)
-        fs.delete(tmp, true)
       }
-    } finally pool.shutdown()
+    } catch {
+      case e: Throwable =>
+        // a failed cut: the sibling chunks may still be writing
+        spark.sparkContext.cancelJobsWithTag(tag)
+        throw e
+    } finally {
+      // drop queued chunks and wait for running ones, so no write lands
+      // after the cleanup below
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      // every tmp sibling, also those of an earlier run that staged more cuts
+      fs.listStatus(target.getParent)
+        .filter(_.getPath.getName.startsWith(target.getName + "__stage_tmp_"))
+        .foreach(st => fs.delete(st.getPath, true))
+    }
   }
 
   /** Run a streaming frame to completion through an append-mode memory

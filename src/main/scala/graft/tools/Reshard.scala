@@ -3,7 +3,8 @@ package graft.tools
 /** Re-shard a test dataset directory so scans can parallelize: every
   * `<table>.parquet` input is rewritten as a DIRECTORY of `n` part files
   * under the output dir (same name, so `Tables.resolve` /
-  * `spark.read.parquet` pick it up unchanged).
+  * `spark.read.parquet` pick it up unchanged). Each rewritten table must
+  * keep its declared `Tables` schema, or the tool fails.
   *
   * Why: the generated sf inputs are ONE file with ONE row group each, so
   * every scan stage is a single task at ANY core count — the 8-vs-32-core
@@ -27,6 +28,7 @@ object Reshard {
       spark.read.parquet(st.getPath.toString)
         .repartition(n)
         .write.mode("overwrite").parquet(s"$outDir/$name")
+      graft.Tables.requireDeclared(spark, outDir, name.stripSuffix(".parquet"))
       println(s"[reshard] $name -> $outDir/$name ($n files)")
     }
     spark.stop()

@@ -40,9 +40,11 @@ object ScaleUp {
       val in = spark.read.parquet(s"$inDir/$t.parquet")
       val out = (0 until k).map(copyOf(in, t, _)).reduce(_ unionByName _)
       out.repartition(files).write.mode("overwrite").parquet(s"$outDir/$t.parquet")
+      graft.Tables.requireDeclared(spark, outDir, t)
       println(s"[scaleup] $t x$k -> $outDir/$t.parquet")
     }
-    // pass the remaining tables through unchanged so Tables.resolve works
+    // pass the remaining tables through unchanged so Tables.resolve works;
+    // every written table must keep its declared schema
     val done = Set("orders", "lineitem")
     val in = new org.apache.hadoop.fs.Path(inDir)
     val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -51,6 +53,7 @@ object ScaleUp {
       if (!done.contains(name)) {
         spark.read.parquet(st.getPath.toString)
           .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+        graft.Tables.requireDeclared(spark, outDir, name)
         println(s"[scaleup] $name passthrough")
       }
     }

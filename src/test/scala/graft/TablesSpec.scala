@@ -1,0 +1,80 @@
+package graft
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** The declared table schemas against the parquet footers of every scale
+  * factor, and the job budget they buy: resolving a table, and building the
+  * plan of a table-reading gate, submit no Spark job.
+  */
+class TablesSpec extends SparkSpec {
+
+  private lazy val scaleFactors =
+    Seq("sf0.001", "sf0.01", "sf0.1").map(n => s"${new java.io.File(sf).getParent}/$n")
+
+  private val Marker = "graft.tablesSpec.op"
+
+  /** Spark jobs `body` submits from this thread or threads it spawns. The
+    * listener bus is asynchronous, so a sentinel job submitted after `body`
+    * closes the count: the bus delivers in order, so once the sentinel's
+    * start has arrived every job of `body` has been seen.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(Marker)).orNull match {
+          case `id` => jobs.incrementAndGet()
+          case s if s == id + ".sentinel" => sentinelSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(Marker, id)
+      try body finally sc.setLocalProperty(Marker, null)
+      sc.setLocalProperty(Marker, id + ".sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Marker, null)
+      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the declared schema of every table equals what parquet inference yields, on every SF") {
+    for (dir <- scaleFactors; t <- Tables.all) {
+      Tables.requireDeclared(spark, dir, t)
+      assert(Tables.resolve(spark, dir)(t).schema == Tables.schema(t), s"$dir/$t")
+    }
+  }
+
+  test("a derived copy whose schema drifted is rejected") {
+    val dir = "/tmp/graft_tables_spec"
+    // instant-typed order dates: a declared TIMESTAMP_NTZ read would not
+    // match what the file holds
+    Tables.resolve(spark, sf)("orders")
+      .withColumn("o_orderdate", org.apache.spark.sql.functions.col("o_orderdate").cast("timestamp"))
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val e = intercept[IllegalArgumentException](Tables.requireDeclared(spark, dir, "orders"))
+    assert(e.getMessage.contains("o_orderdate"))
+  }
+
+  test("resolving a table submits no Spark job") {
+    for (t <- Tables.all)
+      assert(jobsOf(Tables.resolve(spark, sf)(t)) == 0, t)
+  }
+
+  test("an unknown table name fails fast instead of inferring a schema") {
+    val e = intercept[IllegalArgumentException](Tables.resolve(spark, sf)("partsupp"))
+    assert(e.getMessage.contains("partsupp"))
+  }
+
+  test("building q1_agg, q_tpch_q2 and q_tpch_q21 submits no Spark job") {
+    val queries = SparkEntry.queries
+    for (name <- Seq("q1_agg", "q_tpch_q2", "q_tpch_q21"))
+      assert(jobsOf(queries(name)(spark, sf)) == 0, name)
+  }
+}

@@ -83,6 +83,37 @@ class Scd2Spec extends SparkSpec {
       r.contains((2L, "silver", "2024-06-01", 40L, None, true)))
   }
 
+  test("strict update with an empty batch returns at once and leaves the store unwritten") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+    import org.scalatest.concurrent.TimeLimits.failAfter
+    import org.scalatest.time.SpanSugar._
+    // interrupts a blocked Observation.get instead of waiting forever
+    implicit val signaler: Signaler = ThreadSignaler
+    import spark.implicits._
+    val dir = freshDir("empty_batch")
+    Scd2.update(spark, dir, changesDf, "k", Seq("status"), "eff", "seq")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files = fs.listStatus(new Path(dir)).map(_.getPath.getName).toSet
+    val (beforeRows, beforeFiles) = (rows(Scd2.read(spark, dir)), files)
+    val empties = Seq(
+      "empty local relation" -> Seq.empty[(Long, String, java.sql.Date, Long)]
+        .toDF("k", "status", "eff", "seq"),
+      "limit 0" -> changesDf.limit(0),
+      "empty only at run time" -> spark.read.parquet(s"$sf/orders.parquet").select(
+        col("o_custkey").as("k"), col("o_orderstatus").as("status"),
+        col("o_orderdate").cast("date").as("eff"), col("o_orderkey").as("seq"))
+        .where(col("seq") < 0))
+    empties.foreach { case (what, batch) =>
+      withClue(what) {
+        failAfter(60.seconds) {
+          Scd2.update(spark, dir, batch, "k", Seq("status"), "eff", "seq")
+        }
+        assert(files == beforeFiles, "an empty batch must not rewrite the store")
+      }
+    }
+    assert(rows(Scd2.read(spark, dir)) == beforeRows)
+  }
+
   test("tolerant fold: a LATE batch folds exactly — store equals build(union)") {
     import spark.implicits._
     val dir = freshDir("tolerant"); val log = freshDir("tolerant_log")

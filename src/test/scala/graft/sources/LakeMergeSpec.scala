@@ -92,6 +92,38 @@ class LakeMergeSpec extends SparkSpec {
     assert(readLake(lake)(2L) == (22.0, "a") && !fs.exists(stage))
   }
 
+  test("two-level partitions: replay after a partial apply keeps the applied and untouched leaves") {
+    val lake = freshDirWithStage("replay_two_level")
+    def lakeRows = spark.read.parquet(lake).select("k", "v", "p", "q").collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getString(2), r.getString(3))).toMap
+    LakeMerge.merge(spark, lake, Seq((1L, 10.0, "a", "x"), (2L, 20.0, "a", "y"),
+      (3L, 30.0, "b", "x")).toDF("k", "v", "p", "q"), Seq("k"), Seq("p", "q"))
+    val fs = new Path(lake).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = LakeMerge.stagePath(new Path(lake))
+
+    // the committed stage of a merge updating k=1 (p=a/q=x) and k=3 (p=b/q=x)
+    Seq((1L, 11.0, "a", "x"), (3L, 33.0, "b", "x")).toDF("k", "v", "p", "q")
+      .write.partitionBy("p", "q").parquet(stage.toString)
+    fs.create(new Path(stage, LakeMerge.CommitMarker), true).close()
+    // crash after apply moved the only leaf under p=a: the stage keeps an
+    // empty p=a dir, which is not a partition to apply
+    fs.delete(new Path(lake, "p=a/q=x"), true)
+    assert(fs.rename(new Path(stage, "p=a/q=x"), new Path(lake, "p=a/q=x")))
+    assert(fs.listStatus(new Path(stage, "p=a")).isEmpty)
+
+    LakeMerge.recover(spark, lake)
+    assert(!fs.exists(stage))
+    assert(lakeRows == Map(1L -> (11.0, "a", "x"), 2L -> (20.0, "a", "y"),
+      3L -> (33.0, "b", "x")))
+
+    // an ordinary two-level merge after the replay, moving k=2 across p
+    LakeMerge.merge(spark, lake, Seq((2L, 22.0, "b", "y")).toDF("k", "v", "p", "q"),
+      Seq("k"), Seq("p", "q"))
+    assert(lakeRows == Map(1L -> (11.0, "a", "x"), 2L -> (22.0, "b", "y"),
+      3L -> (33.0, "b", "x")))
+    assert(!fs.exists(new Path(lake, "p=a/q=y")), "evacuated leaf must be dropped")
+  }
+
   test("rows in a NULL-valued partition survive a merge touching that partition") {
     val lake = freshDir("nullpart")
     val base = Seq((1L, 10.0, Option("a")), (2L, 20.0, Option.empty[String]),
