@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Benchmark main: runs every registered query against SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":N,"unit":"sec","queries":{..}}.
@@ -25,6 +25,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * metrics. Wall time at a small scale factor hides scale regressions — a
   * plan that starts shuffling 10× more data can still clear the 2× time bar
   * at sf0.1 while falling over at 100×; the bytes are the early warning.
+  * It also counts the Spark jobs each query submits, construction included
+  * (min over passes, like wall): at this scale wall is mostly jobs times
+  * the fixed cost of a job.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -42,7 +45,9 @@ object Bench {
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
     val peakTaskMem = new java.util.concurrent.atomic.AtomicLong(0)
     val taskEvents = new java.util.concurrent.atomic.AtomicLong(0)
+    val jobEvents = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobEvents.incrementAndGet()
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
         if (m != null) {
@@ -83,9 +88,11 @@ object Bench {
     // AQE re-plan or stray attribution should surface, not vanish in a min
     val shuf = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
     val peak = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    val jobs = scala.collection.mutable.Map[String, Long]().withDefaultValue(Long.MaxValue)
     val errs = scala.collection.mutable.Map[String, String]()
     for (_ <- 0 until iters; (name, fn) <- names if !errs.contains(name)) {
       val before = settle()
+      val jobsBefore = jobEvents.get()
       peakTaskMem.set(0)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
@@ -93,6 +100,7 @@ object Bench {
       best(name) = math.min(best(name), (System.nanoTime() - t0) / 1e9)
       shuf(name) = math.max(shuf(name), settle() - before)
       peak(name) = math.max(peak(name), peakTaskMem.get())
+      jobs(name) = math.min(jobs(name), jobEvents.get() - jobsBefore)
     }
     val results = names.map { case (name, _) =>
       (name, if (errs.contains(name)) -1.0 else best(name), errs.get(name))
@@ -100,6 +108,7 @@ object Bench {
     val qs = results.map { case (k, v, _) => s"\"${esc(k)}\":$v" }.mkString("{", ",", "}")
     val sb = results.map { case (k, _, _) => s"\"${esc(k)}\":${shuf(k)}" }.mkString("{", ",", "}")
     val pm = results.map { case (k, _, _) => s"\"${esc(k)}\":${peak(k)}" }.mkString("{", ",", "}")
+    val jb = results.map { case (k, _, _) => s"\"${esc(k)}\":${jobs(k)}" }.mkString("{", ",", "}")
     val errJson = results.collect { case (k, _, Some(m)) => s"\"${esc(k)}\":\"${esc(m)}\"" }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, None) => v }.sum
@@ -108,7 +117,7 @@ object Bench {
     // go LAST; the bulkier diagnostics sit up front where truncation can
     // only cost us the diagnostics. The full line also lands in a file so
     // nothing is ever lost locally.
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"shuffle_bytes":$sb,"peak_task_mem":$pm,"errors":$errJson,"queries":$qs}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"shuffle_bytes":$sb,"peak_task_mem":$pm,"jobs":$jb,"errors":$errJson,"queries":$qs}"""
     println(line)
     // bench_full.json: local scratch (gitignored), written every run.
     // BENCH_FULL.json: the TRACKED per-round record — written ONLY when

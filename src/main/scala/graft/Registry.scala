@@ -33,15 +33,12 @@ object Registry {
   private def scratch(name: String): String = s"$scratchRoot/$name"
 
   /** [[scratch]] path of a store that each run rebuilds from nothing: the
-    * store and its AtomicStore tmp and stash siblings are deleted first,
-    * so an earlier run's or an interrupted run's state cannot leak in.
+    * store is dropped with its tmp and stash siblings first, so an earlier
+    * run's or an interrupted run's state cannot leak in.
     */
   private def freshStore(s: SparkSession, name: String): String = {
     val store = scratch(name)
-    val p = new org.apache.hadoop.fs.Path(store)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq(p, graft.sources.AtomicStore.tmpPath(p), graft.sources.AtomicStore.stashPath(p))
-      .foreach(fs.delete(_, true))
+    graft.sources.AtomicStore.drop(s, store)
     store
   }
 
@@ -1315,7 +1312,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
       RegisteredQuery(
         "q_event_paths",
         (s, dir) => graft.llm.EventPaths.topPaths(
-          graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+          Tables.resolve(s, dir)("events"),
           pathLen = 3, maxEvents = 8, topN = 25),
         Some(graft.llm.EventPaths.topPathsOracle(
           "events", pathLen = 3, maxEvents = 8, topN = 25))),
@@ -1591,7 +1588,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
         "q_funnel_latency",
         (s, dir) => graft.llm.EventFunnels.funnelLatency(
           graft.llm.EventFunnels.funnel(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             steps = Seq("view", "click", "purchase"),
             horizonUs = Some(48L * 3600 * 1000000))),
         Some(graft.llm.EventFunnels.latencyOracle(
@@ -1786,14 +1783,14 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
       // tumbling event-time window aggregation (decimal-sum determinism)
       RegisteredQuery(
         "q_events_window",
-        (s, dir) => EventWindows.tumbling(EventWindows.readEvents(s, s"$dir/events.parquet"))
+        (s, dir) => EventWindows.tumbling(Tables.resolve(s, dir)("events"))
           .orderBy("w_start", "event_type"),
         Some(EventWindows.tumblingOracle("events"))),
 
       // per-user session windows (built-in session_window, batch mode)
       RegisteredQuery(
         "q_events_session",
-        (s, dir) => EventWindows.sessionized(EventWindows.readEvents(s, s"$dir/events.parquet")),
+        (s, dir) => EventWindows.sessionized(Tables.resolve(s, dir)("events")),
         Some(EventWindows.sessionizedOracle("events"))),
 
       // split-and-stitch sessionization: same sessions, whale-key-safe
@@ -1802,7 +1799,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
       RegisteredQuery(
         "q_session_split",
         (s, dir) => EventWindows.sessionizedSplit(
-          EventWindows.readEvents(s, s"$dir/events.parquet")),
+          Tables.resolve(s, dir)("events")),
         Some(EventWindows.sessionizedOracle("events"))),
 
       // inter-arrival burstiness fingerprint (bot/SDK-metronome screen):
@@ -1810,7 +1807,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
       RegisteredQuery(
         "q_inter_arrival",
         (s, dir) => EventWindows.interArrivalStats(
-            EventWindows.readEvents(s, s"$dir/events.parquet"))
+            Tables.resolve(s, dir)("events"))
           // var_num exceeds 64-bit range in general: hash its canonical
           // decimal string (the portable exact form; oracle matches)
           .withColumn("var_num", col("var_num").cast("string"))
@@ -1824,7 +1821,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
         "q_activity_heatmap",
         (s, dir) => {
           import org.apache.spark.sql.functions._
-          EventWindows.readEvents(s, s"$dir/events.parquet")
+          Tables.resolve(s, dir)("events")
             .where(col("ts").isNotNull)
             .groupBy((dayofweek(col("ts")) - 1).cast("long").as("dow"),
               hour(col("ts")).cast("long").as("hour"))
@@ -1843,7 +1840,7 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""")),
       RegisteredQuery(
         "q_session_stats",
         (s, dir) => EventWindows.sessionStats(
-            EventWindows.readEvents(s, s"$dir/events.parquet"))
+            Tables.resolve(s, dir)("events"))
           .orderBy("user_id"),
         Some(EventWindows.sessionStatsOracle("events"))),
 
@@ -1855,7 +1852,7 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""")),
       RegisteredQuery(
         "q_action_sequences",
         (s, dir) => EventWindows.actionSequences(
-            EventWindows.readEvents(s, s"$dir/events.parquet"), maxEvents = 5)
+            Tables.resolve(s, dir)("events"), maxEvents = 5)
           .orderBy("user_id"),
         Some(EventWindows.actionSequencesOracle("events", maxEvents = 5))),
 
@@ -1865,7 +1862,7 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""")),
         "q_range_join",
         (s, dir) => {
           import graft.operators.RangeJoin
-          val ev = EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
           val purchases = ev.where(col("event_type") === "purchase")
             .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
           val errors = ev.where(col("event_type") === "error")
@@ -1894,7 +1891,7 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""")),
         "q_asof_join",
         (s, dir) => {
           import graft.operators.AsofJoin
-          val ev = EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
           val purchases = ev.where(col("event_type") === "purchase")
             .select("event_id", "user_id", "ts", "value")
           val clicks = ev.where(col("event_type") === "click")
@@ -1920,7 +1917,7 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""")),
         (s, dir) => {
           import graft.operators.AsofJoin
           import org.apache.spark.sql.functions.expr
-          val ev = EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
           val purchases = ev.where(col("event_type") === "purchase")
             .select("event_id", "user_id", "ts", "value")
           val clicks = ev.where(col("event_type") === "click")
@@ -1948,7 +1945,7 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""")),
         (s, dir) => {
           import graft.operators.AsofJoin
           import org.apache.spark.sql.functions.expr
-          val ev = EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
           val purchases = ev.where(col("event_type") === "purchase")
             .select("event_id", "user_id", "ts", "value")
           val clicks = ev.where(col("event_type") === "click")
@@ -1975,7 +1972,7 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""")),
         "q_asof_forward",
         (s, dir) => {
           import graft.operators.AsofJoin
-          val ev = EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
           val purchases = ev.where(col("event_type") === "purchase")
             .select("event_id", "user_id", "ts", "value")
           val clicks = ev.where(col("event_type") === "click")
@@ -2000,7 +1997,7 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""")),
         "q_asof_nearest",
         (s, dir) => {
           import graft.operators.AsofJoin
-          val ev = EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
           val purchases = ev.where(col("event_type") === "purchase")
             .select("event_id", "user_id", "ts", "value")
           val clicks = ev.where(col("event_type") === "click")
@@ -2188,7 +2185,7 @@ FROM aug ORDER BY doc_id""".stripMargin
       RegisteredQuery(
         "q_event_funnel",
         (s, dir) => graft.llm.EventFunnels.funnel(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             steps = Seq("view", "click", "purchase"),
             horizonUs = Some(48L * 3600 * 1000000))
           .orderBy("user_id"),
@@ -2455,7 +2452,7 @@ ORDER BY l_returnflag, l_linestatus""")),
         (s, dir) => {
           val store = freshStore(s, "metrics_ingest")
           import graft.operators.IncrementalAgg
-          val ev = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
             .withColumn("value_dec", col("value").cast("decimal(18,6)"))
           val specs = Seq(IncrementalAgg.Count("n_events"),
             IncrementalAgg.Sum("value_dec", "sum_value"))
@@ -2666,7 +2663,7 @@ FROM orders o JOIN dim d ON o.o_custkey = d.k
       RegisteredQuery(
         "q_resample",
         (s, dir) => graft.operators.Resample.gapFillFfill(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "user_id", "ts", "value"),
         Some(graft.operators.Resample.gapFillOracle("events", "user_id", "ts", "value"))),
 
@@ -2676,7 +2673,7 @@ FROM orders o JOIN dim d ON o.o_custkey = d.k
       RegisteredQuery(
         "q_resample_linear",
         (s, dir) => graft.operators.Resample.gapFillLinear(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+            Tables.resolve(s, dir)("events")
               .withColumn("cents", cents("value")),
             "user_id", "ts", "cents", interval = "6 hours"),
         Some(graft.operators.Resample.gapFillLinearOracle(
@@ -2689,7 +2686,7 @@ FROM orders o JOIN dim d ON o.o_custkey = d.k
       RegisteredQuery(
         "q_retention",
         (s, dir) => graft.operators.Retention.weeklyCohorts(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"), "user_id", "ts")
+            Tables.resolve(s, dir)("events"), "user_id", "ts")
           .orderBy("cohort_week", "week_offset"),
         Some(graft.operators.Retention.weeklyOracle("events", "user_id", "ts"))),
 
@@ -2795,10 +2792,7 @@ FROM orders o JOIN dim d ON o.o_custkey = d.k
       RegisteredQuery(
         "q_json_extract",
         (s, dir) => {
-          // readEvents, like the other event gates: it normalizes historical
-          // NANOS / instant-typed ts files. Every current scale factor stores
-          // ts as micros TIMESTAMP_NTZ, which Tables.resolve reads as well
-          val ev = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
           val k = get_json_object(col("props"), "$.k").cast("long")
           val k2 = from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType))))
@@ -4242,7 +4236,7 @@ FROM documents GROUP BY lang ORDER BY lang""")),
       RegisteredQuery(
         "q_windowed_quantiles",
         (s, dir) => {
-          val e = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+          val e = Tables.resolve(s, dir)("events")
           val maxPerHour = memoPrecondition("windowedQuantiles", dir) {
             val row = e.groupBy(date_trunc("hour", col("ts"))).agg(count(lit(1)).as("n"))
               .agg(max(col("n"))).head
@@ -4384,7 +4378,7 @@ FROM events GROUP BY 1 ORDER BY 1""")),
       RegisteredQuery(
         "q_event_transitions",
         (s, dir) => graft.llm.EventWindows.eventTransitions(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             maxEvents = 8)
           .orderBy("from_type", "to_type"),
         Some(graft.llm.EventWindows.eventTransitionsOracle("events", maxEvents = 8))),
@@ -4395,7 +4389,7 @@ FROM events GROUP BY 1 ORDER BY 1""")),
       RegisteredQuery(
         "q_transition_probs",
         (s, dir) => graft.llm.EventWindows.transitionProbs(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             maxEvents = 8)
           .orderBy("from_type", "to_type"),
         Some(graft.llm.EventWindows.transitionProbsOracle("events", maxEvents = 8))),
@@ -4441,7 +4435,7 @@ FROM events GROUP BY 1 ORDER BY 1""")),
       RegisteredQuery(
         "q_hopping_window",
         (s, dir) => graft.llm.EventWindows.hopping(
-          graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")),
+          Tables.resolve(s, dir)("events")),
         Some(graft.llm.EventWindows.hoppingOracle("events"))),
 
       // snapshot diff: one full-outer key join over two deterministic
@@ -4527,7 +4521,7 @@ FROM events GROUP BY 1 ORDER BY 1""")),
       RegisteredQuery(
         "q_completeness",
         (s, dir) => graft.operators.Completeness.daily(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+            Tables.resolve(s, dir)("events")
               .select(col("ts"),
                 when(pmod(col("event_id"), lit(7)) =!= 0, col("value"))
                   .as("value"),
@@ -4623,7 +4617,7 @@ FROM documents ORDER BY doc_id""")),
       RegisteredQuery(
         "q_trailing_actives",
         (s, dir) => graft.operators.TrailingActives.trailingActives(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "ts", "user_id", windowDays = 7)
           .orderBy("day"),
         Some(graft.operators.TrailingActives.oracleSql(
@@ -4653,7 +4647,7 @@ FROM documents ORDER BY doc_id""")),
       RegisteredQuery(
         "q_tukey_fences",
         (s, dir) => Outliers.tukeyFences(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+            Tables.resolve(s, dir)("events")
               .withColumn("mv",
                 (col("value").cast("decimal(18,3)") * 1000).cast("long")),
             "event_type", "mv", "event_id")
@@ -4710,7 +4704,7 @@ FROM documents ORDER BY doc_id""")),
       RegisteredQuery(
         "q_streaks",
         (s, dir) => graft.operators.Streaks.activityStreaks(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "user_id", "ts")
           .orderBy("user_id"),
         Some(graft.operators.Streaks.oracleSql("events", "user_id", "ts"))),
@@ -4720,7 +4714,7 @@ FROM documents ORDER BY doc_id""")),
       RegisteredQuery(
         "q_time_weighted",
         (s, dir) => graft.operators.TimeWeighted.timeWeightedMean(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+            Tables.resolve(s, dir)("events")
               .withColumn("mv",
                 (col("value").cast("decimal(18,3)") * 1000).cast("long")),
             "event_type", "ts", "mv", "event_id")
@@ -4986,7 +4980,7 @@ ORDER BY doc_id""")),
       RegisteredQuery(
         "q_attribution",
         (s, dir) => graft.llm.Attribution.firstLastTouch(
-          graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+          Tables.resolve(s, dir)("events"),
           conversionType = "purchase"),
         Some(graft.llm.Attribution.oracleSql("events", "purchase"))),
 
@@ -5205,7 +5199,7 @@ ORDER BY doc_id""")),
       RegisteredQuery(
         "q_markov_backtest",
         (s, dir) => graft.llm.MarkovBacktest.backtest(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "2024-01-22 00:00:00")
           .orderBy("from_type"),
         Some(graft.llm.MarkovBacktest.oracleSql(
@@ -5216,14 +5210,14 @@ ORDER BY doc_id""")),
       RegisteredQuery(
         "q_debounce",
         (s, dir) => graft.llm.Debounce.debounced(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             43200000000L)
           .orderBy("event_id"),
         Some(graft.llm.Debounce.debouncedOracle("events", 43200000000L))),
       RegisteredQuery(
         "q_burst_stats",
         (s, dir) => graft.llm.Debounce.burstStats(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             43200000000L)
           .orderBy("user_id", "event_type", "first_us"),
         Some(graft.llm.Debounce.burstStatsOracle("events", 43200000000L))),
@@ -5479,7 +5473,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_churn_hazard",
         (s, dir) => graft.operators.Churn.hazardCurve(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "user_id", "ts")
           .orderBy("age_months"),
         Some(graft.operators.Churn.oracleSql("events", "user_id", "ts"))),
@@ -5490,7 +5484,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_km_survival",
         (s, dir) => graft.operators.Churn.kmSurvivalDaily(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "user_id", "ts")
           .orderBy("age_days"),
         Some(graft.operators.Churn.kmDailyOracleSql(
@@ -5574,7 +5568,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_state_runs",
         (s, dir) => graft.llm.StateRuns.collapse(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"))
+            Tables.resolve(s, dir)("events"))
           .orderBy("user_id", "run_seq"),
         Some(graft.llm.StateRuns.oracleSql("events"))),
 
@@ -5600,7 +5594,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_ushape_attrib",
         (s, dir) => graft.llm.Attribution.uShapedCredit(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             conversionType = "purchase", lookback = "2 hours")
           .orderBy("conversion_id", "touch_id"),
         Some(graft.llm.Attribution.uShapedOracle(
@@ -5722,7 +5716,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_impossible_travel",
         (s, dir) => graft.operators.Travel.impossible(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+            Tables.resolve(s, dir)("events")
               .withColumn("x", expr("(event_id * event_id * 37) % 20011"))
               .withColumn("y", expr("(event_id * event_id * event_id) % 20011")),
             "user_id", "ts", "event_id", "x", "y",
@@ -5796,7 +5790,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_dn_retention",
         (s, dir) => graft.operators.Retention.dnRetention(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "user_id", "ts")
           .orderBy("cohort_day"),
         Some(graft.operators.Retention.dnOracle("events", "user_id", "ts"))),
@@ -5806,7 +5800,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_state_shares",
         (s, dir) => graft.llm.StateRuns.stateShares(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"))
+            Tables.resolve(s, dir)("events"))
           .orderBy("user_id", "event_type"),
         Some(graft.llm.StateRuns.stateSharesOracle("events"))),
 
@@ -5816,7 +5810,7 @@ FROM documents GROUP BY lang, source ORDER BY lang, source""")),
       RegisteredQuery(
         "q_clock_skew",
         (s, dir) => graft.operators.Monotonic.inversions(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+            Tables.resolve(s, dir)("events")
               .withColumn("ts_us",
                 unix_micros(col("ts").cast("timestamp"))),
             "user_id", "event_id", "ts_us")
@@ -6172,7 +6166,7 @@ FROM orders""",
       RegisteredQuery(
         "q_markov_attrib",
         (s, dir) => graft.llm.MarkovAttribution.removalEffects(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "user_id", "ts", "event_type", "event_id",
             convType = "purchase", rounds = 6)
           .orderBy("channel"),
@@ -6221,7 +6215,7 @@ FROM (${dailyCentsSpineSql})""",
         "q_stateful_ingest",
         (s, dir) => {
           val store = freshStore(s, "stateful_ingest_gate_store")
-          val ev = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
             .localCheckpoint(true)
           Seq(col("event_id") % 3 === 0, col("event_id") % 3 === 1,
             col("event_id") % 3 === 2).foreach { cut =>
@@ -6246,7 +6240,7 @@ FROM (${dailyCentsSpineSql})""",
         (s, dir) => {
           val store = freshStore(s, "stream_join_gate_store")
           val lake = freshStore(s, "stream_join_gate_lake")
-          val ev = graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
             .localCheckpoint(true)
           val clicks = ev.where(col("event_type") === "click")
             .select(col("user_id"), col("ts"), col("event_id"))
@@ -6434,8 +6428,7 @@ ORDER BY fp""")),
         "q_stream_windows",
         (s, dir) => {
           val staged = scratch("stream_windows_gate_src")
-          val ev = graft.llm.EventWindows
-            .readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
             .select("event_id", "ts", "user_id", "event_type", "value", "props")
             .localCheckpoint(true)
           val sentinel = s.range(1).select(
@@ -6471,8 +6464,7 @@ ORDER BY fp""")),
         "q_stream_funnel",
         (s, dir) => {
           val staged = scratch("stream_funnel_gate_src")
-          val ev = graft.llm.EventWindows
-            .readEvents(s, s"$dir/events.parquet")
+          val ev = Tables.resolve(s, dir)("events")
             .select("event_id", "ts", "user_id", "event_type", "value", "props")
             .localCheckpoint(true)
           val sentinel = s.range(1).select(
@@ -7134,7 +7126,7 @@ WHERE l_quantity >= 50"""))),
       RegisteredQuery(
         "q_nelson_aalen",
         (s, dir) => graft.operators.Churn.nelsonAalenDaily(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             "user_id", "ts")
           .orderBy("age_days"),
         Some(graft.operators.Churn.naDailyOracleSql(
@@ -7211,7 +7203,7 @@ FROM (${dailyCentsSpineSql})""",
       RegisteredQuery(
         "q_timedecay_attrib",
         (s, dir) => graft.llm.Attribution.timeDecayCredit(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             conversionType = "purchase", lookback = "2 hours",
             halflife = "30 minutes")
           .orderBy("conversion_id", "touch_id"),
@@ -7373,7 +7365,7 @@ FROM documents ORDER BY doc_id""")),
       RegisteredQuery(
         "q_sequence_match",
         (s, dir) => graft.llm.SequenceMatch.firstCleanMatch(
-            graft.llm.EventWindows.readEvents(s, s"$dir/events.parquet"),
+            Tables.resolve(s, dir)("events"),
             steps = Seq("view", "click", "purchase"),
             excluded = Seq("error"), maxGapMicros = 7200000000L)
           .orderBy("user_id"),

@@ -15,46 +15,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object EventWindows {
 
-  /** Run `body` with spark.sql.legacy.parquet.nanosAsLong set, restoring the
-    * previous value after — the conf is consumed at DataFrame-construction
-    * (schema resolution) time, not at action time (verified empirically:
-    * executing the returned plan after a restore succeeds), so scoping it
-    * here leaves no session-wide footprint on how OTHER parquet reads decode
-    * nano timestamps.
-    */
-  def withNanosAsLong[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
-  /** Read an events table, normalizing `ts` to micro-precision TIMESTAMP_NTZ
-    * whatever the physical storage is. Handles all three shapes the data
-    * generator has produced: TIMESTAMP(NANOS) (Spark rejects nano precision
-    * outright, so read nanos as Long via the scoped legacy conf and rebuild;
-    * DIV 1000 truncation matches DuckDB's own nanos→micros read), plain
-    * TIMESTAMP(MICROS) NTZ (pass through), and instant-semantics TIMESTAMP
-    * (rebase to NTZ — identity under the UTC session Verify/Bench set).
-    */
-  def readEvents(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    withNanosAsLong(spark) {
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      val df = spark.read.parquet(path)
-      df.schema("ts").dataType match {
-        case LongType =>
-          df.withColumn("ts", expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"))
-        case TimestampNTZType => df
-        case TimestampType    => df.withColumn("ts", col("ts").cast(TimestampNTZType))
-        case other =>
-          throw new IllegalArgumentException(s"unsupported events ts type: $other")
-      }
-    }
-
   /** Tumbling-window count + sum per (window, event_type). */
   def tumbling(events: DataFrame, tsCol: String = "ts", duration: String = "1 hour",
                typeCol: String = "event_type", valueCol: String = "value"): DataFrame =

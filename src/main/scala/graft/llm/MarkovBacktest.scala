@@ -44,7 +44,7 @@ object MarkovBacktest {
         lead(col(typeCol), 1).over(w).as("to_type"),
         lead(col(tsCol), 1).over(w).as("__to_ts"))
       .where(col("to_type").isNotNull)
-      // NTZ on both sides: readEvents normalizes ts to TIMESTAMP_NTZ, and
+      // NTZ on both sides: the events table declares ts TIMESTAMP_NTZ, and
       // spec-built TimestampType columns cast losslessly under the UTC
       // session contract
       .withColumn("__train",

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.AtomicStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,31 +63,26 @@ object DistinctStore {
     */
   def update(spark: SparkSession, storeDir: String, batch: DataFrame,
              groupCols: Seq[String], value: Column, k: Int): Unit = {
-    import graft.sources.AtomicStore
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val part = partial(batch, groupCols, value, k)
-    if (!AtomicStore.hasData(spark, storeDir)) {
-      AtomicStore.create(spark, storeDir, part)
-      return
+    val next = AtomicStore.current(spark, storeDir) match {
+      case None => part
+      case Some(stored) =>
+        requireStoreK(stored, k, s"store $storeDir")
+        // merge = re-sketch the sketch ENTRIES: the distinct bottom-k of a
+        // union of bottom-k sets is the union's bottom-k (closure), and the
+        // entries are already the hashes, so no re-canonicalization happens
+        stored.unionByName(part)
+          .select((groupCols.map(col) :+ explode(col("sketch")).as("__h")): _*)
+          .groupBy(groupCols.map(col): _*)
+          .agg(graft.functions.BottomK.distinct(k)(col("__h")).as("sketch"))
+          .withColumn("k", lit(k))
     }
-    val stored = spark.read.parquet(storeDir)
-    requireStoreK(stored, k, s"store $storeDir")
-    // merge = re-sketch the sketch ENTRIES: the distinct bottom-k of a
-    // union of bottom-k sets is the union's bottom-k (closure), and the
-    // entries are already the hashes, so no re-canonicalization happens
-    val merged = stored.unionByName(part)
-      .select((groupCols.map(col) :+ explode(col("sketch")).as("__h")): _*)
-      .groupBy(groupCols.map(col): _*)
-      .agg(graft.functions.BottomK.distinct(k)(col("__h")).as("sketch"))
-      .withColumn("k", lit(k))
-    AtomicStore.replace(spark, storeDir, merged)
+    AtomicStore.publish(spark, storeDir, next)
   }
 
   /** The maintained store: (groupCols*, sketch, k). */
-  def read(spark: SparkSession, storeDir: String): DataFrame = {
-    graft.sources.AtomicStore.restoreIfStashed(spark, storeDir)
-    spark.read.parquet(storeDir)
-  }
+  def read(spark: SparkSession, storeDir: String): DataFrame =
+    AtomicStore.read(spark, storeDir)
 
   /** (groupCols*, est_distinct, sk_size) from a store frame. */
   def estimate(store: DataFrame, groupCols: Seq[String], k: Int): DataFrame = {

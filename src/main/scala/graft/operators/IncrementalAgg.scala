@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.AtomicStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,22 +68,14 @@ object IncrementalAgg {
     */
   def update(spark: SparkSession, storeDir: String, batch: DataFrame,
              groupCols: Seq[String], specs: Seq[AggSpec]): Unit = {
-    import graft.sources.AtomicStore
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val part = partial(batch, groupCols, specs)
-    if (!AtomicStore.hasData(spark, storeDir)) {
-      AtomicStore.create(spark, storeDir, part)
-      return
-    }
-    AtomicStore.replace(spark, storeDir,
-      merge(spark.read.parquet(storeDir), part, groupCols, specs))
+    AtomicStore.publish(spark, storeDir, AtomicStore.current(spark, storeDir)
+      .fold(part)(merge(_, part, groupCols, specs)))
   }
 
   /** The running aggregates: one row per group seen so far. */
-  def read(spark: SparkSession, storeDir: String): DataFrame = {
-    graft.sources.AtomicStore.restoreIfStashed(spark, storeDir)
-    spark.read.parquet(storeDir)
-  }
+  def read(spark: SparkSession, storeDir: String): DataFrame =
+    AtomicStore.read(spark, storeDir)
 
   /** Merge two frames in store schema (the decomposable-aggregate fold).
     * Result columns are cast back to `b`'s dtypes — Spark widens decimal

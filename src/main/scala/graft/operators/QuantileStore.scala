@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.AtomicStore
 import graft.functions.{QuantileSummaryAgg, SummaryFoldAgg, SummaryMergeAgg}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -61,24 +62,21 @@ object QuantileStore {
     */
   def update(spark: SparkSession, storeDir: String, batch: DataFrame,
              groupCols: Seq[String], value: Column, k: Int): Unit = {
-    import graft.sources.AtomicStore
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val part = partial(batch, groupCols, value, k)
-    if (!AtomicStore.hasData(spark, storeDir)) {
-      AtomicStore.create(spark, storeDir, part)
-      return
+    val next = AtomicStore.current(spark, storeDir) match {
+      case None => part
+      case Some(stored0) =>
+        requireStoreK(stored0, k, s"store $storeDir")
+        val stored = if (stored0.columns.contains("k")) stored0
+                     else stored0.withColumn("k", lit(k)) // legacy store: stamp it
+        // a case-class-input UDAF takes the struct's FIELDS as its arguments
+        stored.unionByName(part)
+          .groupBy(groupCols.map(col): _*)
+          .agg(udaf(new SummaryFoldAgg(k))
+            .apply(col("summary.levels"), col("summary.parities")).as("summary"))
+          .withColumn("k", lit(k))
     }
-    val stored0 = spark.read.parquet(storeDir)
-    requireStoreK(stored0, k, s"store $storeDir")
-    val stored = if (stored0.columns.contains("k")) stored0
-                 else stored0.withColumn("k", lit(k)) // legacy store: stamp it
-    // a case-class-input UDAF takes the struct's FIELDS as its arguments
-    val merged = stored.unionByName(part)
-      .groupBy(groupCols.map(col): _*)
-      .agg(udaf(new SummaryFoldAgg(k))
-        .apply(col("summary.levels"), col("summary.parities")).as("summary"))
-      .withColumn("k", lit(k))
-    AtomicStore.replace(spark, storeDir, merged)
+    AtomicStore.publish(spark, storeDir, next)
   }
 
   /** Continuous form: a stream folded into the store one micro-batch at
@@ -101,10 +99,8 @@ object QuantileStore {
       .start()
 
   /** The maintained summaries: one row per group seen so far. */
-  def read(spark: SparkSession, storeDir: String): DataFrame = {
-    graft.sources.AtomicStore.restoreIfStashed(spark, storeDir)
-    spark.read.parquet(storeDir)
-  }
+  def read(spark: SparkSession, storeDir: String): DataFrame =
+    AtomicStore.read(spark, storeDir)
 
   /** Quantiles off a summary frame (a [[read]] result): one row per
     * group, one column per fraction — the store-backed form of

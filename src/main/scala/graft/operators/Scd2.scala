@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.AtomicStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,14 +74,12 @@ object Scd2 {
   def update(spark: SparkSession, storeDir: String, batch: DataFrame,
              keyCol: String, attrCols: Seq[String], effCol: String,
              seqCol: String, strict: Boolean = true): Unit = {
-    import graft.sources.AtomicStore
-    AtomicStore.restoreIfStashed(spark, storeDir)
-    if (!AtomicStore.hasData(spark, storeDir)) {
-      AtomicStore.create(spark, storeDir,
-        build(batch, keyCol, attrCols, effCol, seqCol))
-      return
+    val dim = AtomicStore.current(spark, storeDir) match {
+      case Some(d) => d
+      case None =>
+        AtomicStore.publish(spark, storeDir, build(batch, keyCol, attrCols, effCol, seqCol))
+        return
     }
-    val dim = spark.read.parquet(storeDir)
     // the batch is referenced several times inside the single rebuild job
     // below (key set + rebuild union) — cache it so an expensive batch
     // source evaluates once per fold (the LakeMerge `aligned` posture)
@@ -99,6 +98,7 @@ object Scd2 {
       val storedChanges = affected.select(versionCols: _*)
       val batchChanges = b.select((Seq(col(keyCol)) ++ attrCols.map(col) ++
         Seq(col(effCol), col(seqCol))): _*)
+      val untouched = dim.join(keys, Seq(keyCol), "left_anti")
       if (strict) {
         // a batch change strictly before its key's last STORED version is
         // late data and the fold must be rejected. The check no longer runs
@@ -122,8 +122,7 @@ object Scd2 {
           .observe(obs, sum(when(col("__late"), 1L).otherwise(0L)).as("late"))
           .drop("__src", "__late")
         val rebuilt = build(observed, keyCol, attrCols, effCol, seqCol)
-        val untouched = dim.join(keys, Seq(keyCol), "left_anti")
-        AtomicStore.replace(spark, storeDir, untouched.unionByName(rebuilt),
+        AtomicStore.publish(spark, storeDir, untouched.unionByName(rebuilt),
           beforeSwap = () => {
             val late = Option(obs.get("late")).map(_.asInstanceOf[Long]).getOrElse(0L)
             require(late == 0,
@@ -133,8 +132,7 @@ object Scd2 {
       } else {
         val rebuilt = build(storedChanges.unionByName(batchChanges),
           keyCol, attrCols, effCol, seqCol)
-        val untouched = dim.join(keys, Seq(keyCol), "left_anti")
-        AtomicStore.replace(spark, storeDir, untouched.unionByName(rebuilt))
+        AtomicStore.publish(spark, storeDir, untouched.unionByName(rebuilt))
       }
     } finally b.unpersist()
   }
@@ -171,9 +169,7 @@ object Scd2 {
   def updateTolerant(spark: SparkSession, storeDir: String, logDir: String,
                      batch: DataFrame, keyCol: String, attrCols: Seq[String],
                      effCol: String, seqCol: String): Unit = {
-    import graft.sources.AtomicStore
     import org.apache.hadoop.fs.Path
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val changeCols = (Seq(col(keyCol)) ++ attrCols.map(col) ++
       Seq(col(effCol), col(seqCol)))
     // localCheckpoint the batch first: it is read twice (log append + keys)
@@ -198,15 +194,7 @@ object Scd2 {
       s"log append rename failed: $tmp -> $batchName")
     val log = spark.read.option("recursiveFileLookup", "true").parquet(logDir)
     val keys = b.select(col(keyCol)).distinct()
-    val rebuilt = build(log.join(keys, Seq(keyCol), "left_semi"),
-      keyCol, attrCols, effCol, seqCol)
-    if (!AtomicStore.hasData(spark, storeDir))
-      AtomicStore.create(spark, storeDir, rebuilt)
-    else {
-      val untouched = spark.read.parquet(storeDir)
-        .join(keys, Seq(keyCol), "left_anti")
-      AtomicStore.replace(spark, storeDir, untouched.unionByName(rebuilt))
-    }
+    rebuildKeys(spark, storeDir, log, keys, keyCol, attrCols, effCol, seqCol)
     // applied marker LAST: a crash between the swap and the marker leaves
     // the batch looking unapplied, and recover() replays it idempotently
     markApplied(fs, storeDir, batchName)
@@ -235,9 +223,7 @@ object Scd2 {
   def recover(spark: SparkSession, storeDir: String, logDir: String,
               keyCol: String, attrCols: Seq[String], effCol: String,
               seqCol: String): Long = {
-    import graft.sources.AtomicStore
     import org.apache.hadoop.fs.Path
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val logPath = new Path(logDir)
     val fs = logPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(logPath)) return 0L
@@ -255,20 +241,24 @@ object Scd2 {
       .where(col(keyCol).isNotNull)
       .select(col(keyCol)).distinct().localCheckpoint(true)
     val nStale = keys.count()
-    if (nStale > 0L) {
-      val log = spark.read.option("recursiveFileLookup", "true").parquet(logDir)
-      val rebuilt = build(log.join(keys, Seq(keyCol), "left_semi"),
-        keyCol, attrCols, effCol, seqCol)
-      if (!AtomicStore.hasData(spark, storeDir))
-        AtomicStore.create(spark, storeDir, rebuilt)
-      else {
-        val untouched = spark.read.parquet(storeDir)
-          .join(keys, Seq(keyCol), "left_anti")
-        AtomicStore.replace(spark, storeDir, untouched.unionByName(rebuilt))
-      }
-    }
+    if (nStale > 0L)
+      rebuildKeys(spark, storeDir,
+        spark.read.option("recursiveFileLookup", "true").parquet(logDir),
+        keys, keyCol, attrCols, effCol, seqCol)
     unapplied.foreach(b => markApplied(fs, storeDir, b.getName))
     nStale
+  }
+
+  /** Rebuild the dimension rows of `keys` from their full logged history
+    * and swap them into the store beside the untouched keys' rows.
+    */
+  private def rebuildKeys(spark: SparkSession, storeDir: String, log: DataFrame,
+                          keys: DataFrame, keyCol: String, attrCols: Seq[String],
+                          effCol: String, seqCol: String): Unit = {
+    val rebuilt = build(log.join(keys, Seq(keyCol), "left_semi"),
+      keyCol, attrCols, effCol, seqCol)
+    AtomicStore.publish(spark, storeDir, AtomicStore.current(spark, storeDir)
+      .fold(rebuilt)(_.join(keys, Seq(keyCol), "left_anti").unionByName(rebuilt)))
   }
 
   /** Marker sibling recording which log batches a store has folded — a
@@ -286,10 +276,8 @@ object Scd2 {
   }
 
   /** The maintained dimension: every version of every key seen so far. */
-  def read(spark: SparkSession, storeDir: String): DataFrame = {
-    graft.sources.AtomicStore.restoreIfStashed(spark, storeDir)
-    spark.read.parquet(storeDir)
-  }
+  def read(spark: SparkSession, storeDir: String): DataFrame =
+    AtomicStore.read(spark, storeDir)
 
   /** Join facts to the dimension version valid at each fact's timestamp —
     * the point-in-interval (temporal) join SCD2 exists to serve: equi-join

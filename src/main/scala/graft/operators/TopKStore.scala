@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.AtomicStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,10 +32,8 @@ object TopKStore {
     */
   def update(spark: SparkSession, storeDir: String, batch: DataFrame,
              groupCols: Seq[String], score: Column, id: Column, k: Int): Unit = {
-    import graft.sources.AtomicStore
     require(groupCols.nonEmpty, "groupCols must not be empty")
     require(k > 0, s"k must be positive, got $k")
-    AtomicStore.restoreIfStashed(spark, storeDir)
     // high-water dedup BEFORE the top-k: TopK.perGroup ranks ROWS, so an
     // entity posting two top-k scores in one batch would occupy two slots
     // and squeeze out the k-th entity — dedup (group, id) by max first
@@ -45,10 +44,10 @@ object TopKStore {
       .agg(max(col("__s")).as("__s"))
     val part = graft.functions.TopK.perGroup(
       hwBatch, groupCols, col("__s"), col("__i"), k)
-    val merged =
-      if (!AtomicStore.hasData(spark, storeDir)) part
-      else {
-        val all = spark.read.parquet(storeDir)
+    val merged = AtomicStore.current(spark, storeDir) match {
+      case None => part
+      case Some(stored) =>
+        val all = stored
           .select((groupCols.map(col) :+ col("id") :+ col("score")): _*)
           .unionByName(part.select(
             (groupCols.map(col) :+ col("id") :+ col("score")): _*))
@@ -57,17 +56,13 @@ object TopKStore {
         val hw = all.groupBy((groupCols.map(col) :+ col("id")): _*)
           .agg(max(col("score")).as("score"))
         graft.functions.TopK.perGroup(hw, groupCols, col("score"), col("id"), k)
-      }
-    if (!AtomicStore.hasData(spark, storeDir))
-      AtomicStore.create(spark, storeDir, merged)
-    else AtomicStore.replace(spark, storeDir, merged)
+    }
+    AtomicStore.publish(spark, storeDir, merged)
   }
 
   /** The maintained leaderboard. */
-  def read(spark: SparkSession, storeDir: String): DataFrame = {
-    graft.sources.AtomicStore.restoreIfStashed(spark, storeDir)
-    spark.read.parquet(storeDir)
-  }
+  def read(spark: SparkSession, storeDir: String): DataFrame =
+    AtomicStore.read(spark, storeDir)
 
   /** DuckDB replay of n folds ≡ the direct high-water top-k over the
     * whole table.

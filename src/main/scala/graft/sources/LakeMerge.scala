@@ -91,15 +91,11 @@ object LakeMerge {
       // staged directory listing, and the empty-batch early-out, so the
       // whole merge schedules exactly TWO jobs (touched scan + staged
       // write) instead of isEmpty + stage + except + overwrite
-      val touchedRows = base.join(keys, keyCols, "left_semi")
-        .select(partitionCols.map(col): _*)
-        .union(aligned.select(partitionCols.map(col): _*))
-        .distinct().collect()
-      if (touchedRows.isEmpty) return // an empty batch touches nothing
-      val touched = spark.createDataFrame(
-        java.util.Arrays.asList(touchedRows: _*),
-        org.apache.spark.sql.types.StructType(
-          partitionCols.map(c => base.schema(c))))
+      val (touched, touchedPaths) = collectTouched(spark, base, partitionCols,
+        base.join(keys, keyCols, "left_semi")
+          .select(partitionCols.map(col): _*)
+          .union(aligned.select(partitionCols.map(col): _*)))
+      if (touchedPaths.isEmpty) return // an empty batch touches nothing
       // null-SAFE partition match: a null partition value is in-contract
       // (__HIVE_DEFAULT_PARTITION__), and a null-unsafe equi-join would
       // silently drop the default partition's kept rows from the stage
@@ -127,8 +123,7 @@ object LakeMerge {
       // in the stage so apply (and any replay) deletes their stale dirs.
       // The diff is driver-side: touched paths minus the stage's actual
       // directory names (the same hive encoding both ways)
-      writeEmptied(spark, fs, stage, partitionCols,
-        touchedRows.toIndexedSeq, stagedPartitionDirs(fs, stage).toSet)
+      writeEmptied(fs, stage, touchedPaths, stagedPartitionDirs(fs, stage).toSet)
       // the commit point: only now is the stage complete enough to replay
       fs.create(new Path(stage, CommitMarker), true).close()
       applyStage(spark, fs, lake)
@@ -167,13 +162,9 @@ object LakeMerge {
       // local relation, the empty early-out, and the driver-side
       // evacuation diff (a delete can empty EVERY touched partition — the
       // stage then has no data dirs and all touched paths land emptied)
-      val touchedRows = base.join(keys, keyCols, "left_semi")
-        .select(partitionCols.map(col): _*).distinct().collect()
-      if (touchedRows.isEmpty) return
-      val touched = spark.createDataFrame(
-        java.util.Arrays.asList(touchedRows: _*),
-        org.apache.spark.sql.types.StructType(
-          partitionCols.map(c => base.schema(c))))
+      val (touched, touchedPaths) = collectTouched(spark, base, partitionCols,
+        base.join(keys, keyCols, "left_semi").select(partitionCols.map(col): _*))
+      if (touchedPaths.isEmpty) return
       val touchedT = touched.toDF(partitionCols.map("__t_" + _): _*)
       val kept = base.join(touchedT,
           partitionCols.map(c => col(c) <=> col("__t_" + c)).reduce(_ && _),
@@ -181,8 +172,7 @@ object LakeMerge {
         .join(keys, keyCols, "left_anti")
       kept.hint("rebalance", partitionCols.map(col): _*)
         .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stage.toString)
-      writeEmptied(spark, fs, stage, partitionCols,
-        touchedRows.toIndexedSeq, stagedPartitionDirs(fs, stage).toSet)
+      writeEmptied(fs, stage, touchedPaths, stagedPartitionDirs(fs, stage).toSet)
       fs.create(new Path(stage, CommitMarker), true).close()
       applyStage(spark, fs, lake)
     } finally keys.unpersist()
@@ -271,25 +261,37 @@ object LakeMerge {
   private val EmptiedMarker = "_graft_emptied_partitions"
   private[sources] val CommitMarker = "_graft_commit"
 
+  /** Collect the distinct touched partition values (one job) as a local
+    * relation typed like `base`, with the hive path of each partition as
+    * Spark's writer names it. The writer formats a value with its cast to
+    * string under the session time zone — for a timestamp that is not the
+    * value's `toString` — so the same cast rides the collect.
+    */
+  private def collectTouched(spark: SparkSession, base: DataFrame, partitionCols: Seq[String],
+                             touched: DataFrame): (DataFrame, Seq[String]) = {
+    val n = partitionCols.size
+    val rows = touched.distinct()
+      .select(partitionCols.map(col) ++ partitionCols.map(c => col(c).cast("string")): _*)
+      .collect().toSeq
+    val typed = rows.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.take(n)))
+    val local = spark.createDataFrame(java.util.Arrays.asList(typed: _*),
+      org.apache.spark.sql.types.StructType(partitionCols.map(c => base.schema(c))))
+    val paths = rows.map(r => partitionCols.zipWithIndex.map { case (c, i) =>
+      ExternalCatalogUtils.getPartitionPathString(c, r.getString(n + i))
+    }.mkString("/"))
+    (local, paths)
+  }
+
   /** Record evacuated partitions as relative dir paths, one per line, in a
     * marker file INSIDE the stage — written before apply starts, so a
     * replayed apply deletes them too. Evacuated = touched partitions the
-    * stage did not reproduce as a directory: the touched rows are encoded
-    * with the same hive path encoding Spark's writer uses, so the diff is
-    * a driver-side string set difference (no Spark job).
+    * stage did not reproduce as a directory: touched paths carry the
+    * writer's hive encoding ([[collectTouched]]), so the diff is a
+    * driver-side string set difference (no Spark job).
     */
-  private[sources] def writeEmptied(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                                    stage: Path, partitionCols: Seq[String],
-                                    touchedRows: Seq[org.apache.spark.sql.Row],
-                                    stagedDirs: Set[String]): Unit = {
-    val lines = touchedRows.map { r =>
-      partitionCols.zipWithIndex.map { case (c, i) =>
-        ExternalCatalogUtils.getPartitionPathString(c,
-          if (r.isNullAt(i)) null else r.get(i).toString)
-      }.mkString("/")
-    }.filterNot(stagedDirs.contains)
-    writeEmptiedLines(fs, stage, lines)
-  }
+  private[sources] def writeEmptied(fs: org.apache.hadoop.fs.FileSystem, stage: Path,
+                                    touchedPaths: Seq[String], stagedDirs: Set[String]): Unit =
+    writeEmptiedLines(fs, stage, touchedPaths.filterNot(stagedDirs.contains))
 
   /** Raw-relative-path form of the emptied marker — for callers that know
     * the exact directory names to evacuate (e.g. compaction's

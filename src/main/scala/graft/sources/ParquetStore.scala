@@ -1,18 +1,19 @@
 package graft.sources
 
 import graft.core.Fabrix
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 /** Path-backed table store with the reference's write-conflict semantics
   * (SaveStrategy, fabrix-sql/src/executor/ec.rs:476-540): the lake-table
   * stand-in for the reference's DB tables when no external DB is reachable.
   *
   * Replace is transactional the way the reference's drop+create+insert is
-  * (ec.rs:602-651): write to a staging dir, then swap via atomic rename, so
-  * readers never observe a half-written table and a failed job leaves the
-  * old data intact.
+  * (ec.rs:602-651): every table is an [[AtomicStore]], so a write stages
+  * the new rows beside the table and swaps them in by rename — readers
+  * never observe a half-written table, a failed job leaves the old data
+  * intact, and a crash between the swap's renames is recovered by the
+  * next access instead of reading as a missing table.
   *
   * Upsert follows the reference's split-on-existing-ids plan (ec.rs:518-538)
   * re-expressed distributed: anti-join the EXISTING rows against incoming
@@ -22,22 +23,31 @@ import java.util.Comparator
   */
 final class ParquetStore(root: String) {
 
-  private def tablePath(name: String): Path = Paths.get(root, s"$name.parquet")
+  private def tablePath(name: String): String = new Path(root, s"$name.parquet").toString
 
-  def exists(name: String): Boolean = Files.exists(tablePath(name))
+  /** The session for the DDL calls that take none. */
+  private def active: SparkSession = SparkSession.active
+
+  def exists(name: String): Boolean = AtomicStore.exists(active, tablePath(name))
 
   def listTables(): Seq[String] =
-    Option(Paths.get(root).toFile.list()).map(_.toSeq).getOrElse(Nil)
+    Option(new java.io.File(root).list()).map(_.toSeq).getOrElse(Nil)
       .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
 
   def read(spark: SparkSession, name: String): DataFrame =
-    spark.read.parquet(tablePath(name).toString)
+    AtomicStore.read(spark, tablePath(name))
 
   /** DDL-ish surface (reference S14): drop / truncate / rename. */
-  def drop(name: String): Unit = deleteRecursively(tablePath(name))
+  def drop(name: String): Unit = AtomicStore.drop(active, tablePath(name))
 
-  def rename(oldName: String, newName: String): Unit =
-    Files.move(tablePath(oldName), tablePath(newName), StandardCopyOption.ATOMIC_MOVE)
+  def rename(oldName: String, newName: String): Unit = {
+    val (from, to) = (new Path(tablePath(oldName)), new Path(tablePath(newName)))
+    val fs = from.getFileSystem(active.sparkContext.hadoopConfiguration)
+    require(exists(oldName), s"table $oldName does not exist")
+    require(!fs.exists(to), s"table $newName already exists")
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"cannot rename $from to $to")
+    drop(oldName) // leftover siblings must not revive the old name
+  }
 
   def truncate(spark: SparkSession, name: String): Unit = {
     val schema = read(spark, name).schema
@@ -45,47 +55,29 @@ final class ParquetStore(root: String) {
       name, SaveStrategy.Replace)
   }
 
-  def write(df: DataFrame, name: String, strategy: SaveStrategy): Unit = strategy match {
-    case SaveStrategy.FailIfExists =>
-      if (exists(name)) throw new IllegalStateException(s"table $name already exists")
-      replaceWith(df, name)
+  def write(df: DataFrame, name: String, strategy: SaveStrategy): Unit = {
+    val spark = df.sparkSession
+    val path = tablePath(name)
+    strategy match {
+      case SaveStrategy.FailIfExists =>
+        if (AtomicStore.exists(spark, path))
+          throw new IllegalStateException(s"table $name already exists")
+        AtomicStore.publish(spark, path, df)
 
-    case SaveStrategy.Replace =>
-      replaceWith(df, name)
+      case SaveStrategy.Replace =>
+        AtomicStore.publish(spark, path, df)
 
-    case SaveStrategy.Append =>
-      if (!exists(name)) replaceWith(df, name)
-      else df.write.mode("append").parquet(tablePath(name).toString)
+      case SaveStrategy.Append =>
+        if (!AtomicStore.exists(spark, path)) AtomicStore.publish(spark, path, df)
+        else df.write.mode("append").parquet(path)
 
-    case SaveStrategy.Upsert(indexCol) =>
-      if (!exists(name)) replaceWith(df, name)
-      else {
-        val spark = df.sparkSession
-        val existing = Fabrix(read(spark, name), indexCol)
-        val incoming = Fabrix(df, indexCol)
-        val (_, keep) = existing.popupRowsByFrame(incoming) // anti: not being updated
-        replaceWith(keep.df.unionByName(df), name)
-      }
-  }
-
-  /** Staged write + atomic swap. */
-  private def replaceWith(df: DataFrame, name: String): Unit = {
-    val target = tablePath(name)
-    val staging = Paths.get(root, s".$name.staging.parquet")
-    deleteRecursively(staging)
-    df.write.mode("overwrite").parquet(staging.toString)
-    val backup = Paths.get(root, s".$name.old.parquet")
-    deleteRecursively(backup)
-    if (Files.exists(target)) Files.move(target, backup, StandardCopyOption.ATOMIC_MOVE)
-    try Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    catch { case e: Throwable =>
-      if (Files.exists(backup)) Files.move(backup, target, StandardCopyOption.ATOMIC_MOVE)
-      throw e
+      case SaveStrategy.Upsert(indexCol) =>
+        val next = AtomicStore.current(spark, path).fold(df) { stored =>
+          val (_, keep) = Fabrix(stored, indexCol)
+            .popupRowsByFrame(Fabrix(df, indexCol)) // anti: not being updated
+          keep.df.unionByName(df)
+        }
+        AtomicStore.publish(spark, path, next)
     }
-    deleteRecursively(backup)
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.sources.AtomicStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -41,12 +41,6 @@ object AlarmIngest {
       }
       .start()
 
-  private def readState(spark: SparkSession,
-                        storeDir: String): Option[DataFrame] =
-    if (AtomicStore.hasData(spark, storeDir))
-      Some(spark.read.parquet(storeDir))
-    else None
-
   /** One fold step — N calls over ordered chunks ≡ one
     * [[graft.operators.Cusum.twoSided]] pass over the concatenation
     * (spec-pinned; the gate hash-matches the one-shot oracle).
@@ -56,7 +50,6 @@ object AlarmIngest {
                   k: Long, h: Long): Unit = {
     require(h > 0, s"threshold h must be > 0, got $h")
     val spark = batch.sparkSession
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val rows = batch
       .where(col(idxCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol), col(idxCol).cast(LongType).as("idx"),
@@ -71,7 +64,7 @@ object AlarmIngest {
       .withColumn("__bp", sum(col("__x") - lit(k)).over(run))
       .withColumn("__bq", sum(lit(k) - col("__x")).over(run))
       .localCheckpoint(false)
-    val prev = readState(spark, storeDir).getOrElse(
+    val prev = AtomicStore.current(spark, storeDir).getOrElse(
       pre.select(col(groupCol)).limit(0)
         .select(col(groupCol), lit(0L).as("cum_p"), lit(0L).as("min_p"),
           lit(0L).as("cum_q"), lit(0L).as("min_q"),
@@ -121,9 +114,6 @@ object AlarmIngest {
       rows.select(col(groupCol).as("__bg")).distinct(),
       col(groupCol) <=> col("__bg"), "left_anti")
     val newStore = untouched.unionByName(newTail)
-    if (!AtomicStore.hasData(spark, storeDir))
-      AtomicStore.create(spark, storeDir, newStore.coalesce(1))
-    else
-      AtomicStore.replace(spark, storeDir, newStore, coalesceTo = 1)
+    AtomicStore.publish(spark, storeDir, newStore, coalesceTo = 1)
   }
 }

@@ -57,19 +57,17 @@ object BucketIngest {
     require(rateNum > 0 && rateDen > 0 && burst >= 1,
       s"need positive rate and burst >= 1, got $rateNum/$rateDen burst $burst")
     val spark = batch.sparkSession
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val collected = batch
       .where(col(idxCol).isNotNull && col(idCol).isNotNull)
       .groupBy(col(keyCol))
       .agg(sort_array(collect_list(struct(
         col(idxCol).cast(LongType).as("i"),
         col(idCol).cast(LongType).as("id")))).as("__arr"))
-    val prev: DataFrame =
-      if (AtomicStore.hasData(spark, storeDir)) spark.read.parquet(storeDir)
-      else collected.select(col(keyCol)).limit(0)
+    val prev: DataFrame = AtomicStore.current(spark, storeDir).getOrElse(
+      collected.select(col(keyCol)).limit(0)
         .select(col(keyCol), lit(null).cast("long").as("last_i"),
           lit(null).cast("long").as("last_id"),
-          lit(null).cast("long").as("level"))
+          lit(null).cast("long").as("level")))
     val prevR = prev.select(col(keyCol).as("__g"), col("last_i"),
       col("last_id"), col("level"))
     val joined = collected.join(prevR, col(keyCol) <=> col("__g"), "left")
@@ -120,9 +118,6 @@ object BucketIngest {
         col(keyCol) <=> col("__nk"), "left_anti")
       .select(col(keyCol), col("last_i"), col("last_id"), col("level"))
     val newStore = newKeys.unionByName(carried)
-    if (!AtomicStore.hasData(spark, storeDir))
-      AtomicStore.create(spark, storeDir, newStore.coalesce(1))
-    else
-      AtomicStore.replace(spark, storeDir, newStore, coalesceTo = 1)
+    AtomicStore.publish(spark, storeDir, newStore, coalesceTo = 1)
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.llm.Dedup
+import graft.sources.AtomicStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -52,15 +53,13 @@ object DedupIngest {
                   shingleN: Int, bands: Int, rowsPerBand: Int,
                   minJaccard: Double): Unit = {
     val spark = batch.sparkSession
-    restoreIfStashed(spark, bandStoreDir)
     // the batch is shingled+minhashed exactly ONCE: this band frame serves
     // both the vs-store candidate join and the store append for survivors
     def banded(df: DataFrame) =
       Dedup.bandStore(df, textCol, idCol, shingleN, bands, rowsPerBand)
-    val (accepted, acceptedBands) =
-      if (!hasData(spark, bandStoreDir)) (batch.localCheckpoint(true), banded(batch))
-      else {
-        val store = spark.read.parquet(bandStoreDir)
+    val (accepted, acceptedBands) = AtomicStore.current(spark, bandStoreDir) match {
+      case None => (batch.localCheckpoint(true), banded(batch))
+      case Some(store) =>
         // exact-id replay guard first: a re-delivered batch whose band
         // entries already landed is dropped here, so replay is a no-op (the
         // near-dup join alone would re-ACCEPT replayed rows — a row's match
@@ -75,7 +74,7 @@ object DedupIngest {
         // the same rows exactly once
         (unseen.join(dupIds, Seq(idCol), "left_anti").localCheckpoint(true),
           pb.join(dupIds, Seq(idCol), "left_anti"))
-      }
+    }
     accepted.write.mode("append").parquet(corpusDir)
     acceptedBands.write.mode("append").parquet(bandStoreDir)
   }
@@ -99,24 +98,15 @@ object DedupIngest {
                    targetPartitions: Int): Unit = {
     require(targetPartitions > 0, "targetPartitions must be positive")
     // recovery: a crash between the swap renames leaves the store missing
-    // and the only copy in the stash — restore it FIRST, before the hasData
-    // early-return could bootstrap an empty history. Ingest steps run the
-    // same restore at entry, so a restarted stream can never bootstrap a
-    // fresh store while history sits in the stash.
-    restoreIfStashed(spark, storeDir)
-    if (!hasData(spark, storeDir)) return
+    // and the only copy in the stash — reading the current store restores
+    // it, so neither this call nor an ingest step (which reads the same
+    // way) can bootstrap a fresh store while history sits in the stash.
     // coalesce, not repartition: merging small files needs no exchange —
     // a narrow merge of input splits per output file (size balance across
     // the target files is not a goal here)
-    graft.sources.AtomicStore.replace(spark, storeDir,
-      spark.read.parquet(storeDir), coalesceTo = targetPartitions)
+    AtomicStore.current(spark, storeDir).foreach(store =>
+      AtomicStore.publish(spark, storeDir, store, coalesceTo = targetPartitions))
   }
-
-  private def restoreIfStashed(spark: org.apache.spark.sql.SparkSession, storeDir: String): Unit =
-    graft.sources.AtomicStore.restoreIfStashed(spark, storeDir)
-
-  private def hasData(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
-    graft.sources.AtomicStore.hasData(spark, dir)
 
   /** EXACT-dedup ingest: the same foreachBatch composition over the
     * fingerprint store ([[graft.llm.Dedup.dedupIncremental]] /
@@ -144,15 +134,13 @@ object DedupIngest {
                        expectedStoreItems: Long): Unit = {
     import graft.text.TextFunctions.fingerprint
     val spark = batch.sparkSession
-    restoreIfStashed(spark, fpStoreDir)
-    val fresh =
-      if (!hasData(spark, fpStoreDir)) Dedup.dedupExact(batch, textCol, idCol)
-      else {
-        val store = spark.read.parquet(fpStoreDir)
+    val fresh = AtomicStore.current(spark, fpStoreDir) match {
+      case None => Dedup.dedupExact(batch, textCol, idCol)
+      case Some(store) =>
         if (expectedStoreItems > 0)
           Dedup.dedupIncrementalBloom(batch, store, textCol, idCol, expectedStoreItems)
         else Dedup.dedupIncremental(batch, store, textCol, idCol)
-      }
+    }
     // lazy: the corpus append materializes the snapshot, the fingerprint
     // append reads the pinned blocks — one job fewer per batch
     val accepted = fresh.localCheckpoint(false)

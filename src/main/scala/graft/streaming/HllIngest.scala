@@ -26,18 +26,12 @@ object HllIngest {
   def ingestBatch(batch: DataFrame, storeDir: String,
                   groupCols: Seq[String], valueCol: String): Unit = {
     val spark = batch.sparkSession
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val newRegs = graft.operators.HllDistinct.registers(batch, groupCols, valueCol)
-    val store =
-      if (AtomicStore.hasData(spark, storeDir)) spark.read.parquet(storeDir)
-      else newRegs.limit(0)
+    val store = AtomicStore.current(spark, storeDir).getOrElse(newRegs.limit(0))
     val merged = store.unionByName(newRegs)
       .groupBy((groupCols.map(col) :+ col("bucket")): _*)
       .agg(max(col("m_j")).as("m_j"))
-    if (!AtomicStore.hasData(spark, storeDir))
-      AtomicStore.create(spark, storeDir, merged.coalesce(1))
-    else
-      AtomicStore.replace(spark, storeDir, merged, coalesceTo = 1)
+    AtomicStore.publish(spark, storeDir, merged, coalesceTo = 1)
   }
 
   /** Current estimate from the store — the gate readout; identical to a
@@ -46,8 +40,7 @@ object HllIngest {
     */
   def estimate(spark: SparkSession, storeDir: String,
                groupCols: Seq[String]): DataFrame = {
-    AtomicStore.restoreIfStashed(spark, storeDir)
     graft.operators.HllDistinct.estimateFromRegisters(
-      spark.read.parquet(storeDir), groupCols)
+      AtomicStore.read(spark, storeDir), groupCols)
   }
 }

@@ -58,7 +58,6 @@ object SessionIngest {
     require(gapMicros > 0, s"gapMicros must be positive, got $gapMicros")
     graft.Guards.requireIntegral(batch, valueCol, "sessionIngest")
     val spark = batch.sparkSession
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val rows = batch
       .where(col(tsCol).isNotNull && col(valueCol).isNotNull)
       .select(col(keyCol),
@@ -78,8 +77,7 @@ object SessionIngest {
       .agg(sort_array(collect_list(struct(col("__sid"), col("s"),
         col("l"), col("n"), col("v")))).as("__arr"))
     val prev: DataFrame =
-      if (AtomicStore.hasData(spark, storeDir)) spark.read.parquet(storeDir)
-      else openSchema(rows, keyCol)
+      AtomicStore.current(spark, storeDir).getOrElse(openSchema(rows, keyCol))
     val prevR = prev.select(col(keyCol).as("__g"), col("open_start"),
       col("open_last"), col("open_n"), col("open_sum"))
     val j = sess.join(prevR, col(keyCol) <=> col("__g"), "left")
@@ -137,10 +135,7 @@ object SessionIngest {
       .select(col(keyCol), col("open_start"), col("open_last"),
         col("open_n"), col("open_sum"))
     val newStore = newOpens.unionByName(carried)
-    if (!AtomicStore.hasData(spark, storeDir))
-      AtomicStore.create(spark, storeDir, newStore.coalesce(1))
-    else
-      AtomicStore.replace(spark, storeDir, newStore, coalesceTo = 1)
+    AtomicStore.publish(spark, storeDir, newStore, coalesceTo = 1)
   }
 
   /** End-of-stream flush: every stored open session closes at
@@ -148,15 +143,13 @@ object SessionIngest {
     */
   def flush(spark: SparkSession, storeDir: String, lakeDir: String,
             keyCol: String, gapMicros: Long): Unit = {
-    AtomicStore.restoreIfStashed(spark, storeDir)
-    if (!AtomicStore.hasData(spark, storeDir)) return
-    val opens = spark.read.parquet(storeDir)
-    opens.select(col(keyCol), col("open_start").as("session_start"),
-        (col("open_last") + gapMicros).as("session_end"),
-        col("open_n").as("n_events"), col("open_sum").as("sum_v"))
-      .write.mode("append").parquet(lakeDir)
-    AtomicStore.replace(spark, storeDir,
-      openSchema(opens, keyCol), coalesceTo = 1)
+    AtomicStore.current(spark, storeDir).foreach { opens =>
+      opens.select(col(keyCol), col("open_start").as("session_start"),
+          (col("open_last") + gapMicros).as("session_end"),
+          col("open_n").as("n_events"), col("open_sum").as("sum_v"))
+        .write.mode("append").parquet(lakeDir)
+      AtomicStore.publish(spark, storeDir, openSchema(opens, keyCol), coalesceTo = 1)
+    }
   }
 
   /** One-shot DuckDB oracle: classic gaps-and-islands with integer

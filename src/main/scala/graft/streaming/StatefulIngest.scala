@@ -36,16 +36,13 @@ object StatefulIngest {
                   keyCol: String, valueCol: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    AtomicStore.restoreIfStashed(spark, storeDir)
     val typed = batch
       .where(col(keyCol).isNotNull && col(valueCol).isNotNull)
       .select(col(keyCol).cast("long"), col(valueCol).cast("double"))
       .as[(Long, Double)]
       .groupByKey(_._1)
-    val prior: Dataset[LifetimeRow] =
-      if (AtomicStore.hasData(spark, storeDir))
-        spark.read.parquet(storeDir).as[LifetimeRow]
-      else spark.emptyDataset[LifetimeRow]
+    val prior: Dataset[LifetimeRow] = AtomicStore.current(spark, storeDir)
+      .map(_.as[LifetimeRow]).getOrElse(spark.emptyDataset[LifetimeRow])
     val init = prior.groupByKey(_.key)
       .mapValues(r => AggState(r.n_events, r.sum_micros))
     val out: Dataset[LifetimeRow] =
@@ -66,18 +63,13 @@ object StatefulIngest {
         col("key") === col("__k"), "left_anti")
       .select(col("key"), col("n_events"), col("sum_micros"))
     val newStore = out.toDF().unionByName(untouched)
-    if (!AtomicStore.hasData(spark, storeDir))
-      AtomicStore.create(spark, storeDir, newStore.coalesce(1))
-    else
-      AtomicStore.replace(spark, storeDir, newStore, coalesceTo = 1)
+    AtomicStore.publish(spark, storeDir, newStore, coalesceTo = 1)
   }
 
   /** Current lifetime snapshot — the gate readout. */
   def snapshot(spark: org.apache.spark.sql.SparkSession,
-               storeDir: String): DataFrame = {
-    AtomicStore.restoreIfStashed(spark, storeDir)
-    spark.read.parquet(storeDir)
-  }
+               storeDir: String): DataFrame =
+    AtomicStore.read(spark, storeDir)
 
   /** One-shot DuckDB replay: the batch aggregate over the whole event
     * set with the identical per-event quantization.

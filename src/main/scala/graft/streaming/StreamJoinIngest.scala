@@ -53,13 +53,11 @@ object StreamJoinIngest {
                   rightKeyCol: String, rightTsCol: String, rightIdCol: String,
                   before: String, after: String, lateness: String): Unit = {
     val spark = newLeft.sparkSession
-    AtomicStore.restoreIfStashed(spark, storeDir)
-    val store: DataFrame =
-      if (AtomicStore.hasData(spark, storeDir)) spark.read.parquet(storeDir)
-      else spark.emptyDataFrame
+    val store: DataFrame = AtomicStore.current(spark, storeDir).getOrElse(
+      spark.emptyDataFrame
         .select(lit("L").as(Side), lit(0L).as("key"),
           lit(null).cast("timestamp_ntz").as("ts"), lit(0L).as("id"))
-        .limit(0)
+        .limit(0))
     val wmPrevRow = store.agg(max(col("ts")).as("mx")).head()
     val wmPrev: Option[java.time.LocalDateTime] =
       if (wmPrevRow.isNullAt(0)) None
@@ -115,10 +113,7 @@ object StreamJoinIngest {
             bufR.unionByName(nr).where(col("ts") >= keepR)
               .select(lit("R").as(Side), col("key"), col("ts"), col("id")))
       }
-    if (!AtomicStore.hasData(spark, storeDir))
-      AtomicStore.create(spark, storeDir, newStore.coalesce(1))
-    else
-      AtomicStore.replace(spark, storeDir, newStore, coalesceTo = 1)
+    AtomicStore.publish(spark, storeDir, newStore, coalesceTo = 1)
   }
 
   /** Interval-literal seconds, resolved by the engine itself so the

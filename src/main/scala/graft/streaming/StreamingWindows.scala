@@ -16,46 +16,18 @@ import org.apache.spark.sql.types._
   */
 object StreamingWindows {
 
-  /** Events schema in the raw nanos shape (ts = TIMESTAMP(NANOS) read as
-    * Long nanos) — the [[readEventsStream]] fallback when the path has no
-    * files yet to probe.
-    */
-  val EventsRawSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** File-source stream over an events parquet path; normalizes `ts` to a
-    * micro-precision instant TIMESTAMP whatever the physical storage is
-    * (nanos-as-Long, TIMESTAMP_NTZ micros, or instant TIMESTAMP — the same
-    * three shapes [[graft.llm.EventWindows.readEvents]] handles). A stream
-    * source needs its schema up front, so probe it with a cheap batch footer
-    * read of the same path. Unlike the batch reader this ends on instant
-    * (with-timezone) semantics — Spark watermarks require TIMESTAMP, not
-    * TIMESTAMP_NTZ. Under a UTC session the wall-clock values coincide.
+  /** File-source stream over an events parquet path, read against the
+    * declared events schema ([[graft.Tables]]: `ts` is micros
+    * TIMESTAMP_NTZ), so an empty or not-yet-populated directory starts
+    * cleanly and waits for files. Unlike the batch table `ts` ends on
+    * instant (with-timezone) semantics — Spark watermarks require
+    * TIMESTAMP, not TIMESTAMP_NTZ. Under a UTC session the wall-clock
+    * values coincide.
     */
   def readEventsStream(spark: SparkSession, path: String,
                        options: Map[String, String] = Map.empty): DataFrame =
-    graft.llm.EventWindows.withNanosAsLong(spark) {
-      // probe the stored shape with a batch footer read; an empty or
-      // not-yet-populated directory cannot be probed — fall back to the
-      // raw nanos schema so the stream still starts cleanly and waits
-      // for files (the pre-probe behavior)
-      val stored =
-        try spark.read.parquet(path).schema
-        catch { case _: org.apache.spark.sql.AnalysisException => EventsRawSchema }
-      val src = spark.readStream.schema(stored).options(options).parquet(path)
-      stored("ts").dataType match {
-        case LongType          => src.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-        case TimestampNTZType  => src.withColumn("ts", col("ts").cast(TimestampType))
-        case TimestampType     => src
-        case other =>
-          throw new IllegalArgumentException(s"unsupported events ts type: $other")
-      }
-    }
+    spark.readStream.schema(graft.Tables.schema("events")).options(options).parquet(path)
+      .withColumn("ts", col("ts").cast(TimestampType))
 
   /** Streaming exact dedup: drop payloads already seen, keyed by the 60-bit
     * content fingerprint (state stores an 8-byte key, never the payload —

@@ -6,7 +6,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The declared table schemas against the parquet footers of every scale
   * factor, and the job budget they buy: resolving a table, and building the
-  * plan of a table-reading gate, submit no Spark job.
+  * plan of a table-reading gate, submit no Spark job. Store-backed gates
+  * are pinned to their exact job count, so a change to the store protocol
+  * cannot add jobs unnoticed.
   */
 class TablesSpec extends SparkSpec {
 
@@ -76,5 +78,13 @@ class TablesSpec extends SparkSpec {
     val queries = SparkEntry.queries
     for (name <- Seq("q1_agg", "q_tpch_q2", "q_tpch_q21"))
       assert(jobsOf(queries(name)(spark, sf)) == 0, name)
+  }
+
+  test("store-backed gates run their exact job budget at sf0.001") {
+    val queries = SparkEntry.queries
+    val budget = Map("q_upsert_store" -> 8, "q_agg_incremental" -> 14,
+      "q_session_ingest" -> 25, "q_stream_windows" -> 14)
+    val ran = budget.keys.map(n => n -> jobsOf(queries(n)(spark, sf).collect())).toMap
+    assert(ran == budget)
   }
 }

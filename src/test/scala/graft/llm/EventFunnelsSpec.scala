@@ -56,7 +56,7 @@ class EventFunnelsSpec extends SparkSpec {
   }
 
   test("result is partitioning-independent") {
-    val e = EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val e = graft.Tables.resolve(spark, sf)("events")
     def run(df: org.apache.spark.sql.DataFrame) =
       EventFunnels.funnel(df, Seq("view", "click", "purchase"))
         .orderBy("user_id").collect().toSeq

@@ -340,7 +340,7 @@ class LlmSpec extends SparkSpec {
   }
 
   test("events tumbling window matches a manual hour-truncation groupBy") {
-    val events = EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val events = graft.Tables.resolve(spark, sf)("events")
     val viaWindow = EventWindows.tumbling(events)
       .orderBy("w_start", "event_type").collect()
     val manual = events
@@ -479,7 +479,7 @@ class LlmSpec extends SparkSpec {
     assert(canon(EventWindows.sessionizedSplit(whale, gap = "10 minutes")) ==
       canon(EventWindows.sessionized(whale, gap = "10 minutes")))
     // real gate data: full equivalence on the events table
-    val ev = EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val ev = graft.Tables.resolve(spark, sf)("events")
     assert(canon(EventWindows.sessionizedSplit(ev)) == canon(EventWindows.sessionized(ev)))
     // plan pin: the event-level shuffle carries the BUCKET alongside the
     // key — the whale key's history fans out across tasks
@@ -492,7 +492,7 @@ class LlmSpec extends SparkSpec {
     // pins the SCALING.md posture: session_window is an AGGREGATE — hash
     // exchange on user, per-partition (non-global) external sort, streaming
     // session merge — so a whale user costs wall-clock, not task memory
-    val ev = EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val ev = graft.Tables.resolve(spark, sf)("events")
     val plan = EventWindows.sessionized(ev).queryExecution.executedPlan.toString
     assert(plan.contains("MergingSessions"), s"expected MergingSessions in:\n$plan")
     assert(plan.contains("Exchange hashpartitioning(user_id"), s"expected user hash exchange in:\n$plan")

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 /** Distinct-count store: fold ≡ one-shot by KMV closure, exact regime,
@@ -13,11 +12,7 @@ class DistinctStoreSpec extends SparkSpec {
 
   private def freshDir(name: String): String = {
     val dir = s"/tmp/graft_distinct_store_spec/$name"
-    val p = new Path(dir)
-    import graft.sources.AtomicStore
-    Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p)).foreach { x =>
-      x.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(x, true)
-    }
+    graft.sources.AtomicStore.drop(spark, dir)
     dir
   }
 

@@ -83,10 +83,7 @@ class DriftSpec extends SparkSpec {
   test("maintained-store composition: N incremental batches equal the batch PSI") {
     import org.apache.spark.sql.functions.lit
     val store = "/tmp/graft_drift_store"
-    val p = new org.apache.hadoop.fs.Path(store)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import graft.sources.AtomicStore
-    Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p)).foreach(d => fs.delete(d, true))
+    graft.sources.AtomicStore.drop(spark, store)
     val cuts = Seq(20L, 40L, 60L)
     val ref = df((1L to 80L).map(i => (i * 7) % 90))
     val batches = Seq(df(Seq(5L, 25L, 45L)), df(Seq(65L, 66L)), df(Seq(10L, 30L)))

@@ -56,11 +56,7 @@ class GroupedTrendSpec extends SparkSpec {
 
   test("incremental fold through the maintained store equals the direct slope") {
     val store = "/tmp/graft_trend_store"
-    val p = new org.apache.hadoop.fs.Path(store)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import graft.sources.AtomicStore
-    Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p))
-      .foreach(d => f.delete(d, true))
+    graft.sources.AtomicStore.drop(spark, store)
     val rows = (1L to 300L).map(i => (s"g${i % 5}", i, i * ((i % 5) + 1) + (i % 13)))
     val all = rows.toDF("g", "x", "y")
     (0 until 3).foreach { b =>

@@ -21,11 +21,7 @@ class IncrementalAggSpec extends SparkSpec {
 
   private def freshDir(name: String): String = {
     val d = s"/tmp/graft_incagg_spec/$name"
-    val p = new Path(d)
-    import graft.sources.AtomicStore
-    Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p)).foreach { x =>
-      x.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(x, true)
-    }
+    graft.sources.AtomicStore.drop(spark, d)
     d
   }
 

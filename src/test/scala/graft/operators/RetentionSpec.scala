@@ -31,7 +31,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("offset 0 counts every user of the cohort exactly once") {
-    val ev = graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val ev = graft.Tables.resolve(spark, sf)("events")
     val m = Retention.weeklyCohorts(ev, "user_id", "ts").collect()
       .map(r => (r.getDate(0).toString, r.getLong(1)) -> r.getLong(2)).toMap
     val cohortSizes = ev.where(col("user_id").isNotNull && col("ts").isNotNull)
@@ -52,7 +52,7 @@ class RetentionSpec extends SparkSpec {
   }
 
   test("plan: no count-distinct Expand; aggregates are partial") {
-    val ev = graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val ev = graft.Tables.resolve(spark, sf)("events")
     val plan = Retention.weeklyCohorts(ev, "user_id", "ts")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Expand"), plan)

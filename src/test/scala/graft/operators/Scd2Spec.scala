@@ -25,12 +25,9 @@ class Scd2Spec extends SparkSpec {
 
   private def freshDir(name: String): String = {
     val dir = s"/tmp/graft_scd2_spec/$name"
-    val p = new Path(dir)
-    import graft.sources.AtomicStore
-    Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p),
-      new Path(dir + "__applied")).foreach { x =>
-      x.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(x, true)
-    }
+    graft.sources.AtomicStore.drop(spark, dir)
+    val marks = new Path(dir + "__applied")
+    marks.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(marks, true)
     dir
   }
 

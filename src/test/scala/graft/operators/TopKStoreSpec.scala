@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 /** Leaderboard-store contracts: fold ≡ direct for any batching,
@@ -13,11 +12,7 @@ class TopKStoreSpec extends SparkSpec {
 
   private def freshDir(name: String): String = {
     val d = s"/tmp/graft_topkstore_spec/$name"
-    val p = new Path(d)
-    import graft.sources.AtomicStore
-    Seq(p, AtomicStore.tmpPath(p), AtomicStore.stashPath(p)).foreach { x =>
-      x.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(x, true)
-    }
+    graft.sources.AtomicStore.drop(spark, d)
     d
   }
 

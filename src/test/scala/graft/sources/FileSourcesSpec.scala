@@ -106,6 +106,29 @@ class FileSourcesSpec extends SparkSpec {
     assert(store.listTables().isEmpty)
   }
 
+  test("ParquetStore: a crash between the swap's two renames loses no rows") {
+    val root = tmp()
+    val store = new ParquetStore(root)
+    def rows(name: String) =
+      store.read(spark, name).orderBy("id").as[(Long, String)].collect().toSeq
+    val p = new org.apache.hadoop.fs.Path(s"$root/t.parquet")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the crash: the table renamed aside as the stash, the next rows staged
+    // in tmp, nothing at the table path
+    def crash(): Unit = {
+      Seq((9L, "z")).toDF("id", "s")
+        .write.mode("overwrite").parquet(AtomicStore.tmpPath(p).toString)
+      assert(fs.rename(p, AtomicStore.stashPath(p)))
+    }
+    store.write(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), "t", SaveStrategy.Replace)
+    crash()
+    assert(rows("t") == Seq((1L, "a"), (2L, "b")))
+    crash()
+    store.write(Seq((2L, "B"), (3L, "c")).toDF("id", "s"), "t", SaveStrategy.Upsert("id"))
+    assert(rows("t") == Seq((1L, "a"), (2L, "B"), (3L, "c")))
+    assert(store.listTables() == Seq("t"))
+  }
+
   test("partitioned parquet write prunes partitions at scan time") {
     val dir = tmp() + "/part"
     val docs = spark.read.parquet(s"$sf/documents.parquet")

@@ -194,6 +194,30 @@ class LakeMergeSpec extends SparkSpec {
     assert(readLake(lake) == Map(2L -> (20.0, "a"), 4L -> (40.0, "b")))
   }
 
+  for (tsType <- Seq("timestamp_ntz", "timestamp"))
+    test(s"$tsType partitions: delete and merge evacuate by the writer's path encoding") {
+      val lake = freshDirWithStage(s"ts_part_$tsType")
+      def rows(rs: (Long, Double, String)*) = rs.toDF("k", "v", "d")
+        .withColumn("d", col("d").cast(tsType))
+      LakeMerge.merge(spark, lake, rows((1L, 10.0, "2024-01-01 00:00:00"),
+        (2L, 20.0, "2024-01-02 00:00:00"), (3L, 30.0, "2024-01-03 12:30:00"),
+        (4L, 40.0, "2024-01-04 00:00:00")), Seq("k"), Seq("d"))
+      def lakeKeys(): Seq[Long] =
+        spark.read.parquet(lake).select("k").as[Long].collect().sorted.toSeq
+      val fs = new Path(lake).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def partDirs(): Set[String] = fs.listStatus(new Path(lake))
+        .map(_.getPath.getName).filter(_.startsWith("d=")).toSet
+      assert(partDirs().size == 4)
+      // delete empties the 2024-01-03 12:30 partition
+      LakeMerge.delete(spark, lake, Seq(Tuple1(3L)).toDF("k"), Seq("k"), Seq("d"))
+      assert(lakeKeys() == Seq(1L, 2L, 4L))
+      assert(partDirs().size == 3)
+      // a partition-moving update rewrites 2024-01-01 and empties 2024-01-04
+      LakeMerge.merge(spark, lake, rows((4L, 41.0, "2024-01-01 00:00:00")), Seq("k"), Seq("d"))
+      assert(lakeKeys() == Seq(1L, 2L, 4L))
+      assert(partDirs().size == 2)
+    }
+
   test("key and partition columns must be disjoint") {
     val lake = freshDir("disjoint")
     intercept[IllegalArgumentException] {

@@ -14,13 +14,7 @@ class BucketIngestSpec extends SparkSpec {
   private def freshDirs(tag: String): (String, String) = {
     val store = s"/tmp/graft_bucket_ingest_spec_${tag}_store"
     val lake = s"/tmp/graft_bucket_ingest_spec_${tag}_lake"
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq(store, lake).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val f = p.getFileSystem(conf)
-      Seq(p, graft.sources.AtomicStore.tmpPath(p),
-        graft.sources.AtomicStore.stashPath(p)).foreach(f.delete(_, true))
-    }
+    Seq(store, lake).foreach(graft.sources.AtomicStore.drop(spark, _))
     (store, lake)
   }
 

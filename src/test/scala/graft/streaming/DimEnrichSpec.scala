@@ -49,12 +49,10 @@ class DimEnrichSpec extends SparkSpec {
 
   test("N micro-batches equal one batch temporal join over everything streamed") {
     val store = "/tmp/graft_dimenrich_store"
-    val sp = new org.apache.hadoop.fs.Path(store)
-    import graft.sources.AtomicStore
     val (srcDir, outDir, ckpt) = ("/tmp/graft_dimenrich_src",
       "/tmp/graft_dimenrich_out", "/tmp/graft_dimenrich_ckpt")
-    wipe(store, AtomicStore.tmpPath(sp).toString, AtomicStore.stashPath(sp).toString,
-      srcDir, outDir, ckpt)
+    graft.sources.AtomicStore.drop(spark, store)
+    wipe(srcDir, outDir, ckpt)
 
     Scd2.update(spark, store,
       changes(Seq((1L, "a0", 0L, 0L), (1L, "a1", 100L, 1L), (2L, "b0", 50L, 2L))),
@@ -84,10 +82,9 @@ class DimEnrichSpec extends SparkSpec {
 
   test("a dimension fold between batches is visible; late facts stay historical") {
     val store = "/tmp/graft_dimenrich2_store"
-    val sp = new org.apache.hadoop.fs.Path(store)
-    import graft.sources.AtomicStore
     val outDir = "/tmp/graft_dimenrich2_out"
-    wipe(store, AtomicStore.tmpPath(sp).toString, AtomicStore.stashPath(sp).toString, outDir)
+    graft.sources.AtomicStore.drop(spark, store)
+    wipe(outDir)
 
     Scd2.update(spark, store, changes(Seq((1L, "v1", 0L, 0L))),
       "k", Seq("attr"), "eff", "seq")

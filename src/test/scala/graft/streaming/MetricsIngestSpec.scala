@@ -51,10 +51,9 @@ class MetricsIngestSpec extends SparkSpec {
     stage(srcDir, batches)
 
     val store = "/tmp/graft_metricsingest_store"
-    val sp = new org.apache.hadoop.fs.Path(store)
-    import graft.sources.AtomicStore
     val ckpt = "/tmp/graft_metricsingest_ckpt"
-    wipe(store, AtomicStore.tmpPath(sp).toString, AtomicStore.stashPath(sp).toString, ckpt)
+    graft.sources.AtomicStore.drop(spark, store)
+    wipe(ckpt)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     val q = MetricsIngest.start(stream, store, Seq("src"), specs, ckpt)

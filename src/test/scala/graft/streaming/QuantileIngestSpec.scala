@@ -42,10 +42,9 @@ class QuantileIngestSpec extends SparkSpec {
     stage(srcDir, batches)
 
     val store = "/tmp/graft_qingest_store"
-    val sp = new org.apache.hadoop.fs.Path(store)
-    import graft.sources.AtomicStore
     val ckpt = "/tmp/graft_qingest_ckpt"
-    wipe(store, AtomicStore.tmpPath(sp).toString, AtomicStore.stashPath(sp).toString, ckpt)
+    graft.sources.AtomicStore.drop(spark, store)
+    wipe(ckpt)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     val q = QuantileStore.start(stream, store, Seq("g"), "v", k = 64, ckpt)

@@ -10,15 +10,8 @@ class StatefulIngestSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def cleanDirs(dirs: String*): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    dirs.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val f = p.getFileSystem(conf)
-      Seq(p, graft.sources.AtomicStore.tmpPath(p),
-        graft.sources.AtomicStore.stashPath(p)).foreach(f.delete(_, true))
-    }
-  }
+  private def cleanDirs(dirs: String*): Unit =
+    dirs.foreach(graft.sources.AtomicStore.drop(spark, _))
 
   // user 1 spans all chunks, user 2 appears only in chunk 2, user 3 only
   // in chunk 3; values exercise the micro-quantization

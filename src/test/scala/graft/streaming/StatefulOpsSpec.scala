@@ -33,7 +33,7 @@ class StatefulOpsSpec extends SparkSpec {
       .groupBy("key").agg(max(struct(col("nEvents"), col("sumValue"))).as("s"))
       .select(col("key"), col("s.nEvents").as("n"), col("s.sumValue").as("sum"))
       .orderBy("key").collect()
-    val expect = graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val expect = graft.Tables.resolve(spark, sf)("events")
       .groupBy(col("user_id").as("key"))
       .agg(count(lit(1)).as("n"),
         (sum(expr("CAST(round(value * 1e6) AS BIGINT)")) / 1e6).as("sum"))
@@ -52,7 +52,7 @@ class StatefulOpsSpec extends SparkSpec {
     val gotN = spark.table("st_totals2")
       .groupBy("key").agg(max("nEvents").as("n"))
       .agg(sum("n")).head().getLong(0)
-    val batchN = graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet").count()
+    val batchN = graft.Tables.resolve(spark, sf)("events").count()
     assert(gotN == 2 * batchN)
   }
 }

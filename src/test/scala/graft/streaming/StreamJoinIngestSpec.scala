@@ -11,15 +11,8 @@ class StreamJoinIngestSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def cleanDirs(dirs: String*): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    dirs.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val f = p.getFileSystem(conf)
-      Seq(p, graft.sources.AtomicStore.tmpPath(p),
-        graft.sources.AtomicStore.stashPath(p)).foreach(f.delete(_, true))
-    }
-  }
+  private def cleanDirs(dirs: String*): Unit =
+    dirs.foreach(graft.sources.AtomicStore.drop(spark, _))
 
   private def ts(s: String) = java.time.LocalDateTime.parse(s)
 

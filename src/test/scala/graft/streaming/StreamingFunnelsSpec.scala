@@ -24,7 +24,7 @@ class StreamingFunnelsSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$dir/a_events.parquet"))
-    val ev = graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val ev = graft.Tables.resolve(spark, sf)("events")
     val users = ev.select("user_id").distinct()
     (1 to 2).foreach { i =>
       users.select(
@@ -63,7 +63,7 @@ class StreamingFunnelsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
 
     val batch = graft.llm.EventFunnels.funnel(
-        graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet"), steps)
+        graft.Tables.resolve(spark, sf)("events"), steps)
       .collect().map(r => r.getAs[Long]("user_id") -> r.getAs[Int]("steps_completed")).toMap
 
     assert(batch.nonEmpty && got.size === batch.size,

@@ -35,7 +35,7 @@ class StreamingJoinsSpec extends SparkSpec {
     try { q.processAllAvailable() } finally { q.stop() }
     val got = spark.table("ss_join").orderBy("purchase_id", "click_id").collect()
 
-    val batch = graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val batch = graft.Tables.resolve(spark, sf)("events")
       .withColumn("ts", col("ts").cast("timestamp"))
     val expect = purchases(batch).join(clicks(batch),
         col("user_id") === col("c_user") &&

@@ -32,7 +32,7 @@ class StreamingTopKSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1)
         .map(p => (p.getDouble(0), p.getLong(1))).toSeq).toMap
 
-    val batch = graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val batch = graft.Tables.resolve(spark, sf)("events")
       .groupBy("event_type")
       .agg(TopK(5)(col("value") * 1000, col("event_id")).as("top"))
       .collect().map(r => r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1)

@@ -37,7 +37,7 @@ class StreamingWindowsSpec extends SparkSpec {
   }
 
   private lazy val batch =
-    EventWindows.tumbling(EventWindows.readEvents(spark, s"$sf/events.parquet"))
+    EventWindows.tumbling(graft.Tables.resolve(spark, sf)("events"))
       .orderBy("w_start", "event_type").collect()
 
   test("complete mode equals the batch aggregation") {
@@ -54,7 +54,7 @@ class StreamingWindowsSpec extends SparkSpec {
     val q = stream.writeStream.format("memory").queryName("sw_dedup").outputMode("append").start()
     try { q.processAllAvailable() } finally { q.stop() }
     val got = spark.table("sw_dedup")
-    val batchDistinct = graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val batchDistinct = graft.Tables.resolve(spark, sf)("events")
       .select(countDistinct(col("props"))).head().getLong(0)
     assert(got.count() == batchDistinct)
     assert(!got.columns.contains("__fp"))
@@ -66,7 +66,7 @@ class StreamingWindowsSpec extends SparkSpec {
       textCol = "props", tsCol = Some("ts"), lateness = "10 days")
     val q = stream.writeStream.format("memory").queryName("sw_dedup_wm").outputMode("append").start()
     try { q.processAllAvailable() } finally { q.stop() }
-    val batchDistinct = graft.llm.EventWindows.readEvents(spark, s"$sf/events.parquet")
+    val batchDistinct = graft.Tables.resolve(spark, sf)("events")
       .select(org.apache.spark.sql.functions.countDistinct(
         org.apache.spark.sql.functions.col("props"))).head().getLong(0)
     // lateness covers the whole (bounded) file → exact distinct count
@@ -92,7 +92,7 @@ class StreamingWindowsSpec extends SparkSpec {
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("w_start", "event_type").collect()
     val batchHop = EventWindows.hopping(
-        EventWindows.readEvents(spark, s"$sf/events.parquet"))
+        graft.Tables.resolve(spark, sf)("events"))
       .orderBy("w_start", "event_type").collect()
     assert(got.length == batchHop.length && got.nonEmpty)
     got.zip(batchHop).foreach { case (g, b) => assert(g == b) }
@@ -112,7 +112,7 @@ class StreamingWindowsSpec extends SparkSpec {
         col("n_events"), col("sum_value"))
       .orderBy("user_id", "session_start").collect()
     val batchSessions = EventWindows.sessionized(
-        EventWindows.readEvents(spark, s"$sf/events.parquet"))
+        graft.Tables.resolve(spark, sf)("events"))
       .orderBy("user_id", "session_start").collect()
     assert(got.length == batchSessions.length)
     got.zip(batchSessions).foreach { case (g, b) => assert(g == b) }
