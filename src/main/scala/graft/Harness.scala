@@ -33,8 +33,7 @@ object Harness {
       // knob is inert — coalescing behaves exactly as before. 256 KB (not
       // lower): per-task constants of sort-merge stages bite below it on
       // tiny-shuffle graph joins — empirically the best whole-suite point.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
       // the exact-arithmetic paths (ExactSum limb sums, long products)
       // rely on ANSI mode RAISING on overflow rather than wrapping; it is
       // the Spark 4.x default, but pin it so a deployment that flips the

@@ -380,8 +380,7 @@ FROM $table d LEFT JOIN k ON d.$idCol = k.$idCol ORDER BY d.$idCol""".stripMargi
     }
     // single-file inputs arrive as one partition; the signature computation
     // is the expensive part, so spread it across the cluster first
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val src = if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    val src = graft.Guards.fanOut(df)
     // band keys + shingle sets are consumed FOUR times downstream (both
     // sides of the candidate self-join, both sides of the verify join);
     // without materialization each consumer re-runs the whole tokenize →
@@ -431,8 +430,7 @@ FROM $table d LEFT JOIN k ON d.$idCol = k.$idCol ORDER BY d.$idCol""".stripMargi
                 shingleN: Int = 3,
                 bands: Int = DefaultBands,
                 rowsPerBand: Int = DefaultRowsPerBand): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val src = if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    val src = graft.Guards.fanOut(df)
     prepareBands(src, textCol, idCol, shingleN, bands, rowsPerBand)
   }
 
@@ -684,8 +682,7 @@ SELECT doc_id_ AS doc_id, simhash FROM fp ORDER BY doc_id_""".stripMargin
                    maxHamming: Int = 2, shingleN: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming < SimHashBits,
       s"maxHamming must be in [0, $SimHashBits), got $maxHamming")
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val src = if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    val src = graft.Guards.fanOut(df)
     val fps = src
       .select(col(idCol), simhash(col(textCol), shingleN).as("__fp"))
       .localCheckpoint(true)
@@ -767,8 +764,7 @@ ORDER BY 1, 2""".stripMargin
                      maxHamming: Int = 2, shingleN: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming < SimHashBits,
       s"maxHamming must be in [0, $SimHashBits), got $maxHamming")
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val src = if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    val src = graft.Guards.fanOut(df)
     val fps = src
       .select(col(idCol), simhash(col(textCol), shingleN).as("__fp"),
         shingleSet(col(textCol), shingleN).as("__s"))
@@ -905,8 +901,7 @@ SELECT left_id, right_id, jaccard FROM verified WHERE jaccard >= $minJaccard ORD
                      shingleN: Int = 3, bands: Int = DefaultBands,
                      rowsPerBand: Int = DefaultRowsPerBand): DataFrame = {
     require(rowsPerBand <= 2, "band key packing supports rowsPerBand <= 2")
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val src = if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    val src = graft.Guards.fanOut(df)
     val k = bands * rowsPerBand
     val prepared = src.select(
         col(idCol),

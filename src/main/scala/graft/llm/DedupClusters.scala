@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.GraphEdges
 
 /** Duplicate-cluster formation: near-dup PAIRS (from [[Dedup.dedupMinhashPairs]]
   * or [[Similarity.cosineDupPairs]]) are only half the dedup story — a corpus
@@ -24,11 +25,12 @@ import org.apache.spark.sql.functions._
   * min-aggregate, both partial-agg/codegen friendly; nothing is ever
   * all-pairs and no adjacency list is materialized per-vertex. Rounds
   * needed = graph diameter, which for duplicate clusters is small (near-dup
-  * groups are dense — typically 2-4 hops); `localCheckpoint` after every
-  * round truncates the lineage so plan depth stays O(1) regardless of
-  * rounds. (For adversarial long-chain graphs the O(log n) alternating
-  * large-star/small-star scheme is the upgrade path; it changes only the
-  * per-round step, not this driver loop.)
+  * groups are dense — typically 2-4 hops); the [[graft.operators.GraphEdges]]
+  * round driver pins every round, so plan depth stays O(1) regardless of
+  * rounds. For adversarial long-chain graphs the O(log n) alternating
+  * large-star/small-star scheme, [[connectedComponentsAlt]], is the
+  * upgrade path; the gated [[minhashClusters]] runs the plain
+  * propagation.
   *
   * Reference scope note: the fabrix reference has no graph/dedup operators —
   * this is the LLM-pipeline extension surface built on [[Dedup]].
@@ -53,37 +55,19 @@ object DedupClusters {
       .localCheckpoint(true)
     // iterate ONLY over edge-touched vertices (both endpoints appear in sym
     // by symmetry); the corpus-sized singleton mass joins back at the end
-    // label checkpoints are LAZY: every round's labelSum action
-    // materializes them in the same job — halves the scheduled job
-    // count per round (the GraphRank lesson: eager checkpoints in a
-    // driver loop are pure scheduling latency)
-    var labels = sym.select(col("src").as("id")).distinct()
+    val init = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-      .localCheckpoint(false)
-    // convergence check: labels are monotonically non-increasing, so the
-    // global label sum strictly decreases until fixpoint. Decimal(38,0)
+    // convergence: labels are monotonically non-increasing, so the global
+    // label sum strictly decreases until fixpoint. Decimal(38,0)
     // accumulation — a Long sum could wrap at extreme id magnitudes and
-    // alias two different label states.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(graft.ExactSum.sumLong(col("label"))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
-    var round = 0
-    // a null sum means zero edge-touched vertices — nothing to iterate
-    var converged = prevSum == null
-    while (!converged && round < maxRounds) {
-      val next = sym.join(labels, sym("src") === labels("id"))
+    // alias two different label states; a null sum means zero
+    // edge-touched vertices, which converges on the first round
+    val labels = GraphEdges.toFixpoint(init, maxRounds, "connectedComponents") {
+      (lab, _) => sym.join(lab, sym("src") === lab("id"))
         .select(col("dst").as("id"), col("label"))
-        .union(labels)
+        .union(lab)
         .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint(false)
-      val nextSum = labelSum(next)
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      round += 1
-    }
-    require(converged, s"connectedComponents did not converge in $maxRounds rounds " +
-      "(graph diameter exceeds the bound — raise maxRounds or switch to large-star/small-star)")
+    }(_.agg(graft.ExactSum.sumLong(col("label"))).head.get(0))
     val v = vertices.select(col(idCol).as("__v_id"))
     v.join(labels, v("__v_id") === labels("id"), "left")
       .select(col("__v_id").as(idCol),
@@ -113,14 +97,10 @@ object DedupClusters {
       pairs: DataFrame, vertices: DataFrame, idCol: String,
       maxRounds: Int = 50): DataFrame = {
     import org.apache.spark.sql.functions.{greatest, least}
-    // LAZY checkpoints throughout: the fixpoint test's count()/exceptAll
-    // actions materialize each round's edge set in their own job — an
-    // eager checkpoint would just add a blocking job per round
-    var edges = pairs
+    val pairEdges = pairs
       .select(col("left_id").as("src"), col("right_id").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
-      .localCheckpoint(false)
 
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -146,17 +126,14 @@ object DedupClusters {
         .distinct()
     }
 
-    var round = 0
-    var converged = edges.isEmpty
-    while (!converged && round < maxRounds) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
-      // exact fixpoint test on the (small, duplicate-subgraph-sized) edge
-      // set; both frames are checkpointed so each side evaluates once
-      converged = next.count() == edges.count() && next.exceptAll(edges).isEmpty
-      edges = next
-      round += 1
-    }
-    require(converged, s"connectedComponentsAlt did not converge in $maxRounds rounds")
+    // exact fixpoint test on the (small, duplicate-subgraph-sized) edge
+    // set: same size and nothing new; both frames are pinned, so each
+    // side evaluates once and each size is counted once
+    val edges = GraphEdges.toFixpoint(pairEdges, maxRounds, "connectedComponentsAlt")(
+        (e, _) => smallStar(largeStar(e)))(
+      e => (e, e.count()),
+      (prev: (DataFrame, Long), next: (DataFrame, Long)) =>
+        prev._2 == next._2 && next._1.exceptAll(prev._1).isEmpty)
     // at fixpoint every edge is (member, component-min); roots rep themselves
     val labels = edges.select(col("src").as("id"), col("dst").as("label"))
     val v = vertices.select(col(idCol).as("__v_id"))

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * `trainPct` for a mostly-unique corpus.
   *
   * Scale shape: inherits the L2/L38 posture wholesale (banded equi-join
-  * pairs, O(log n) star-contraction components); the split itself is
+  * pairs, min-label propagation components); the split itself is
   * scan-stage hash arithmetic on the (id, cluster_rep) frame — 16-byte
   * rows, never documents.
   *

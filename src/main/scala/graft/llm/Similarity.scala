@@ -63,8 +63,7 @@ object Similarity {
   def bruteForceKnn(
       corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val src = if (corpus.rdd.getNumPartitions < par) corpus.repartition(par) else corpus
+    val src = graft.Guards.fanOut(corpus)
     val q = broadcast(queries.select(
       col(idCol).as("query_id"), col(vecCol).as("qv")))
     val c = src.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
@@ -94,8 +93,7 @@ object Similarity {
       corpus: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dims: Seq[Int] = DefaultLshDims): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val src = if (corpus.rdd.getNumPartitions < par) corpus.repartition(par) else corpus
+    val src = graft.Guards.fanOut(corpus)
     val b = src.select(
       col(idCol), signBucket(col(vecCol), dims).as("bucket"), col(vecCol).as("qv"))
     val scored = b.as("a").join(b.as("b"),
@@ -118,8 +116,7 @@ object Similarity {
       corpus: DataFrame, minScore: Long,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dims: Seq[Int] = DefaultLshDims): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val src = if (corpus.rdd.getNumPartitions < par) corpus.repartition(par) else corpus
+    val src = graft.Guards.fanOut(corpus)
     val b = src.select(
       col(idCol), signBucket(col(vecCol), dims).as("bucket"), col(vecCol).as("qv"))
     b.as("a").join(b.as("b"),

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: per round, the frontier join shuffles (last-layer ×
   * avg-degree) 8-byte id pairs — frontier-sized, never graph-sized; the
-  * labeled set and each layer are eagerly checkpointed (the PageRank
-  * lineage posture). A whale-degree hub explodes one round's frontier
+  * labeled set is pinned lazily per round by the [[GraphEdges.rounds]]
+  * driver. A whale-degree hub explodes one round's frontier
   * candidates but collapses in the frontier's map-side distinct.
   *
   * Contracts: edges are undirected (symmetrized + deduplicated,
@@ -41,25 +41,22 @@ object BfsHops {
     require(maxHops >= 1 && maxHops <= 50,
       s"maxHops must be in [1, 50], got $maxHops")
     val e = GraphEdges.symmetrize(edges, srcCol, dstCol)
-    var labeled = seeds
+    val seeded = seeds
       .where(col(seedCol).isNotNull)
       .select(col(seedCol).as("vertex")).distinct()
       .withColumn("hops", lit(0L))
-      .localCheckpoint(false)
-    var last = labeled
-    for (r <- 1 to maxHops) {
+    GraphEdges.rounds(seeded, maxHops) { (labeled, r) =>
+      // the last layer is the labeled set's hop-(r−1) rows
       val frontier = e
-        .join(last.select(col("vertex").as("__v")),
+        .join(labeled.where(col("hops") === r - 1)
+            .select(col("vertex").as("__v")),
           col("__s") === col("__v"), "left_semi")
         .select(col("__d").as("vertex")).distinct()
         .join(labeled.select(col("vertex").as("__l")),
           col("vertex") === col("__l"), "left_anti")
         .withColumn("hops", lit(r.toLong))
-        .localCheckpoint(false)
-      labeled = labeled.unionAll(frontier).localCheckpoint(false)
-      last = frontier
+      labeled.unionAll(frontier)
     }
-    labeled
   }
 
   /** DuckDB replay of [[distances]] — rounds unrolled as MATERIALIZED

@@ -34,9 +34,10 @@ import org.apache.spark.sql.functions._
   * partial per (dst, partition), not one row per edge). The loop-invariant
   * outdeg join is paid ONCE up front: the degree-annotated edge list is
   * `localCheckpoint`ed and re-read from block storage every round, so each
-  * round joins only the current scores; lineage is truncated per round so
-  * plan depth stays O(1) in `iters`. Nothing is ever all-pairs and no per-vertex adjacency
-  * list is materialized. Whale vertices (a hub with 10⁸ in-links) are
+  * round joins only the current scores; the [[GraphEdges.rounds]] driver
+  * truncates lineage per round so plan depth stays O(1) in `iters`.
+  * Nothing is ever all-pairs and no per-vertex adjacency list is
+  * materialized. Whale vertices (a hub with 10⁸ in-links) are
   * absorbed by the map-side partial sums — the reduce side sees one row
   * per partition, the [[SkewJoin]] salting path is NOT needed for the
   * aggregate (only a skewed contribution JOIN on a whale `src` would want
@@ -85,10 +86,9 @@ object GraphRank {
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping $dampNum/$dampDen must be a fraction in [0, 1]")
     require(startScore > 0, s"startScore must be positive, got $startScore")
-    // all checkpoints LAZY: they still truncate lineage and pin blocks,
+    // setup checkpoints LAZY: they still truncate lineage and pin blocks,
     // but materialization rides the next action instead of a blocking
-    // per-call job — at bench scale the eager form's ~8 barrier jobs
-    // (3 setup + one per round) were pure scheduling latency
+    // per-call job
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).localCheckpoint(false)
     val n = edges.sparkSession.sessionState.conf.numShufflePartitions
@@ -113,18 +113,12 @@ object GraphRank {
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))),
       "id", n)
     val baseAdd = (startScore * (dampDen - dampNum)) / dampDen
-    var scores = nodes.select(col("id"), lit(startScore).as("score"))
-    var i = 0
-    while (i < iters) {
-      scores = step(eDeg, nodes, scores, baseAdd, dampNum, dampDen)
-        .localCheckpoint(false)
-      i += 1
-    }
-    scores
+    GraphEdges.rounds(nodes.select(col("id"), lit(startScore).as("score")),
+      iters)((scores, _) => step(eDeg, nodes, scores, baseAdd, dampNum, dampDen))
   }
 
-  /** One damped update round (un-checkpointed — [[pageRankInt]] truncates
-    * lineage after each call; exposed separately so the plan shape is
+  /** One damped update round (un-checkpointed — the round driver pins
+    * each round's scores; exposed separately so the plan shape is
     * spec-pinnable).
     */
   private[graft] def step(eDeg: DataFrame, nodes: DataFrame,
@@ -193,15 +187,9 @@ object GraphRank {
       flagged.select(col("id"),
         when(col("__sf") === 1, lit(baseAdd)).otherwise(lit(0L)).as("__base")),
       "id", n)
-    var scores = flagged.select(col("id"),
-      when(col("__sf") === 1, lit(startScore)).otherwise(lit(0L)).as("score"))
-    var i = 0
-    while (i < iters) {
-      scores = stepBase(eDeg, nodesB, scores, dampNum, dampDen)
-        .localCheckpoint(false)
-      i += 1
-    }
-    scores
+    GraphEdges.rounds(flagged.select(col("id"),
+        when(col("__sf") === 1, lit(startScore)).otherwise(lit(0L)).as("score")),
+      iters)((scores, _) => stepBase(eDeg, nodesB, scores, dampNum, dampDen))
   }
 
   /** DuckDB replay of [[personalizedPageRankInt]] — the seeded recurrence

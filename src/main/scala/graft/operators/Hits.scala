@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * src-keyed, partial-agg'd — a whale vertex's incoming mass collapses
   * map-side) and two 1-row max broadcasts; the edge list is
   * checkpointed once and each round joins only the current scores;
-  * lineage truncates per round ([[GraphRank]]'s iterative posture).
+  * lineage truncates per half-round (the [[GraphEdges.rounds]] driver).
   * Normalized scores live in [0, 10⁶] so they ship as 8-byte LONGS and
   * accumulate through [[graft.ExactSum.sumLong]]'s codegen'd limb sums;
   * only the raw reinforcement sums (Scale × whale in-degree) carry
@@ -78,16 +78,15 @@ object Hits {
           col("id") === col("__t"), "left")
         .select(col("id"),
           coalesce(col("__acc"), lit(0).cast(dec)).as("__raw"))
-    var hubs = nodes.select(col("id"), lit(Scale).as("__s"))
-    var auths = hubs
-    var i = 0
-    while (i < iters) {
-      auths = normalize(pushTo(hubs, from = "src", to = "dst"))
-        .localCheckpoint(false)
-      hubs = normalize(pushTo(auths, from = "dst", to = "src"))
-        .localCheckpoint(false)
-      i += 1
-    }
+    // half-round r: odd pushes hub scores to authorities, even pushes
+    // authority scores back to hubs; the driver pins every half-round but
+    // the last, whose hubs feed only the final join
+    def half(scores: DataFrame, r: Int): DataFrame =
+      if (r % 2 == 1) normalize(pushTo(scores, from = "src", to = "dst"))
+      else normalize(pushTo(scores, from = "dst", to = "src"))
+    val auths = GraphEdges.rounds(nodes.select(col("id"), lit(Scale).as("__s")),
+      2 * iters - 1)(half)
+    val hubs = half(auths, 2 * iters)
     nodes
       .join(hubs.select(col("id").as("__hi"), col("__s").as("__h")),
         col("id") === col("__hi"))

@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: per round, ONE partial-agg'd degree count and two
   * semi-joins against the surviving-vertex set — all equi-joins on
-  * 8-byte ids, no windows; each round's edge set is eagerly
-  * checkpointed (lineage would otherwise double per round — the
-  * PageRank posture).
+  * 8-byte ids, no windows; each round's edge set is pinned by the
+  * [[GraphEdges]] round driver (lineage would otherwise double per
+  * round).
   *
   * Contracts: edges are undirected — input rows are symmetrized and
   * deduplicated; self-loops and NULL endpoints drop; `degree` in the
@@ -35,30 +35,18 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  /** Symmetrized, deduplicated, self-loop-free directed edge list — the
-    * shared [[GraphEdges]] canonicalization.
-    */
-  private def symmetrize(edges: DataFrame, srcCol: String,
-                         dstCol: String): DataFrame =
-    GraphEdges.symmetrize(edges, srcCol, dstCol)
-
   /** One synchronized removal sweep: drop every vertex currently under
-    * degree k, returning the surviving (checkpointed) edge set.
+    * degree k, returning the surviving edge set.
     */
   private def sweep(e: DataFrame, k: Int): DataFrame = {
-    // LAZY checkpoints: they still truncate lineage (plan depth stays
-    // O(1) in rounds) but materialize inside the next action's job —
-    // peelToFixpoint's per-round count, or peel's single final
-    // aggregate — instead of two blocking jobs per sweep. `keep` feeds
-    // both semi-joins; the block manager computes it once and the
-    // second consumer reads the persisted blocks.
+    // `keep` feeds both semi-joins: a LAZY pin computes it once and the
+    // second consumer reads the persisted blocks
     val keep = e.groupBy(col("__s")).agg(count(lit(1)).as("__n"))
       .where(col("__n") >= k)
       .select(col("__s").as("__v"))
       .localCheckpoint(false)
     e.join(keep, col("__s") === col("__v"), "left_semi")
       .join(keep, col("__d") === col("__v"), "left_semi")
-      .localCheckpoint(false)
   }
 
   private def degrees(e: DataFrame): DataFrame =
@@ -70,41 +58,26 @@ object KCore {
     require(k >= 1, s"k must be at least 1, got $k")
     require(rounds >= 1 && rounds <= 50,
       s"rounds must be in [1, 50], got $rounds")
-    var e = symmetrize(edges, srcCol, dstCol)
-    for (_ <- 1 to rounds) e = sweep(e, k)
-    degrees(e)
+    degrees(GraphEdges.rounds(GraphEdges.symmetrize(edges, srcCol, dstCol),
+      rounds)((e, _) => sweep(e, k)))
   }
 
   /** The TRUE k-core: sweeps until one removes nothing. Every removed
     * vertex takes ≥ 1 edge with it, so "edge count unchanged" IS the
     * fixpoint test — and each round's count materializes that round's
-    * lazy checkpoint, making the fixpoint test a one-job-per-round action
+    * lazy pin, making the fixpoint test a one-job-per-round action
     * (the data-independent-plan discipline of [[peel]] trades away here
     * for the guarantee a caller can ship: survivors all have degree ≥ k).
     * Throws loudly after `maxRounds` non-converged sweeps rather than
-    * returning a silent superset — a graph needs at most one round per
-    * peel layer (a path graph peels ~n/2 layers; real graphs a handful).
+    * returning a silent superset — a graph needs one round per peel
+    * layer plus the confirming round (a path graph peels ~n/2 layers;
+    * real graphs a handful).
     */
   def peelToFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
                      k: Int, maxRounds: Int = 100): DataFrame = {
     require(k >= 1, s"k must be at least 1, got $k")
-    require(maxRounds >= 1, s"maxRounds must be positive, got $maxRounds")
-    var e = symmetrize(edges, srcCol, dstCol)
-    var m = e.count()
-    var round = 0
-    while (m > 0 && round < maxRounds) {
-      round += 1
-      val e2 = sweep(e, k)
-      val m2 = e2.count()
-      e = e2
-      if (m2 == m) return degrees(e)
-      m = m2
-    }
-    if (m > 0)
-      throw new IllegalStateException(
-        s"k-core peel did not reach a fixpoint in $maxRounds rounds " +
-          s"($m edges still shrinking) — raise maxRounds")
-    degrees(e)
+    degrees(GraphEdges.toFixpoint(GraphEdges.symmetrize(edges, srcCol, dstCol),
+      maxRounds, "k-core peel")((e, _) => sweep(e, k))(_.count()))
   }
 
   /** DuckDB replay of [[peel]] — the rounds unrolled as chained

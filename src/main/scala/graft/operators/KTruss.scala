@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * edge set (the [[Triangles]] degree-oriented wedge plan — Σ deg²
   * bounded, never all pairs), each triangle votes on its three edges
   * (explode ×3, partial-agg'd count = edge support), edges below
-  * k−2 drop, and the round's edge set eagerly checkpoints (the
-  * [[KCore]] lineage posture). Runs to the FIXPOINT with the
+  * k−2 drop, and the [[GraphEdges]] round driver pins the round's edge
+  * set. Runs to the FIXPOINT with the
   * edge-count convergence test and a loud `maxRounds` raise —
   * survivors provably all carry support ≥ k−2 within the truss.
   *
@@ -37,38 +37,20 @@ object KTruss {
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
   }
 
-  /** The true k-truss: (src, dst, support). */
+  /** The true k-truss: (src, dst, support). Each round keeps the edges
+    * whose support in the current subgraph reaches k−2; at the fixpoint
+    * nothing dropped, so `support` was measured in the final subgraph.
+    */
   def trussToFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
                       k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 3, s"k must be at least 3, got $k")
-    require(maxRounds >= 1, s"maxRounds must be positive, got $maxRounds")
-    // LAZY checkpoints: each round's count() materializes them in the
-    // same job (KCore posture) — no separate blocking checkpoint jobs
-    var e = Triangles.canonicalEdges(edges, srcCol, dstCol)
-      .localCheckpoint(false)
-    var m = e.count()
-    var round = 0
-    while (m > 0 && round < maxRounds) {
-      round += 1
-      val sup = support(e)
-      val kept = e.join(sup, Seq("u", "v"))
+    GraphEdges.toFixpoint(Triangles.canonicalEdges(edges, srcCol, dstCol),
+        maxRounds, "k-truss peel") { (kept, _) =>
+      val e = kept.select(col("u"), col("v"))
+      e.join(support(e), Seq("u", "v"))
         .where(col("support") >= (k - 2).toLong)
-        .localCheckpoint(false)
-      val m2 = kept.count()
-      if (m2 == m)
-        // fixpoint: nothing dropped, so `support` was measured in the
-        // final subgraph already
-        return kept.select(col("u").as("src"), col("v").as("dst"),
-          col("support"))
-      e = kept.select(col("u"), col("v")).localCheckpoint(false)
-      m = m2
-    }
-    if (m == 0)
-      return e.select(col("u").as("src"), col("v").as("dst"),
-        lit(0L).as("support")).limit(0)
-    throw new IllegalStateException(
-      s"k-truss peel did not reach a fixpoint in $maxRounds rounds " +
-        s"($m edges still shrinking) — raise maxRounds")
+    }(_.count())
+      .select(col("u").as("src"), col("v").as("dst"), col("support"))
   }
 
   /** DuckDB replay: `rounds` unrolled peel rounds (extra rounds past

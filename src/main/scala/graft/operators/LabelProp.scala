@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * against current labels, one partial-agg'd (node, label) count, one
   * partial-agg'd min-struct election per node — a whale vertex's
   * neighbor votes collapse map-side twice. Edges checkpointed once,
-  * labels checkpointed per round (the [[GraphRank]] lineage posture).
+  * labels pinned per round by the [[GraphEdges.rounds]] driver.
   */
 object LabelProp {
 
@@ -38,10 +38,8 @@ object LabelProp {
     val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(false)
     val nodes = e.select(col("src").as("id")).distinct().localCheckpoint(false)
-    var labels = nodes.select(col("id"), col("id").as("label"))
-    var i = 0
-    while (i < iters) {
-      labels = e
+    GraphEdges.rounds(nodes.select(col("id"), col("id").as("label")), iters) {
+      (labels, _) => e
         .join(labels.select(col("id").as("__s"), col("label")),
           col("src") === col("__s"))
         .groupBy(col("dst").as("id"), col("label"))
@@ -50,10 +48,7 @@ object LabelProp {
         .agg(min(struct((-col("__c")).as("nc"), col("label").as("l")))
           .as("__e"))
         .select(col("id"), col("__e.l").as("label"))
-        .localCheckpoint(false)
-      i += 1
     }
-    labels
   }
 
   /** DuckDB replay — the same unrolled synchronous rounds with the same

@@ -9,31 +9,30 @@ import org.apache.spark.sql.functions._
   * cluster formation, identity stitching, and subgraph extraction.
   *
   * This is the DRIVER-GATEABLE member of the CC family: the large-star/
-  * small-star algorithm ([[graft.llm.DedupClusters]]) converges in
-  * O(log n) rounds and is the 100 TB path, but its intermediate states
+  * small-star algorithm ([[graft.llm.DedupClusters.connectedComponentsAlt]])
+  * converges in O(log n) rounds and is the 100 TB path, but its intermediate states
   * are algorithm-specific; min-label's synchronized rounds are a pure
   * recurrence another engine can replay — each round every vertex takes
   * `min(own label, neighbors' labels)` — so the whole run faces a
   * cross-engine oracle ([[oracleSql]], unrolled MATERIALIZED CTEs).
   * The loop adds a pointer-jumping shortcut (min with the label of
-  * one's label) on top of the per-hop step, so rounds-to-fixpoint is
-  * O(log diameter) rather than O(diameter); the FIXPOINT — the only
-  * thing gated, and what the per-hop oracle converges to — is the
+  * one's label) on top of the per-hop step. It shortens the rounds on
+  * most graphs but gives no log bound: a shuffled 200-hop chain still
+  * fails at `maxRounds` 20, so `connectedComponentsAlt` is the
+  * long-chain path. The FIXPOINT — the
+  * only thing gated, and what the per-hop oracle converges to — is the
   * schedule-independent per-component minimum, so the replay is
-  * unaffected. Switch to DedupClusters for algorithm-specific
-  * intermediate-state needs.
+  * unaffected.
   *
-  * Runs to FIXPOINT with the [[KCore.peelToFixpoint]] discipline: labels
+  * Runs to FIXPOINT through the [[GraphEdges.toFixpoint]] driver: labels
   * are non-increasing per vertex, so "total label sum unchanged" is the
-  * fixpoint test (one cheap driver-side aggregate per round against the
-  * checkpointed frame); throws loudly past `maxRounds` instead of
-  * returning a half-propagated labeling.
+  * fixpoint test (one cheap aggregate per round against the pinned
+  * frame, which also materializes it); throws loudly past `maxRounds`
+  * instead of returning a half-propagated labeling.
   *
   * Scale shape: per round ONE equi-join of the edge list against the
   * labels and one partial-agg'd min per destination — 8-byte id
-  * shuffles, no windows; per-round LAZY checkpoint materialized by the
-  * fixpoint-test aggregate (PageRank lineage posture — one job per
-  * round, not a checkpoint job plus an aggregate job). Contracts: undirected ([[GraphEdges]] canonicalization);
+  * shuffles, no windows. Contracts: undirected ([[GraphEdges]] canonicalization);
   * only vertices with ≥ 1 surviving edge appear (an isolated id has no
   * component membership to report); vertex ids must be orderable — the
   * MINIMUM id is the component name.
@@ -43,26 +42,10 @@ object MinLabel {
   /** (vertex, component) at the propagation fixpoint. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
                  maxRounds: Int = 50): DataFrame = {
-    require(maxRounds >= 1, s"maxRounds must be positive, got $maxRounds")
     val e = GraphEdges.symmetrize(edges, srcCol, dstCol)
-    // label checkpoints are LAZY (the GraphRank posture): every round is
-    // followed by a labelSum action anyway, so the checkpoint rides that
-    // job instead of paying a separate blocking materialization — one
-    // scheduled job per round, not two
-    var lab = e.select(col("__s").as("vertex")).distinct()
+    val init = e.select(col("__s").as("vertex")).distinct()
       .withColumn("label", col("vertex"))
-      .localCheckpoint(false)
-    // coalesce: an empty (or all-self-loop) graph sums to NULL — treat as
-    // zero so the empty frame converges on round one instead of NPE-ing
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val r = df.agg(coalesce(graft.ExactSum.sumLong(col("label")),
-        lit(0).cast("decimal(38,0)"))).head()
-      r.getDecimal(0)
-    }
-    var s = labelSum(lab)
-    var round = 0
-    while (round < maxRounds) {
-      round += 1
+    GraphEdges.toFixpoint(init, maxRounds, "min-label propagation") { (lab, _) =>
       val nb = e
         .join(lab.select(col("vertex").as("__s"), col("label").as("__nl")), "__s")
         .groupBy(col("__d").as("vertex"))
@@ -77,29 +60,27 @@ object MinLabel {
         .localCheckpoint(true)
       // pointer-jumping shortcut: also take the label OF one's label
       // (labels are always vertex ids — the min over a subset of the
-      // component's ids — so the inner self-join is total). Propagation
-      // then contracts distances geometrically: rounds-to-fixpoint drops
-      // from O(diameter) to O(log diameter), the same device that makes
-      // large-star/small-star scale. Every step is still monotone
-      // non-increasing toward the SAME unique fixpoint (per-component
-      // min), so the gated result — and the per-hop oracle replay, which
-      // is stable past its own fixpoint — is unchanged.
-      val next = hop.join(
+      // component's ids — so the inner self-join is total). A label can
+      // then travel further than one hop per round, which cuts the rounds
+      // on most graphs, but with no log bound (see the object doc). Every
+      // step is still monotone non-increasing toward the SAME unique
+      // fixpoint (per-component min), so the gated result — and the
+      // per-hop oracle replay, which is stable past its own fixpoint — is
+      // unchanged.
+      hop.join(
           hop.select(col("vertex").as("__lv"), col("label").as("__ll")),
           col("label") === col("__lv"))
         .select(col("vertex"), least(col("label"), col("__ll")).as("label"))
-        .localCheckpoint(false)
-      val s2 = labelSum(next)
-      lab = next
-      if (s2.compareTo(s) == 0)
-        return lab.select(col("vertex"), col("label").as("component"))
-      s = s2
-    }
-    throw new IllegalStateException(
-      s"min-label propagation did not reach a fixpoint in $maxRounds " +
-        "rounds — a component's diameter exceeds the bound; raise " +
-        "maxRounds or switch to DedupClusters (large-star/small-star)")
+    }(labelSum).select(col("vertex"), col("label").as("component"))
   }
+
+  /** The fixpoint measure: labels are non-increasing per vertex, so the
+    * exact label sum is unchanged only at the fixpoint. An empty graph
+    * sums to zero.
+    */
+  private def labelSum(df: DataFrame): java.math.BigDecimal =
+    df.agg(coalesce(graft.ExactSum.sumLong(col("label")),
+      lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
 
   /** DuckDB replay of [[components]] — rounds unrolled as MATERIALIZED
     * CTEs (the [[KCore.oracleSql]] discipline); `rounds` must be ≥ the

@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   * frontier (frontier × avg-degree candidate rows, collapsed by a
   * partial-agg'd min BEFORE the improvement test), one improvement
   * anti-filter join, one partial-agg'd min merge; everything keyed on
-  * 8-byte vertex ids, every round eagerly checkpointed (the
-  * [[GraphRank]] lineage posture). A whale-degree hub fans one round's
+  * 8-byte vertex ids, every round pinned lazily by the [[GraphEdges]]
+  * round driver. A whale-degree hub fans one round's
   * candidates wide but they collapse map-side in the min.
   *
   * Contracts: edges are undirected (both orientations relaxed);
@@ -48,9 +48,9 @@ import org.apache.spark.sql.functions._
 object ShortestPath {
 
   /** Symmetrized (__s, __d, __w) with parallel edges collapsed to min
-    * weight; the negative-weight guard rides INSIDE the weight column
-    * it protects (the optimizer cannot prune it away with the column
-    * in use).
+    * weight, pinned lazily like [[GraphEdges.symmetrize]]; the
+    * negative-weight guard rides INSIDE the weight column it protects
+    * (the optimizer cannot prune it away with the column in use).
     */
   private def wSymmetrize(edges: DataFrame, srcCol: String, dstCol: String,
                           wCol: String): DataFrame = {
@@ -66,17 +66,18 @@ object ShortestPath {
       .unionAll(base.select(col("__d").as("__s"), col("__s").as("__d"),
         col("__w")))
       .groupBy(col("__s"), col("__d")).agg(min(col("__w")).as("__w"))
-      .localCheckpoint(true)
+      .localCheckpoint(false)
   }
 
-  /** One relaxation round: candidates from the frontier, collapsed,
-    * kept only where they beat (or first-label) the current distance.
-    * Returns (newDist, improved).
+  /** Relaxation round `r` over the state (vertex, dist, __r), where `__r`
+    * is the round that last improved the vertex: candidates from the
+    * frontier (the rows round r−1 improved), collapsed, kept only where
+    * they beat (or first-label) the current distance, and merged in.
     */
-  private def relax(e: DataFrame, dist: DataFrame,
-                    frontier: DataFrame): (DataFrame, DataFrame) = {
+  private def relax(e: DataFrame)(dist: DataFrame, r: Int): DataFrame = {
     val cand = e
-      .join(frontier.select(col("vertex").as("__v"), col("dist").as("__dv")),
+      .join(dist.where(col("__r") === r - 1)
+          .select(col("vertex").as("__v"), col("dist").as("__dv")),
         col("__s") === col("__v"))
       .groupBy(col("__d").as("vertex"))
       .agg(min(col("__dv") + col("__w")).as("dist"))
@@ -84,19 +85,18 @@ object ShortestPath {
       .join(dist.select(col("vertex").as("__ov"), col("dist").as("__od")),
         col("vertex") === col("__ov"), "left_outer")
       .where(col("__od").isNull || col("dist") < col("__od"))
-      .select(col("vertex"), col("dist"))
-      .localCheckpoint(true)
-    val merged = dist.unionAll(improved)
-      .groupBy(col("vertex")).agg(min(col("dist")).as("dist"))
-      .localCheckpoint(true)
-    (merged, improved)
+      .select(col("vertex"), col("dist"), lit(r).as("__r"))
+    // an improved row is strictly shorter and carries the newest round,
+    // so the min distance and the max round come from the same row
+    dist.unionAll(improved)
+      .groupBy(col("vertex"))
+      .agg(min(col("dist")).as("dist"), max(col("__r")).as("__r"))
   }
 
   private def seedDist(seeds: DataFrame, seedCol: String): DataFrame =
     seeds.where(col(seedCol).isNotNull)
       .select(col(seedCol).as("vertex")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+      .select(col("vertex"), lit(0L).as("dist"), lit(0).as("__r"))
 
   /** (vertex, dist): minimum path weight from any seed using ≤ maxHops
     * edges, for every vertex so reachable.
@@ -107,40 +107,23 @@ object ShortestPath {
     require(maxHops >= 1 && maxHops <= 50,
       s"maxHops must be in [1, 50], got $maxHops")
     val e = wSymmetrize(edges, srcCol, dstCol, wCol)
-    var dist = seedDist(seeds, seedCol)
-    var frontier = dist
-    for (_ <- 1 to maxHops) {
-      val (d2, imp) = relax(e, dist, frontier)
-      dist = d2
-      frontier = imp
-    }
-    dist
+    GraphEdges.rounds(seedDist(seeds, seedCol), maxHops)(relax(e))
+      .select(col("vertex"), col("dist"))
   }
 
-  /** True shortest distances: relax until a round improves nothing.
-    * The improvement set is already a checkpointed frame, so the
-    * convergence test is a cheap count; throws loudly past `maxRounds`
-    * (a graph needs at most |V|−1 rounds — more means the guard is set
-    * too low or the graph is pathological).
+  /** True shortest distances: relax until a round improves nothing, i.e.
+    * until the newest improving round stops moving (one aggregate over
+    * the pinned state per round); throws loudly past `maxRounds` (a
+    * graph needs at most |V|−1 rounds plus the confirming one — more
+    * means the guard is set too low or the graph is pathological).
     */
   def toFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
                  wCol: String, seeds: DataFrame, seedCol: String,
                  maxRounds: Int = 100): DataFrame = {
-    require(maxRounds >= 1, s"maxRounds must be positive, got $maxRounds")
     val e = wSymmetrize(edges, srcCol, dstCol, wCol)
-    var dist = seedDist(seeds, seedCol)
-    var frontier = dist
-    var round = 0
-    while (round < maxRounds) {
-      round += 1
-      val (d2, imp) = relax(e, dist, frontier)
-      dist = d2
-      frontier = imp
-      if (imp.isEmpty) return dist
-    }
-    throw new IllegalStateException(
-      s"shortest-path relaxation did not converge in $maxRounds rounds " +
-        "— raise maxRounds")
+    GraphEdges.toFixpoint(seedDist(seeds, seedCol), maxRounds,
+        "shortest-path relaxation")(relax(e))(_.agg(max("__r")).head())
+      .select(col("vertex"), col("dist"))
   }
 
   /** DuckDB replay of [[distances]] — FULL relaxation per round (every

@@ -74,8 +74,7 @@ object ContainmentJoin {
     */
   private def prep(docs: DataFrame, idCol: String, textCol: String,
                    n: Int): (DataFrame, DataFrame, DataFrame) = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val src = if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
+    val src = graft.Guards.fanOut(docs)
     val base = src
       .select(col(idCol).cast("long").as("__id"),
         array_distinct(transform(

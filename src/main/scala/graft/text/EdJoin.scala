@@ -118,8 +118,7 @@ object EdJoin {
     // variant generation is the CPU-heavy stage (O(len·k) string surgery
     // per row in the scan); a small parquet file arrives as ONE partition,
     // which would serialize it — spread the input first
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val src = if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+    val src = graft.Guards.fanOut(df)
     val base = src.select(col(idCol).cast("long").as("id"), col(strCol).as("s"))
       .where(col("s").isNotNull)
       .withColumn("len", length(col("s")))

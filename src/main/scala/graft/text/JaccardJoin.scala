@@ -54,8 +54,7 @@ object JaccardJoin {
     // shingle sets are consumed three times (df counting, prefix ranking,
     // both sides of the verify join) — materialize once, blocks owned by
     // the ContextCleaner (see Dedup.prepareBands for the discipline)
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val src = if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
+    val src = graft.Guards.fanOut(docs)
     val base = src
       .select(col(idCol).cast("long").as("__id"),
         TextFunctions.shingleSet(col(textCol), n).as("__s"))

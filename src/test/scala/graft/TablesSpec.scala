@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** The declared table schemas against the parquet footers of every scale
   * factor, and the job budget they buy: resolving a table, and building the
   * plan of a table-reading gate, submit no Spark job. Store-backed gates
@@ -14,37 +10,6 @@ class TablesSpec extends SparkSpec {
 
   private lazy val scaleFactors =
     Seq("sf0.001", "sf0.01", "sf0.1").map(n => s"${new java.io.File(sf).getParent}/$n")
-
-  private val Marker = "graft.tablesSpec.op"
-
-  /** Spark jobs `body` submits from this thread or threads it spawns. The
-    * listener bus is asynchronous, so a sentinel job submitted after `body`
-    * closes the count: the bus delivers in order, so once the sentinel's
-    * start has arrived every job of `body` has been seen.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val id = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(Marker)).orNull match {
-          case `id` => jobs.incrementAndGet()
-          case s if s == id + ".sentinel" => sentinelSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Marker, id)
-      try body finally sc.setLocalProperty(Marker, null)
-      sc.setLocalProperty(Marker, id + ".sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Marker, null)
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("the declared schema of every table equals what parquet inference yields, on every SF") {
     for (dir <- scaleFactors; t <- Tables.all) {

@@ -33,7 +33,7 @@ class DedupClustersSpec extends SparkSpec {
     import spark.implicits._
     val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("left_id", "right_id")
     val verts = (1L to 8L).toDF("id")
-    intercept[IllegalArgumentException] {
+    intercept[IllegalStateException] {
       DedupClusters.connectedComponents(pairs, verts, "id", maxRounds = 2)
     }
   }

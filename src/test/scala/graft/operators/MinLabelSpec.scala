@@ -32,6 +32,19 @@ class MinLabelSpec extends SparkSpec {
     }
   }
 
+  test("pointer jumping has no log bound: a shuffled 200-hop chain needs the star path") {
+    val ids = new scala.util.Random(11).shuffle((1L to 200L).toVector)
+    val chain = ids.zip(ids.tail)
+    intercept[IllegalStateException] {
+      MinLabel.components(chain.toDF("src", "dst"), "src", "dst", maxRounds = 20)
+    }
+    val reps = graft.llm.DedupClusters.connectedComponentsAlt(
+        chain.toDF("left_id", "right_id"), (1L to 200L).toDF("id"), "id",
+        maxRounds = 20)
+      .collect().map(_.getLong(1)).distinct
+    assert(reps.toSeq == Seq(1L))
+  }
+
   test("duplicate, reversed edges and self-loops never change the answer") {
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 2L), (5L, 4L))
       .toDF("src", "dst")
