@@ -39,15 +39,15 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     }
     // Per-task metric accumulation. Queries run sequentially, so a running
-    // counter snapshotted around each run attributes bytes per query; the
-    // listener bus is async, so snapshots wait for the counter to go quiet
-    // (settle) instead of racing the tail of the event stream.
+    // counter snapshotted around each run attributes jobs and bytes per
+    // query; the listener bus is async, so each run's counts are closed by
+    // a drain (a sentinel job, itself not counted) before they are read.
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
     val peakTaskMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val taskEvents = new java.util.concurrent.atomic.AtomicLong(0)
     val jobEvents = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobEvents.incrementAndGet()
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (!Harness.isDrain(js.properties)) jobEvents.incrementAndGet()
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
         if (m != null) {
@@ -55,21 +55,8 @@ object Bench {
             m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
           peakTaskMem.getAndAccumulate(m.peakExecutionMemory, math.max)
         }
-        taskEvents.incrementAndGet()
       }
     })
-    // quiesce on the task-END counter, not the shuffle counter: a
-    // zero-shuffle query never moves the latter, so its in-flight events
-    // would bleed into (and its peak memory be claimed by) the next query
-    def settle(): Long = {
-      var prev = taskEvents.get(); var stable = 0; var waited = 0
-      while (stable < 3 && waited < 2000) {
-        Thread.sleep(25); waited += 25
-        val cur = taskEvents.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      shuffleBytes.get()
-    }
     // Min over WHOLE-SUITE passes, not back-to-back repeats: this host shows
     // multi-MINUTE CPU-steal stall windows (a 0.4s query can read 30s, and
     // consecutive repeats land in the same window). Interleaving passes puts
@@ -90,15 +77,17 @@ object Bench {
     val peak = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
     val jobs = scala.collection.mutable.Map[String, Long]().withDefaultValue(Long.MaxValue)
     val errs = scala.collection.mutable.Map[String, String]()
+    Harness.drainListenerBus(spark)
     for (_ <- 0 until iters; (name, fn) <- names if !errs.contains(name)) {
-      val before = settle()
+      val before = shuffleBytes.get()
       val jobsBefore = jobEvents.get()
       peakTaskMem.set(0)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
       catch { case e: Throwable => errs(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}" }
       best(name) = math.min(best(name), (System.nanoTime() - t0) / 1e9)
-      shuf(name) = math.max(shuf(name), settle() - before)
+      Harness.drainListenerBus(spark)
+      shuf(name) = math.max(shuf(name), shuffleBytes.get() - before)
       peak(name) = math.max(peak(name), peakTaskMem.get())
       jobs(name) = math.min(jobs(name), jobEvents.get() - jobsBefore)
     }

@@ -1,12 +1,49 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession configuration of the harness and tool mains (Bench,
   * Verify, Profile, ScaleUp, Reshard), so the plans they verify, bench and
-  * profile are the same plans.
+  * profile are the same plans, and the one listener-bus drain that closes
+  * their per-gate job and task counts.
   */
 object Harness {
+
+  /** Local property carried by a [[drainListenerBus]] sentinel job. */
+  private val DrainProperty = "graft.harness.drain"
+
+  /** Does a job with these start properties belong to a drain? Listeners
+    * that count jobs skip it. */
+  def isDrain(jobProperties: java.util.Properties): Boolean =
+    jobProperties != null && jobProperties.getProperty(DrainProperty) != null
+
+  /** Block until the listener bus has delivered every event of the jobs
+    * submitted before the call. The bus is asynchronous but delivers in
+    * order, so a one-task sentinel job closes the stream: once its end
+    * event has arrived, every earlier job's and task's events have too.
+    */
+  def drainListenerBus(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    val token = java.util.UUID.randomUUID().toString
+    val ended = new CountDownLatch(1)
+    @volatile var sentinel = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(DrainProperty) == token))
+          sentinel = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinel) ended.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(DrainProperty, token)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(DrainProperty, null)
+      if (!ended.await(60, TimeUnit.SECONDS))
+        throw new IllegalStateException("the listener bus never delivered the drain job")
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Core count from `SPARK_GRAFT_CPUS` (default 4). */
   def cpus: Int = parseCpus(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))

@@ -32,9 +32,9 @@ object Registry {
 
   private def scratch(name: String): String = s"$scratchRoot/$name"
 
-  /** [[scratch]] path of a store that each run rebuilds from nothing: the
-    * store is dropped with its tmp and stash siblings first, so an earlier
-    * run's or an interrupted run's state cannot leak in.
+  /** [[scratch]] path of a store or lake that each run rebuilds from
+    * nothing: it is dropped with its stage and commit marker first, so an
+    * earlier run's or an interrupted run's state cannot leak in.
     */
   private def freshStore(s: SparkSession, name: String): String = {
     val store = scratch(name)
@@ -721,15 +721,9 @@ JOIN (SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= $minQty) b
         (s, dir) => {
           import graft.sources.LakeMerge
           import org.apache.spark.sql.functions.{col, lit, when}
-          val lake = scratch("lake_merge")
           // fresh lake per run: stale inserted keys from a previous run are
-          // not in the batch and would otherwise survive the re-merge. The
-          // sibling stage dir must go too — a committed stage left by a
-          // killed prior run would replay into the freshly-wiped lake
-          val lp = new org.apache.hadoop.fs.Path(lake)
-          val fsys = lp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fsys.delete(lp, true)
-          fsys.delete(new org.apache.hadoop.fs.Path(lake + "__merge_tmp"), true)
+          // not in the batch and would otherwise survive the re-merge
+          val lake = freshStore(s, "lake_merge")
           val orders = Tables.resolve(s, dir)("orders")
             .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
           // bootstrap, then merge: updates double the price (every 7th key;
@@ -1247,11 +1241,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
         "q_lake_compact",
         (s, dir) => {
           import org.apache.spark.sql.functions.col
-          val lake = scratch("lake_compact")
-          val lp = new org.apache.hadoop.fs.Path(lake)
-          val fsys = lp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fsys.delete(lp, true)
-          fsys.delete(new org.apache.hadoop.fs.Path(lake + "__merge_tmp"), true)
+          val lake = freshStore(s, "lake_compact")
           Tables.resolve(s, dir)("orders")
             .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
             .repartition(16) // deliberately fragment every partition
@@ -1287,11 +1277,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
         (s, dir) => {
           import graft.sources.LakeMerge
           import org.apache.spark.sql.functions.col
-          val lake = scratch("lake_delete")
-          val lp = new org.apache.hadoop.fs.Path(lake)
-          val fsys = lp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fsys.delete(lp, true)
-          fsys.delete(new org.apache.hadoop.fs.Path(lake + "__merge_tmp"), true)
+          val lake = freshStore(s, "lake_delete")
           val orders = Tables.resolve(s, dir)("orders")
             .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
           LakeMerge.merge(s, lake, orders,
@@ -2477,12 +2463,7 @@ FROM events GROUP BY event_type ORDER BY event_type""")),
       RegisteredQuery(
         "q_lake_ingest",
         (s, dir) => {
-          val lake = scratch("lake_ingest")
-          val lp = new org.apache.hadoop.fs.Path(lake)
-          val f = lp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          f.delete(lp, true)
-          // the merge stage dir (stagePath is sources-private): <lake>__merge_tmp
-          f.delete(new org.apache.hadoop.fs.Path(lake + "__merge_tmp"), true)
+          val lake = freshStore(s, "lake_ingest")
           val orders = Tables.resolve(s, dir)("orders")
           def batch(b: Int) = orders
             .where(pmod(col("o_orderkey"), lit(3)) === b ||

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * partition-scoped rewrite instead; the merge algebra here is unchanged.
   *
   * Crash safety: folds replace the store via [[graft.sources.AtomicStore]]
-  * (stash-swap discipline; every entry point restores a mid-swap stash
+  * (stage, commit, rename; every entry point replays a committed stage
   * first), so a killed fold leaves either the old store or the new one —
   * never a mix, never nothing.
   *

@@ -1,55 +1,44 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe copy-on-write store on plain files — the one implementation
-  * of the store protocol behind every fold store (the ingest folds,
-  * DistinctStore, Scd2, IncrementalAgg, QuantileStore, TopKStore) and
-  * [[ParquetStore]]. Callers see three entry points:
+/** The one copy-on-write commit protocol on plain files: how a rewrite of
+  * a store or of a hive-partitioned lake becomes visible, and how a crash
+  * recovers. Every fold store (the ingest folds, DistinctStore, Scd2,
+  * IncrementalAgg, QuantileStore, TopKStore), [[ParquetStore]],
+  * [[LakeMerge]] and [[LakeCompact]] write through it.
   *
-  *  - read current: [[exists]] (no Spark job) and [[current]] / [[read]]
-  *    restore a mid-swap stash first, then treat a missing or debris-only
-  *    directory as no store;
-  *  - publish next: [[publish]] restores, then bootstraps the store or
-  *    swaps the new frame in;
-  *  - [[drop]]: deletes the store with its tmp and stash siblings, so a
-  *    stale stash cannot bring a dropped store back.
+  *  1. stage: the new contents go to the sibling `<dir>__cow_stage`;
+  *  1. commit: a marker `<dir>__cow_commit` records what apply will do —
+  *     the staged leaves to rename and the partition dirs to drop. It is
+  *     written inside the stage and renamed out, so it appears whole;
+  *  1. apply: each staged leaf replaces its target (delete the target,
+  *     rename the leaf over it), the drops are deleted, then the stage and
+  *     the marker. A whole-store rewrite is the single root leaf `""`;
+  *  1. replay: every entry point first replays a committed stage and
+  *     deletes an uncommitted one.
   *
-  * Protocol: write the replacement to a sibling `__compact_tmp` dir, rename
-  * the live store aside to `__compact_old` (the stash), rename tmp into
-  * place, delete the stash. The only vulnerable instant is between the two
-  * renames, when the live path is briefly absent and the ONLY copy sits in
-  * the stash — every entry point restores the stash before it looks at
-  * the store, so no code path can treat a mid-swap store as missing (and
-  * bootstrap an empty one over live history).
+  * A crash before the commit leaves the target as it was; a crash after it
+  * reads, once replayed, as the completed write. Replay is idempotent: a
+  * leaf already renamed is gone from the stage and is skipped.
   *
-  * Scale note: renames are O(1) metadata ops on HDFS-like stores; on
-  * object stores without atomic rename the same protocol holds with a
-  * manifest-pointer swap instead (the [[LakeMerge]] commit-marker shape).
+  * Filesystem contract: a directory rename is atomic, as on HDFS and local
+  * filesystems. Where rename is copy-then-delete (S3A, GCS, ABFS without
+  * hierarchical namespace) a crash partway through deleting a staged
+  * source leaves a partial leaf that replay would rename over the complete
+  * target; such a store needs a filesystem or committer with atomic rename.
   */
 object AtomicStore {
 
-  /** The sibling paths of the protocol; public so specs can fabricate
-    * crash states. */
-  def tmpPath(p: Path): Path = new Path(p.getParent, p.getName + "__compact_tmp")
-  def stashPath(p: Path): Path = new Path(p.getParent, p.getName + "__compact_old")
-
-  /** Is there a store at `dir`? Submits no Spark job. A store that is
-    * missing or debris-only while a stash exists was caught between the
-    * swap's two renames, and the stash is the only copy: it is restored
-    * here, before anything reads — or bootstraps over — the store.
+  /** Is there a store at `dir`? Submits no Spark job. Replays a committed
+    * stage first, so a store caught mid-apply never reads as missing; a
+    * missing or debris-only directory is no store.
     */
-  def exists(spark: SparkSession, dir: String): Boolean = hasData(spark, dir) || {
-    val p = new Path(dir)
-    val fs = fileSystem(spark, p)
-    val stash = stashPath(p)
-    fs.exists(stash) && {
-      fs.delete(p, true) // debris-only dir, if any
-      if (!fs.rename(stash, p))
-        throw new java.io.IOException(s"swap recovery: cannot restore $stash to $p")
-      hasData(spark, dir)
-    }
+  def exists(spark: SparkSession, dir: String): Boolean = {
+    val (fs, p) = resolve(spark, dir)
+    recover(fs, p)
+    hasData(fs, p)
   }
 
   /** The stored frame, or `None` when there is no store at `dir`. */
@@ -60,68 +49,140 @@ object AtomicStore {
   def read(spark: SparkSession, dir: String): DataFrame =
     current(spark, dir).getOrElse(throw new IllegalStateException(s"no store at $dir"))
 
-  /** Make `next` the store at `dir`, crash-safely: bootstrap it when there
-    * is no store, else swap it in. `next` MAY read from the store itself
-    * (the tmp write materializes it before any rename). `coalesceTo > 0`
+  /** Make `next` the whole store at `dir`. `next` MAY read from the store
+    * itself (the stage write materializes it before apply). `coalesceTo > 0`
     * narrows the output to that many files (a no-shuffle merge — the
-    * compaction use). `beforeSwap` runs after the staged tmp write but
-    * before any rename — a validation hook (e.g. an observed metric
-    * collected by the tmp write itself): if it throws, the staged tmp is
-    * deleted and the store is left as it was, so a failed validation is
-    * externally identical to never having called publish.
+    * compaction use). `beforeSwap` runs after the stage write, before the
+    * commit — a validation hook (e.g. an observed metric collected by the
+    * stage write): if it throws, the stage is deleted and the store is
+    * left as it was.
     */
   def publish(spark: SparkSession, dir: String, next: DataFrame, coalesceTo: Int = 0,
               beforeSwap: () => Unit = () => ()): Unit = {
-    val p = new Path(dir)
-    val fs = fileSystem(spark, p)
-    val tmp = tmpPath(p)
-    val stash = stashPath(p)
-    val swap = exists(spark, dir)
-    // tmp/stash dirs surviving here are debris from a COMPLETED or
-    // abandoned run (a live stash was just restored) — clear before staging
-    fs.delete(tmp, true); fs.delete(stash, true)
     val out = if (coalesceTo > 0) next.coalesce(coalesceTo) else next
-    out.write.mode("overwrite").parquet(tmp.toString)
-    try beforeSwap()
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    if (swap) {
-      if (!fs.rename(p, stash)) throw new java.io.IOException(s"swap: cannot move $p aside")
-      if (!fs.rename(tmp, p)) { // restore on failure so the store survives
-        fs.rename(stash, p)
-        throw new java.io.IOException(s"swap: cannot move $tmp into place")
-      }
-      fs.delete(stash, true)
-    } else {
-      // bootstrap: the live path never holds a partial write — a crash
-      // here leaves only tmp debris, so an at-least-once replay
-      // bootstraps cleanly instead of folding onto a partial remnant
-      fs.delete(p, true) // debris-only dir, if any
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"bootstrap: cannot move $tmp to $p")
+    rewrite(spark, dir) { stage =>
+      out.write.mode("overwrite").parquet(stage.toString)
+      beforeSwap()
+      Plan.Whole
     }
   }
 
-  /** Delete the store at `dir` together with its tmp and stash siblings. */
+  /** Delete the store or lake at `dir` with its stage and commit marker,
+    * so no leftover can replay into a later store at the same path. */
   def drop(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = fileSystem(spark, p)
-    Seq(p, tmpPath(p), stashPath(p)).foreach(fs.delete(_, true))
+    val (fs, p) = resolve(spark, dir)
+    Seq(p, stagePath(p), markerPath(p)).foreach(fs.delete(_, true))
   }
 
-  private def fileSystem(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // -------------------------------------------------- the protocol itself --
 
-  /** Does the directory hold actual data files? A bare `exists` check
-    * wedges after a crash mid-first-write: the dir exists (with only
-    * `_temporary`/`_SUCCESS` debris) but `read.parquet` throws on every
-    * subsequent use. Debris-only directories count as "no store".
+  /** What apply does: rename each staged leaf (a hive path relative to the
+    * stage, `""` for the whole dir) over its target, then delete `drops`. */
+  private[sources] final case class Plan(leaves: Seq[String], drops: Seq[String] = Nil)
+
+  private[sources] object Plan {
+    val Whole: Plan = Plan(Seq(""))
+  }
+
+  /** A leaf partition dir of a hive layout: its path relative to the root
+    * (`a=v/b=w`, `""` for a flat dir), data-file count and data bytes. */
+  private[sources] final case class Leaf(rel: String, files: Long, bytes: Long)
+
+  /** Test seam: a write calls it at each protocol instant it reaches — 0
+    * when the stage is written, 1 when it is committed, 1 + n after n apply
+    * steps. A spec throws from it to leave the files as a crash there would.
     */
-  private def hasData(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = fileSystem(spark, p)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+  private[graft] val instant = new scala.util.DynamicVariable[Int => Unit](_ => ())
+
+  /** Recover, then stage with `write` (which returns the plan), commit and
+    * apply. If `write` throws, the stage is deleted and `dir` is untouched.
+    */
+  private[sources] def rewrite(spark: SparkSession, dir: String)(write: Path => Plan): Unit = {
+    val (fs, p) = resolve(spark, dir)
+    recover(fs, p)
+    val stage = stagePath(p)
+    val plan = try write(stage) catch { case e: Throwable => fs.delete(stage, true); throw e }
+    instant.value(0)
+    val pending = new Path(stage, "_cow_plan")
+    val out = fs.create(pending, true)
+    try out.write(encode(plan).getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(pending, markerPath(p)))
+      throw new java.io.IOException(s"commit: cannot move $pending to ${markerPath(p)}")
+    instant.value(1)
+    applyPlan(fs, p, plan)
+  }
+
+  /** Replay a committed stage; delete an uncommitted one. */
+  private[sources] def recover(fs: FileSystem, p: Path): Unit =
+    if (fs.exists(markerPath(p))) applyPlan(fs, p, decode(fs, markerPath(p)))
+    else fs.delete(stagePath(p), true)
+
+  /** The leaf partition dirs under `root`, lazily and in path order:
+    * `name=value` dirs are walked down; a dir without such subdirs is a
+    * leaf if it holds data files. A flat store is the single leaf `""`; a
+    * debris-only dir (`_temporary`, `_SUCCESS`) has none.
+    */
+  private[sources] def leaves(fs: FileSystem, root: Path): Iterator[Leaf] = {
+    def walk(p: Path, rel: String): Iterator[Leaf] = {
+      val (dirs, files) = fs.listStatus(p).partition(_.isDirectory)
+      val hive = dirs.filter(_.getPath.getName.contains("=")).sortBy(_.getPath.getName)
+      if (hive.nonEmpty)
+        hive.iterator.flatMap(st => walk(st.getPath, under(rel, st.getPath.getName)))
+      else {
+        val data = files.filter(isDataFile)
+        if (data.isEmpty) Iterator.empty
+        else Iterator(Leaf(rel, data.length.toLong, data.map(_.getLen).sum))
+      }
     }
+    if (fs.exists(root)) walk(root, "") else Iterator.empty
+  }
+
+  private[sources] def resolve(spark: SparkSession, dir: String): (FileSystem, Path) = {
+    val p = new Path(dir)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** Does `dir` hold data? Stops at the first leaf. */
+  private def hasData(fs: FileSystem, dir: Path): Boolean = leaves(fs, dir).hasNext
+
+  private def stagePath(p: Path): Path = new Path(p.getParent, p.getName + "__cow_stage")
+  private def markerPath(p: Path): Path = new Path(p.getParent, p.getName + "__cow_commit")
+
+  private def isDataFile(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    st.isFile && !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  private def under(rel: String, name: String): String = if (rel.isEmpty) name else s"$rel/$name"
+  private def under(p: Path, rel: String): Path = if (rel.isEmpty) p else new Path(p, rel)
+
+  private def applyPlan(fs: FileSystem, p: Path, plan: Plan): Unit = {
+    val stage = stagePath(p)
+    var step = 1
+    def stepped(): Unit = { step += 1; instant.value(step) }
+    plan.leaves.foreach { rel =>
+      val (from, to) = (under(stage, rel), under(p, rel))
+      if (fs.exists(from)) {
+        fs.delete(to, true); stepped()
+        fs.mkdirs(to.getParent)
+        if (!fs.rename(from, to)) throw new java.io.IOException(s"apply: cannot move $from to $to")
+        stepped()
+      }
+    }
+    plan.drops.foreach { rel => fs.delete(under(p, rel), true); stepped() }
+    fs.delete(stage, true); stepped()
+    fs.delete(markerPath(p), false)
+  }
+
+  // one line per step: "+<leaf>" renames, "-<dir>" drops
+  private def encode(plan: Plan): String =
+    (plan.leaves.map("+" + _) ++ plan.drops.map("-" + _)).mkString("\n")
+
+  private def decode(fs: FileSystem, marker: Path): Plan = {
+    val in = fs.open(marker)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    Plan(lines.collect { case l if l.startsWith("+") => l.drop(1) },
+      lines.collect { case l if l.startsWith("-") => l.drop(1) })
   }
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -17,28 +16,25 @@ import org.apache.spark.sql.functions.col
   * before and after — compaction is a physical re-layout, never a
   * semantic operation (the gate hashes content identity).
   *
-  * Crash safety: the rewritten partitions go through [[LakeMerge]]'s
-  * stage + `_graft_commit` + dynamic-partition-overwrite apply — a crash
-  * leaves the lake untouched or the apply replays idempotently, never a
-  * torn partition. Compaction and merge share one stage path, so their
-  * recovery disciplines compose (run [[LakeMerge.recover]] either way).
+  * Crash safety: the rewrite goes through [[AtomicStore]]'s stage → commit
+  * → apply → replay protocol, the same one [[LakeMerge]] uses — a crash
+  * leaves the lake as it was or the apply replays, never a torn partition.
   *
   * Candidate rows are read PER DIRECTORY (with `basePath` so partition
   * values resolve), not by value filter — so a lake written externally
   * with non-canonical directory names (`p=01` aliasing `p=1` under a
   * numeric partition column) compacts correctly: the rows land under the
   * canonical directory and every candidate directory the stage did not
-  * reproduce by name is evacuated through the emptied-partitions marker
-  * (alias husks are dropped, never double-counted). When a staged
-  * canonical name collides with an existing lake directory that was NOT
-  * in the candidate set (alias `p=01` fragmented, canonical `p=1` a
-  * single healthy file), the colliding directory is pulled into the read
-  * set and the stage is rebuilt — dynamic partition overwrite replaces
-  * whole directories, so overwriting a never-read directory would delete
-  * its rows. Canonical names are a fixpoint of the stage write, so the
-  * expansion converges in one extra pass; a pulled-in directory may push
-  * the rewrite past `targetBytes`, which is accepted (correctness over
-  * the size heuristic).
+  * reproduce by name is dropped at apply (alias husks are never
+  * double-counted). When a staged canonical name collides with an existing
+  * lake directory that was NOT in the candidate set (alias `p=01`
+  * fragmented, canonical `p=1` a single healthy file), the colliding
+  * directory is pulled into the read set and the stage is rebuilt — apply
+  * replaces whole directories, so overwriting a never-read directory would
+  * delete its rows. Canonical names are a fixpoint of the stage write, so
+  * the expansion converges in one extra pass; a pulled-in directory may
+  * push the rewrite past `targetBytes`, which is accepted (correctness
+  * over the size heuristic).
   *
   * Scale shape: the candidate scan is a driver-side directory listing
   * (bounded by the lake's partition/file COUNT, not its bytes — the
@@ -48,16 +44,14 @@ import org.apache.spark.sql.functions.col
   */
 object LakeCompact {
 
-  /** One row per fragmented partition: (partition_dir, n_files,
+  /** One row per fragmented partition: (partition_values, n_files,
     * total_bytes). Driver-side listing, partition-count-sized.
     */
-  def fragmented(spark: SparkSession, lakeDir: String,
-                 partitionCols: Seq[String], targetBytes: Long): DataFrame = {
+  def fragmented(spark: SparkSession, lakeDir: String, targetBytes: Long): DataFrame = {
     import spark.implicits._
-    val rows = listPartitions(spark, lakeDir, partitionCols)
-      .filter { case (_, n, bytes) => n > 1 && bytes <= targetBytes }
-      .map { case (rel, n, bytes) => (stripValues(rel), n, bytes) }
-    rows.toDF("partition_values", "n_files", "total_bytes")
+    candidates(spark, lakeDir, targetBytes)._2
+      .map(l => (stripValues(l.rel), l.files, l.bytes))
+      .toDF("partition_values", "n_files", "total_bytes")
   }
 
   /** Compact every qualifying partition to a single file. Returns the
@@ -68,76 +62,44 @@ object LakeCompact {
               partitionCols: Seq[String], targetBytes: Long): Int = {
     require(partitionCols.nonEmpty, "compaction targets a partitioned lake")
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val lake = new Path(lakeDir)
-    val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    LakeMerge.replayIfStaged(spark, lake)
-    if (!LakeMerge.hasData(spark, fs, lake)) return 0
-    val stage = LakeMerge.stagePath(lake)
-    fs.delete(stage, true)
-
-    val allParts = listPartitions(spark, lakeDir, partitionCols)
-    val allRel = allParts.map(_._1).toSet
-    val candidates = allParts
-      .filter { case (_, n, bytes) => n > 1 && bytes <= targetBytes }
-    if (candidates.isEmpty) return 0
+    if (!AtomicStore.exists(spark, lakeDir)) return 0
+    val (all, fragments) = candidates(spark, lakeDir, targetBytes)
+    if (fragments.isEmpty) return 0
+    val (fs, _) = AtomicStore.resolve(spark, lakeDir)
 
     // read the candidate DIRECTORIES (not a value filter): exactly their
-    // rows, once each, with partition values resolved via basePath. If
-    // the stage produces a canonical name that collides with a lake dir
-    // we did NOT read (alias candidate + healthy canonical sibling),
-    // pull that dir in and restage — apply would otherwise overwrite it
-    // with only the alias's rows. Staged names are already canonical, so
-    // re-reading canonical dirs adds no new names: ≤1 extra pass.
-    var readSet = candidates.map(_._1).toSet
-    var stagedRel = Set.empty[String]
-    var stable = false
-    var passes = 0
-    while (!stable) {
-      passes += 1
-      require(passes <= 4, s"compaction stage did not converge after $passes passes")
-      fs.delete(stage, true)
-      val dirs = readSet.toSeq.sorted
-      val selected = spark.read.option("basePath", lakeDir)
-        .parquet(dirs.map(rel => s"$lakeDir/$rel"): _*)
-        // one task per partition value -> one file per compacted partition
-        .repartition(dirs.length, partitionCols.map(col): _*)
-      selected.write.mode("overwrite")
-        .partitionBy(partitionCols: _*).parquet(stage.toString)
-      stagedRel = listPartitions(spark, stage.toString, partitionCols)
-        .map(_._1).toSet
-      val collisions = (stagedRel -- readSet).intersect(allRel)
-      if (collisions.isEmpty) stable = true else readSet ++= collisions
+    // rows, once each, with partition values resolved via basePath. If the
+    // stage produces a canonical name that collides with a lake dir we did
+    // NOT read (alias candidate + healthy canonical sibling), pull that dir
+    // in and restage. Staged names are canonical: ≤1 extra pass.
+    var readSet = fragments.map(_.rel).toSet
+    AtomicStore.rewrite(spark, lakeDir) { stage =>
+      @annotation.tailrec def restage(pass: Int): Set[String] = {
+        require(pass <= 4, s"compaction stage did not converge after $pass passes")
+        val dirs = readSet.toSeq.sorted
+        spark.read.option("basePath", lakeDir)
+          .parquet(dirs.map(rel => s"$lakeDir/$rel"): _*)
+          // one task per partition value -> one file per compacted partition
+          .repartition(dirs.length, partitionCols.map(col): _*)
+          .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stage.toString)
+        val staged = AtomicStore.leaves(fs, stage).map(_.rel).toSet
+        val collisions = (staged -- readSet).intersect(all)
+        if (collisions.isEmpty) staged else { readSet ++= collisions; restage(pass + 1) }
+      }
+      val staged = restage(1)
+      // a read dir the stage did not reproduce BY NAME is a non-canonical
+      // alias whose rows now live under the canonical dir: drop the husk
+      AtomicStore.Plan(staged.toSeq.sorted, readSet.filterNot(staged).toSeq.sorted)
     }
-    // any read dir the stage did not reproduce BY NAME is a
-    // non-canonical alias whose rows now live under the canonical dir —
-    // evacuate the husk, or its rows would exist twice
-    val husks = readSet.filterNot(stagedRel.contains).toSeq.sorted
-    LakeMerge.writeEmptiedLines(fs, stage, husks)
-    fs.create(new Path(stage, LakeMerge.CommitMarker), true).close()
-    LakeMerge.applyStage(spark, fs, lake)
     readSet.size
   }
 
-  /** (relative hive dir path `a=v/b=w`, data-file count, total data
-    * bytes) per leaf partition directory.
-    */
-  private def listPartitions(spark: SparkSession, dir: String,
-                             partitionCols: Seq[String]): Seq[(String, Long, Long)] = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    def walk(p: Path, rel: List[String], depth: Int): Seq[(String, Long, Long)] =
-      if (depth == partitionCols.length) {
-        val files = fs.listStatus(p).filter { st =>
-          val n = st.getPath.getName
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-        if (files.isEmpty) Nil
-        else Seq((rel.reverse.mkString("/"), files.length.toLong, files.map(_.getLen).sum))
-      } else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-        .flatMap(st => walk(st.getPath, st.getPath.getName :: rel, depth + 1))
-    walk(root, Nil, 0)
+  /** Every leaf partition dir of the lake, and those that qualify. */
+  private def candidates(spark: SparkSession, lakeDir: String,
+                         targetBytes: Long): (Set[String], Seq[AtomicStore.Leaf]) = {
+    val (fs, lake) = AtomicStore.resolve(spark, lakeDir)
+    val all = AtomicStore.leaves(fs, lake).toSeq
+    (all.map(_.rel).toSet, all.filter(l => l.files > 1 && l.bytes <= targetBytes))
   }
 
   /** `a=v/b=w` → `v/w` (the report's human-readable partition id). */

@@ -10,10 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Replace is transactional the way the reference's drop+create+insert is
   * (ec.rs:602-651): every table is an [[AtomicStore]], so a write stages
-  * the new rows beside the table and swaps them in by rename — readers
-  * never observe a half-written table, a failed job leaves the old data
-  * intact, and a crash between the swap's renames is recovered by the
-  * next access instead of reading as a missing table.
+  * the new rows beside the table and commits them before it replaces the
+  * table by rename — readers never observe a half-written table, a failed
+  * job leaves the old data intact, and a crash after the commit is
+  * replayed by the next access instead of reading as a missing table.
   *
   * Upsert follows the reference's split-on-existing-ids plan (ec.rs:518-538)
   * re-expressed distributed: anti-join the EXISTING rows against incoming
@@ -30,9 +30,12 @@ final class ParquetStore(root: String) {
 
   def exists(name: String): Boolean = AtomicStore.exists(active, tablePath(name))
 
-  def listTables(): Seq[String] =
-    Option(new java.io.File(root).list()).map(_.toSeq).getOrElse(Nil)
+  def listTables(): Seq[String] = {
+    val (fs, p) = AtomicStore.resolve(active, root)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+  }
 
   def read(spark: SparkSession, name: String): DataFrame =
     AtomicStore.read(spark, tablePath(name))
@@ -41,8 +44,8 @@ final class ParquetStore(root: String) {
   def drop(name: String): Unit = AtomicStore.drop(active, tablePath(name))
 
   def rename(oldName: String, newName: String): Unit = {
-    val (from, to) = (new Path(tablePath(oldName)), new Path(tablePath(newName)))
-    val fs = from.getFileSystem(active.sparkContext.hadoopConfiguration)
+    val (fs, from) = AtomicStore.resolve(active, tablePath(oldName))
+    val to = new Path(tablePath(newName))
     require(exists(oldName), s"table $oldName does not exist")
     require(!fs.exists(to), s"table $newName already exists")
     if (!fs.rename(from, to)) throw new java.io.IOException(s"cannot rename $from to $to")

@@ -83,24 +83,19 @@ object DedupIngest {
     * files, so a long-running ingest accumulates thousands of small files —
     * the classic small-files problem (per-file open cost starts to dominate
     * the vs-store read at 100× batch counts). Rewrites the store to
-    * `targetPartitions` files and swaps it in (write to a sibling temp
-    * dir, rename old → trash, temp → store, delete trash). A crash between
-    * the two renames leaves the store briefly missing with the only copy
-    * at the trash path — the NEXT compactStore call detects that and
-    * restores it before anything else runs, so no state is ever lost; run
-    * compaction (or at least a compactStore call, which recovers and
-    * early-returns) before trusting an ingest that may have raced a crash.
-    * Run between batches (the ingest reads the store at batch start, so
-    * compaction concurrent with a RUNNING batch races the swap — pause the
-    * stream or schedule compaction on the foreachBatch thread).
+    * `targetPartitions` files and publishes them through
+    * [[graft.sources.AtomicStore]]: the files are staged beside the store,
+    * committed, then renamed over it. A crash before the commit leaves the
+    * old store; a crash after it is replayed by the next read of the store
+    * (this call or an ingest step), so no state is ever lost and an ingest
+    * never bootstraps a fresh store over history. Run between batches (the
+    * ingest reads the store at batch start, so compaction concurrent with
+    * a RUNNING batch races the rewrite — pause the stream or schedule
+    * compaction on the foreachBatch thread).
     */
   def compactStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
                    targetPartitions: Int): Unit = {
     require(targetPartitions > 0, "targetPartitions must be positive")
-    // recovery: a crash between the swap renames leaves the store missing
-    // and the only copy in the stash — reading the current store restores
-    // it, so neither this call nor an ingest step (which reads the same
-    // way) can bootstrap a fresh store while history sits in the stash.
     // coalesce, not repartition: merging small files needs no exchange —
     // a narrow merge of input splits per output file (size balance across
     // the target files is not a goal here)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Spark's native stream-static join snapshots a static DataFrame's plan,
   * but a dimension maintained by concurrent [[Scd2.update]] folds swaps
   * the store directory between batches — `foreachBatch` + [[Scd2.read]]
-  * (stash-recovering) picks up each fold, so a fact arriving after its
+  * (replaying a committed fold) picks up each fold, so a fact arriving after its
   * key's dimension change joins the NEW version while late facts still
   * land on the historical interval their timestamp selects. That
   * interval semantics — not "latest value wins" — is what makes the

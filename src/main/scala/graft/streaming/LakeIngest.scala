@@ -21,9 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * IDEMPOTENT — upserting the same collapsed batch twice converges to the
   * same lake — so the pipeline is effectively exactly-once for
   * deterministic batches, stronger than the Append sinks' duplicate-on-
-  * replay contract. A crash inside a merge is covered by the stage-replay
-  * protocol ([[graft.sources.LakeMerge.recover]] runs at every merge
-  * entry).
+  * replay contract. A crash inside a merge is covered by the
+  * [[graft.sources.AtomicStore]] protocol: every merge entry first replays
+  * a committed stage and deletes an uncommitted one.
   *
   * Scale: per micro-batch cost is the touched partitions' rewrite, not the
   * lake (see LakeMerge); the collapse is one partial-aggregated shuffle of

@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * replayable batch is the one whose fold succeeded but whose checkpoint
   * commit did not (without a durable checkpoint a restart would re-fold
   * the ENTIRE source into the surviving store). The store swap itself is
-  * crash-safe (AtomicStore stash discipline: a killed fold leaves the old
+  * crash-safe (AtomicStore commit protocol: a killed fold leaves the old
   * store or the new one, never a mix). The residual one-batch
   * double-count window is acceptable for monitoring metrics (the
   * documented contract); where exactness across restarts is required,

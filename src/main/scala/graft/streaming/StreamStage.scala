@@ -94,19 +94,15 @@ object StreamStage {
     * is a state-volume parameter, not a parallelism parameter — so it
     * must be DECLARED: callers pass `statePartitions` sized to their
     * state volume (the replay gates pass 4, right for their MB-scale
-    * state), or set `spark.graft.stream.statePartitions` (which takes
-    * precedence, the deployment override). With NEITHER set, the query
-    * keeps the session's `spark.sql.shuffle.partitions` — there is no
-    * silent tiny default to under-partition 100 TB of state. The
-    * override scopes to THIS query (StreamExecution clones the session
-    * synchronously inside start(), so restoring the conf right after is
-    * race-free; this helper assumes the single-threaded gate/test
-    * harness — nothing else plans queries on the session concurrently,
-    * or it could inherit the narrowed setting) and applies to every
-    * shuffle inside it — correct for the replayed gates, whose
-    * per-batch volumes are store-sized; a deployment with heavy
-    * pre-state stages sets the conf to its real state-partition target
-    * and sizes the session default for the rest.
+    * state). Without it the query keeps the session's
+    * `spark.sql.shuffle.partitions` — there is no silent tiny default to
+    * under-partition 100 TB of state. The setting scopes to THIS query
+    * (StreamExecution clones the session synchronously inside start(),
+    * so restoring the conf right after is race-free; this helper assumes
+    * the single-threaded gate/test harness — nothing else plans queries
+    * on the session concurrently, or it could inherit the narrowed
+    * setting) and applies to every shuffle inside it — correct for the
+    * replayed gates, whose per-batch volumes are store-sized.
     */
   def runToMemory(stream: DataFrame, name: String,
                   mode: String = "append",
@@ -115,11 +111,9 @@ object StreamStage {
     spark.catalog.dropTempView(name)
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    val target = spark.conf.getOption("spark.graft.stream.statePartitions")
-      .orElse(statePartitions.map(_.toString))
     val q =
       try {
-        target.foreach(spark.conf.set(key, _))
+        statePartitions.foreach(n => spark.conf.set(key, n.toString))
         stream.writeStream.format("memory").queryName(name)
           .outputMode(mode).start()
       } finally spark.conf.set(key, prev)

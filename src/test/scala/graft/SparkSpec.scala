@@ -1,6 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -15,31 +14,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
 
-  /** Spark jobs `body` submits from this thread or threads it spawns. The
-    * listener bus is asynchronous, so a sentinel job submitted after `body`
-    * closes the count: the bus delivers in order, so once the sentinel's
-    * start has arrived every job of `body` has been seen.
+  /** Spark jobs `body` submits from this thread or threads it spawns,
+    * counted once a [[Harness.drainListenerBus]] has closed the stream.
     */
   def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
     val id = java.util.UUID.randomUUID().toString
     val jobs = new AtomicInteger
-    val sentinelSeen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(SparkSpec.Marker)).orNull match {
-          case `id` => jobs.incrementAndGet()
-          case s if s == id + ".sentinel" => sentinelSeen.countDown()
-          case _ =>
-        }
+        if (e.properties != null && e.properties.getProperty(SparkSpec.Marker) == id)
+          jobs.incrementAndGet()
     }
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty(SparkSpec.Marker, id)
       try body finally sc.setLocalProperty(SparkSpec.Marker, null)
-      sc.setLocalProperty(SparkSpec.Marker, id + ".sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(SparkSpec.Marker, null)
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
+      Harness.drainListenerBus(spark)
       jobs.get
     } finally sc.removeSparkListener(listener)
   }

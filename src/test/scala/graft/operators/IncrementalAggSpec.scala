@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Maintained-aggregate contracts: fold-of-batches ≡ direct aggregate
   * however the stream is batched, schema stability across folds, the
-  * partial-agg plan shape, and crash-stash recovery at every entry point.
+  * partial-agg plan shape, and crash replay at every entry point.
   */
 class IncrementalAggSpec extends SparkSpec {
 
@@ -67,19 +67,20 @@ class IncrementalAggSpec extends SparkSpec {
       col("cnt"), col("sum_qty"), col("min_p"), col("max_p"))) == before)
   }
 
-  test("a mid-swap crash stash is restored by the next entry point") {
-    val dir = freshDir("stash")
-    update(spark, dir, li.limit(500), groupCols, specs)
-    val before = read(spark, dir).collect().toSet
-    // simulate the crash window: store renamed aside, nothing in its place
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(p, graft.sources.AtomicStore.stashPath(p)))
-    assert(read(spark, dir).collect().toSet == before, "read() must restore the stash")
-    // and update() on a stashed store folds into the RESTORED history
-    assert(fs.rename(p, graft.sources.AtomicStore.stashPath(p)))
-    update(spark, dir, li.limit(0), groupCols, specs)
-    assert(read(spark, dir).collect().toSet == before)
+  test("a mid-swap crash is replayed by the next entry point") {
+    val (dir, clean) = (freshDir("stash"), freshDir("stash_clean"))
+    def fold(d: String, n: Int): Unit = update(spark, d, li.limit(n), groupCols, specs)
+    def stored(d: String) = read(spark, d).collect().toSet
+    Seq(dir, clean).foreach(fold(_, 500))
+    // committed, the old store deleted, the new one not yet in place
+    fold(clean, 300)
+    graft.sources.Crash.at(2)(fold(dir, 300))
+    assert(stored(dir) == stored(clean), "read() must replay the committed fold")
+    // and update() on a crashed store folds onto the REPLAYED fold
+    fold(clean, 100)
+    graft.sources.Crash.at(2)(fold(dir, 100))
+    fold(dir, 0)
+    assert(stored(dir) == stored(clean))
   }
 
   test("the batch side is a partial aggregate (map-side combine)") {

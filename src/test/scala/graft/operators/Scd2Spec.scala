@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** SCD2 contracts: hand-checked versioning, no-op collapse, tie ordering,
   * fold-of-batches ≡ direct build under the in-order contract, late-data
-  * rejection, stash recovery, and the windows-only plan shape.
+  * rejection, crash replay, and the windows-only plan shape.
   */
 class Scd2Spec extends SparkSpec {
 
@@ -222,14 +222,19 @@ class Scd2Spec extends SparkSpec {
       rows(Scd2.build(changesDf, "k", Seq("status"), "eff", "seq")))
   }
 
-  test("a mid-swap crash stash is restored by the next entry point") {
+  test("a mid-swap crash is replayed by the next entry point") {
     val dir = freshDir("stash")
-    Scd2.update(spark, dir, changesDf, "k", Seq("status"), "eff", "seq")
+    val (early, late) = (changesDf.where(col("eff") < d("2024-02-15")),
+      changesDf.where(col("eff") >= d("2024-02-15")))
+    Scd2.update(spark, dir, early, "k", Seq("status"), "eff", "seq")
     val before = rows(Scd2.read(spark, dir))
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(p, graft.sources.AtomicStore.stashPath(p)))
+    // before the commit: the fold never happened
+    graft.sources.Crash.at(0)(Scd2.update(spark, dir, late, "k", Seq("status"), "eff", "seq"))
     assert(rows(Scd2.read(spark, dir)) == before)
+    // committed, the old store deleted, the new one not yet in place
+    graft.sources.Crash.at(2)(Scd2.update(spark, dir, late, "k", Seq("status"), "eff", "seq"))
+    assert(rows(Scd2.read(spark, dir)) ==
+      rows(Scd2.build(changesDf, "k", Seq("status"), "eff", "seq")))
   }
 
   test("asOfDimension: boundary goes to the new version; pre-history drops") {

@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.hadoop.fs.Path
 
 /** The store protocol through its three entry points: bootstrap then swap,
-  * debris-only dirs as no store, stash recovery by read and by publish, an
-  * aborted swap leaving the store as it was, `coalesceTo`, and drop.
+  * debris-only dirs as no store, replay of a committed stage by read and by
+  * publish, an aborted swap leaving the store as it was, `coalesceTo`, and
+  * drop. [[CrashStatesSpec]] crashes a publish at every protocol instant.
   */
 class AtomicStoreSpec extends SparkSpec {
 
@@ -27,9 +28,10 @@ class AtomicStoreSpec extends SparkSpec {
   private def dataFiles(dir: String): Int =
     fs.listStatus(new Path(dir)).count(_.getPath.getName.endsWith(".parquet"))
 
-  private def siblings(dir: String): Seq[Boolean] = {
+  /** The protocol's siblings of `dir` on disk (a stage, a commit marker). */
+  private def siblings(dir: String): Seq[String] = {
     val p = new Path(dir)
-    Seq(fs.exists(AtomicStore.tmpPath(p)), fs.exists(AtomicStore.stashPath(p)))
+    fs.listStatus(p.getParent).map(_.getPath.getName).filter(_.startsWith(p.getName + "__")).toSeq
   }
 
   test("the first publish creates the store, the second swaps it; no sibling is left") {
@@ -37,11 +39,11 @@ class AtomicStoreSpec extends SparkSpec {
     assert(!AtomicStore.exists(spark, dir) && AtomicStore.current(spark, dir).isEmpty)
     AtomicStore.publish(spark, dir, ids(1L, 2L))
     assert(stored(dir) == Seq(1L, 2L))
-    assert(siblings(dir) == Seq(false, false))
+    assert(siblings(dir).isEmpty)
     // the next frame may read the store itself
     AtomicStore.publish(spark, dir, AtomicStore.read(spark, dir).union(ids(3L)))
     assert(stored(dir) == Seq(1L, 2L, 3L))
-    assert(siblings(dir) == Seq(false, false))
+    assert(siblings(dir).isEmpty)
   }
 
   test("a debris-only dir reads as no store, and publish bootstraps over it") {
@@ -55,28 +57,27 @@ class AtomicStoreSpec extends SparkSpec {
     assert(stored(dir) == Seq(7L))
   }
 
-  test("a stash left between the swap's two renames is restored by read") {
-    val dir = freshDir("stash_read")
+  test("a committed stage caught after the store delete is replayed by read") {
+    val dir = freshDir("replay_read")
     AtomicStore.publish(spark, dir, ids(1L, 2L))
-    val p = new Path(dir)
-    AtomicStore.publish(spark, AtomicStore.tmpPath(p).toString, ids(9L))
-    assert(fs.rename(p, AtomicStore.stashPath(p)))
-    assert(stored(dir) == Seq(1L, 2L))
-    assert(!fs.exists(AtomicStore.stashPath(p)))
+    // instant 2: committed, the old store deleted, the stage not renamed yet
+    Crash.at(2)(AtomicStore.publish(spark, dir, ids(9L)))
+    assert(!fs.exists(new Path(dir)) && siblings(dir).nonEmpty)
+    assert(stored(dir) == Seq(9L))
+    assert(siblings(dir).isEmpty)
   }
 
-  test("a stash is restored by publish: the swap replaces the old rows, an abort keeps them") {
-    val dir = freshDir("stash_publish")
-    val p = new Path(dir)
+  test("publish replays a committed stage and drops an uncommitted one") {
+    val dir = freshDir("replay_publish")
     AtomicStore.publish(spark, dir, ids(1L, 2L))
-    assert(fs.rename(p, AtomicStore.stashPath(p)))
-    intercept[IllegalStateException](AtomicStore.publish(spark, dir, ids(5L),
+    Crash.at(2)(AtomicStore.publish(spark, dir, ids(5L)))
+    intercept[IllegalStateException](AtomicStore.publish(spark, dir, ids(6L),
       beforeSwap = () => throw new IllegalStateException("abort")))
-    assert(stored(dir) == Seq(1L, 2L))
-    assert(fs.rename(p, AtomicStore.stashPath(p)))
-    AtomicStore.publish(spark, dir, ids(5L))
     assert(stored(dir) == Seq(5L))
-    assert(siblings(dir) == Seq(false, false))
+    Crash.at(0)(AtomicStore.publish(spark, dir, ids(7L)))
+    AtomicStore.publish(spark, dir, AtomicStore.read(spark, dir).union(ids(8L)))
+    assert(stored(dir) == Seq(5L, 8L))
+    assert(siblings(dir).isEmpty)
   }
 
   test("a throwing beforeSwap leaves the store and its tmp sibling as they were") {
@@ -84,10 +85,10 @@ class AtomicStoreSpec extends SparkSpec {
     def abort(): Unit = intercept[IllegalArgumentException](AtomicStore.publish(spark, dir,
       ids(9L), beforeSwap = () => throw new IllegalArgumentException("late rows")))
     abort() // no store yet: still none
-    assert(!AtomicStore.exists(spark, dir) && siblings(dir) == Seq(false, false))
+    assert(!AtomicStore.exists(spark, dir) && siblings(dir).isEmpty)
     AtomicStore.publish(spark, dir, ids(1L, 2L))
     abort()
-    assert(stored(dir) == Seq(1L, 2L) && siblings(dir) == Seq(false, false))
+    assert(stored(dir) == Seq(1L, 2L) && siblings(dir).isEmpty)
   }
 
   test("coalesceTo narrows the output on both the bootstrap and the swap") {
@@ -103,14 +104,14 @@ class AtomicStoreSpec extends SparkSpec {
     assert(AtomicStore.read(spark, dir).count() == 200)
   }
 
-  test("drop removes the store with both siblings: a stale stash cannot revive it") {
+  test("drop removes the store with its stage and marker: nothing replays") {
     val dir = freshDir("drop")
     val p = new Path(dir)
     AtomicStore.publish(spark, dir, ids(1L))
-    AtomicStore.publish(spark, AtomicStore.stashPath(p).toString, ids(2L))
-    AtomicStore.publish(spark, AtomicStore.tmpPath(p).toString, ids(3L))
+    Crash.at(1)(AtomicStore.publish(spark, dir, ids(2L)))
+    assert(siblings(dir).nonEmpty)
     AtomicStore.drop(spark, dir)
-    assert(siblings(dir) == Seq(false, false))
+    assert(siblings(dir).isEmpty)
     assert(!AtomicStore.exists(spark, dir) && !fs.exists(p))
   }
 }

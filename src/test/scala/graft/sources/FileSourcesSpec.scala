@@ -111,22 +111,29 @@ class FileSourcesSpec extends SparkSpec {
     val store = new ParquetStore(root)
     def rows(name: String) =
       store.read(spark, name).orderBy("id").as[(Long, String)].collect().toSeq
-    val p = new org.apache.hadoop.fs.Path(s"$root/t.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the crash: the table renamed aside as the stash, the next rows staged
-    // in tmp, nothing at the table path
-    def crash(): Unit = {
-      Seq((9L, "z")).toDF("id", "s")
-        .write.mode("overwrite").parquet(AtomicStore.tmpPath(p).toString)
-      assert(fs.rename(p, AtomicStore.stashPath(p)))
-    }
+    // a crash after the commit (the first rename), between the table's
+    // delete and the rename of the staged rows over it: the next access
+    // replays the write
     store.write(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), "t", SaveStrategy.Replace)
-    crash()
-    assert(rows("t") == Seq((1L, "a"), (2L, "b")))
-    crash()
-    store.write(Seq((2L, "B"), (3L, "c")).toDF("id", "s"), "t", SaveStrategy.Upsert("id"))
-    assert(rows("t") == Seq((1L, "a"), (2L, "B"), (3L, "c")))
+    Crash.at(2)(store.write(Seq((9L, "z")).toDF("id", "s"), "t", SaveStrategy.Replace))
+    assert(rows("t") == Seq((9L, "z")))
+    Crash.at(2)(store.write(Seq((2L, "B"), (3L, "c")).toDF("id", "s"), "t",
+      SaveStrategy.Upsert("id")))
+    store.write(Seq((1L, "a")).toDF("id", "s"), "t", SaveStrategy.Upsert("id"))
+    assert(rows("t") == Seq((1L, "a"), (2L, "B"), (3L, "c"), (9L, "z")))
+    // a crash before the commit leaves the table as it was
+    Crash.at(0)(store.write(Seq((7L, "q")).toDF("id", "s"), "t", SaveStrategy.Replace))
+    assert(rows("t") == Seq((1L, "a"), (2L, "B"), (3L, "c"), (9L, "z")))
     assert(store.listTables() == Seq("t"))
+  }
+
+  test("ParquetStore lists the tables of a file:// root") {
+    val store = new ParquetStore("file://" + tmp())
+    store.write(Seq((1L, "a")).toDF("id", "s"), "t", SaveStrategy.Replace)
+    store.write(Seq((2L, "b")).toDF("id", "s"), "u", SaveStrategy.Replace)
+    assert(store.listTables() == Seq("t", "u"))
+    store.drop("t")
+    assert(store.listTables() == Seq("u"))
   }
 
   test("partitioned parquet write prunes partitions at scan time") {

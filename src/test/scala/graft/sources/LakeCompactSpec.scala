@@ -14,10 +14,7 @@ class LakeCompactSpec extends SparkSpec {
 
   private def freshDir(name: String): String = {
     val d = s"/tmp/graft_lakecompact_spec/$name"
-    for (suffix <- Seq("", "__merge_tmp")) {
-      val p = new Path(d + suffix)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    AtomicStore.drop(spark, d)
     d
   }
 
@@ -107,10 +104,10 @@ class LakeCompactSpec extends SparkSpec {
     (1L to 40L).map(i => (i, i, if (i % 2 == 0) "x" else "y"))
       .toDF("k", "v", "p").repartition(4)
       .write.partitionBy("p").parquet(lake)
-    val rep = LakeCompact.fragmented(spark, lake, Seq("p"), 10L * 1024 * 1024)
+    val rep = LakeCompact.fragmented(spark, lake, 10L * 1024 * 1024)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(rep.keySet == Set("x", "y"))
     assert(rep.values.forall(_ > 1))
-    assert(LakeCompact.fragmented(spark, lake, Seq("p"), 1L).count() == 0)
+    assert(LakeCompact.fragmented(spark, lake, 1L).count() == 0)
   }
 }

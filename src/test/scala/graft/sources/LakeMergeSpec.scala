@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 
 /** Copy-on-write merge contracts: upsert semantics, the partition-moving
   * stale-copy pin, untouched partitions' files left physically in place,
-  * crash-stage replay, and the bootstrap / empty-batch edges.
+  * crash replay, and the bootstrap / empty-batch edges.
   */
 class LakeMergeSpec extends SparkSpec {
 
@@ -14,8 +14,7 @@ class LakeMergeSpec extends SparkSpec {
 
   private def freshDir(name: String): String = {
     val d = s"/tmp/graft_lakemerge_spec/$name"
-    val p = new Path(d)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    AtomicStore.drop(spark, d)
     d
   }
 
@@ -70,49 +69,33 @@ class LakeMergeSpec extends SparkSpec {
   test("a committed crash stage is replayed by the next merge; an uncommitted one is dropped") {
     val lake = freshDir("replay")
     LakeMerge.merge(spark, lake, baseRows, Seq("k"), Seq("p"))
-    val fs = new Path(lake).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new Path(s"${lake}__merge_tmp")
-
-    // fabricate the stage a crashed apply would leave: the merged contents
-    // of partition a with k=2 updated, plus the _graft_commit marker
-    Seq((1L, 10.0, "a"), (2L, 22.0, "a")).toDF("k", "v", "p")
-      .write.partitionBy("p").parquet(stage.toString)
-    fs.create(new Path(stage, "_graft_commit"), true).close()
-    LakeMerge.recover(spark, lake)
-    assert(readLake(lake)(2L) == (22.0, "a") && !fs.exists(stage))
-
-    // the crash WINDOW pin: a stage whose parquet finished (_SUCCESS
-    // present) but that never reached the commit marker must be treated as
-    // debris — the evacuation list may be missing, so replaying it could
-    // leave stale copies of moved keys
-    Seq((2L, 99.0, "a")).toDF("k", "v", "p")
-      .write.partitionBy("p").parquet(stage.toString)
-    assert(fs.exists(new Path(stage, "_SUCCESS")))
-    LakeMerge.recover(spark, lake)
-    assert(readLake(lake)(2L) == (22.0, "a") && !fs.exists(stage))
+    // committed, nothing applied yet: the next merge replays it first
+    Crash.at(1)(LakeMerge.merge(spark, lake, Seq((2L, 22.0, "a")).toDF("k", "v", "p"),
+      Seq("k"), Seq("p")))
+    LakeMerge.merge(spark, lake, Seq((4L, 41.0, "b")).toDF("k", "v", "p"), Seq("k"), Seq("p"))
+    assert(readLake(lake) == Map(1L -> (10.0, "a"), 2L -> (22.0, "a"), 3L -> (30.0, "b"),
+      4L -> (41.0, "b"), 5L -> (50.0, "c")))
+    // staged but never committed: debris, dropped by the next merge
+    Crash.at(0)(LakeMerge.merge(spark, lake, Seq((2L, 99.0, "a")).toDF("k", "v", "p"),
+      Seq("k"), Seq("p")))
+    LakeMerge.merge(spark, lake, Seq((5L, 51.0, "c")).toDF("k", "v", "p"), Seq("k"), Seq("p"))
+    assert(readLake(lake) == Map(1L -> (10.0, "a"), 2L -> (22.0, "a"), 3L -> (30.0, "b"),
+      4L -> (41.0, "b"), 5L -> (51.0, "c")))
   }
 
   test("two-level partitions: replay after a partial apply keeps the applied and untouched leaves") {
-    val lake = freshDirWithStage("replay_two_level")
+    val lake = freshDir("replay_two_level")
     def lakeRows = spark.read.parquet(lake).select("k", "v", "p", "q").collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getString(2), r.getString(3))).toMap
     LakeMerge.merge(spark, lake, Seq((1L, 10.0, "a", "x"), (2L, 20.0, "a", "y"),
       (3L, 30.0, "b", "x")).toDF("k", "v", "p", "q"), Seq("k"), Seq("p", "q"))
-    val fs = new Path(lake).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = LakeMerge.stagePath(new Path(lake))
 
-    // the committed stage of a merge updating k=1 (p=a/q=x) and k=3 (p=b/q=x)
-    Seq((1L, 11.0, "a", "x"), (3L, 33.0, "b", "x")).toDF("k", "v", "p", "q")
-      .write.partitionBy("p", "q").parquet(stage.toString)
-    fs.create(new Path(stage, LakeMerge.CommitMarker), true).close()
-    // crash after apply moved the only leaf under p=a: the stage keeps an
-    // empty p=a dir, which is not a partition to apply
-    fs.delete(new Path(lake, "p=a/q=x"), true)
-    assert(fs.rename(new Path(stage, "p=a/q=x"), new Path(lake, "p=a/q=x")))
-    assert(fs.listStatus(new Path(stage, "p=a")).isEmpty)
-
-    LakeMerge.recover(spark, lake)
-    assert(!fs.exists(stage))
+    // a merge updating k=1 (p=a/q=x) and k=3 (p=b/q=x), crashed at instant 3:
+    // the only leaf under p=a has been renamed into the lake, p=b/q=x not yet
+    Crash.at(3)(LakeMerge.merge(spark, lake,
+      Seq((1L, 11.0, "a", "x"), (3L, 33.0, "b", "x")).toDF("k", "v", "p", "q"),
+      Seq("k"), Seq("p", "q")))
+    assert(AtomicStore.exists(spark, lake))
     assert(lakeRows == Map(1L -> (11.0, "a", "x"), 2L -> (20.0, "a", "y"),
       3L -> (33.0, "b", "x")))
 
@@ -121,6 +104,7 @@ class LakeMergeSpec extends SparkSpec {
       Seq("k"), Seq("p", "q"))
     assert(lakeRows == Map(1L -> (11.0, "a", "x"), 2L -> (22.0, "b", "y"),
       3L -> (33.0, "b", "x")))
+    val fs = new Path(lake).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new Path(lake, "p=a/q=y")), "evacuated leaf must be dropped")
   }
 
@@ -146,15 +130,8 @@ class LakeMergeSpec extends SparkSpec {
     assert(readLake(lake) == before)
   }
 
-  private def freshDirWithStage(name: String): String = {
-    val d = freshDir(name)
-    val st = new Path(d + "__merge_tmp")
-    st.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(st, true)
-    d
-  }
-
   test("delete removes exactly the keyed rows, rewriting only touched partitions") {
-    val lake = freshDirWithStage("delete")
+    val lake = freshDir("delete")
     LakeMerge.merge(spark, lake, baseRows, Seq("k"), Seq("p"))
     val fs = new Path(lake).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def filesOf(part: String) =
@@ -167,7 +144,7 @@ class LakeMergeSpec extends SparkSpec {
   }
 
   test("delete evacuates a partition deleted down to zero rows") {
-    val lake = freshDirWithStage("delete_evac")
+    val lake = freshDir("delete_evac")
     LakeMerge.merge(spark, lake, baseRows, Seq("k"), Seq("p"))
     LakeMerge.delete(spark, lake, Seq(Tuple1(5L)).toDF("k"), Seq("k"), Seq("p"))
     assert(readLake(lake) == Map(
@@ -177,7 +154,7 @@ class LakeMergeSpec extends SparkSpec {
   }
 
   test("delete with keys matching nothing is a no-op; repeat delete idempotent") {
-    val lake = freshDirWithStage("delete_noop")
+    val lake = freshDir("delete_noop")
     LakeMerge.merge(spark, lake, baseRows, Seq("k"), Seq("p"))
     LakeMerge.delete(spark, lake, Seq(Tuple1(99L)).toDF("k"), Seq("k"), Seq("p"))
     assert(readLake(lake).size == 5)
@@ -187,7 +164,7 @@ class LakeMergeSpec extends SparkSpec {
   }
 
   test("delete spanning several partitions, including a multi-key frame") {
-    val lake = freshDirWithStage("delete_multi")
+    val lake = freshDir("delete_multi")
     LakeMerge.merge(spark, lake, baseRows, Seq("k"), Seq("p"))
     LakeMerge.delete(spark, lake, Seq(1L, 3L, 5L).map(Tuple1(_)).toDF("k"),
       Seq("k"), Seq("p"))
@@ -196,7 +173,7 @@ class LakeMergeSpec extends SparkSpec {
 
   for (tsType <- Seq("timestamp_ntz", "timestamp"))
     test(s"$tsType partitions: delete and merge evacuate by the writer's path encoding") {
-      val lake = freshDirWithStage(s"ts_part_$tsType")
+      val lake = freshDir(s"ts_part_$tsType")
       def rows(rs: (Long, Double, String)*) = rs.toDF("k", "v", "d")
         .withColumn("d", col("d").cast(tsType))
       LakeMerge.merge(spark, lake, rows((1L, 10.0, "2024-01-01 00:00:00"),

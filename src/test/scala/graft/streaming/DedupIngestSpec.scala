@@ -99,7 +99,8 @@ class DedupIngestSpec extends SparkSpec {
     stage(src, splits)
 
     val (sCorpus, sStore) = ("/tmp/graft_die_corpus", "/tmp/graft_die_store")
-    wipe(sCorpus, sStore)
+    wipe(sCorpus)
+    graft.sources.AtomicStore.drop(spark, sStore)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
     val q = DedupIngest.startExact(stream, sCorpus, sStore)
@@ -147,22 +148,24 @@ class DedupIngestSpec extends SparkSpec {
     DedupIngest.ingestBatchExact(splits.head, sCorpus, sStore, "text", "doc_id", 0L)
     assert(spark.read.parquet(sCorpus).count() === streamed.size.toLong)
 
-    // simulate a crash between the two swap renames (store moved aside,
-    // replacement never landed): the next INGEST step must restore the
-    // stashed copy — not bootstrap a fresh store over it — so the replayed
-    // batch still dedups against pre-crash history
-    val stash = new java.io.File(
-      graft.sources.AtomicStore.stashPath(new org.apache.hadoop.fs.Path(sStore)).toString)
-    assert(new java.io.File(sStore).renameTo(stash))
+    // a compaction crashed after its commit, between the store's delete and
+    // the rename of the compacted files over it: the next INGEST step must
+    // replay it — not bootstrap a fresh store — so the replayed batch still
+    // dedups against pre-crash history
+    def siblings() = new java.io.File(sStore).getParentFile.list()
+      .filter(_.startsWith(new java.io.File(sStore).getName + "__")).toSeq
+    graft.sources.Crash.at(2)(DedupIngest.compactStore(spark, sStore, targetPartitions = 1))
+    assert(!new java.io.File(sStore).exists() && siblings().nonEmpty)
     DedupIngest.ingestBatchExact(splits.head, sCorpus, sStore, "text", "doc_id", 0L)
-    assert(!stash.exists(), "ingest must restore the stash before reading the store")
-    assert(fpSet() === before, "restored history must be intact")
+    assert(siblings().isEmpty, "ingest must replay the commit before reading the store")
+    assert(fpSet() === before, "replayed history must be intact")
     assert(spark.read.parquet(sCorpus).count() === streamed.size.toLong,
-      "replayed batch must still no-op against the restored history")
+      "replayed batch must still no-op against the replayed history")
     // a compactStore call recovers the same way
-    assert(new java.io.File(sStore).renameTo(stash))
+    graft.sources.Crash.at(2)(DedupIngest.compactStore(spark, sStore, targetPartitions = 1))
     DedupIngest.compactStore(spark, sStore, targetPartitions = 1)
-    assert(fpSet() === before, "compact recovery must restore the stashed store")
-    assert(!stash.exists())
+    assert(fpSet() === before, "compact recovery must replay the committed compaction")
+    assert(partFiles() === 1)
+    assert(siblings().isEmpty)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.sources.LakeMerge
+import graft.sources.{AtomicStore, LakeMerge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -49,14 +49,14 @@ class LakeIngestSpec extends SparkSpec {
     stage(src, batches)
 
     val streamed = "/tmp/graft_lakeingest_stream"
-    wipe(streamed, streamed + "__merge_tmp")
+    AtomicStore.drop(spark, streamed)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
     val q = LakeIngest.start(stream, streamed, Seq("k"), Seq("p"), "ts")
     try q.processAllAvailable() finally q.stop()
 
     val folded = "/tmp/graft_lakeingest_fold"
-    wipe(folded, folded + "__merge_tmp")
+    AtomicStore.drop(spark, folded)
     batches.foreach(b => LakeMerge.merge(spark, folded, b, Seq("k"), Seq("p")))
 
     val got = readLake(streamed)
@@ -67,7 +67,7 @@ class LakeIngestSpec extends SparkSpec {
 
   test("replaying a batch is idempotent") {
     val lake = "/tmp/graft_lakeingest_replay"
-    wipe(lake, lake + "__merge_tmp")
+    AtomicStore.drop(spark, lake)
     LakeIngest.ingestBatch(b0.toDF("k", "ts", "v", "p"), lake, Seq("k"), Seq("p"), "ts")
     LakeIngest.ingestBatch(b1.toDF("k", "ts", "v", "p"), lake, Seq("k"), Seq("p"), "ts")
     val before = readLake(lake)
@@ -77,7 +77,7 @@ class LakeIngestSpec extends SparkSpec {
 
   test("within-batch duplicate keys collapse to the highest precedence") {
     val lake = "/tmp/graft_lakeingest_lww"
-    wipe(lake, lake + "__merge_tmp")
+    AtomicStore.drop(spark, lake)
     val dup = Seq((1L, 1L, 10.0, "a"), (1L, 3L, 12.0, "b"), (1L, 2L, 11.0, "a"))
     LakeIngest.ingestBatch(dup.toDF("k", "ts", "v", "p"), lake, Seq("k"), Seq("p"), "ts")
     assert(readLake(lake) == Map(1L -> (3L, 12.0, "b")))
