@@ -12,16 +12,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  1. stage: the new contents go to the sibling `<dir>__cow_stage`;
   *  1. commit: a marker `<dir>__cow_commit` records what apply will do —
   *     the staged leaves to rename and the partition dirs to drop. It is
-  *     written inside the stage and renamed out, so it appears whole;
+  *     written inside the stage (never creating it) and renamed out, so it
+  *     appears whole, and only once every planned leaf is staged;
   *  1. apply: each staged leaf replaces its target (delete the target,
   *     rename the leaf over it), the drops are deleted, then the stage and
   *     the marker. A whole-store rewrite is the single root leaf `""`;
-  *  1. replay: every entry point first replays a committed stage and
-  *     deletes an uncommitted one.
+  *  1. replay: every entry point first replays a committed stage. Only a
+  *     write deletes an uncommitted stage (an abandoned write's, before it
+  *     stages its own), so a read never removes a stage a live write is
+  *     still filling.
   *
   * A crash before the commit leaves the target as it was; a crash after it
   * reads, once replayed, as the completed write. Replay is idempotent: a
-  * leaf already renamed is gone from the stage and is skipped.
+  * leaf already renamed is gone from the stage and is skipped. Writes to
+  * one dir are serialized by the caller; within one JVM the commit, the
+  * apply and every replay of a dir hold one lock, so a read that replays
+  * never interleaves its apply steps with a live write's.
   *
   * Filesystem contract: a directory rename is atomic, as on HDFS and local
   * filesystems. Where rename is copy-then-delete (S3A, GCS, ABFS without
@@ -33,11 +39,12 @@ object AtomicStore {
 
   /** Is there a store at `dir`? Submits no Spark job. Replays a committed
     * stage first, so a store caught mid-apply never reads as missing; a
-    * missing or debris-only directory is no store.
+    * missing or debris-only directory is no store. An uncommitted stage is
+    * left to the next write.
     */
   def exists(spark: SparkSession, dir: String): Boolean = {
     val (fs, p) = resolve(spark, dir)
-    recover(fs, p)
+    replay(fs, p)
     hasData(fs, p)
   }
 
@@ -63,7 +70,7 @@ object AtomicStore {
     rewrite(spark, dir) { stage =>
       out.write.mode("overwrite").parquet(stage.toString)
       beforeSwap()
-      Plan.Whole
+      (Plan.Whole, ())
     }
   }
 
@@ -71,7 +78,7 @@ object AtomicStore {
     * so no leftover can replay into a later store at the same path. */
   def drop(spark: SparkSession, dir: String): Unit = {
     val (fs, p) = resolve(spark, dir)
-    Seq(p, stagePath(p), markerPath(p)).foreach(fs.delete(_, true))
+    locked(fs, p)(Seq(p, stagePath(p), markerPath(p)).foreach(fs.delete(_, true)))
   }
 
   // -------------------------------------------------- the protocol itself --
@@ -94,28 +101,54 @@ object AtomicStore {
     */
   private[graft] val instant = new scala.util.DynamicVariable[Int => Unit](_ => ())
 
-  /** Recover, then stage with `write` (which returns the plan), commit and
-    * apply. If `write` throws, the stage is deleted and `dir` is untouched.
+  /** Replay, drop an abandoned stage, then stage with `write` (which
+    * returns the plan and a result), commit, apply and return the result.
+    * If `write` or the commit throws, the stage is deleted and `dir` is
+    * untouched.
     */
-  private[sources] def rewrite(spark: SparkSession, dir: String)(write: Path => Plan): Unit = {
+  private[sources] def rewrite[A](spark: SparkSession, dir: String)(write: Path => (Plan, A)): A = {
     val (fs, p) = resolve(spark, dir)
-    recover(fs, p)
     val stage = stagePath(p)
-    val plan = try write(stage) catch { case e: Throwable => fs.delete(stage, true); throw e }
+    locked(fs, p) { replay(fs, p); fs.delete(stage, true) }
+    val (plan, result) = try write(stage) catch { case e: Throwable => fs.delete(stage, true); throw e }
     instant.value(0)
-    val pending = new Path(stage, "_cow_plan")
-    val out = fs.create(pending, true)
-    try out.write(encode(plan).getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(pending, markerPath(p)))
-      throw new java.io.IOException(s"commit: cannot move $pending to ${markerPath(p)}")
-    instant.value(1)
-    applyPlan(fs, p, plan)
+    locked(fs, p) {
+      try commit(fs, p, plan) catch { case e: Throwable => fs.delete(stage, true); throw e }
+      instant.value(1)
+      applyPlan(fs, p, plan)
+    }
+    result
   }
 
-  /** Replay a committed stage; delete an uncommitted one. */
-  private[sources] def recover(fs: FileSystem, p: Path): Unit =
+  /** Replay a committed stage, if any. An uncommitted stage is left alone:
+    * it may belong to a write that is still staging. */
+  private def replay(fs: FileSystem, p: Path): Unit = locked(fs, p) {
     if (fs.exists(markerPath(p))) applyPlan(fs, p, decode(fs, markerPath(p)))
-    else fs.delete(stagePath(p), true)
+  }
+
+  /** Write the plan inside the stage and rename it out as the marker. The
+    * plan file never creates the stage, and every planned leaf must be
+    * staged, so a stage removed under the write fails the commit instead of
+    * committing an empty stage over the store.
+    */
+  private def commit(fs: FileSystem, p: Path, plan: Plan): Unit = {
+    val stage = stagePath(p)
+    val pending = new Path(stage, "_cow_plan")
+    val out = fs.createFile(pending).build() // not recursive: fails without the stage
+    try out.write(encode(plan).getBytes("UTF-8")) finally out.close()
+    plan.leaves.find(rel => !fs.exists(under(stage, rel))).foreach { rel =>
+      throw new java.io.IOException(s"commit: staged leaf '$rel' of $stage is missing")
+    }
+    if (!fs.rename(pending, markerPath(p)))
+      throw new java.io.IOException(s"commit: cannot move $pending to ${markerPath(p)}")
+  }
+
+  /** One monitor per qualified dir: the commit, apply and replay of a dir
+    * run one at a time within this JVM. */
+  private val locks = new java.util.concurrent.ConcurrentHashMap[Path, AnyRef]()
+
+  private def locked[A](fs: FileSystem, p: Path)(body: => A): A =
+    locks.computeIfAbsent(fs.makeQualified(p), _ => new AnyRef).synchronized(body)
 
   /** The leaf partition dirs under `root`, lazily and in path order:
     * `name=value` dirs are walked down; a dir without such subdirs is a

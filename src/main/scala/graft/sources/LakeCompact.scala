@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -71,27 +72,27 @@ object LakeCompact {
     // rows, once each, with partition values resolved via basePath. If the
     // stage produces a canonical name that collides with a lake dir we did
     // NOT read (alias candidate + healthy canonical sibling), pull that dir
-    // in and restage. Staged names are canonical: ≤1 extra pass.
-    var readSet = fragments.map(_.rel).toSet
+    // in and restage. Staged names are canonical: ≤1 extra pass. Returns
+    // the dirs read and the leaves staged.
+    @annotation.tailrec def restage(stage: Path, readSet: Set[String],
+                                    pass: Int): (Set[String], Set[String]) = {
+      require(pass <= 4, s"compaction stage did not converge after $pass passes")
+      val dirs = readSet.toSeq.sorted
+      spark.read.option("basePath", lakeDir)
+        .parquet(dirs.map(rel => s"$lakeDir/$rel"): _*)
+        // one task per partition value -> one file per compacted partition
+        .repartition(dirs.length, partitionCols.map(col): _*)
+        .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stage.toString)
+      val staged = AtomicStore.leaves(fs, stage).map(_.rel).toSet
+      val collisions = (staged -- readSet).intersect(all)
+      if (collisions.isEmpty) (readSet, staged) else restage(stage, readSet ++ collisions, pass + 1)
+    }
     AtomicStore.rewrite(spark, lakeDir) { stage =>
-      @annotation.tailrec def restage(pass: Int): Set[String] = {
-        require(pass <= 4, s"compaction stage did not converge after $pass passes")
-        val dirs = readSet.toSeq.sorted
-        spark.read.option("basePath", lakeDir)
-          .parquet(dirs.map(rel => s"$lakeDir/$rel"): _*)
-          // one task per partition value -> one file per compacted partition
-          .repartition(dirs.length, partitionCols.map(col): _*)
-          .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stage.toString)
-        val staged = AtomicStore.leaves(fs, stage).map(_.rel).toSet
-        val collisions = (staged -- readSet).intersect(all)
-        if (collisions.isEmpty) staged else { readSet ++= collisions; restage(pass + 1) }
-      }
-      val staged = restage(1)
+      val (readSet, staged) = restage(stage, fragments.map(_.rel).toSet, 1)
       // a read dir the stage did not reproduce BY NAME is a non-canonical
       // alias whose rows now live under the canonical dir: drop the husk
-      AtomicStore.Plan(staged.toSeq.sorted, readSet.filterNot(staged).toSeq.sorted)
+      (AtomicStore.Plan(staged.toSeq.sorted, readSet.filterNot(staged).toSeq.sorted), readSet.size)
     }
-    readSet.size
   }
 
   /** Every leaf partition dir of the lake, and those that qualify. */

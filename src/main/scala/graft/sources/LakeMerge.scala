@@ -50,7 +50,7 @@ object LakeMerge {
     if (!AtomicStore.exists(spark, lakeDir)) {
       AtomicStore.rewrite(spark, lakeDir) { stage =>
         batch.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stage.toString)
-        AtomicStore.Plan.Whole
+        (AtomicStore.Plan.Whole, ())
       }
       return
     }
@@ -110,7 +110,7 @@ object LakeMerge {
       next.hint("rebalance", parts: _*)
         .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stage.toString)
       val staged = AtomicStore.leaves(fs, stage).map(_.rel).toSeq
-      AtomicStore.Plan(staged, touchedPaths.filterNot(staged.toSet))
+      (AtomicStore.Plan(staged, touchedPaths.filterNot(staged.toSet)), ())
     }
   }
 

@@ -22,8 +22,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * same lake — so the pipeline is effectively exactly-once for
   * deterministic batches, stronger than the Append sinks' duplicate-on-
   * replay contract. A crash inside a merge is covered by the
-  * [[graft.sources.AtomicStore]] protocol: every merge entry first replays
-  * a committed stage and deletes an uncommitted one.
+  * [[graft.sources.AtomicStore]] protocol: every merge first replays a
+  * committed stage and deletes an uncommitted one.
   *
   * Scale: per micro-batch cost is the touched partitions' rewrite, not the
   * lake (see LakeMerge); the collapse is one partial-aggregated shuffle of

@@ -5,8 +5,9 @@ import org.apache.hadoop.fs.Path
 
 /** The store protocol through its three entry points: bootstrap then swap,
   * debris-only dirs as no store, replay of a committed stage by read and by
-  * publish, an aborted swap leaving the store as it was, `coalesceTo`, and
-  * drop. [[CrashStatesSpec]] crashes a publish at every protocol instant.
+  * publish, reads that leave a live write's stage alone, a commit that
+  * refuses a removed stage, an aborted swap leaving the store as it was,
+  * `coalesceTo`, and drop. [[CrashStatesSpec]] crashes a publish at every protocol instant.
   */
 class AtomicStoreSpec extends SparkSpec {
 
@@ -78,6 +79,27 @@ class AtomicStoreSpec extends SparkSpec {
     AtomicStore.publish(spark, dir, AtomicStore.read(spark, dir).union(ids(8L)))
     assert(stored(dir) == Seq(5L, 8L))
     assert(siblings(dir).isEmpty)
+  }
+
+  test("a read while a write stages keeps the stage; a stage removed under the write fails it") {
+    val dir = freshDir("stage_race")
+    val p = new Path(dir)
+    AtomicStore.publish(spark, dir, ids(1L, 2L))
+    def publishStaged(next: Long)(atStaged: => Unit): Unit =
+      AtomicStore.instant.withValue(i => if (i == 0) atStaged)(AtomicStore.publish(spark, dir, ids(next)))
+    // reads between the stage write and the commit see the old store and
+    // leave the stage to its write
+    publishStaged(3L) {
+      assert(AtomicStore.exists(spark, dir) && stored(dir) == Seq(1L, 2L))
+      assert(siblings(dir).size == 1)
+    }
+    assert(stored(dir) == Seq(3L) && siblings(dir).isEmpty)
+    // a stage deleted before the commit: the commit refuses, the store stays
+    intercept[java.io.IOException](publishStaged(4L) {
+      siblings(dir).foreach(s => fs.delete(new Path(p.getParent, s), true))
+      assert(AtomicStore.exists(spark, dir))
+    })
+    assert(stored(dir) == Seq(3L) && siblings(dir).isEmpty)
   }
 
   test("a throwing beforeSwap leaves the store and its tmp sibling as they were") {

@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions.col
 /** The crash-state table of the copy-on-write protocol, for a whole-store
   * publish and for a two-level lake merge, delete and compaction. Each
   * write is crashed at every instant it reaches in a clean run: the
-  * uncommitted stage (instant 0) must read as the before state; a
-  * committed stage must read as the after state at every apply step —
-  * before any step, after a target delete, after some and after all leaf
-  * renames, after the drops. Reading replays; a second replay must change
-  * no file, and no protocol sibling may be left.
+  * uncommitted stage (instant 0) must read as the before state, survive
+  * the read and be dropped by the next write; a committed stage must read
+  * as the after state at every apply step — before any step, after a
+  * target delete, after some and after all leaf renames, after the drops.
+  * Reading replays; a second replay must change no file, and no protocol
+  * sibling may be left.
   */
 class CrashStatesSpec extends SparkSpec {
 
@@ -80,6 +81,12 @@ class CrashStatesSpec extends SparkSpec {
         Crash.at(k)(w.op(dir))
         val want = if (k == 0) before else after
         assert(w.state(dir) == want, s"${w.name}, instant $k")
+        if (k == 0) {
+          // a read leaves the uncommitted stage alone; the next write drops it
+          assert(siblings(dir).size == 1, s"${w.name}: ${siblings(dir)}")
+          w.op(dir)
+          assert(w.state(dir) == after, s"${w.name}, a write after an instant-0 crash")
+        }
         assert(siblings(dir).isEmpty, s"${w.name}, instant $k: ${siblings(dir)}")
         val files = snapshot(dir)
         assert(AtomicStore.exists(spark, dir))

@@ -83,6 +83,23 @@ class LakeMergeSpec extends SparkSpec {
       4L -> (41.0, "b"), 5L -> (51.0, "c")))
   }
 
+  test("a staged leaf removed before the commit fails the merge and keeps the lake") {
+    val lake = freshDir("stage_leaf_gone")
+    LakeMerge.merge(spark, lake, baseRows, Seq("k"), Seq("p"))
+    val before = readLake(lake)
+    val p = new Path(lake)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def protocolSiblings = fs.listStatus(p.getParent).map(_.getPath)
+      .filter(_.getName.startsWith(p.getName + "__")).toSeq
+    // the merge stages p=a and p=b; p=b vanishes before the commit
+    intercept[java.io.IOException](AtomicStore.instant.withValue { i =>
+      if (i == 0) protocolSiblings.foreach(stage => assert(fs.delete(new Path(stage, "p=b"), true)))
+    }(LakeMerge.merge(spark, lake, Seq((1L, 11.0, "a"), (3L, 33.0, "b")).toDF("k", "v", "p"),
+      Seq("k"), Seq("p"))))
+    assert(readLake(lake) == before)
+    assert(protocolSiblings.isEmpty)
+  }
+
   test("two-level partitions: replay after a partial apply keeps the applied and untouched leaves") {
     val lake = freshDir("replay_two_level")
     def lakeRows = spark.read.parquet(lake).select("k", "v", "p", "q").collect()
