@@ -74,7 +74,9 @@ object Harness {
       // the exact-arithmetic paths (ExactSum limb sums, long products)
       // rely on ANSI mode RAISING on overflow rather than wrapping; it is
       // the Spark 4.x default, but pin it so a deployment that flips the
-      // default cannot silently convert loud failure into corrupt sums
+      // default cannot silently convert loud failure into corrupt sums.
+      // ANSI does not cover `div` on DECIMAL, which wraps past LONG even
+      // with it on; ExactDiv.quot checks its own result for that
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -1366,13 +1366,11 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
           import graft.operators.RecordLinkage
           import org.apache.spark.sql.functions.{col, expr, lit, pmod}
           val c = Tables.resolve(s, dir)("customer")
-          // sign-split the bucket division (Spark div truncates toward
-          // zero; DuckDB // floors — they only agree on non-negatives)
+          // the bucket division truncates toward zero in both engines
           def side(par: Int) = c
             .where(pmod(col("c_custkey"), lit(2)) === par)
             .withColumn("bal_c", cents("c_acctbal"))
-            .withColumn("bal_bucket",
-              expr("cast(signum(bal_c) as bigint) * (abs(bal_c) div 100000)"))
+            .withColumn("bal_bucket", ExactDiv.quot(col("bal_c"), lit(100000L)))
             .withColumn("bal_sign", expr("cast(signum(bal_c) as bigint)"))
           RecordLinkage.score(side(0), side(1),
               blockOn = Seq("c_nationkey" -> "c_nationkey"),
@@ -1386,7 +1384,7 @@ SELECT lang, CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE) ELSE 15.0 * ${1L << 60} /
         Some {
           def sideSql(par: Int) =
             "SELECT c_custkey, c_nationkey, c_mktsegment, " +
-              "CAST(sign(bal_c) * (abs(bal_c) // 100000) AS BIGINT) AS bal_bucket, " +
+              s"${ExactDiv.quotSql("bal_c", "100000")} AS bal_bucket, " +
               "CAST(sign(bal_c) AS BIGINT) AS bal_sign FROM " +
               s"(SELECT *, ${centsSql("c_acctbal")} AS bal_c " +
               s"FROM customer WHERE c_custkey % 2 = $par)"
@@ -2650,7 +2648,7 @@ FROM orders o JOIN dim d ON o.o_custkey = d.k
 
       // linear-interpolation gap fill on the same grid: exact rational
       // interpolation between surrounding observations over integer row
-      // positions, sign-split HUGEINT division both engines
+      // positions, the same truncating division both engines
       RegisteredQuery(
         "q_resample_linear",
         (s, dir) => graft.operators.Resample.gapFillLinear(
@@ -3895,7 +3893,7 @@ ORDER BY s_name""")),
           "documents", "doc_id", "n_chars", step = 10000L))),
 
       // grouped OLS trend: four decimal partials per (group, partition),
-      // sign-split truncating division — exact rational slope, no float
+      // truncating division — exact rational slope, no float
       RegisteredQuery(
         "q_grouped_trend",
         (s, dir) => graft.operators.GroupedTrend.slope(
@@ -3953,7 +3951,7 @@ ORDER BY s_name""")),
   ELSE '5-LOW' END"""))),
 
       // chance-corrected Cohen's kappa over the same (true, pred) pair —
-      // cross-multiplied exact integers, sign-split for worse-than-chance
+      // cross-multiplied exact integers, truncated for worse-than-chance
       RegisteredQuery(
         "q_kappa",
         (s, dir) => graft.operators.ModelEval.cohensKappa(
@@ -4185,7 +4183,7 @@ FROM documents GROUP BY lang ORDER BY lang""")),
 
       // CUPED-adjusted comparison: pooled θ from arms-sized moment sums,
       // raw and covariate-adjusted milli diffs side by side — all
-      // sign-split integer arithmetic
+      // truncating integer arithmetic
       RegisteredQuery(
         "q_ab_cuped",
         (s, dir) => graft.operators.AbTest.cupedCompare(
@@ -4638,7 +4636,7 @@ FROM documents ORDER BY doc_id""")),
           "event_type", "mv", "event_id"))),
 
       // trimmed mean: winsorize's deleting sibling — in-band decimal sum,
-      // one sign-split division
+      // one truncating division
       RegisteredQuery(
         "q_trimmed_mean",
         (s, dir) => Outliers.trimmedMean(
@@ -4691,7 +4689,7 @@ FROM documents ORDER BY doc_id""")),
         Some(graft.operators.Streaks.oracleSql("events", "user_id", "ts"))),
 
       // step-interpolated time-weighted mean: lead-durations window, decimal
-      // integral, one sign-split truncating division per group
+      // integral, one truncating division per group
       RegisteredQuery(
         "q_time_weighted",
         (s, dir) => graft.operators.TimeWeighted.timeWeightedMean(
@@ -7504,7 +7502,7 @@ SELECT '0.0.0.0/0', 'default'""",
 
       // deterministic Lloyd k-means: 5 clusters, 3 rounds over 4-D
       // id-derived integer features — declared init (k smallest ids),
-      // lower-cluster ties, sign-split truncating centroid means; the
+      // lower-cluster ties, truncating centroid means; the
       // oracle unrolls the rounds as CTEs (the HITS precedent)
       RegisteredQuery(
         "q_kmeans",

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   *
   * Input: `array<struct<i: bigint, x: bigint>>` sorted ascending by `i`
   * (the operator sorts and guards). Output: `array<struct<i: bigint,
-  * fit_q6: bigint>>` where fit_q6 = sign-split truncating
+  * fit_q6: bigint>>` where fit_q6 = truncating
   * ⌊10⁶·blockSum/blockLen⌋ of the element's fitted block average —
   * trunc is monotone, so quantizing the fit ≡ the max-min of
   * per-candidate quantized averages, which is what lets the DuckDB
@@ -60,11 +60,8 @@ object IsotonicPav {
 
   val Scale = 1000000L
 
-  /** Sign-split truncating ⌊Scale·s/c⌋, c > 0. */
-  private def quantize(s: Long, c: Long): Long = {
-    val ms = Math.multiplyExact(s, Scale)
-    if (ms < 0) -((-ms) / c) else ms / c
-  }
+  /** Scale·s/c truncated toward zero, c > 0. */
+  private def quantize(s: Long, c: Long): Long = Math.multiplyExact(s, Scale) / c
 
   def compute(arr: ArrayData): ArrayData = {
     val n = arr.numElements()

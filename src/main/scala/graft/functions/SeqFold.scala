@@ -17,9 +17,9 @@ import org.apache.spark.sql.types._
   * closure dispatch, no InternalRow boxing, no O(n²) array-concat
   * accumulator).
   *
-  * Each member evaluates the DECLARED sign-split truncating recurrence
+  * Each member evaluates the DECLARED truncating recurrence
   * of its operator bit-for-bit (Java long division already truncates
-  * toward zero, which IS sign-split `div(abs(n), d)` for d > 0, so the
+  * toward zero, as Spark `div` and DuckDB `//` do, so the
   * step is a single `/`). Multiplications and additions go through
   * `Math.multiplyExact`/`addExact` — the interpreted folds ran under
   * ANSI mode where overflow raises, and that loud-failure contract is

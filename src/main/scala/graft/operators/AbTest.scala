@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import graft.ExactDiv.{quot, quotSql}
 
 /** A/B experiment comparison — per-arm moments and Welch's t against a
   * control arm, the readout step after [[graft.text.CorpusFilters]]-style
@@ -58,7 +59,7 @@ object AbTest {
 
   /** The shared diff/Welch readout over a stats frame already joined with
     * its control columns (n_c, sum_c, var_num_c): appends
-    * `mean_diff_milli` (exact sign-split integer) and `welch_t` (the one
+    * `mean_diff_milli` (exact truncated integer) and `welch_t` (the one
     * double chain; NULL on degenerate arms) after the given lead columns.
     */
   private def readout(joined: DataFrame, leadCols: Seq[Column]): DataFrame = {
@@ -75,9 +76,7 @@ object AbTest {
       .withColumn("__dd", diffDen)
       .select(leadCols ++ Seq(
         col("n").as("n_arm"), col("n_c"),
-        (signum(col("__dn")).cast("long") *
-          expr("CAST((abs(__dn) * 1000) div __dd AS BIGINT)"))
-          .as("mean_diff_milli"),
+        quot(col("__dn"), col("__dd"), 1000).as("mean_diff_milli"),
         when(col("n") >= 2 && col("n_c") >= 2 && se > 0.0,
           (col("__dn").cast("double") / col("__dd").cast("double")) / se)
           .as("welch_t")): _*)
@@ -151,8 +150,7 @@ object AbTest {
     * an effect. All arithmetic stays engine-exact: per-arm moments (n,
     * ΣX, ΣY, ΣXY, ΣXX) from ONE corpus pass, global moments DERIVED as
     * sums of the arms-sized frame (no second scan), θ quantized to
-    * micro units by sign-split truncating division (the [[GroupedTrend]]
-    * rule — both engines divide non-negative values), and the adjusted
+    * micro units by truncating division ([[graft.ExactDiv]]), and the adjusted
     * difference ⌊dY − θ·dX⌋ composed from cross-multiplied integer
     * milli diffs. Emits raw and adjusted diffs side by side — the spec's
     * imbalanced-covariate case shows the raw diff misleading and the
@@ -183,9 +181,7 @@ object AbTest {
       .withColumn("__var",
         (col("gn").cast(Dec) * col("gsxx") - col("gsx") * col("gsx")).cast(Dec))
       .select(when(col("__var") > lit(0).cast(Dec),
-        signum(col("__cov")).cast("long") *
-          expr("CAST((abs(__cov) * 1000000) div __var AS BIGINT)"))
-        .as("theta_micro")))
+        quot(col("__cov"), col("__var"), 1000000)).as("theta_micro")))
     val control = controlFrame(arms, controlArm,
       Seq("n" -> "n_c", "sx" -> "sx_c", "sy" -> "sy_c"))
     val dyN = (col("sy") * col("n_c").cast(Dec) - col("sy_c") * col("n").cast(Dec)).cast(Dec)
@@ -194,25 +190,20 @@ object AbTest {
     arms.where(col("arm") =!= controlArm)
       .crossJoin(control).crossJoin(g)
       .withColumn("__dy", dyN).withColumn("__dx", dxN).withColumn("__dd", dd)
-      .withColumn("dy_milli", signum(col("__dy")).cast("long") *
-        expr("CAST((abs(__dy) * 1000) div __dd AS BIGINT)"))
-      .withColumn("dx_milli", signum(col("__dx")).cast("long") *
-        expr("CAST((abs(__dx) * 1000) div __dd AS BIGINT)"))
-      // θ·dX in milli: sign-split so both engines truncate identically;
-      // the magnitudes multiply in DECIMAL(38,0) — a long×long product
-      // here overflows (ANSI raise / silent wrap) at |θ·dX| > 2⁶³ while
-      // the HUGEINT oracle sails on
-      .withColumn("__adjterm",
-        (signum(col("theta_micro")) * signum(col("dx_milli"))).cast("long") *
-          expr("CAST((abs(CAST(theta_micro AS DECIMAL(38,0))) * " +
-            "abs(CAST(dx_milli AS DECIMAL(38,0)))) div 1000000 AS BIGINT)"))
+      .withColumn("dy_milli", quot(col("__dy"), col("__dd"), 1000))
+      .withColumn("dx_milli", quot(col("__dx"), col("__dd"), 1000))
+      // θ·dX in milli: the product is taken in DECIMAL(38,0) — a
+      // long×long product here overflows (ANSI raise) at |θ·dX| > 2⁶³
+      // while the HUGEINT oracle sails on
+      .withColumn("__adjterm", quot(
+        col("theta_micro").cast(Dec) * col("dx_milli").cast(Dec), lit(1000000L)))
       .select(col("arm"), col("n").as("n_arm"), col("n_c"),
         col("theta_micro"), col("dy_milli").as("mean_diff_milli"),
         (col("dy_milli") - col("__adjterm")).as("adj_diff_milli"))
   }
 
   /** DuckDB replay of [[cupedCompare]] — same moment algebra, same
-    * sign-split truncating divisions.
+    * truncating divisions.
     */
   def cupedOracleSql(table: String, armSql: String, ySql: String, xSql: String,
                      controlArm: String): String =
@@ -225,9 +216,8 @@ object AbTest {
        |g AS (SELECT sum(n) AS gn, sum(sx) AS gsx, sum(sy) AS gsy,
        |    sum(sxy) AS gsxy, sum(sxx) AS gsxx FROM s),
        |th AS (SELECT CASE WHEN gn * gsxx - gsx * gsx > 0 THEN
-       |    CAST(CASE WHEN gn * gsxy - gsx * gsy < 0 THEN -1 ELSE 1 END
-       |      * ((abs(gn * gsxy - gsx * gsy) * 1000000) // (gn * gsxx - gsx * gsx))
-       |      AS BIGINT) END AS theta_micro FROM g),
+       |    ${quotSql("gn * gsxy - gsx * gsy", "gn * gsxx - gsx * gsx", 1000000)}
+       |    END AS theta_micro FROM g),
        |c AS (SELECT n AS n_c, sx AS sx_c, sy AS sy_c FROM s WHERE arm = '$controlArm'),
        |d AS (SELECT s.arm, s.n AS n_arm, c.n_c, th.theta_micro,
        |    s.sy * c.n_c - c.sy_c * s.n AS dyn,
@@ -235,15 +225,11 @@ object AbTest {
        |    CAST(s.n AS HUGEINT) * c.n_c AS dd
        |  FROM s CROSS JOIN c CROSS JOIN th WHERE s.arm <> '$controlArm'),
        |m AS (SELECT arm, n_arm, n_c, theta_micro,
-       |    CAST(CASE WHEN dyn < 0 THEN -1 ELSE 1 END
-       |      * ((abs(dyn) * 1000) // dd) AS BIGINT) AS dy_milli,
-       |    CAST(CASE WHEN dxn < 0 THEN -1 ELSE 1 END
-       |      * ((abs(dxn) * 1000) // dd) AS BIGINT) AS dx_milli
+       |    ${quotSql("dyn", "dd", 1000)} AS dy_milli,
+       |    ${quotSql("dxn", "dd", 1000)} AS dx_milli
        |  FROM d)
        |SELECT arm, n_arm, n_c, theta_micro, dy_milli AS mean_diff_milli,
-       |  dy_milli - (CASE WHEN (theta_micro < 0) <> (dx_milli < 0) THEN -1 ELSE 1 END
-       |    * CAST((abs(CAST(theta_micro AS HUGEINT)) * abs(CAST(dx_milli AS HUGEINT)))
-       |        // 1000000 AS BIGINT))
+       |  dy_milli - ${quotSql("CAST(theta_micro AS HUGEINT) * dx_milli", "1000000")}
        |    AS adj_diff_milli
        |FROM m ORDER BY arm""".stripMargin
 
@@ -341,9 +327,8 @@ object AbTest {
        |  GROUP BY 1, 2),
        |c AS (SELECT segment, n AS n_c, sum_v AS sum_c FROM s WHERE arm = '$controlArm')
        |SELECT s.segment, s.arm, s.n AS n_arm, c.n_c,
-       |  CAST(CASE WHEN s.sum_v * c.n_c - c.sum_c * s.n < 0 THEN -1 ELSE 1 END
-       |    * ((abs((s.sum_v * c.n_c - c.sum_c * s.n) * 1000)) // (s.n * c.n_c))
-       |    AS BIGINT) AS mean_diff_milli
+       |  ${quotSql("s.sum_v * c.n_c - c.sum_c * s.n", "s.n * c.n_c", 1000)}
+       |    AS mean_diff_milli
        |FROM s JOIN c USING (segment) WHERE s.arm <> '$controlArm'
        |ORDER BY s.segment, s.arm""".stripMargin
 
@@ -358,9 +343,8 @@ object AbTest {
        |  GROUP BY 1),
        |c AS (SELECT n AS n_c, sum_v AS sum_c FROM s WHERE arm = '$controlArm')
        |SELECT s.arm, s.n AS n_arm, c.n_c,
-       |  CAST(CASE WHEN s.sum_v * c.n_c - c.sum_c * s.n < 0 THEN -1 ELSE 1 END
-       |    * ((abs((s.sum_v * c.n_c - c.sum_c * s.n) * 1000)) // (s.n * c.n_c))
-       |    AS BIGINT) AS mean_diff_milli
+       |  ${quotSql("s.sum_v * c.n_c - c.sum_c * s.n", "s.n * c.n_c", 1000)}
+       |    AS mean_diff_milli
        |FROM s CROSS JOIN c WHERE s.arm <> '$controlArm'
        |ORDER BY s.arm""".stripMargin
 
@@ -369,7 +353,7 @@ object AbTest {
     * continuous values; forcing 0/1 through it works but buries the
     * rates): per non-control arm, exact per-arm rates and the
     * rate difference vs control in micro-units, cross-multiplied
-    * (`(c_a·n_ctrl − c_ctrl·n_a)·10⁶ div (n_a·n_ctrl)`, sign-split).
+    * (`(c_a·n_ctrl − c_ctrl·n_a)·10⁶ div (n_a·n_ctrl)`, truncated).
     * `convCol` must be a non-null boolean per row (a NULL conversion is
     * an unsettled outcome — resolve it upstream; silently treating it
     * as "no" biases every rate). One partial-agg'd groupBy; the control
@@ -377,12 +361,11 @@ object AbTest {
     */
   def conversionCompare(df: DataFrame, armCol: String, convCol: String,
                         controlArm: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val arms = df
       .where(col(armCol).isNotNull && col(convCol).isNotNull)
       .groupBy(col(armCol).as("arm"))
-      .agg(count(lit(1)).cast(dec).as("__n"),
-        sum(when(col(convCol), 1L).otherwise(0L)).cast(dec).as("__c"))
+      .agg(count(lit(1)).cast(Dec).as("__n"),
+        sum(when(col(convCol), 1L).otherwise(0L)).cast(Dec).as("__c"))
       .localCheckpoint(true)
     val ctrl = arms.where(col("arm") === controlArm)
       .select(col("__n").as("__nc"), col("__c").as("__cc"))
@@ -396,9 +379,8 @@ object AbTest {
         expr("CAST((__c * 1000000) div __n AS BIGINT)").as("rate_micro"),
         expr("CAST((__cc * 1000000) div __nc AS BIGINT)")
           .as("ctrl_rate_micro"),
-        expr("CAST((CASE WHEN __c * __nc - __cc * __n < 0 THEN -1 ELSE 1 END) * " +
-          "(abs((__c * __nc - __cc * __n) * 1000000) div (__n * __nc)) " +
-          "AS BIGINT)").as("rate_diff_micro"))
+        quot(col("__c") * col("__nc") - col("__cc") * col("__n"),
+          col("__n") * col("__nc"), 1000000).as("rate_diff_micro"))
   }
 
   /** DuckDB replay of [[conversionCompare]]. */
@@ -413,9 +395,7 @@ ct AS (SELECT n AS nc, c AS cc FROM s WHERE arm = '$controlArm')
 SELECT s.arm, CAST(s.n AS BIGINT) AS n, CAST(s.c AS BIGINT) AS conversions,
   CAST((s.c * 1000000) // s.n AS BIGINT) AS rate_micro,
   CAST((ct.cc * 1000000) // ct.nc AS BIGINT) AS ctrl_rate_micro,
-  CAST((CASE WHEN s.c * ct.nc - ct.cc * s.n < 0 THEN -1 ELSE 1 END) *
-    (CAST(abs((s.c * ct.nc - ct.cc * s.n) * 1000000) AS HUGEINT)
-      // (s.n * ct.nc)) AS BIGINT) AS rate_diff_micro
+  ${quotSql("s.c * ct.nc - ct.cc * s.n", "s.n * ct.nc", 1000000)} AS rate_diff_micro
 FROM s CROSS JOIN ct WHERE s.arm <> '$controlArm'
 ORDER BY s.arm""".stripMargin
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * ("dropping source X raises mean quality by 40 milli-units").
   *
   * Published quantized: the global metric, each group's LOO metric
-  * (both sign-split ⌊10⁶·num/den⌋ — numerators may be negative), and
+  * (both 10⁶·num/den truncated toward zero — numerators may be
+  * negative), and
   * their difference (a difference of the two already-quantized values:
   * declared semantics, each floor independent). A group carrying ALL
   * the denominator mass reports NULL LOO (no corpus left to measure).
@@ -48,9 +49,7 @@ object Ablation {
     def q6(num: org.apache.spark.sql.Column,
            den: org.apache.spark.sql.Column) =
       when(den <= lit(0).cast(dec), lit(null).cast("long"))
-        .otherwise((when(num < 0, lit(-1L)).otherwise(lit(1L)) *
-          call_function("div", abs(num) * lit(Scale).cast(dec), den))
-          .cast("long"))
+        .otherwise(graft.ExactDiv.quot(num, den, Scale))
     perGroup.crossJoin(broadcast(totals))
       .withColumn("metric_q6", q6(col("__tn"), col("__td")))
       .withColumn("loo_q6",
@@ -59,15 +58,14 @@ object Ablation {
         (col("loo_q6") - col("metric_q6")).as("delta_q6"))
   }
 
-  /** DuckDB replay of [[leaveOneOut]] — HUGEINT totals, same sign-split
+  /** DuckDB replay of [[leaveOneOut]] — HUGEINT totals, same truncating
     * divisions.
     */
   def oracleSql(table: String, groupCol: String, numSql: String,
                 denSql: String): String = {
     def q6(num: String, den: String) =
-      s"""CASE WHEN $den <= 0 THEN NULL
-       ELSE (CASE WHEN $num < 0 THEN -1 ELSE 1 END)
-         * ((abs($num) * $Scale) // ($den)) END"""
+      s"CASE WHEN $den <= 0 THEN NULL " +
+        s"ELSE ${graft.ExactDiv.quotSql(num, den, Scale)} END"
     s"""WITH g AS (
   SELECT $groupCol, CAST(count(*) AS BIGINT) AS n_rows,
     CAST(sum(CAST($numSql AS BIGINT)) AS HUGEINT) AS n,
@@ -78,10 +76,9 @@ object Ablation {
 t AS (SELECT CAST(coalesce(sum(n), 0) AS HUGEINT) AS tn,
     CAST(coalesce(sum(d), 0) AS HUGEINT) AS td FROM g)
 SELECT $groupCol, n_rows,
-  CAST(${q6("tn", "td")} AS BIGINT) AS metric_q6,
-  CAST(${q6("(tn - n)", "(td - d)")} AS BIGINT) AS loo_q6,
-  CAST(${q6("(tn - n)", "(td - d)")} - ${q6("tn", "td")} AS BIGINT)
-    AS delta_q6
+  ${q6("tn", "td")} AS metric_q6,
+  ${q6("tn - n", "td - d")} AS loo_q6,
+  ${q6("tn - n", "td - d")} - ${q6("tn", "td")} AS delta_q6
 FROM g, t ORDER BY $groupCol"""
   }
 }

@@ -96,10 +96,9 @@ object CohortLtv {
         col("cohort_size"),
         col("rev_cents").cast("long").as("rev_cents"),
         col("__cum").cast("long").as("cum_cents"),
-        // refunds can dip the cumulative negative: the sign-split law
-        // keeps the floor division engine-identical
-        expr("CAST((CASE WHEN __cum < 0 THEN -1 ELSE 1 END) * " +
-          "(abs(__cum) div cohort_size) AS BIGINT)").as("ltv_cents"))
+        // refunds can dip the cumulative negative: both engines
+        // truncate toward zero
+        graft.ExactDiv.quot(col("__cum"), col("cohort_size")).as("ltv_cents"))
   }
 
   /** DuckDB replay of [[curves]] — same integer month indices,
@@ -132,7 +131,6 @@ SELECT CAST((coh - 1) // 12 AS VARCHAR) || '-' ||
     lpad(CAST(((coh - 1) % 12) + 1 AS VARCHAR), 2, '0') AS cohort_month,
   CAST(age AS BIGINT) AS age_months, cohort_size,
   CAST(rev_cents AS BIGINT) AS rev_cents, CAST(cum AS BIGINT) AS cum_cents,
-  CAST((CASE WHEN cum < 0 THEN -1 ELSE 1 END) *
-    (CAST(abs(cum) AS HUGEINT) // cohort_size) AS BIGINT) AS ltv_cents
+  ${graft.ExactDiv.quotSql("cum", "cohort_size")} AS ltv_cents
 FROM cumd ORDER BY cohort_month, age_months""".stripMargin
 }

@@ -12,13 +12,13 @@ import org.apache.spark.sql.functions._
   * division is the reader's, the repo's float convention).
   *
   * Declared integer recurrence (α = a/d exact rational, milli-units,
-  * each step one sign-split truncating division — the [[ExpSmooth]]
+  * each step one truncating division — the [[ExpSmooth]]
   * ladder):
   *
   *   z_1 = x_1·1000,  p_1 = (i_1 − startIdx)·1000,  g_1 = i_1 − startIdx;
   *   g_t = i_t − i_{t−1},
-  *   z_t = sgn-div(a·x_t·1000 + (d−a)·z_{t−1}, d),
-  *   p_t = sgn-div(a·g_t·1000 + (d−a)·p_{t−1}, d)
+  *   z_t = quot(a·x_t·1000 + (d−a)·z_{t−1}, d),
+  *   p_t = quot(a·g_t·1000 + (d−a)·p_{t−1}, d)
   *
   * Zero-demand rows are FILTERED, not folded — gaps come from index
   * differences, so the operator consumes the sparse demand rows
@@ -102,9 +102,7 @@ object Croston {
                 alphaDen: Long, startIdx: Long): String = {
     val a = alphaNum
     val dma = alphaDen - alphaNum
-    def sgnDiv(num: String) =
-      s"CASE WHEN $num < 0 THEN -((-($num)) // $alphaDen) " +
-        s"ELSE ($num) // $alphaDen END"
+    def step(num: String) = graft.ExactDiv.quotSql(num, alphaDen.toString)
     val g = s"(e[1].i - acc[len(acc)].i)"
     val zNum = s"($a * e[1].xs + $dma * acc[len(acc)].z)"
     val pNum = s"($a * $g * $Scale + $dma * acc[len(acc)].p)"
@@ -120,7 +118,7 @@ pre AS (
 f AS (
   SELECT grp, list_reduce(a, (acc, e) -> list_append(acc, {
     'i': e[1].i, 'g': $g, 'xs': e[1].xs,
-    'z': ${sgnDiv(zNum)}, 'p': ${sgnDiv(pNum)}})) AS r
+    'z': ${step(zNum)}, 'p': ${step(pNum)}})) AS r
   FROM pre)
 SELECT grp AS $groupName, u.i AS idx, CAST(u.g AS BIGINT) AS gap,
   CAST(u.z AS BIGINT) AS z_q3, CAST(u.p AS BIGINT) AS p_q3

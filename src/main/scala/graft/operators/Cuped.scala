@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Per-STRATUM CUPED — [[AbTest.cupedCompare]] runs the Deng et al.
   * 2013 variance reduction once, globally, across named arms; this is
@@ -13,12 +14,12 @@ import org.apache.spark.sql.functions._
   * raw moment FRACTIONS beside the quantized readout — the audit trail
   * the global compare compresses away.
   *
-  * Exactness ladder (each step ONE declared sign-split truncating
+  * Exactness ladder (each step ONE declared truncating
   * division, composed — the repo's quantization-ladder convention):
   *
-  *   theta_q6 = sgn-div(10⁶·[nΣxy − ΣxΣy], nΣxx − (Σx)²)
-  *   ydiff_q6 / xdiff_q6 = sgn-div(10⁶·[s_t·n_c − s_c·n_t], n_t·n_c)
-  *   adj_q6   = ydiff_q6 − sgn-div(theta_q6 · xdiff_q6, 10⁶)
+  *   theta_q6 = quot(10⁶·[nΣxy − ΣxΣy], nΣxx − (Σx)²)
+  *   ydiff_q6 / xdiff_q6 = quot(10⁶·[s_t·n_c − s_c·n_t], n_t·n_c)
+  *   adj_q6   = ydiff_q6 − quot(theta_q6 · xdiff_q6, 10⁶)
   *
   * with the per-row products computed in LONG arithmetic (documented
   * bound: |x·y| and x² must fit 2⁶³ per ROW — ANSI raises loudly past
@@ -35,11 +36,6 @@ object Cuped {
 
   val Scale = 1000000L
   private val Dec = "decimal(38,0)"
-
-  private def sgnDiv(num: org.apache.spark.sql.Column,
-                     den: org.apache.spark.sql.Column) =
-    (when(num < 0, lit(-1L)).otherwise(lit(1L)) *
-      call_function("div", abs(num), den)).cast("long")
 
   /** Per group: (groupCol, n_treat, n_ctrl, cov_num, var_num,
     * theta_q6, ydiff_q6, xdiff_q6, adj_q6).
@@ -83,35 +79,30 @@ object Cuped {
                 sc: org.apache.spark.sql.Column) =
       st.cast(Dec) * nc - sc.cast(Dec) * nt
     val bothArms = col("__nt") > 0L && col("__n") - col("__nt") > 0L
-    val thetaQ = when(varNum > 0,
-      sgnDiv(covNum * lit(Scale).cast(Dec), varNum))
+    val thetaQ = when(varNum > 0, quot(covNum, varNum, Scale))
     val ydiffQ = when(bothArms,
-      sgnDiv(armDiff(col("__syt"), col("__syc")) * lit(Scale).cast(Dec),
-        armDen))
+      quot(armDiff(col("__syt"), col("__syc")), armDen, Scale))
     val xdiffQ = when(bothArms,
-      sgnDiv(armDiff(col("__sxt"), col("__sxc")) * lit(Scale).cast(Dec),
-        armDen))
+      quot(armDiff(col("__sxt"), col("__sxc")), armDen, Scale))
     agg.select(col(groupCol),
       col("__nt").as("n_treat"),
       (col("__n") - col("__nt")).as("n_ctrl"),
       covNum.cast("string").as("cov_num"),
       varNum.cast("string").as("var_num"),
       thetaQ.as("theta_q6"), ydiffQ.as("ydiff_q6"), xdiffQ.as("xdiff_q6"),
-      (ydiffQ - sgnDiv(thetaQ.cast(Dec) * xdiffQ.cast(Dec),
-        lit(Scale).cast(Dec))).as("adj_q6"))
+      (ydiffQ - quot(thetaQ.cast(Dec) * xdiffQ.cast(Dec), lit(Scale)))
+        .as("adj_q6"))
   }
 
   /** DuckDB replay; `rowsSql` yields (grp, t, x, y). */
   def oracleSql(rowsSql: String, groupName: String): String = {
-    def sd(num: String, den: String) =
-      s"CASE WHEN $num < 0 THEN -((-($num)) // ($den)) ELSE ($num) // ($den) END"
     val covNum = "(n * sxy - sx * sy)"
     val varNum = "(n * sxx - sx * sx)"
     val yNum = "(syt * nc - syc * nt)"
     val xNum = "(sxt * nc - sxc * nt)"
-    val theta = sd(s"$covNum * $Scale", varNum)
-    val ydiff = sd(s"$yNum * $Scale", "nt * nc")
-    val xdiff = sd(s"$xNum * $Scale", "nt * nc")
+    val theta = quotSql(covNum, varNum, Scale)
+    val ydiff = quotSql(yNum, "nt * nc", Scale)
+    val xdiff = quotSql(xNum, "nt * nc", Scale)
     s"""WITH a AS (SELECT grp, CAST(count(*) AS HUGEINT) AS n,
     CAST(sum(t) AS HUGEINT) AS nt,
     CAST(count(*) - sum(t) AS HUGEINT) AS nc,
@@ -127,12 +118,12 @@ object Cuped {
 SELECT grp AS $groupName, CAST(nt AS BIGINT) AS n_treat,
   CAST(nc AS BIGINT) AS n_ctrl,
   CAST($covNum AS VARCHAR) AS cov_num, CAST($varNum AS VARCHAR) AS var_num,
-  CAST(CASE WHEN $varNum > 0 THEN $theta END AS BIGINT) AS theta_q6,
-  CAST(CASE WHEN nt > 0 AND nc > 0 THEN $ydiff END AS BIGINT) AS ydiff_q6,
-  CAST(CASE WHEN nt > 0 AND nc > 0 THEN $xdiff END AS BIGINT) AS xdiff_q6,
-  CAST(CASE WHEN $varNum > 0 AND nt > 0 AND nc > 0
-       THEN ($ydiff) - ${sd(s"($theta) * ($xdiff)", Scale.toString)}
-  END AS BIGINT) AS adj_q6
+  CASE WHEN $varNum > 0 THEN $theta END AS theta_q6,
+  CASE WHEN nt > 0 AND nc > 0 THEN $ydiff END AS ydiff_q6,
+  CASE WHEN nt > 0 AND nc > 0 THEN $xdiff END AS xdiff_q6,
+  CASE WHEN $varNum > 0 AND nt > 0 AND nc > 0
+       THEN $ydiff - ${quotSql(s"CAST($theta AS HUGEINT) * $xdiff", Scale.toString)}
+  END AS adj_q6
 FROM a ORDER BY grp"""
   }
 }

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * dense spine lag(1)/lag(7) are calendar-exact by construction, and a
   * zero-filled outage day shows a −100% drop instead of no row.
   *
-  * Percent changes are integer basis points with the sign-split
-  * truncating division law (`sign·(|Δ|·10⁴ div |prev|)`, NULL when the
-  * baseline is 0 or missing — a change from zero has no percentage).
+  * Percent changes are integer basis points, `Δ·10⁴ div |prev|`
+  * truncated toward zero ([[graft.ExactDiv]]), NULL when the baseline is
+  * 0 or missing — a change from zero has no percentage.
   *
   * Scale shape: denseDaily's posture (output-sized spine) plus one
   * per-group rank window over DAYS (day-cardinality, not row-cardinality).
@@ -35,17 +35,15 @@ object Deltas {
       .withColumn("__p7", lag(col("sum_value"), 7).over(ord).cast("decimal(38,0)"))
     def bp(prevCol: String): org.apache.spark.sql.Column =
       when(col(prevCol).isNotNull && col(prevCol) =!= 0,
-        expr(s"CAST((CASE WHEN (CAST(sum_value AS DECIMAL(38,0)) - $prevCol) < 0 " +
-          s"THEN -1 ELSE 1 END) * " +
-          s"(abs(CAST(sum_value AS DECIMAL(38,0)) - $prevCol) * 10000 " +
-          s"div abs($prevCol)) AS BIGINT)"))
+        graft.ExactDiv.quot(col("sum_value").cast("decimal(38,0)") - col(prevCol),
+          abs(col(prevCol)), 10000))
     withLags
       .select(col(groupCol), col("day"), col("n_rows"), col("sum_value"),
         bp("__p1").as("dod_bp"), bp("__p7").as("wow_bp"))
   }
 
   /** DuckDB replay of [[dayOverDay]] — the dense-spine CTE plus the same
-    * lag/sign-split arithmetic (HUGEINT floor on magnitudes).
+    * lag and truncating division.
     */
   def oracleSql(table: String, groupCol: String, dateCol: String,
                 valueSql: String): String = {
@@ -53,9 +51,9 @@ object Deltas {
     def bp(n: Int) =
       s"""CASE WHEN lag(sum_value, $n) OVER w IS NOT NULL
        AND lag(sum_value, $n) OVER w <> 0
-  THEN CAST((CASE WHEN sum_value - lag(sum_value, $n) OVER w < 0 THEN -1 ELSE 1 END) *
-    (CAST(abs(CAST(sum_value AS DECIMAL(38,0)) - lag(sum_value, $n) OVER w) AS HUGEINT) * 10000
-      // CAST(abs(lag(sum_value, $n) OVER w) AS HUGEINT)) AS BIGINT) END"""
+  THEN ${graft.ExactDiv.quotSql(
+        s"CAST(sum_value AS DECIMAL(38,0)) - lag(sum_value, $n) OVER w",
+        s"abs(lag(sum_value, $n) OVER w)", 10000)} END"""
     s"""WITH dense AS ($dense)
 SELECT $groupCol, day, n_rows, sum_value,
   ${bp(1)} AS dod_bp,

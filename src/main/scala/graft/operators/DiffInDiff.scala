@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Difference-in-differences — the quasi-experimental readout when there
   * was no randomized assignment: compare the treated group's pre→post
@@ -16,11 +17,11 @@ import org.apache.spark.sql.functions._
   *
   * with each arm's pre→post delta published as an EXACT integer
   * rational: cross-multiplied over that arm's two cell counts and
-  * floor-divided to micro-units (1e−6 of the value's unit) with the
-  * sign-split law, so the readout hashes cross-engine. `did_micro` is
-  * BY CONTRACT the difference of the two independently-truncated arm
-  * deltas — each is within 1 micro-unit of its exact value, so did is
-  * within 2 micro-units; that bounded truncation is the price of
+  * divided to micro-units (1e−6 of the value's unit), truncated toward
+  * zero by [[graft.ExactDiv]], so the readout hashes cross-engine.
+  * `did_micro` is BY CONTRACT the difference of the two
+  * independently-truncated arm deltas — each is within 1 micro-unit of
+  * its exact value, so did is within 2 micro-units; that bounded truncation is the price of
   * keeping magnitudes at cell-sum × one-cell-count × 1e6 (fits
   * DECIMAL(38,0)/HUGEINT past 10¹⁰ rows per cell of cents, where the
   * single-fraction form's n⁴ common denominator overflows around 10⁶).
@@ -60,28 +61,26 @@ object DiffInDiff {
         n(false, true).as("__n_cp"), n(false, false).as("__n_c0"),
         s(true, true).as("__s_tp"), s(true, false).as("__s_t0"),
         s(false, true).as("__s_cp"), s(false, false).as("__s_c0"))
-    // micro-unit sign-split floor division, guarded: an empty cell makes
+    // micro-unit truncating division, guarded: an empty cell makes
     // the estimator undefined — the guard rides INSIDE each estimate
     // column (a standalone dropped guard column would be pruned away)
     val emptyCell = expr(
       "__n_tp = 0 OR __n_t0 = 0 OR __n_cp = 0 OR __n_c0 = 0")
-    def microDiv(num: String, den: String) =
+    def delta(post: String, pre: String) = {
+      val (sp, s0, np, n0) = (col(s"__s_$post"), col(s"__s_$pre"),
+        col(s"__n_$post"), col(s"__n_$pre"))
       when(emptyCell, raise_error(lit(
         "diff-in-diff needs all four (arm × period) cells populated")))
-        .otherwise(expr(s"CAST((CASE WHEN $num < 0 THEN -1 ELSE 1 END) * " +
-          s"(abs($num) div ($den)) AS BIGINT)"))
+        .otherwise(quot(sp * n0 - s0 * np, np * n0, 1000000))
+    }
     cells
-      .withColumn("__dt_num",
-        expr(s"(__s_tp * __n_t0 - __s_t0 * __n_tp) * 1000000"))
-      .withColumn("__dc_num",
-        expr(s"(__s_cp * __n_c0 - __s_c0 * __n_cp) * 1000000"))
       .select(
         col("__n_tp").cast("long").as("n_treat_post"),
         col("__n_t0").cast("long").as("n_treat_pre"),
         col("__n_cp").cast("long").as("n_ctrl_post"),
         col("__n_c0").cast("long").as("n_ctrl_pre"),
-        microDiv("__dt_num", "__n_tp * __n_t0").as("delta_treat_micro"),
-        microDiv("__dc_num", "__n_cp * __n_c0").as("delta_ctrl_micro"))
+        delta("tp", "t0").as("delta_treat_micro"),
+        delta("cp", "c0").as("delta_ctrl_micro"))
       // the contract form: difference of the two truncated arm deltas —
       // bounded 2-micro-unit truncation instead of an n⁴ denominator
       .withColumn("did_micro",
@@ -89,13 +88,11 @@ object DiffInDiff {
   }
 
   /** DuckDB replay of [[did]] — same conditional cells, HUGEINT
-    * magnitudes, same sign-split micro division.
+    * magnitudes, same truncating micro division.
     */
   def oracleSql(table: String, treatSql: String, postSql: String,
                 valueSql: String): String = {
-    def micro(num: String, den: String) =
-      s"CAST((CASE WHEN $num < 0 THEN -1 ELSE 1 END) * " +
-        s"(CAST(abs($num) AS HUGEINT) // CAST($den AS HUGEINT)) AS BIGINT)"
+    def micro(num: String, den: String) = quotSql(num, den, 1000000)
     s"""WITH b AS (
   SELECT CAST($treatSql AS BOOLEAN) AS t, CAST($postSql AS BOOLEAN) AS p,
     CAST($valueSql AS HUGEINT) AS v
@@ -115,10 +112,10 @@ c AS (
   FROM b)
 SELECT CAST(n_tp AS BIGINT) AS n_treat_post, CAST(n_t0 AS BIGINT) AS n_treat_pre,
   CAST(n_cp AS BIGINT) AS n_ctrl_post, CAST(n_c0 AS BIGINT) AS n_ctrl_pre,
-  ${micro("(s_tp * n_t0 - s_t0 * n_tp) * 1000000", "n_tp * n_t0")} AS delta_treat_micro,
-  ${micro("(s_cp * n_c0 - s_c0 * n_cp) * 1000000", "n_cp * n_c0")} AS delta_ctrl_micro,
-  ${micro("(s_tp * n_t0 - s_t0 * n_tp) * 1000000", "n_tp * n_t0")} -
-  ${micro("(s_cp * n_c0 - s_c0 * n_cp) * 1000000", "n_cp * n_c0")} AS did_micro
+  ${micro("s_tp * n_t0 - s_t0 * n_tp", "n_tp * n_t0")} AS delta_treat_micro,
+  ${micro("s_cp * n_c0 - s_c0 * n_cp", "n_cp * n_c0")} AS delta_ctrl_micro,
+  ${micro("s_tp * n_t0 - s_t0 * n_tp", "n_tp * n_t0")} -
+  ${micro("s_cp * n_c0 - s_c0 * n_cp", "n_cp * n_c0")} AS did_micro
 FROM c""".stripMargin
   }
 }

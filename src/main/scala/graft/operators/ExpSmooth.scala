@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.quotSql
 
 /** Integer exponential smoothing — the recursive half of the smoothing
   * family ([[DecayScore]] decays each event independently and SUMS;
@@ -9,7 +10,7 @@ import org.apache.spark.sql.functions._
   * classical EWMA a forecast/alerting baseline wants). Float EWMA never
   * replays cross-engine (the accumulation chain compounds rounding), so
   * the recurrence here is DECLARED in integers: α = p/q exact rational,
-  * values scaled by 10³, each step one sign-split truncating division —
+  * values scaled by 10³, each step one truncating division —
   *
   *   s_1 = x_1·1000;   s_t = sgn(n_t)·(|n_t| div q),
   *   n_t = p·x_t·1000 + (q−p)·s_{t−1}
@@ -104,8 +105,8 @@ object ExpSmooth {
     * for the caller): with α = p/q and β = r/w exact rationals,
     *
     *   l_1 = x_1·1000, b_1 = 0;
-    *   l_t = sgn-div(p·x_t·1000 + (q−p)·(l_{t−1} + b_{t−1}), q),
-    *   b_t = sgn-div(r·(l_t − l_{t−1}) + (w−r)·b_{t−1}, w)
+    *   l_t = quot(p·x_t·1000 + (q−p)·(l_{t−1} + b_{t−1}), q),
+    *   b_t = quot(r·(l_t − l_{t−1}) + (w−r)·b_{t−1}, w)
     *
     * — two truncating divisions per step, same fold posture, same
     * contracts as [[smooth]]. Returns (groupCol, idx, level_q3,
@@ -174,11 +175,9 @@ object ExpSmooth {
     val last = "acc[len(acc)]"
     // e[1].l is x_t·Scale (the pre-mapped singleton), so p·x·Scale = p·e[1].l
     val lNum = s"($p * e[1].l + $qmp * ($last.l + $last.b))"
-    val lStep = s"CASE WHEN $lNum < 0 THEN -((-$lNum) // $alphaDen) " +
-      s"ELSE $lNum // $alphaDen END"
+    val lStep = quotSql(lNum, alphaDen.toString)
     val bNum = s"($r * (($lStep) - $last.l) + $wmr * $last.b)"
-    val bStep = s"CASE WHEN $bNum < 0 THEN -((-$bNum) // $betaDen) " +
-      s"ELSE $bNum // $betaDen END"
+    val bStep = quotSql(bNum, betaDen.toString)
     s"""WITH arr AS (
   SELECT grp, list({'i': i, 'x': x} ORDER BY i, x) AS a
   FROM ($seriesSql) WHERE i IS NOT NULL AND x IS NOT NULL GROUP BY grp),
@@ -210,8 +209,7 @@ ORDER BY $groupName, idx"""
     val qmp = alphaDen - alphaNum
     // e[1].s is x·Scale, so p·x·Scale = p·e[1].s
     val num = s"($p * e[1].s + $qmp * acc[len(acc)].s)"
-    val step = s"CASE WHEN $num < 0 THEN -((-$num) // $alphaDen) " +
-      s"ELSE $num // $alphaDen END"
+    val step = quotSql(num, alphaDen.toString)
     s"""WITH arr AS (
   SELECT grp, list({'i': i, 'x': x} ORDER BY i, x) AS a
   FROM ($seriesSql) WHERE i IS NOT NULL AND x IS NOT NULL GROUP BY grp),
@@ -238,9 +236,9 @@ ORDER BY $groupName, idx"""
     * season runs plain Holt and seasonals accumulate from observation):
     *
     *   l_1 = x_1·1000, b_1 = 0, s_1 = 0;
-    *   l_t = sgn-div(p·(x_t·1000 − s̃) + (q−p)·(l_{t−1} + b_{t−1}), q)
-    *   b_t = sgn-div(r·(l_t − l_{t−1}) + (w−r)·b_{t−1}, w)
-    *   s_t = sgn-div(g·(x_t·1000 − l_t) + (v−g)·s̃, v)
+    *   l_t = quot(p·(x_t·1000 − s̃) + (q−p)·(l_{t−1} + b_{t−1}), q)
+    *   b_t = quot(r·(l_t − l_{t−1}) + (w−r)·b_{t−1}, w)
+    *   s_t = quot(g·(x_t·1000 − l_t) + (v−g)·s̃, v)
     *
     * — three truncating divisions per step, same fold posture and
     * contracts as [[holt]]. Returns (groupCol, idx, level_q3, trend_q3,
@@ -318,14 +316,11 @@ ORDER BY $groupName, idx"""
       s"THEN acc[len(acc) - ${period - 1}].s ELSE 0 END)"
     // e[1].l is x_t·Scale (the pre-mapped singleton)
     val lNum = s"($p * (e[1].l - $sm) + $qmp * ($last.l + $last.b))"
-    val lStep = s"CASE WHEN $lNum < 0 THEN -((-$lNum) // $alphaDen) " +
-      s"ELSE $lNum // $alphaDen END"
+    val lStep = quotSql(lNum, alphaDen.toString)
     val bNum = s"($r * (($lStep) - $last.l) + $wmr * $last.b)"
-    val bStep = s"CASE WHEN $bNum < 0 THEN -((-$bNum) // $betaDen) " +
-      s"ELSE $bNum // $betaDen END"
+    val bStep = quotSql(bNum, betaDen.toString)
     val sNum = s"($g * (e[1].l - ($lStep)) + $vmg * $sm)"
-    val sStep = s"CASE WHEN $sNum < 0 THEN -((-$sNum) // $gammaDen) " +
-      s"ELSE $sNum // $gammaDen END"
+    val sStep = quotSql(sNum, gammaDen.toString)
     s"""WITH arr AS (
   SELECT grp, list({'i': i, 'x': x} ORDER BY i, x) AS a
   FROM ($seriesSql) WHERE i IS NOT NULL AND x IS NOT NULL GROUP BY grp),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fleiss' kappa — chance-corrected agreement for MANY raters: Cohen's
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   *   κ = (A·N²r² − C·N·r(r−1)) / (N·r(r−1)·(N²r² − C))
   *
-  * — one sign-split truncating q6 division over DECIMAL(38,0)
+  * — one truncating q6 division over DECIMAL(38,0)
   * magnitudes (N ≤ ~10⁶ items with r ≤ 100 stays inside the window).
   * C = N²r² means every rating fell in one category — agreement is
   * vacuous and kappa publishes NULL (the [[ModelEval.kappa]]
@@ -51,9 +51,6 @@ object FleissKappa {
       sum(col("__s2")).as("__sumS2"))
     val catAgg = cells.groupBy(col("__c")).agg(sum(col("__n")).as("__ct"))
       .agg(sum(col("__ct").cast(dec) * col("__ct")).as("__C"))
-    def sgnDiv(num: Column, den: Column): Column =
-      when(num < 0, lit(-1)).otherwise(lit(1)).cast(dec) *
-        call_function("div", abs(num), den)
     itemAgg.crossJoin(catAgg)
       .select(
         when(col("__rmin") =!= col("__rmax"), raise_error(concat(
@@ -73,8 +70,7 @@ object FleissKappa {
         val n2r2 = n * n * r * r
         val nrr1 = n * r * (r - lit(1))
         when(n2r2 === c, lit(null).cast("long"))
-          .otherwise(sgnDiv((a * n2r2 - c * nrr1) * Scale, nrr1 * (n2r2 - c))
-            .cast("long"))
+          .otherwise(graft.ExactDiv.quot(a * n2r2 - c * nrr1, nrr1 * (n2r2 - c), Scale))
       }.as("kappa_q6"))
   }
 
@@ -93,16 +89,12 @@ ca AS (
   FROM (SELECT cat, sum(n) AS ct FROM cells GROUP BY cat))
 SELECT CAST(nitems AS BIGINT) AS n_items, CAST(rr AS BIGINT) AS raters,
   CASE WHEN CAST(nitems AS HUGEINT) * nitems * rr * rr = c THEN NULL
-    ELSE CAST(
-      (CASE WHEN ((CAST(sums2 AS HUGEINT) - CAST(nitems AS HUGEINT) * rr)
-          * (CAST(nitems AS HUGEINT) * nitems * rr * rr)
-        - c * (CAST(nitems AS HUGEINT) * rr * (rr - 1))) < 0
-        THEN -1 ELSE 1 END) *
-      (abs((CAST(sums2 AS HUGEINT) - CAST(nitems AS HUGEINT) * rr)
-          * (CAST(nitems AS HUGEINT) * nitems * rr * rr)
-        - c * (CAST(nitems AS HUGEINT) * rr * (rr - 1))) * $Scale
-       // ((CAST(nitems AS HUGEINT) * rr * (rr - 1))
-          * (CAST(nitems AS HUGEINT) * nitems * rr * rr - c)))
-      AS BIGINT) END AS kappa_q6
+    ELSE ${graft.ExactDiv.quotSql(
+      "(CAST(sums2 AS HUGEINT) - CAST(nitems AS HUGEINT) * rr)" +
+        " * (CAST(nitems AS HUGEINT) * nitems * rr * rr)" +
+        " - c * (CAST(nitems AS HUGEINT) * rr * (rr - 1))",
+      "(CAST(nitems AS HUGEINT) * rr * (rr - 1))" +
+        " * (CAST(nitems AS HUGEINT) * nitems * rr * rr - c)", Scale)}
+  END AS kappa_q6
 FROM ia, ca"""
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Graph mixing summary — reciprocity and degree assortativity over a
   * directed edge list: the two one-number diagnostics that say what KIND
@@ -73,9 +74,8 @@ object GraphMixing {
     def div(a: Column, b: Column): Column = call_function("div", a, b)
     val r2s = when(col("m") === 0 || varj === lit(0).cast(dec) || vark === lit(0).cast(dec),
       lit(null).cast("long"))
-      .otherwise((when(cov < 0, lit(-1).cast(dec)).otherwise(lit(1).cast(dec)) *
-        div(div((cov * cov).cast(dec), varj) * lit(Scale).cast(dec), vark))
-        .cast("long"))
+      // cov·|cov| carries cov's sign with cov²'s magnitude
+      .otherwise(quot(quot(cov * abs(cov), varj).cast(dec), vark, Scale))
     joined.select(
       col("m"),
       col("recip_edges"),
@@ -109,8 +109,7 @@ SELECT CAST(m AS BIGINT) AS m, CAST(rc AS BIGINT) AS recip_edges,
   CASE WHEN m = 0 THEN NULL ELSE CAST(m * sj2 - sj * sj AS BIGINT) END AS varj,
   CASE WHEN m = 0 THEN NULL ELSE CAST(m * sk2 - sk * sk AS BIGINT) END AS vark,
   CASE WHEN m = 0 OR m * sj2 - sj * sj = 0 OR m * sk2 - sk * sk = 0 THEN NULL
-       ELSE CAST((CASE WHEN m * sjk - sj * sk < 0 THEN -1 ELSE 1 END) *
-         ((((m * sjk - sj * sk) * (m * sjk - sj * sk) // (m * sj2 - sj * sj))
-           * $Scale) // (m * sk2 - sk * sk)) AS BIGINT) END AS r2s_q6
+       ELSE ${quotSql(quotSql("(m * sjk - sj * sk) * abs(m * sjk - sj * sk)",
+         "m * sj2 - sj * sj"), "m * sk2 - sk * sk", Scale)} END AS r2s_q6
 FROM mo, r"""
 }

@@ -225,8 +225,8 @@ s$i AS (
 
   /** DuckDB replay of [[pageRankInt]]: the same integer recurrence unrolled
     * into `iters` CTE layers over the edge set produced by `edgesSelect`
-    * (a SELECT yielding `src`, `dst`). `//` is DuckDB's floor division —
-    * identical to Spark's `div` on the non-negative values used here.
+    * (a SELECT yielding `src`, `dst`). DuckDB's `//` on integers truncates
+    * toward zero, as Spark's `div` does (see [[graft.ExactDiv]]).
     */
   def oracleSql(edgesSelect: String, iters: Int = 5, startScore: Long = 1000000L,
                 dampNum: Long = 85, dampDen: Long = 100): String = {

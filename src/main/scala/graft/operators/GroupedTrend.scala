@@ -13,11 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * so with integer-valued x and y every term is exact: sums accumulate in
   * DECIMAL(38,0) (order-independent, no float drift at any partitioning),
-  * and the quantized slope is emitted via SIGN-SPLIT truncating division
-  * `sign(num) · ((|num|·SCALE) div den)` — both engines divide
-  * non-negative values, so floor-vs-truncate divergence on negative
-  * numerators cannot occur. den = 0 (a single distinct x, slope
-  * undefined) yields NULL.
+  * and the quantized slope is emitted via truncating division
+  * `(num·SCALE) div den` ([[graft.ExactDiv]] — both engines truncate
+  * toward zero). den = 0 (a single distinct x, slope undefined) yields
+  * NULL.
   *
   * Scale shape (100 TB fact table): ONE shuffle — the groupBy — carrying
   * four decimal partials per (group, partition) whatever the group sizes;
@@ -98,17 +97,14 @@ object GroupedTrend {
   private def crossMoment(sab: String, sa: String, sb: String) =
     (col("__tn").cast(Dec) * col(sab) - col(sa) * col(sb)).cast(Dec)
 
-  def slopeFromSums(sums: DataFrame, groupCols: Seq[String]): DataFrame = {
-    val dec = Dec
+  def slopeFromSums(sums: DataFrame, groupCols: Seq[String]): DataFrame =
     sums
       .withColumn("__num", crossMoment("__tsxy", "__tsx", "__tsy"))
       .withColumn("__den", crossMoment("__tsxx", "__tsx", "__tsx"))
       .withColumn("slope_q",
-        when(col("__den") === lit(0).cast(dec), lit(null).cast("long"))
-          .otherwise((signum(col("__num")).cast("long") *
-            expr(s"CAST((abs(__num) * $Scale) div __den AS BIGINT)"))))
+        when(col("__den") === lit(0).cast(Dec), lit(null).cast("long"))
+          .otherwise(graft.ExactDiv.quot(col("__num"), col("__den"), Scale)))
       .select(groupCols.map(col) ++ Seq(col("__tn").as("n"), col("slope_q")): _*)
-  }
 
   /** Per-group Pearson correlation in the same exact-integer discipline —
     * the feature-screening sibling of [[slope]] ("which columns move
@@ -188,8 +184,7 @@ FROM s"""
   }
 
   /** DuckDB replay of [[slope]] — HUGEINT sums (exact 128-bit), the same
-    * sign-split truncating division (`//` on non-negative HUGEINTs is the
-    * same truncation as Spark's `div`).
+    * truncating division ([[graft.ExactDiv]]).
     */
   def oracleSql(table: String, groupCols: Seq[String], xSql: String,
                 ySql: String): String = {
@@ -197,8 +192,7 @@ FROM s"""
     s"""WITH s AS (${sumsCteSql(table, g, xSql, ySql, withYY = false)})
 SELECT $g, n,
   CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-       ELSE CAST(CASE WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 1 END
-         * ((abs(n * sxy - sx * sy) * $Scale) // (n * sxx - sx * sx)) AS BIGINT)
+       ELSE ${graft.ExactDiv.quotSql("n * sxy - sx * sy", "n * sxx - sx * sx", Scale)}
   END AS slope_q
 FROM s"""
   }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * moderate overruns, not a shield for raw-event groups too large to
   * collect at all; pre-aggregate onto a spine upstream — r10 review
   * scoping). Published as
-  * `fit_q6` = sign-split truncating ⌊10⁶·blockAvg⌋ — trunc is
+  * `fit_q6` = truncating ⌊10⁶·blockAvg⌋ — trunc is
   * monotone, so it commutes with the max-min and the DuckDB oracle can
   * replay the identity over identically-quantized candidate averages.
   *
@@ -66,8 +66,8 @@ object Isotonic {
           .otherwise(col("__e.fit_q6")).as("fit_q6"))
   }
 
-  /** DuckDB replay via the minimax identity with identical sign-split
-    * truncating quantization applied per CANDIDATE average — legal
+  /** DuckDB replay via the minimax identity with identical truncating
+    * quantization applied per CANDIDATE average — legal
     * because trunc is monotone and commutes with max/min. O(n³) per
     * group: an oracle for calendar-scale gate series, not a production
     * path. `seriesSql` must yield (grp, i, x) with one row per (grp, i).
@@ -82,9 +82,7 @@ p AS (SELECT grp, i, x, r,
   FROM o),
 cand AS (
   SELECT a.grp, a.r AS ri, a.i AS idx, j.r AS rj,
-    min(CASE WHEN 1000000 * (k.cp - j.cp + j.x) < 0
-         THEN -((-(1000000 * (k.cp - j.cp + j.x))) // (k.r - j.r + 1))
-         ELSE (1000000 * (k.cp - j.cp + j.x)) // (k.r - j.r + 1) END) AS mn
+    min(${graft.ExactDiv.quotSql("k.cp - j.cp + j.x", "k.r - j.r + 1", 1000000)}) AS mn
   FROM p a
   JOIN p j ON j.grp IS NOT DISTINCT FROM a.grp AND j.r <= a.r
   JOIN p k ON k.grp IS NOT DISTINCT FROM a.grp AND k.r >= a.r

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * of the k SMALLEST ids (k-means++ needs RNG; a declared init is the
   * price of determinism — callers wanting spread pass a pre-shuffled id
   * space); assignment is exact integer squared-L2 argmin with ties to
-  * the LOWER cluster index; the centroid update is the sign-split
+  * the LOWER cluster index; the centroid update is the
   * truncating per-dimension mean ⌊Σv/n⌋ (centroids stay integer — the
   * declared quantization, same ladder as every q6 in the repo); an
   * empty cluster KEEPS its previous centroid; a fixed `rounds` count
@@ -90,8 +90,8 @@ object KMeans {
       sums.foreach { r =>
         val (c, d) = (r.getLong(0).toInt, r.getInt(1))
         val (s, n) = (r.getLong(2), r.getLong(3))
-        // sign-split truncating mean — the declared integer quantization
-        next(c)(d) = if (s < 0) -((-s) / n) else s / n
+        // truncating mean — the declared integer quantization
+        next(c)(d) = s / n
       }
       centroids = next
     }
@@ -116,16 +116,14 @@ object KMeans {
   }
 
   /** DuckDB replay: the unrolled-CTE round chain (the HITS/LPA
-    * precedent) — cross-join argmin with the same tie rule, sign-split
-    * per-dim truncating means, empty clusters carrying forward.
+    * precedent) — cross-join argmin with the same tie rule, per-dim
+    * truncating means, empty clusters carrying forward.
     * `pointsSql` yields (id, v LIST); d must match `dim`.
     */
   def assignOracle(pointsSql: String, idName: String, k: Int, rounds: Int,
                    dim: Int): String = {
     val dims = 1 to dim
-    def meanExpr(i: Int) =
-      s"CASE WHEN sum(v[$i]) < 0 THEN -((-sum(v[$i])) // count(*)) " +
-        s"ELSE sum(v[$i]) // count(*) END"
+    def meanExpr(i: Int) = graft.ExactDiv.quotSql(s"sum(v[$i])", "count(*)")
     val distExpr = dims.map(i => s"(p.v[$i] - c.v[$i]) * (p.v[$i] - c.v[$i])")
       .mkString(" + ")
     val roundsCtes = (1 to rounds).map { r =>

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *   α = 1 − Do/De = (A − B)/A,   A = Λ·(n² − Σ_c n_c²),
   *   B = (n−1)·Σᵤ Λ·(mᵤ² − Σ_c n_uc²)/(mᵤ−1)
   *
-  * is ONE sign-split truncating division of DECIMAL(38,0) integers
+  * is ONE truncating division of DECIMAL(38,0) integers
   * (negative alpha — systematic disagreement — is a real finding). A
   * single observed label (A = 0) reports NULL: agreement about a
   * vacuous label space is undefined. Rating multiplicities are bounded
@@ -90,10 +90,7 @@ object Krippendorff {
       .select(col("n_units"), col("__nn").as("n_ratings"),
         when(col("__nvals") <= 1 || a === lit(0).cast(dec),
           lit(null).cast("long"))
-          .otherwise(
-            (when(num < 0, lit(-1L)).otherwise(lit(1L)) *
-              call_function("div", abs(num) * lit(Scale).cast(dec), a))
-              .cast("long"))
+          .otherwise(graft.ExactDiv.quot(num, a, Scale))
           .as("alpha_q6"))
   }
 
@@ -122,11 +119,8 @@ ds AS (SELECT CAST(coalesce(sum(
   FROM un)
 SELECT n_units, CAST(nn AS BIGINT) AS n_ratings,
   CASE WHEN nvals <= 1 OR l * (nn * nn - sc2) = 0 THEN NULL
-       ELSE CAST(
-    (CASE WHEN l * (nn * nn - sc2) - (nn - 1) * do_s < 0
-          THEN -1 ELSE 1 END)
-    * ((abs(l * (nn * nn - sc2) - (nn - 1) * do_s)
-        * $Scale) // (l * (nn * nn - sc2))) AS BIGINT)
+       ELSE ${graft.ExactDiv.quotSql(
+         "l * (nn * nn - sc2) - (nn - 1) * do_s", "l * (nn * nn - sc2)", Scale)}
   END AS alpha_q6
 FROM ds, tot, lam"""
 }

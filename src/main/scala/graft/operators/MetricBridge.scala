@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *               \_________mix________/   \______rate______/
   *
   * both terms are exact rationals — mix = (d₂D₁−d₁D₂)·n₁/(D₁D₂d₁),
-  * rate = (n₂d₁−n₁d₂)/(D₂d₁) — each published as ONE sign-split
-  * ⌊10⁶·…⌋ division (contrib_q6 = their sum: two independent floors,
+  * rate = (n₂d₁−n₁d₂)/(D₂d₁) — each published as ONE truncating
+  * 10⁶·… division (contrib_q6 = their sum: two independent floors,
   * declared; the pre-quantization identity is exact). Entering
   * segments (d₁ = 0) are ALL mix — ⌊10⁶·n₂/D₂⌋ with rate 0; exiting
   * segments need no case at all (the general mix formula collapses to
@@ -59,9 +59,7 @@ object MetricBridge {
     val totals = wide.agg(sum(col("__da")).as("__tda"),
       sum(col("__db")).as("__tdb"))
     def q6(num: org.apache.spark.sql.Column,
-           den: org.apache.spark.sql.Column) =
-      when(num < 0, lit(-1L)).otherwise(lit(1L)) *
-        call_function("div", abs(num) * lit(Scale).cast(dec), den)
+           den: org.apache.spark.sql.Column) = graft.ExactDiv.quot(num, den, Scale)
     val withT = wide.crossJoin(broadcast(totals))
       .withColumn("__chk",
         when(col("__tda") === z || col("__tdb") === z,
@@ -95,14 +93,12 @@ object MetricBridge {
     */
   def oracleSql(cellsSql: String, segName: String, periodA: String,
                 periodB: String): String = {
-    def q6(num: String, den: String) =
-      s"""(CASE WHEN $num < 0 THEN -1 ELSE 1 END)
-      * ((abs($num) * $Scale) // ($den))"""
+    def q6(num: String, den: String) = graft.ExactDiv.quotSql(num, den, Scale)
     val mix = s"""CASE WHEN da > 0
       THEN ${q6("(db * tda - da * tdb) * na", "tda * tdb * da")}
       ELSE ${q6("nb", "tdb")} END"""
     val rate = s"""CASE WHEN da > 0
-      THEN ${q6("(nb * da - na * db)", "tdb * da")}
+      THEN ${q6("nb * da - na * db", "tdb * da")}
       ELSE 0 END"""
     s"""WITH w AS (
   SELECT seg AS $segName,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Classifier-output evaluation — the per-class report and the
   * chance-corrected agreement coefficient, both exact. These close the
@@ -23,10 +24,10 @@ import org.apache.spark.sql.functions._
   * integers: with n total, `agree` the diagonal sum and
   * `chance = Σ_c n_true(c)·n_pred(c)`,
   *
-  *   kappa_q6 = sign-split ⌊10⁶·(n·agree − chance)/(n² − chance)⌋
+  *   kappa_q6 = 10⁶·(n·agree − chance)/(n² − chance), truncated
   *
   * (the numerator CAN be negative — worse-than-chance agreement is a
-  * real finding — hence the sign split; n² = chance means both sides
+  * real finding — so it truncates toward zero; n² = chance means both sides
   * are the same constant class: agreement is vacuous, kappa NULL).
   * Magnitudes ride DECIMAL(38,0) — n·agree ≤ n² overflows Long past
   * ~3·10⁹ rows.
@@ -104,10 +105,7 @@ object ModelEval {
       col("__tot").as("n"),
       col("__agree").as("agree"),
       when(den === lit(0).cast(dec), lit(null).cast("long"))
-        .otherwise(
-          (when(num < 0, lit(-1L)).otherwise(lit(1L)) *
-            call_function("div", abs(num) * lit(Scale).cast(dec), den))
-            .cast("long"))
+        .otherwise(quot(num, den, Scale))
         .as("kappa_q6"))
   }
 
@@ -151,10 +149,8 @@ object ModelEval {
       (col("tn") + col("fp")).cast(dec) * (col("tn") + col("fn")).cast(dec)
     agg.select(col(groupCol), col("n"), col("tp"), col("fp"), col("fn"),
       col("tn"),
-      when(prod > 0,
-        (when(d < 0, lit(-1L)).otherwise(lit(1L)) *
-          call_function("div", d * d * Scale, prod)).cast("long"))
-        .as("mcc2_signed_q6"))
+      // d·|d| carries d's sign with d²'s magnitude
+      when(prod > 0, quot(d * abs(d), prod, Scale)).as("mcc2_signed_q6"))
   }
 
   /** DuckDB replay of [[mccSigned]]; `pairsSql` yields (grp, y, p). */
@@ -170,9 +166,8 @@ object ModelEval {
   CAST(sum((1 - y) * p) AS BIGINT) AS fp,
   CAST(sum(y * (1 - p)) AS BIGINT) AS fn,
   CAST(sum((1 - y) * (1 - p)) AS BIGINT) AS tn,
-  CASE WHEN $prod > 0 THEN CAST(
-    (CASE WHEN $d < 0 THEN -1 ELSE 1 END) * ($d * $d * $Scale // $prod)
-    AS BIGINT) END AS mcc2_signed_q6
+  CASE WHEN $prod > 0 THEN ${quotSql(s"$d * abs($d)", prod, Scale)}
+  END AS mcc2_signed_q6
 FROM ($pairsSql) WHERE y IS NOT NULL AND p IS NOT NULL
 GROUP BY grp ORDER BY $groupName"""
   }
@@ -184,7 +179,7 @@ GROUP BY grp ORDER BY $groupName"""
     * a numeric target): n, signed bias Σe, ⌊10⁶·Σ|e|/n⌋ MAE,
     * ⌊Σe²/n⌋ MSE (whole units — e² outgrows the 10⁶ scale), R² via
     * the n-scaled identity (n·Σy² − (Σy)² − n·Σe²)/(n·Σy² − (Σy)²)
-    * sign-split in 10⁻⁶ (negative = worse than predicting the mean, a
+    * truncated in 10⁻⁶ (negative = worse than predicting the mean, a
     * real finding; constant-target groups NULL), and MAPE with
     * per-row-floored terms ⌊10⁶·|e|/|y|⌋ over the y≠0 rows only (the
     * declared per-term quantization, NULL when no nonzero targets).
@@ -226,10 +221,7 @@ GROUP BY grp ORDER BY $groupName"""
         .cast("long").as("mae_q6"),
       call_function("div", col("__se2"), nD).cast("long").as("mse"),
       when(sstotN === lit(0).cast(dec), lit(null).cast("long"))
-        .otherwise(
-          (when(r2num < 0, lit(-1L)).otherwise(lit(1L)) *
-            call_function("div", abs(r2num) * lit(Scale).cast(dec), sstotN))
-            .cast("long"))
+        .otherwise(quot(r2num, sstotN, Scale))
         .as("r2_q6"),
       col("n_nz"),
       when(col("n_nz") === 0L, lit(null).cast("long"))
@@ -238,7 +230,7 @@ GROUP BY grp ORDER BY $groupName"""
   }
 
   /** DuckDB replay of [[regressionReport]] — HUGEINT moments, same
-    * sign splits and per-row-floored MAPE terms.
+    * truncating divisions and per-row-floored MAPE terms.
     */
   def regressionOracle(table: String, groupCols: Seq[String], ySql: String,
                        predSql: String): String = {
@@ -262,9 +254,8 @@ SELECT $g, CAST(n AS BIGINT) AS n, CAST(se AS BIGINT) AS bias,
   CAST((sae * $Scale) // n AS BIGINT) AS mae_q6,
   CAST(se2 // n AS BIGINT) AS mse,
   CASE WHEN n * sy2 - sy * sy = 0 THEN NULL
-       ELSE CAST((CASE WHEN n * sy2 - sy * sy - n * se2 < 0 THEN -1 ELSE 1 END)
-         * ((abs(n * sy2 - sy * sy - n * se2) * $Scale)
-            // (n * sy2 - sy * sy)) AS BIGINT) END AS r2_q6,
+       ELSE ${quotSql("n * sy2 - sy * sy - n * se2", "n * sy2 - sy * sy", Scale)}
+  END AS r2_q6,
   n_nz,
   CASE WHEN n_nz = 0 THEN NULL
        ELSE CAST(st // n_nz AS BIGINT) END AS mape_q6
@@ -296,8 +287,8 @@ SELECT clazz, tp, fp, fn, tp + fn AS support,
   END AS f1_q6
 FROM j ORDER BY clazz"""
 
-  /** DuckDB replay of [[cohensKappa]] — HUGEINT magnitudes, sign split
-    * outside the non-negative `//`.
+  /** DuckDB replay of [[cohensKappa]] — HUGEINT magnitudes, the same
+    * truncating division.
     */
   def kappaOracleSql(table: String, trueSql: String,
                      predSql: String): String =
@@ -313,8 +304,7 @@ ch AS (SELECT CAST(coalesce(sum(nt * np), 0) AS HUGEINT) AS chance
   FROM bt JOIN bp ON bt.clazz = bp.clazz)
 SELECT CAST(nn AS BIGINT) AS n, CAST(agree AS BIGINT) AS agree,
   CASE WHEN nn * nn - chance = 0 THEN NULL
-       ELSE CAST((CASE WHEN nn * agree - chance < 0 THEN -1 ELSE 1 END)
-         * ((abs(nn * agree - chance) * $Scale) // (nn * nn - chance))
-         AS BIGINT) END AS kappa_q6
+       ELSE ${quotSql("nn * agree - chance", "nn * nn - chance", Scale)}
+  END AS kappa_q6
 FROM tot, ch"""
 }

@@ -220,7 +220,7 @@ ORDER BY 1, 2""".stripMargin
     * of the rows INSIDE the [q_lo, q_hi] discrete-quantile band (the
     * olympic-scoring / fair-average readout; winsorize keeps clipped
     * whales' presence, trimming removes their votes entirely). Exact:
-    * decimal sum over kept rows, ONE sign-split truncating division.
+    * decimal sum over kept rows, ONE truncating division.
     * Output: (groupCol, n_kept, trimmed_mean).
     */
   def trimmedMean(df: DataFrame, groupCol: String, valueCol: String,
@@ -244,13 +244,10 @@ ORDER BY 1, 2""".stripMargin
       .agg(count(lit(1)).as("n_kept"),
         sum(col("__v").cast(DecimalType(38, 0))).as("__s"))
       .select(col(groupCol), col("n_kept"),
-        expr("CAST((CASE WHEN __s < 0 THEN -1 ELSE 1 END) * " +
-          "(abs(__s) div n_kept) AS BIGINT)").as("trimmed_mean"))
+        graft.ExactDiv.quot(col("__s"), col("n_kept")).as("trimmed_mean"))
   }
 
-  /** DuckDB replay of [[trimmedMean]] — HUGEINT floor division on the
-    * non-negative magnitudes (the [[TimeWeighted]] division law).
-    */
+  /** DuckDB replay of [[trimmedMean]] — the same truncating division. */
   def trimmedMeanOracleSql(table: String, groupCol: String, valueCol: String,
                            loNum: Long = 1L, loDen: Long = 20L,
                            hiNum: Long = 19L, hiDen: Long = 20L): String = {
@@ -261,9 +258,7 @@ ORDER BY 1, 2""".stripMargin
 c AS (SELECT $groupCol, quantile_disc(v, $qLo) AS lo, quantile_disc(v, $qHi) AS hi
   FROM v GROUP BY 1)
 SELECT v.$groupCol, count(*) AS n_kept,
-  CAST((CASE WHEN sum(CAST(v.v AS DECIMAL(38,0))) < 0 THEN -1 ELSE 1 END) *
-    (CAST(abs(sum(CAST(v.v AS DECIMAL(38,0)))) AS HUGEINT)
-      // CAST(count(*) AS HUGEINT)) AS BIGINT) AS trimmed_mean
+  ${graft.ExactDiv.quotSql("sum(CAST(v.v AS DECIMAL(38,0)))", "count(*)")} AS trimmed_mean
 FROM v JOIN c ON v.$groupCol IS NOT DISTINCT FROM c.$groupCol
 WHERE v.v >= c.lo AND v.v <= c.hi
 GROUP BY v.$groupCol

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Partial autocorrelation at lags 1..3 — the AR-order readout [[Autocorr]]
   * can't give: ACF at lag 2 is high whenever lag 1 is (persistence echoes),
@@ -17,8 +18,8 @@ import org.apache.spark.sql.functions._
   *     C_k = Σ_t y_t·y_{t+k} over exact index-matched pairs (the
   *     [[Autocorr]] gap honesty: missing t+k contributes no pair), C_0 > 0
   *     required (constant series publish NULL — no correlation structure).
-  *  2. The ACF is quantized ONCE — r_k = sign-split ⌊10⁶·C_k/C_0⌋ — and
-  *     PACF is DEFINED on the quantized values via the exact Toeplitz
+  *  2. The ACF is quantized ONCE — r_k = 10⁶·C_k/C_0 truncated toward
+  *     zero — and PACF is DEFINED on the quantized values via the exact Toeplitz
   *     determinant ratios (Durbin–Levinson in closed form, r_0 = 10⁶):
   *       φ₁ = r₁
   *       φ₂ = ⌊10⁶·(r₀r₂ − r₁²) / (r₀² − r₁²)⌋
@@ -84,14 +85,10 @@ object Pacf {
         ck.groupBy(col(groupCol).as("__g3")).agg(cks.head, cks.tail: _*)
       },
       col(groupCol) <=> col("__g3"), "left")
-    def sgnDiv(num: Column, den: Column): Column =
-      when(num < 0, lit(-1)).otherwise(lit(1)).cast(dec) *
-        call_function("div", abs(num), den)
-    // r_k = sign-split floor(1e6 * C_k / C_0); NULL when no pairs or C_0 <= 0
+    // r_k = 1e6 * C_k / C_0 truncated; NULL when no pairs or C_0 <= 0
     def r(k: Int): Column =
       when(col("__c0") > 0 && col(s"__c$k").isNotNull,
-        sgnDiv(col(s"__c$k").cast(dec) * Scale, col("__c0").cast(dec))
-          .cast("long"))
+        quot(col(s"__c$k").cast(dec), col("__c0").cast(dec), Scale))
     val r0 = lit(Scale).cast(dec)
     val quant = wide.select(col(groupCol), col("n"),
       r(1).as("__r1"), r(2).as("__r2"), r(3).as("__r3"))
@@ -99,12 +96,12 @@ object Pacf {
     val r3 = col("__r3").cast(dec)
     val den2 = r0 * r0 - r1 * r1
     val num2 = r0 * r2 - r1 * r1
-    val p2 = when(den2 > 0, sgnDiv(num2 * Scale, den2).cast("long"))
+    val p2 = when(den2 > 0, quot(num2, den2, Scale))
     val det3 = r0 * r0 * r0 - lit(2) * r0 * r1 * r1 - r0 * r2 * r2 +
       lit(2) * r1 * r1 * r2
     val det3s = r0 * (r0 * r3 - r2 * r1) - r1 * (r1 * r3 - r2 * r2) +
       r1 * (r1 * r1 - r0 * r2)
-    val p3 = when(det3 > 0, sgnDiv(det3s * Scale, det3).cast("long"))
+    val p3 = when(det3 > 0, quot(det3s, det3, Scale))
     quant.select(col(groupCol), col("n"),
       explode(array(
         struct(lit(1).as("lag"), col("__r1").as("acf_q6"),
@@ -119,8 +116,6 @@ object Pacf {
 
   /** DuckDB replay of [[pacf]]; `seriesSql` yields (grp, t, x). */
   def oracleSql(seriesSql: String, groupName: String): String = {
-    def sgnDiv(num: String, den: String) =
-      s"(CASE WHEN ($num) < 0 THEN -1 ELSE 1 END) * (abs($num) // ($den))"
     val r1 = "CAST(r1 AS HUGEINT)"; val r2 = "CAST(r2 AS HUGEINT)"
     val r3 = "CAST(r3 AS HUGEINT)"
     val r0 = s"CAST(${Scale} AS HUGEINT)"
@@ -154,11 +149,11 @@ wide AS (
 quant AS (
   SELECT grp, n,
     CASE WHEN c0 > 0 AND c1 IS NOT NULL
-      THEN ${sgnDiv(s"CAST(c1 AS HUGEINT) * $Scale", "c0")} END AS r1,
+      THEN ${quotSql("c1", "c0", Scale)} END AS r1,
     CASE WHEN c0 > 0 AND c2 IS NOT NULL
-      THEN ${sgnDiv(s"CAST(c2 AS HUGEINT) * $Scale", "c0")} END AS r2,
+      THEN ${quotSql("c2", "c0", Scale)} END AS r2,
     CASE WHEN c0 > 0 AND c3 IS NOT NULL
-      THEN ${sgnDiv(s"CAST(c3 AS HUGEINT) * $Scale", "c0")} END AS r3
+      THEN ${quotSql("c3", "c0", Scale)} END AS r3
   FROM wide),
 lags AS (
   SELECT grp, n, 1 AS lag, CAST(r1 AS BIGINT) AS acf_q6,
@@ -166,12 +161,12 @@ lags AS (
   UNION ALL
   SELECT grp, n, 2, CAST(r2 AS BIGINT),
     CASE WHEN r2 IS NOT NULL AND $den2 > 0
-      THEN CAST(${sgnDiv(s"$num2 * $Scale", den2)} AS BIGINT) END
+      THEN ${quotSql(num2, den2, Scale)} END
   FROM quant
   UNION ALL
   SELECT grp, n, 3, CAST(r3 AS BIGINT),
     CASE WHEN r3 IS NOT NULL AND $det3 > 0
-      THEN CAST(${sgnDiv(s"$det3s * $Scale", det3)} AS BIGINT) END
+      THEN ${quotSql(det3s, det3, Scale)} END
   FROM quant)
 SELECT grp AS $groupName, lag, CAST(n AS BIGINT) AS n, acf_q6, pacf_q6
 FROM lags ORDER BY $groupName, lag"""

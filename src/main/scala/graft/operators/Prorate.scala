@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * periods — the front-loaded largest-remainder-free rule, declared —
   * so `Σ shares ≡ v` EXACTLY (the invariant an accounting pipeline
   * actually audits; any rounding rule that loses units fails
-  * reconciliation). Negative amounts sign-split: the magnitude
-  * prorates by the same rule and the sign rides every share, so refunds
-  * reconcile identically.
+  * reconciliation). Negative amounts mirror it: `v div n` truncates
+  * toward zero and the first `|v mod n|` periods carry one extra unit of
+  * v's sign, so refunds reconcile identically.
   *
   * Scale shape: one scan-stage `sequence` explode per interval — output
   * is span-bounded (the [[Resample]] spine posture), no shuffle at all;
@@ -46,16 +46,14 @@ object Prorate {
         lit("prorate: span "), n.cast("string"),
         lit(s" exceeds maxSpan $maxSpan — corrupt interval? raise maxSpan"))))
       .otherwise(n)
-    val mag = abs(col("__v"))
-    val sign = when(col("__v") < 0, lit(-1L)).otherwise(lit(1L))
-    val base = call_function("div", mag, guardedN)
-    val rem = mag % guardedN
+    val base = graft.ExactDiv.quot(col("__v"), guardedN)
+    val rem = abs(col("__v") % guardedN)
     rows
       .withColumn("__off", explode(sequence(lit(0L), guardedN - 1)))
       .select(df.columns.map(col) :+
         (col("__s") + col("__off")).as("period") :+
-        (sign * (base + when(col("__off") < rem, lit(1L)).otherwise(lit(0L))))
-          .as("share"): _*)
+        (base + when(col("__off") < rem, signum(col("__v")).cast("long"))
+          .otherwise(lit(0L))).as("share"): _*)
   }
 
   /** DuckDB replay — the same front-loaded rule over generate_series.
@@ -70,9 +68,8 @@ object Prorate {
   WHERE ($startE) IS NOT NULL AND ($endE) IS NOT NULL AND ($valueE) IS NOT NULL),
 x AS (SELECT *, unnest(generate_series(0, e_ - s_ - 1)) AS off_ FROM r)
 SELECT $keep, s_ + off_ AS period,
-  (CASE WHEN v_ < 0 THEN -1 ELSE 1 END) *
-    (abs(v_) // (e_ - s_) +
-     CASE WHEN off_ < abs(v_) % (e_ - s_) THEN 1 ELSE 0 END) AS share
+  ${graft.ExactDiv.quotSql("v_", "e_ - s_")} +
+    CASE WHEN off_ < abs(v_ % (e_ - s_)) THEN sign(v_) ELSE 0 END AS share
 FROM x ORDER BY $keep, period"""
   }
 }

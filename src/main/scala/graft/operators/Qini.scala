@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.LongType
   *   qini(d) = C_t(d) − C_c(d)·N_t(d)/N_c(d)
   *
   * published exactly as the cross-multiplied numerator and the
-  * sign-split ⌊10⁶·(C_t·N_c − C_c·N_t)/N_c⌋ (micro-conversions; a good
+  * truncated 10⁶·(C_t·N_c − C_c·N_t)/N_c (micro-conversions; a good
   * uplift model front-loads it, a useless one grows it linearly, a
   * backfiring one goes negative — all real findings). A depth prefix
   * with no control rows yet reports NULL (no baseline to scale).
@@ -69,15 +69,13 @@ object Qini {
     cum.select(col("bucket"), col("n_treat"), col("n_ctrl"),
       col("conv_treat"), col("conv_ctrl"),
       when(col("n_ctrl") === 0L, lit(null).cast("long"))
-        .otherwise((when(num < 0, lit(-1L)).otherwise(lit(1L)) *
-          call_function("div", abs(num) * lit(Scale).cast(dec),
-            col("n_ctrl").cast(dec))).cast("long"))
+        .otherwise(graft.ExactDiv.quot(num, col("n_ctrl").cast(dec), Scale))
         .as("qini_q6"))
   }
 
   /** DuckDB replay of [[curve]] — the ntile parity (window NTILE over
     * the same (score, id) order), same top-down cumulative and
-    * sign-split division. `rowsSql` must yield (score, id, arm, conv).
+    * truncating division. `rowsSql` must yield (score, id, arm, conv).
     */
   def oracleSql(rowsSql: String, treatArm: String, ctrlArm: String,
                 k: Int = 10): String =
@@ -103,11 +101,8 @@ SELECT bucket, CAST(n_treat AS BIGINT) AS n_treat,
   CAST(conv_treat AS BIGINT) AS conv_treat,
   CAST(conv_ctrl AS BIGINT) AS conv_ctrl,
   CASE WHEN n_ctrl = 0 THEN NULL
-       ELSE CAST((CASE WHEN CAST(conv_treat AS HUGEINT) * n_ctrl
-                         - CAST(conv_ctrl AS HUGEINT) * n_treat < 0
-                  THEN -1 ELSE 1 END)
-         * ((abs(CAST(conv_treat AS HUGEINT) * n_ctrl
-             - CAST(conv_ctrl AS HUGEINT) * n_treat) * $Scale)
-            // CAST(n_ctrl AS HUGEINT)) AS BIGINT) END AS qini_q6
+       ELSE ${graft.ExactDiv.quotSql(
+         "CAST(conv_treat AS HUGEINT) * n_ctrl - CAST(conv_ctrl AS HUGEINT) * n_treat",
+         "n_ctrl", Scale)} END AS qini_q6
 FROM c ORDER BY bucket"""
 }

@@ -54,7 +54,7 @@ object Resample {
   /** Linear-interpolation gap fill — the other classical fill beside
     * [[gapFillFfill]]'s step function: each unobserved grid cell takes
     * the EXACT rational interpolation between its surrounding observed
-    * cells, `value_q6 = y₀·10⁶ + sgn-div((y₁−y₀)·d·10⁶, D)` with d =
+    * cells, `value_q6 = y₀·10⁶ + quot((y₁−y₀)·d·10⁶, D)` with d =
     * cells since the previous observation and D = cells between the two
     * observations (integer row positions along the spine — no timestamp
     * arithmetic enters the division). Observed cells publish y·10⁶
@@ -94,11 +94,10 @@ object Resample {
       .withColumn("__r1",
         first(when(col("__v").isNotNull, col("__rn")), ignoreNulls = true).over(fwd))
     val num = (col("__y1") - col("__y0")).cast(dec) *
-      (col("__rn") - col("__r0")).cast(dec) * lit(1000000L).cast(dec)
+      (col("__rn") - col("__r0")).cast(dec)
     val den = (col("__r1") - col("__r0")).cast(dec)
     val interp = col("__y0").cast(dec) * lit(1000000L).cast(dec) +
-      when(num < 0, lit(-1).cast(dec)).otherwise(lit(1).cast(dec)) *
-        call_function("div", abs(num), den)
+      graft.ExactDiv.quot(num, den, 1000000L)
     marked.select(col(keyCol), col("__b").as("bucket"),
       when(col("__v").isNotNull, col("__v") * lit(1000000L))
         .otherwise(interp.cast("long")).as("value_q6"),
@@ -106,7 +105,7 @@ object Resample {
   }
 
   /** DuckDB replay of [[gapFillLinear]] — the same spine, row positions,
-    * and sign-split HUGEINT division.
+    * and truncating HUGEINT division.
     */
   def gapFillLinearOracle(table: String, keyCol: String, tsCol: String,
                           valueE: String,
@@ -139,10 +138,8 @@ m AS (
 SELECT $keyCol, b AS bucket,
   CAST(CASE WHEN v IS NOT NULL THEN CAST(v AS HUGEINT) * 1000000
     ELSE CAST(y0 AS HUGEINT) * 1000000 +
-      CASE WHEN CAST(y1 - y0 AS HUGEINT) * (rn - r0) * 1000000 < 0
-        THEN -((-(CAST(y1 - y0 AS HUGEINT) * (rn - r0) * 1000000)) // (r1 - r0))
-        ELSE (CAST(y1 - y0 AS HUGEINT) * (rn - r0) * 1000000) // (r1 - r0)
-      END END AS BIGINT) AS value_q6,
+      ${graft.ExactDiv.quotSql("CAST(y1 - y0 AS HUGEINT) * (rn - r0)", "r1 - r0", 1000000)}
+    END AS BIGINT) AS value_q6,
   v IS NOT NULL AS observed
 FROM m ORDER BY 1, 2"""
 

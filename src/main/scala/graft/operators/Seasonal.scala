@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * caller.
   *
   * The index is exact, cross-multiplied — mean_pos/mean_group =
-  * sum_pos·N / (n_pos·S) — published as a sign-split truncating
+  * sum_pos·N / (n_pos·S) — published as a truncating
   * division in 1e−6 units over DECIMAL(38,0) magnitudes (sums can be
   * negative under refunds/chargebacks; 10⁶ = exactly at the mean).
   * A group whose TOTAL is ≤ 0 reports NULL indexes for all its
@@ -53,15 +53,12 @@ object Seasonal {
     cells.join(broadcast(totals), joinCond)
       .select(g ++ Seq(col("pos"), col("n_pos"), col("sum_pos"),
         when(col("__S") <= 0L, lit(null).cast("long"))
-          .otherwise(
-            (when(num < 0, lit(-1L)).otherwise(lit(1L)) *
-              call_function("div", abs(num) * lit(Scale).cast(dec), den))
-              .cast("long"))
+          .otherwise(graft.ExactDiv.quot(num, den, Scale))
           .as("idx_q6")): _*)
   }
 
-  /** DuckDB replay of [[indexes]] — HUGEINT magnitudes, sign split
-    * outside the non-negative `//`.
+  /** DuckDB replay of [[indexes]] — HUGEINT magnitudes, the same
+    * truncating division.
     */
   def oracleSql(table: String, groupCols: Seq[String], posSql: String,
                 valueSql: String): String = {
@@ -78,10 +75,8 @@ tot AS (
   FROM cells GROUP BY $g)
 SELECT c.*,
   CASE WHEN ss <= 0 THEN NULL
-       ELSE CAST((CASE WHEN CAST(sum_pos AS HUGEINT) * nn < 0
-                       THEN -1 ELSE 1 END)
-         * ((abs(CAST(sum_pos AS HUGEINT) * nn) * $Scale)
-            // (CAST(n_pos AS HUGEINT) * ss)) AS BIGINT) END AS idx_q6
+       ELSE ${graft.ExactDiv.quotSql("CAST(sum_pos AS HUGEINT) * nn",
+         "CAST(n_pos AS HUGEINT) * ss", Scale)} END AS idx_q6
 FROM cells c JOIN tot t
   ON ${groupCols.map(c => s"c.$c IS NOT DISTINCT FROM t.$c")
     .mkString(" AND ")}

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Classical additive seasonal decomposition — x = trend + seasonal +
   * remainder over an integer-indexed series (feed the [[DenseSeries]]
@@ -13,11 +14,11 @@ import org.apache.spark.sql.functions._
   *
   * Exact semantics, declared rather than float-fit:
   *  - trend: centered moving average over the RANGE frame
-  *    [idx−k, idx+k], quantized ⌊10⁶·Σx/cnt⌋ sign-split — partial edge
+  *    [idx−k, idx+k], quantized ⌊10⁶·Σx/cnt⌋ truncated — partial edge
   *    windows use whatever the range holds (replayable, no NULL edges);
   *  - detrended: x·10⁶ − trend_q6 (exact integers from here on);
   *  - seasonal: per (group, idx mod period) mean of detrended,
-  *    ⌊Σdet/cnt⌋ sign-split (pmod both engines, negative-idx safe);
+  *    ⌊Σdet/cnt⌋ truncated (pmod both engines, negative-idx safe);
   *  - remainder: detrended − seasonal. The additive identity
   *    x·10⁶ = trend + seasonal + remainder holds EXACTLY by
   *    construction.
@@ -42,9 +43,6 @@ object SeasonalDecomp {
     graft.Guards.requireIntegral(df, idxCol, "seasonal")
     graft.Guards.requireIntegral(df, valueCol, "seasonal")
     val dec = "decimal(38,0)"
-    def sgnDiv(num: org.apache.spark.sql.Column, den: org.apache.spark.sql.Column) =
-      when(num < 0, lit(-1).cast(dec)).otherwise(lit(1).cast(dec)) *
-        call_function("div", abs(num), den)
     val rows = df
       .where(col(idxCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol), col(idxCol).cast("long").as("idx"),
@@ -54,15 +52,14 @@ object SeasonalDecomp {
     val dupW = Window.partitionBy(col(groupCol), col("idx"))
     val trended = rows
       .withColumn("__dup", count(lit(1)).over(dupW) > 1)
-      .withColumn("__tq", sgnDiv(
-        sum(col("__x")).over(rng).cast(dec) * lit(Scale).cast(dec),
-        count(lit(1)).over(rng).cast(dec)).cast("long"))
+      .withColumn("__ws", sum(col("__x")).over(rng).cast(dec))
+      .withColumn("__wc", count(lit(1)).over(rng).cast(dec))
+      .withColumn("__tq", quot(col("__ws"), col("__wc"), Scale))
       .withColumn("__det", col("__x") * lit(Scale) - col("__tq"))
       .withColumn("__season", ((col("idx") % period) + period) % period)
     val seasonal = trended
       .groupBy(col(groupCol).as("__sg"), col("__season").as("__ss"))
-      .agg(sgnDiv(sum(col("__det")).cast(dec),
-        count(lit(1)).cast(dec)).cast("long").as("__sq"))
+      .agg(quot(sum(col("__det")).cast(dec), count(lit(1)).cast(dec)).as("__sq"))
     // the guard rides EVERY published column (the holt discipline) — a
     // caller projecting only remainder_q6 (the q_seasonal_anomaly shape)
     // must still hit the raise (caught in r10 review)
@@ -83,7 +80,7 @@ object SeasonalDecomp {
   }
 
   /** DuckDB replay — the same RANGE frame, pmod season, HUGEINT sums,
-    * sign-split divisions. `seriesSql` must yield (grp, i, x) with one
+    * truncating divisions. `seriesSql` must yield (grp, i, x) with one
     * row per (grp, i).
     */
   def oracleSql(seriesSql: String, groupName: String, period: Int,
@@ -96,15 +93,11 @@ t AS (SELECT grp, i, x,
   FROM s WINDOW w AS (PARTITION BY grp ORDER BY i
     RANGE BETWEEN $halfWindow PRECEDING AND $halfWindow FOLLOWING)),
 d AS (SELECT grp, i, ((i % $period) + $period) % $period AS season,
-    CASE WHEN ws * $Scale < 0 THEN -((-(ws * $Scale)) // wc)
-         ELSE (ws * $Scale) // wc END AS tq,
-    CAST(x AS HUGEINT) * $Scale -
-      (CASE WHEN ws * $Scale < 0 THEN -((-(ws * $Scale)) // wc)
-            ELSE (ws * $Scale) // wc END) AS det
+    ${quotSql("ws", "wc", Scale)} AS tq,
+    CAST(x AS HUGEINT) * $Scale - ${quotSql("ws", "wc", Scale)} AS det
   FROM t),
 seas AS (SELECT grp, season,
-    CASE WHEN sum(det) < 0 THEN -((-sum(det)) // count(*))
-         ELSE sum(det) // count(*) END AS sq
+    ${quotSql("sum(det)", "count(*)")} AS sq
   FROM d GROUP BY 1, 2)
 SELECT d.grp AS $groupName, d.i AS idx, CAST(d.season AS BIGINT) AS season,
   CAST(d.tq AS BIGINT) AS trend_q6, CAST(seas.sq AS BIGINT) AS seasonal_q6,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Hierarchical share-of-parent rollup — the two-level BI readout behind
   * every drill-down table: per (parent, child), the child's value total,
@@ -11,8 +12,8 @@ import org.apache.spark.sql.functions._
   * the levels as separate rows), the shares land ON the leaf row —
   * the shape a report renders directly.
   *
-  * Values may be negative (refund lines): shares use the sign-split
-  * truncating division and can legitimately leave [0, 10⁸] when signs
+  * Values may be negative (refund lines): shares truncate toward zero
+  * ([[graft.ExactDiv]]) and can legitimately leave [0, 10⁸] when signs
   * mix — a child can exceed its parent when a sibling is negative
   * (documented; the arithmetic stays exact). Parents or the grand total
   * at exactly 0 yield NULL shares (a share of nothing is undefined, not
@@ -26,11 +27,8 @@ object ShareOfParent {
 
   private val Dec = "decimal(38,0)"
 
-  // sign-split with the COMBINED sign (a negative parent flips the
-  // share's sign like real division would)
-  private def shareDiv(num: String, den: String) =
-    expr(s"CAST((CASE WHEN (($num) < 0) != (($den) < 0) THEN -1 ELSE 1 END) * " +
-      s"(abs(CAST($num AS DECIMAL(38,0)) * 100000000) div abs($den)) AS BIGINT)")
+  // a negative parent flips the share's sign, as real division would
+  private val ShareScale = 100000000L
 
   /** (parent, child, child_value, parent_value, share_of_parent_e8,
     * parent_share_e8).
@@ -52,9 +50,9 @@ object ShareOfParent {
         col("__cv").cast("long").as("child_value"),
         col("__pv").cast("long").as("parent_value"),
         when(col("__pv") === 0, lit(null).cast("long"))
-          .otherwise(shareDiv("__cv", "__pv")).as("share_of_parent_e8"),
+          .otherwise(quot(col("__cv"), col("__pv"), ShareScale)).as("share_of_parent_e8"),
         when(col("__tv") === 0, lit(null).cast("long"))
-          .otherwise(shareDiv("__pv", "__tv")).as("parent_share_e8"))
+          .otherwise(quot(col("__pv"), col("__tv"), ShareScale)).as("parent_share_e8"))
   }
 
   /** DuckDB replay of [[shares]]. */
@@ -69,13 +67,9 @@ t AS (SELECT sum(cv) AS tv FROM leaf)
 SELECT leaf.parent, leaf.child,
   CAST(leaf.cv AS BIGINT) AS child_value, CAST(p.pv AS BIGINT) AS parent_value,
   CASE WHEN p.pv = 0 THEN NULL ELSE
-    CAST((CASE WHEN (leaf.cv < 0) != (p.pv < 0) THEN -1 ELSE 1 END) *
-      (CAST(abs(leaf.cv * 100000000) AS HUGEINT) // CAST(abs(p.pv) AS HUGEINT))
-      AS BIGINT) END AS share_of_parent_e8,
+    ${quotSql("leaf.cv", "p.pv", ShareScale)} END AS share_of_parent_e8,
   CASE WHEN t.tv = 0 THEN NULL ELSE
-    CAST((CASE WHEN (p.pv < 0) != (t.tv < 0) THEN -1 ELSE 1 END) *
-      (CAST(abs(p.pv * 100000000) AS HUGEINT) // CAST(abs(t.tv) AS HUGEINT))
-      AS BIGINT) END AS parent_share_e8
+    ${quotSql("p.pv", "t.tv", ShareScale)} END AS parent_share_e8
 FROM leaf JOIN p ON leaf.parent IS NOT DISTINCT FROM p.parent
 CROSS JOIN t ORDER BY leaf.parent, leaf.child""".stripMargin
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.LongType
   * (a sensor stuck for weeks, a backfill that doubled a month).
   *
   * Exactness by the TheilSen declaration: each pair slope quantizes
-  * independently (sign-split ⌊10⁶·Δy/Δx⌋), each INNER median is the
+  * independently (10⁶·Δy/Δx truncated toward zero), each INNER median is the
   * discrete ⌈m/2⌉-th smallest of the point's n−1 quantized slopes, and
   * the OUTER median is the discrete median of those n inner medians —
   * every step integer-exact, both engines replay the whole lattice.
@@ -65,9 +65,7 @@ object Siegel {
       col("__y").as("__yb"))
     val dy = col("__yb") - col("__y")
     val dx = col("__xb") - col("__x")
-    val pairSlope = when(dy < 0, lit(-1L)).otherwise(lit(1L)) *
-      call_function("div", abs(dy) * lit(Scale), abs(dx)) *
-      when(dx < 0, lit(-1L)).otherwise(lit(1L))
+    val pairSlope = graft.ExactDiv.quot(dy, dx, Scale)
     // anchored pairs: BOTH orientations, so each point sees all others
     val anchored = sized.join(b, col(groupCol) <=> col("__g") &&
         col("__x") =!= col("__xb"), "inner")
@@ -103,9 +101,7 @@ object Siegel {
   FROM ($seriesSql) WHERE x IS NOT NULL AND y IS NOT NULL),
 p AS (
   SELECT a.$groupName, a.x,
-    CAST((CASE WHEN (b.y - a.y) * (b.x - a.x) < 0 THEN -1 ELSE 1 END)
-      * ((abs(CAST(b.y - a.y AS HUGEINT)) * $Scale) // abs(b.x - a.x))
-      AS BIGINT) AS s
+    ${graft.ExactDiv.quotSql("b.y - a.y", "b.x - a.x", Scale)} AS s
   FROM r a JOIN r b
     ON a.$groupName IS NOT DISTINCT FROM b.$groupName AND a.x <> b.x),
 im AS (

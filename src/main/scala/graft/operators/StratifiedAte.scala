@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Post-stratified average treatment effect — the observational-data
   * companion to [[AbTest]]'s randomized readouts and the MEANS
@@ -44,7 +45,7 @@ object StratifiedAte {
         diffNum.cast("string").as("diff_num"),
         diffDen.cast("string").as("diff_den"),
         when(col("n_t") > 0L && col("n_c") > 0L,
-          sgnDiv(diffNum * lit(Scale).cast(Dec), diffDen)).as("ate_q6"))
+          quot(diffNum, diffDen, Scale)).as("ate_q6"))
 
   /** One pooled row: (n_strata_pooled, n_strata_dropped, n_rows_pooled,
     * pool_num_q6, pool_den) — the reader divides.
@@ -55,7 +56,7 @@ object StratifiedAte {
     val both = col("n_t") > 0L && col("n_c") > 0L
     val ns = (col("n_t") + col("n_c")).cast(Dec)
     c.select(both.as("__ok"), (col("n_t") + col("n_c")).as("__n"),
-        when(both, sgnDiv(ns * diffNum * lit(Scale).cast(Dec), diffDen))
+        when(both, quot(ns * diffNum, diffDen, Scale))
           .as("__term"))
       .agg(
         // coalesce: a fully-filtered input leaves zero cell rows and
@@ -71,11 +72,6 @@ object StratifiedAte {
   }
 
   private val Dec = "decimal(38,0)"
-
-  private def sgnDiv(num: org.apache.spark.sql.Column,
-                     den: org.apache.spark.sql.Column) =
-    (when(num < 0, lit(-1L)).otherwise(lit(1L)) *
-      call_function("div", abs(num), den)).cast("long")
 
   private def diffNum =
     col("s_t").cast(Dec) * col("n_c").cast(Dec) -
@@ -110,21 +106,14 @@ SELECT grp AS $strataName, CAST(n_t AS BIGINT) AS n_treat,
   CAST(s_c AS BIGINT) AS sum_ctrl,
   CAST(s_t * n_c - s_c * n_t AS VARCHAR) AS diff_num,
   CAST(n_t * n_c AS VARCHAR) AS diff_den,
-  CASE WHEN n_t > 0 AND n_c > 0 THEN CAST(
-    CASE WHEN s_t * n_c - s_c * n_t < 0
-         THEN -((-(s_t * n_c - s_c * n_t)) * $Scale // (n_t * n_c))
-         ELSE (s_t * n_c - s_c * n_t) * $Scale // (n_t * n_c) END
-    AS BIGINT) END AS ate_q6
+  CASE WHEN n_t > 0 AND n_c > 0
+    THEN ${quotSql("s_t * n_c - s_c * n_t", "n_t * n_c", Scale)} END AS ate_q6
 FROM c ORDER BY grp"""
 
   def pooledOracle(rowsSql: String): String =
     s"""WITH c AS (${cellsSql(rowsSql)}),
 terms AS (SELECT n_t > 0 AND n_c > 0 AS ok, n_t + n_c AS n,
-    CASE WHEN (n_t + n_c) * (s_t * n_c - s_c * n_t) < 0
-         THEN -((-((n_t + n_c) * (s_t * n_c - s_c * n_t))) * $Scale
-           // (n_t * n_c))
-         ELSE ((n_t + n_c) * (s_t * n_c - s_c * n_t)) * $Scale
-           // (n_t * n_c) END AS term
+    ${quotSql("(n_t + n_c) * (s_t * n_c - s_c * n_t)", "n_t * n_c", Scale)} AS term
   FROM c)
 SELECT CAST(count(*) FILTER (WHERE ok) AS BIGINT) AS n_strata_pooled,
   CAST(count(*) FILTER (WHERE NOT ok) AS BIGINT) AS n_strata_dropped,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Target encoding — the feature-engineering step that turns a
   * high-cardinality categorical into "what target value does this
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   *    toward the global mean instead of memorizing noise. Published
   *    exactly: cross-multiplying by the global count N gives
   *    `(s_c·N + m·S) / (N·(n_c + m))`, an integer rational
-  *    floor-divided to micro-units with the sign-split law.
+  *    divided to micro-units, truncated toward zero.
   *  - [[looMean]]: per ROW, the leave-one-out mean
   *    `(s_c − y_i) / (n_c − 1)` — the training-time form that keeps a
   *    row's own target out of its feature (the classic target-leakage
@@ -33,10 +34,6 @@ object TargetEncode {
 
   private val Dec = "decimal(38,0)"
 
-  private def signDiv(num: String, den: String) =
-    expr(s"CAST((CASE WHEN $num < 0 THEN -1 ELSE 1 END) * " +
-      s"(abs($num) div ($den)) AS BIGINT)")
-
   /** (category, n, enc_micro) — the m-smoothed encoding per category. */
   def smoothedMean(df: DataFrame, catCol: String, targetCol: String,
                    m: Long): DataFrame = {
@@ -53,8 +50,8 @@ object TargetEncode {
       sum(col("__s")).cast(Dec).as("__gs"))
     cats.crossJoin(broadcast(tot))
       .select(col("category"), col("__n").cast("long").as("n"),
-        signDiv(s"(__s * __gn + $m * __gs) * 1000000", s"__gn * (__n + $m)")
-          .as("enc_micro"))
+        quot(col("__s") * col("__gn") + lit(m) * col("__gs"),
+          col("__gn") * (col("__n") + lit(m)), 1000000).as("enc_micro"))
   }
 
   /** (id, category, loo_micro) per input row; NULL for singletons. */
@@ -69,7 +66,7 @@ object TargetEncode {
     base.join(cats, col("category") <=> col("__c"))
       .select(col("id"), col("category"),
         when(col("__n") === lit(1).cast(Dec), lit(null).cast("long"))
-          .otherwise(signDiv("(__s - __y) * 1000000", "__n - 1"))
+          .otherwise(quot(col("__s") - col("__y"), col("__n") - 1, 1000000))
           .as("loo_micro"))
   }
 
@@ -82,9 +79,7 @@ c AS (SELECT category, CAST(count(*) AS HUGEINT) AS n, sum(y) AS s
   FROM b GROUP BY category),
 t AS (SELECT CAST(count(*) AS HUGEINT) AS N, sum(y) AS S FROM b)
 SELECT c.category, CAST(c.n AS BIGINT) AS n,
-  CAST((CASE WHEN (c.s * t.N + $m * t.S) < 0 THEN -1 ELSE 1 END) *
-    (CAST(abs((c.s * t.N + $m * t.S) * 1000000) AS HUGEINT)
-      // (t.N * (c.n + $m))) AS BIGINT) AS enc_micro
+  ${quotSql(s"c.s * t.N + $m * t.S", s"t.N * (c.n + $m)", 1000000)} AS enc_micro
 FROM c CROSS JOIN t ORDER BY c.category""".stripMargin
 
   /** DuckDB replay of [[looMean]]. */
@@ -97,8 +92,7 @@ c AS (SELECT category, CAST(count(*) AS HUGEINT) AS n, sum(y) AS s
   FROM b GROUP BY category)
 SELECT b.id, b.category,
   CASE WHEN c.n = 1 THEN NULL
-    ELSE CAST((CASE WHEN (c.s - b.y) < 0 THEN -1 ELSE 1 END) *
-      (CAST(abs((c.s - b.y) * 1000000) AS HUGEINT) // (c.n - 1)) AS BIGINT)
+    ELSE ${quotSql("c.s - b.y", "c.n - 1", 1000000)}
   END AS loo_micro
 FROM b JOIN c ON b.category IS NOT DISTINCT FROM c.category
 ORDER BY b.id""".stripMargin

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.LongType
   * tolerates ~29% contamination, the right default for telemetry
   * series with ingestion glitches). Exactness is by declaration, the
   * repo's ladder: each pair's slope quantizes independently —
-  * sign-split ⌊10⁶·(yⱼ−yᵢ)/(xⱼ−xᵢ)⌋ — and the estimate is the
+  * 10⁶·(yⱼ−yᵢ)/(xⱼ−xᵢ) truncated — and the estimate is the
   * discrete median (the ⌈n/2⌉-th smallest, the quantile_disc parity
   * law) of those integers, so both engines replay the whole multiset.
   *
@@ -67,8 +67,7 @@ object TheilSen {
       col("__y").as("__yb"))
     val dy = col("__yb") - col("__ya")
     val dx = col("__xb") - col("__xa")
-    val pairSlope = when(dy < 0, lit(-1L)).otherwise(lit(1L)) *
-      call_function("div", abs(dy) * lit(Scale), dx)
+    val pairSlope = graft.ExactDiv.quot(dy, dx, Scale)
     val all = a.join(b, col(groupCol) <=> col("__g") &&
         col("__xa") < col("__xb"), "inner")
       .select(col(groupCol), pairSlope.as("__s"))
@@ -98,9 +97,7 @@ object TheilSen {
   FROM ($seriesSql) WHERE x IS NOT NULL AND y IS NOT NULL),
 p AS (
   SELECT a.$groupName,
-    CAST((CASE WHEN b.y - a.y < 0 THEN -1 ELSE 1 END)
-      * ((abs(CAST(b.y - a.y AS HUGEINT)) * $Scale) // (b.x - a.x))
-      AS BIGINT) AS s
+    ${graft.ExactDiv.quotSql("b.y - a.y", "b.x - a.x", Scale)} AS s
   FROM r a JOIN r b
     ON a.$groupName IS NOT DISTINCT FROM b.$groupName AND a.x < b.x),
 m AS (

@@ -16,9 +16,8 @@ import org.apache.spark.sql.types.LongType
   *
   * Exactness: timestamps become microseconds, values are integral (the
   * Drift rule), v·dur products and their sums ride DECIMAL(38,0), and the
-  * final mean is ONE sign-split truncating division (`sign · (|Σv·dur|
-  * div Σdur)` — the cross-engine integer-division law), emitted as
-  * BIGINT in the value's own units.
+  * final mean is ONE truncating division ([[graft.ExactDiv]]), emitted
+  * as BIGINT in the value's own units.
   *
   * Scale shape: one per-group rank window for the `lead` durations (the
   * rank-normalize wall-clock posture — spill-backed sort, no frame
@@ -55,12 +54,11 @@ object TimeWeighted {
       .where(col("__total") > 0)
       .select(col(groupCol), col("n_segments"),
         col("__total").cast(LongType).as("duration_us"),
-        expr("CAST((CASE WHEN __ws < 0 THEN -1 ELSE 1 END) * " +
-          "(abs(__ws) div __total) AS BIGINT)").as("twa"))
+        graft.ExactDiv.quot(col("__ws"), col("__total")).as("twa"))
   }
 
   /** DuckDB replay of [[timeWeightedMean]] — same (ts, id) order, same
-    * decimal integral, same sign-split floor division on magnitudes.
+    * decimal integral, same truncating division.
     */
   def oracleSql(table: String, groupCol: String, tsCol: String,
                 valueSql: String, idCol: String): String =
@@ -73,9 +71,8 @@ d AS (SELECT $groupCol, v,
   FROM r)
 SELECT $groupCol, count(*) AS n_segments,
   CAST(sum(CAST(dur AS DECIMAL(38,0))) AS BIGINT) AS duration_us,
-  CAST((CASE WHEN sum(CAST(v AS DECIMAL(38,0)) * dur) < 0 THEN -1 ELSE 1 END) *
-    (CAST(abs(sum(CAST(v AS DECIMAL(38,0)) * dur)) AS HUGEINT)
-      // CAST(sum(CAST(dur AS DECIMAL(38,0))) AS HUGEINT)) AS BIGINT) AS twa
+  ${graft.ExactDiv.quotSql("sum(CAST(v AS DECIMAL(38,0)) * dur)",
+    "sum(CAST(dur AS DECIMAL(38,0)))")} AS twa
 FROM d WHERE dur IS NOT NULL GROUP BY $groupCol
 HAVING sum(CAST(dur AS DECIMAL(38,0))) > 0
 ORDER BY $groupCol""".stripMargin

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ExactDiv.{quot, quotSql}
 
 /** Trimmed mean — the robust location estimate ops dashboards want
   * when [[WeightedStats]]' median is too coarse and the plain mean is
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * Exact semantics: ties trim by VALUE multiset (which duplicate of a
   * tied value goes is unobservable in the sum — the published numbers
-  * are tie-invariant); trimmed_sum is exact, the mean one sign-split
+  * are tie-invariant); trimmed_sum is exact, the mean one
   * truncating q6 division; groups with n ≤ 2k publish NULL (a small
   * group is data, not a config error); values are integral cents
   * (|v| < 2⁶²/k for the negation trick, documented). NULL values
@@ -43,8 +44,7 @@ object TrimmedMean {
     val trimmedN = col("n") - 2L * k
     val trimmedSum = col("__sum") - sumArr(col("__lo")) +
       sumArr(col("__hiNeg")) // hi values were negated: adding removes them
-    val meanQ = (when(trimmedSum < 0, lit(-1L)).otherwise(lit(1L)) *
-      call_function("div", abs(trimmedSum) * lit(Scale), trimmedN))
+    val meanQ = quot(trimmedSum, trimmedN, Scale)
     agg.select(col(groupCol), col("n"),
       when(trimmedN > 0L, trimmedN).as("trimmed_n"),
       when(trimmedN > 0L, trimmedSum).as("trimmed_sum"),
@@ -86,8 +86,7 @@ object TrimmedMean {
       lit(k.toLong) * get(col("__lo"), lit(k)) +
       sumArr(slice(col("__hiNeg"), 1, k)) -
       lit(k.toLong) * get(col("__hiNeg"), lit(k))
-    val meanQ = when(ws < 0, lit(-1L)).otherwise(lit(1L)) *
-      call_function("div", abs(ws) * lit(Scale), col("n"))
+    val meanQ = quot(ws, col("n"), Scale)
     agg.select(col(groupCol), col("n"),
       when(col("n") > 2L * k, ws).as("wins_sum"),
       when(col("n") > 2L * k, meanQ).as("mean_q6"))
@@ -112,9 +111,7 @@ t AS (SELECT r.grp, CAST(count(*) AS BIGINT) AS n,
   GROUP BY r.grp)
 SELECT grp AS $groupName, n,
   CASE WHEN n > ${2 * k} THEN ws END AS wins_sum,
-  CASE WHEN n > ${2 * k} THEN CAST(
-    CASE WHEN ws < 0 THEN -((-ws) * $Scale // n)
-         ELSE ws * $Scale // n END AS BIGINT) END AS mean_q6
+  CASE WHEN n > ${2 * k} THEN ${quotSql("ws", "n", Scale)} END AS mean_q6
 FROM t ORDER BY grp"""
 
   /** DuckDB replay — the window formulation (an oracle, not the
@@ -132,8 +129,6 @@ t AS (SELECT grp, CAST(count(*) AS BIGINT) AS n,
 SELECT grp AS $groupName, n,
   CASE WHEN n > ${2 * k} THEN tn END AS trimmed_n,
   CASE WHEN n > ${2 * k} THEN ts END AS trimmed_sum,
-  CASE WHEN n > ${2 * k} THEN CAST(
-    CASE WHEN ts < 0 THEN -((-ts) * $Scale // tn)
-         ELSE ts * $Scale // tn END AS BIGINT) END AS mean_q6
+  CASE WHEN n > ${2 * k} THEN ${quotSql("ts", "tn", Scale)} END AS mean_q6
 FROM t ORDER BY grp"""
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * the last level would have zero weight, which is never what a caller
   * means); duplicate indexes raise in-plan (which level held?). The
   * weighted sum rides DECIMAL(38,0) (value·duration products), and
-  * `twap_q6 = sgn-div(10⁶·Σ vᵢ·dᵢ, t_end − t_start)` is ONE sign-split
-  * truncating division. Published beside the exact (num, den) pair so
+  * `twap_q6 = quot(10⁶·Σ vᵢ·dᵢ, t_end − t_start)` is ONE truncating
+  * division. Published beside the exact (num, den) pair so
   * the integers gate and downstream algebra never re-rounds.
   *
   * Scale shape: one lead window per group over the observation series
@@ -57,10 +57,8 @@ object Twap {
         sum(col("__v").cast(dec) * (col("__next") - col("__t")).cast(dec))
           .cast(dec).as("__ws"))
     val span = (lit(endIdx) - col("t_start")).cast(dec)
-    val num = col("__ws") * lit(Scale).cast(dec)
     val q = when(col("t_start") === endIdx, lit(null).cast("long"))
-      .otherwise((when(num < 0, lit(-1).cast(dec)).otherwise(lit(1).cast(dec)) *
-        call_function("div", abs(num), span)).cast("long"))
+      .otherwise(graft.ExactDiv.quot(col("__ws"), span, Scale))
     // the guards ride BOTH published columns — a caller projecting only
     // twap_q6 must still hit the raise (the holt discipline)
     def guarded(out: org.apache.spark.sql.Column) =
@@ -81,7 +79,7 @@ object Twap {
   }
 
   /** DuckDB replay — the same lead window, HUGEINT weighted sum,
-    * sign-split division. `seriesSql` yields (grp, t, v), one row per
+    * truncating division. `seriesSql` yields (grp, t, v), one row per
     * (grp, t).
     */
   def oracleSql(seriesSql: String, groupName: String, endIdx: Long): String =
@@ -97,7 +95,6 @@ SELECT grp AS $groupName, t_start, CAST($endIdx AS BIGINT) AS t_end,
   CAST(ws AS VARCHAR) AS wsum,
   CAST($endIdx - t_start AS BIGINT) AS span,
   CASE WHEN t_start = $endIdx THEN NULL
-       ELSE CAST((CASE WHEN ws < 0 THEN -1 ELSE 1 END) *
-         ((abs(ws) * $Scale) // ($endIdx - t_start)) AS BIGINT) END AS twap_q6
+       ELSE ${graft.ExactDiv.quotSql("ws", s"$endIdx - t_start", Scale)} END AS twap_q6
 FROM a ORDER BY $groupName"""
 }

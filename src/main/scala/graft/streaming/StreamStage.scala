@@ -23,7 +23,8 @@ object StreamStage {
     * ORDER-SENSITIVE — the copy to ascending chunk names and the mtime
     * stamps that pin the file source's replay order — stays sequential
     * and driver-side, so the staged layout is byte-identical to the
-    * sequential form. A failed cut cancels its sibling chunk jobs, and no
+    * sequential form. A failed cut cancels its sibling chunk jobs and
+    * returns only once their killed tasks have ended, and no
     * `<dir>__stage_tmp_*` sibling outlives the call, whether it succeeds
     * or fails.
     */
@@ -38,6 +39,11 @@ object StreamStage {
       math.max(1, math.min(3, cuts.length)))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
+    // drop queued chunks and wait for running ones
+    def stopPool(): Unit = {
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
     // tags this call's chunk jobs, so a failed cut can cancel its siblings
     val tag = s"graft-stage-chunks-${java.util.UUID.randomUUID()}"
     try {
@@ -64,16 +70,38 @@ object StreamStage {
       case e: Throwable =>
         // a failed cut: the sibling chunks may still be writing
         spark.sparkContext.cancelJobsWithTag(tag)
+        stopPool()
+        // a cancelled job fails at once, but its killed tasks run on until
+        // they next check for the kill, and may still create files
+        try awaitTasksEnded(spark, tag)
+        catch { case t: Throwable => e.addSuppressed(t) }
         throw e
     } finally {
-      // drop queued chunks and wait for running ones, so no write lands
-      // after the cleanup below
-      pool.shutdownNow()
-      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      // no write lands after the cleanup below
+      stopPool()
       // every tmp sibling, also those of an earlier run that staged more cuts
       fs.listStatus(target.getParent)
         .filter(_.getPath.getName.startsWith(target.getName + "__stage_tmp_"))
         .foreach(st => fs.delete(st.getPath, true))
+    }
+  }
+
+  /** Blocks until no stage of the jobs tagged `tag` has a running task.
+    * The status store is fed by the listener bus, so it is drained first:
+    * then it holds every task start of those jobs, and a stage's active
+    * count reaches 0 only once its last task end has arrived. */
+  private def awaitTasksEnded(spark: org.apache.spark.sql.SparkSession,
+                              tag: String): Unit = {
+    val st = spark.sparkContext.statusTracker
+    graft.Harness.drainListenerBus(spark)
+    def running = st.getJobIdsForTag(tag).iterator
+      .flatMap(st.getJobInfo(_).iterator.flatMap(_.stageIds))
+      .exists(st.getStageInfo(_).exists(_.numActiveTasks > 0))
+    val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+    while (running) {
+      if (System.nanoTime > deadline)
+        throw new IllegalStateException(s"stageChunks: tasks of $tag still run after 60 s")
+      Thread.sleep(10)
     }
   }
 

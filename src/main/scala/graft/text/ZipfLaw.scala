@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * — per-term quantized-ln (one double chain per term, never a
   * cross-row float sum) feeding [[GroupedTrend.slope]]'s
   * DECIMAL(38,0) moment machinery, so the published `slope_q` (10⁻⁴
-  * units; Zipf ⇒ ≈ −10000) is ONE sign-split division of exact
+  * units; Zipf ⇒ ≈ −10000) is ONE truncating division of exact
   * integers and both the ln floors and the division replay in DuckDB.
   *
   * Scale shape: the token count is one partial-agg'd (group, token)

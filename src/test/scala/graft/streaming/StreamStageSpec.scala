@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.{col, expr, udf}
 
 /** Chunk staging contracts: one ascending chunk per cut on success, and no
   * `__stage_tmp_*` sibling left behind when a cut fails or when an earlier
@@ -34,5 +34,44 @@ class StreamStageSpec extends SparkSpec {
       col("k") >= 20 && col("k") < 40, col("k") >= 40 && col("k") < 60, col("k") >= 60)
     intercept[Exception](StreamStage.stageChunks(df, cuts, dir))
     assert(tmpDirs.isEmpty, s"orphaned tmp dirs: $tmpDirs")
+  }
+
+  test("a failing cut returns only after a slow sibling's killed task has ended") {
+    import StreamStageSpec._
+    // the slow cut's task is mid-row (a killed task only stops at its next
+    // row) when the failing cut throws, every run
+    val (slow, failing) = (udf(slowRow _), udf(failingRow _))
+    val small = spark.range(0, 4).toDF("k")
+    intercept[Exception](
+      StreamStage.stageChunks(small, Seq(slow(col("k")), failing(col("k"))), dir))
+    assert(entered.getCount == 0, "the slow cut never started")
+    assert(inFlight.get == 0, "stageChunks returned while a sibling task still ran")
+    assert(tmpDirs.isEmpty, s"orphaned tmp dirs: $tmpDirs")
+  }
+}
+
+object StreamStageSpec {
+  private val entered = new java.util.concurrent.CountDownLatch(1)
+  private val inFlight = new java.util.concurrent.atomic.AtomicInteger
+
+  /** 300 ms per row that a kill's interrupt does not cut short, like a
+    * write blocked in I/O. */
+  private def slowRow(k: Long): Boolean = {
+    inFlight.incrementAndGet()
+    entered.countDown()
+    val end = System.nanoTime + 300L * 1000 * 1000
+    var interrupted = false
+    try {
+      while (System.nanoTime < end)
+        try Thread.sleep(10) catch { case _: InterruptedException => interrupted = true }
+    } finally inFlight.decrementAndGet()
+    if (interrupted) Thread.currentThread.interrupt()
+    true
+  }
+
+  /** Fails once the slow cut is inside a row. */
+  private def failingRow(k: Long): Boolean = {
+    entered.await(30, java.util.concurrent.TimeUnit.SECONDS)
+    throw new IllegalStateException("failing cut")
   }
 }
