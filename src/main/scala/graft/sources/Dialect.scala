@@ -56,11 +56,15 @@ sealed trait Dialect {
     o + l
   }
 
-  /** Native single-statement upsert keyed on `pk`; None = dialect needs the
-    * update-then-insert fallback. `types` are dialect DDL type names aligned
-    * with `cols` (Derby needs typed CASTs on VALUES parameters).
+  /** Native single-statement upsert keyed on `pk`, binding each of `cols`
+    * once, in order, through `VALUES (?, …)`; None = the dialect has none
+    * and writes take the split UPDATE-then-INSERT path.
     */
-  def upsertSql(table: String, cols: Seq[String], types: Seq[String], pk: String): Option[String]
+  def upsertSql(table: String, cols: Seq[String], pk: String): Option[String]
+
+  /** Rename a table (Derby overrides with its RENAME TABLE verb). */
+  def renameTableSql(from: String, to: String): String =
+    s"ALTER TABLE ${quote(from)} RENAME TO ${quote(to)}"
 
   /** Read-side type mapping (reference X5: per-driver type-tag registry,
     * fabrix-sql/src/executor/types.rs:71-83 — DB type name → engine type);
@@ -121,7 +125,7 @@ object Dialect {
 
   case object Ansi extends Dialect {
     val name = "ansi"
-    def upsertSql(table: String, cols: Seq[String], types: Seq[String], pk: String): Option[String] = None
+    def upsertSql(table: String, cols: Seq[String], pk: String): Option[String] = None
   }
 
   /** MySQL (fabrix-sql/src/builder mysql dialect). Note: the pushdown
@@ -156,7 +160,7 @@ object Dialect {
       s"ALTER TABLE ${quote(table)} DROP FOREIGN KEY ${quote(fkName)}"
     override def limitClause(limit: Option[Long], offset: Option[Long]): String =
       limit.map(n => s" LIMIT $n").getOrElse("") + offset.map(n => s" OFFSET $n").getOrElse("")
-    def upsertSql(table: String, cols: Seq[String], types: Seq[String], pk: String): Option[String] = {
+    def upsertSql(table: String, cols: Seq[String], pk: String): Option[String] = {
       val collist = cols.map(quote).mkString(", ")
       val ph = cols.map(_ => "?").mkString(", ")
       val updates = cols.filter(_ != pk).map(c => s"${quote(c)} = VALUES(${quote(c)})").mkString(", ")
@@ -171,7 +175,7 @@ object Dialect {
       s"ALTER TABLE ${quote(table)} ALTER COLUMN ${quote(column)} TYPE $typeName"
     override def limitClause(limit: Option[Long], offset: Option[Long]): String =
       limit.map(n => s" LIMIT $n").getOrElse("") + offset.map(n => s" OFFSET $n").getOrElse("")
-    def upsertSql(table: String, cols: Seq[String], types: Seq[String], pk: String): Option[String] = {
+    def upsertSql(table: String, cols: Seq[String], pk: String): Option[String] = {
       val collist = cols.map(quote).mkString(", ")
       val ph = cols.map(_ => "?").mkString(", ")
       val updates = cols.filter(_ != pk).map(c => s"${quote(c)} = EXCLUDED.${quote(c)}").mkString(", ")
@@ -188,19 +192,21 @@ object Dialect {
       throw new UnsupportedOperationException("SQLite has no DROP CONSTRAINT; recreate the table")
     override def limitClause(limit: Option[Long], offset: Option[Long]): String =
       limit.map(n => s" LIMIT $n").getOrElse("") + offset.map(n => s" OFFSET $n").getOrElse("")
-    def upsertSql(table: String, cols: Seq[String], types: Seq[String], pk: String): Option[String] =
-      Postgres.upsertSql(table, cols, types, pk).map(_.replace("EXCLUDED.", "excluded."))
+    def upsertSql(table: String, cols: Seq[String], pk: String): Option[String] =
+      Postgres.upsertSql(table, cols, pk).map(_.replace("EXCLUDED.", "excluded."))
   }
 
   /** Apache Derby — the embedded DB shipped with Spark, our offline
     * integration target. ANSI FETCH limits. Derby's MERGE only accepts base
     * tables as source, so upsert uses the generic split path (semi/anti
-    * split + batched INSERT/UPDATE — the reference's own physical plan,
+    * split + batched UPDATE/INSERT — the reference's own physical plan,
     * ec.rs:518-538).
     */
   case object Derby extends Dialect {
     val name = "derby"
-    def upsertSql(table: String, cols: Seq[String], types: Seq[String], pk: String): Option[String] = None
+    def upsertSql(table: String, cols: Seq[String], pk: String): Option[String] = None
+    override def renameTableSql(from: String, to: String): String =
+      s"RENAME TABLE ${quote(from)} TO ${quote(to)}"
   }
 
   def infer(url: String): Dialect =

@@ -105,18 +105,26 @@ object Parquet {
         col("_metadata.row_index").as("__row_idx")): _*)
   }
 
-  def write(df: DataFrame, path: String, opts: ParquetWriteOptions = ParquetWriteOptions()): Unit = {
+  def write(df: DataFrame, path: String, opts: ParquetWriteOptions = ParquetWriteOptions()): Unit =
+    ColumnarWriter.write(df, path, "parquet", opts.compression, opts.partitionBy, opts.sortBy)
+}
+
+/** The one columnar-file writer behind [[Parquet.write]] and [[Orc.write]]:
+  * overwrite `path` in `format`, Hive-partitioned by `partitionBy`, each
+  * file sorted by `sortBy`.
+  */
+private object ColumnarWriter {
+  def write(df: DataFrame, path: String, format: String, compression: String,
+            partitionBy: Seq[String], sortBy: Seq[String]): Unit = {
     // partition cols must LEAD the sort: FileFormatWriter requires ordering
     // by the partition columns and inserts its own sort (destroying sortBy
     // order within files) unless the incoming order already satisfies it
     val sorted =
-      if (opts.sortBy.nonEmpty)
-        df.sortWithinPartitions(
-          (opts.partitionBy ++ opts.sortBy).map(org.apache.spark.sql.functions.col): _*)
+      if (sortBy.nonEmpty) df.sortWithinPartitions((partitionBy ++ sortBy).map(col): _*)
       else df
-    var w = sorted.write.option("compression", opts.compression).mode("overwrite")
-    if (opts.partitionBy.nonEmpty) w = w.partitionBy(opts.partitionBy: _*)
-    w.parquet(path)
+    var w = sorted.write.format(format).option("compression", compression).mode("overwrite")
+    if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
+    w.save(path)
   }
 }
 
@@ -130,18 +138,8 @@ object Orc {
   def read(spark: SparkSession, path: String, opts: OrcReadOptions = OrcReadOptions()): DataFrame =
     ReaderCommon.finish(spark.read.orc(path), opts.columns, opts.projection, opts.nRows, opts.rowCountCol)
 
-  def write(df: DataFrame, path: String, opts: OrcWriteOptions = OrcWriteOptions()): Unit = {
-    // partition cols lead the sort for the same FileFormatWriter reason as
-    // the parquet writer: an incoming order that already satisfies the
-    // required partition ordering avoids the writer's own inserted sort
-    val sorted =
-      if (opts.sortBy.nonEmpty)
-        df.sortWithinPartitions((opts.partitionBy ++ opts.sortBy).map(col): _*)
-      else df
-    var w = sorted.write.option("compression", opts.compression).mode("overwrite")
-    if (opts.partitionBy.nonEmpty) w = w.partitionBy(opts.partitionBy: _*)
-    w.orc(path)
-  }
+  def write(df: DataFrame, path: String, opts: OrcWriteOptions = OrcWriteOptions()): Unit =
+    ColumnarWriter.write(df, path, "orc", opts.compression, opts.partitionBy, opts.sortBy)
 }
 
 /** JSON source/sink (reference S5/S6). */

@@ -2,15 +2,17 @@ package graft.sources
 
 import graft.adt.{Delete, Select}
 import graft.exec.SqlRenderer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.{Connection, DriverManager, PreparedStatement, ResultSet, Statement}
 
 /** JDBC source/sink/DDL executor (reference S8/S9/S13/S14,
   * fabrix-sql/src/executor/ec.rs). Reads push the whole rendered Select down
   * as a subquery (the DB optimizes, like the reference's sea-query path);
-  * writes follow the SaveStrategy state machine with a staged, swap-committed
-  * Replace and a dialect-native batched Upsert executed per partition —
+  * writes follow the SaveStrategy state machine. Every row write — INSERT,
+  * UPDATE or the dialect-native upsert — runs through one per-partition
+  * batch loop ([[JdbcExecutor.batchPerPartition]]); Replace stages into a
+  * side table and swaps it in with one driver-side transaction —
   * distributed where Spark can be, transactional where only the driver can
   * be (SURVEY §4 transactionality row).
   */
@@ -23,6 +25,10 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
     try f(c) finally c.close()
   }
 
+  private def withStatement[A](f: Statement => A): A = withConn { c =>
+    val st = c.createStatement(); try f(st) finally st.close()
+  }
+
   // -------------------------------------------------------- introspection --
 
   /** Quoted identifiers preserve case, so metadata lookups try the exact
@@ -31,29 +37,38 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
   private def metaLookup[A](name: String)(f: (Connection, String) => Option[A]): Option[A] =
     withConn { c => f(c, name).orElse(f(c, name.toUpperCase)) }
 
+  /** Table types of user tables: JDBC's `TABLE`, and the information
+    * schema's `BASE TABLE` that some drivers (DuckDB) report instead.
+    */
+  private val tableTypes = Array("TABLE", "BASE TABLE")
+
   /** S13: information-schema-equivalent via JDBC DatabaseMetaData. */
   def tableExists(name: String): Boolean =
     metaLookup(name) { (c, n) =>
-      val rs = c.getMetaData.getTables(null, null, n, Array("TABLE"))
+      val rs = c.getMetaData.getTables(null, null, n, tableTypes)
       try { if (rs.next()) Some(()) else None } finally rs.close()
     }.isDefined
 
   def listTables(): Seq[String] = withConn { c =>
-    val rs = c.getMetaData.getTables(null, null, "%", Array("TABLE"))
+    val rs = c.getMetaData.getTables(null, null, "%", tableTypes)
     val b = Seq.newBuilder[String]
     while (rs.next()) b += rs.getString("TABLE_NAME")
     rs.close(); b.result().sorted
   }
 
-  def tableSchema(name: String): Seq[(String, String)] =
+  /** One decoded value per column of `name`, in table order (Nil when the
+    * table has no columns or does not exist).
+    */
+  private def columns[A](name: String)(decode: ResultSet => A): Seq[A] =
     metaLookup(name) { (c, n) =>
       val rs = c.getMetaData.getColumns(null, null, n, "%")
-      val b = Seq.newBuilder[(String, String)]
-      while (rs.next()) b += ((rs.getString("COLUMN_NAME"), rs.getString("TYPE_NAME")))
-      rs.close()
-      val r = b.result()
-      if (r.nonEmpty) Some(r) else None
+      val b = Seq.newBuilder[A]
+      try while (rs.next()) b += decode(rs) finally rs.close()
+      Some(b.result()).filter(_.nonEmpty)
     }.getOrElse(Nil)
+
+  def tableSchema(name: String): Seq[(String, String)] =
+    columns(name)(rs => (rs.getString("COLUMN_NAME"), rs.getString("TYPE_NAME")))
 
   /** Table schema as Spark StructType via the dialect's read-side type map
     * (X5 — the reference's per-driver type-tag registry, types.rs:127-210).
@@ -61,21 +76,14 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
     * metadata reports a bare "DECIMAL" type name).
     */
   def tableSchemaSpark(name: String): StructType =
-    metaLookup(name) { (c, n) =>
-      val rs = c.getMetaData.getColumns(null, null, n, "%")
-      val b = Seq.newBuilder[StructField]
-      while (rs.next()) {
-        val tn = rs.getString("TYPE_NAME").toUpperCase
-        val full =
-          if ((tn == "DECIMAL" || tn == "NUMERIC") && !tn.contains("("))
-            s"$tn(${rs.getInt("COLUMN_SIZE")},${rs.getInt("DECIMAL_DIGITS")})"
-          else tn
-        b += StructField(rs.getString("COLUMN_NAME"), dialect.sparkTypeFor(full), nullable = true)
-      }
-      rs.close()
-      val r = b.result()
-      if (r.nonEmpty) Some(StructType(r)) else None
-    }.getOrElse(StructType(Nil))
+    StructType(columns(name) { rs =>
+      val tn = rs.getString("TYPE_NAME").toUpperCase
+      val full =
+        if ((tn == "DECIMAL" || tn == "NUMERIC") && !tn.contains("("))
+          s"$tn(${rs.getInt("COLUMN_SIZE")},${rs.getInt("DECIMAL_DIGITS")})"
+        else tn
+      StructField(rs.getString("COLUMN_NAME"), dialect.sparkTypeFor(full), nullable = true)
+    })
 
   /** S13: get_primary_key (query_ddl.rs:201-243). */
   def primaryKey(name: String): Option[String] =
@@ -87,9 +95,7 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
 
   // ------------------------------------------------------------------ DDL --
 
-  def execute(sql: String): Unit = withConn { c =>
-    val st = c.createStatement(); try st.execute(sql) finally st.close()
-  }
+  def execute(sql: String): Unit = withStatement(_.execute(sql))
 
   /** Identifier quoting: table/column names can originate from untrusted
     * file headers (XlIngest → write), so EVERY rendered statement passes
@@ -110,10 +116,7 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
   def dropTable(name: String): Unit = execute(s"DROP TABLE ${q(name)}")
   def truncate(name: String): Unit = execute(s"TRUNCATE TABLE ${q(name)}")
   def renameTable(oldName: String, newName: String): Unit =
-    dialect match {
-      case Dialect.Derby => execute(s"RENAME TABLE ${q(oldName)} TO ${q(newName)}")
-      case _ => execute(s"ALTER TABLE ${q(oldName)} RENAME TO ${q(newName)}")
-    }
+    execute(dialect.renameTableSql(oldName, newName))
   def createIndex(table: String, column: String, indexName: String): Unit =
     execute(s"CREATE INDEX ${q(indexName)} ON ${q(table)} (${q(column)})")
   def dropIndex(indexName: String): Unit = execute(s"DROP INDEX ${q(indexName)}")
@@ -151,8 +154,7 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
 
   /** Numeric MIN/MAX bounds of a column, for partitioned reads. */
   private def columnBounds(table: String, column: String): Option[(Long, Long)] =
-    withConn { c =>
-      val st = c.createStatement()
+    withStatement { st =>
       try {
         val rs = st.executeQuery(
           s"SELECT MIN(${q(column)}), MAX(${q(column)}) FROM ${q(table)}")
@@ -165,7 +167,6 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
           }
         } finally rs.close()
       } catch { case _: java.sql.SQLException => None } // non-numeric column
-      finally st.close()
     }
 
   /** Table read, partitioned across connections when a numeric partition
@@ -208,26 +209,20 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
     * by design, exactly like the reference's loader — for distributed reads
     * use [[readTable]]/[[select]].
     */
-  def fetchAllCustom[A](sql: String)(decode: java.sql.ResultSet => A): Vector[A] =
-    withConn { c =>
-      val st = c.createStatement()
+  def fetchAllCustom[A](sql: String)(decode: ResultSet => A): Vector[A] =
+    withStatement { st =>
+      val rs = st.executeQuery(sql)
       try {
-        val rs = st.executeQuery(sql)
-        try {
-          val b = Vector.newBuilder[A]
-          while (rs.next()) b += decode(rs)
-          b.result()
-        } finally rs.close()
-      } finally st.close()
+        val b = Vector.newBuilder[A]
+        while (rs.next()) b += decode(rs)
+        b.result()
+      } finally rs.close()
     }
 
   /** Pushdown Delete (DELETE WHERE) — driver-side statement like the
     * reference (mutation_dml.rs delete).
     */
-  def delete(del: Delete): Int = withConn { c =>
-    val st = c.createStatement()
-    try st.executeUpdate(SqlRenderer.delete(del)) finally st.close()
-  }
+  def delete(del: Delete): Int = withStatement(_.executeUpdate(SqlRenderer.delete(del)))
 
   // ---------------------------------------------------------------- write --
 
@@ -250,60 +245,32 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
       createTable(staging, df.schema)
       appendInto(df, staging)
       val hadTable = tableExists(table)
-      withConn { c =>
+      withStatement { st =>
+        val c = st.getConnection
         c.setAutoCommit(false)
-        val st = c.createStatement()
         try {
           if (hadTable) st.execute(s"DROP TABLE ${q(table)}")
-          dialect match {
-            case Dialect.Derby => st.execute(s"RENAME TABLE ${q(staging)} TO ${q(table)}")
-            case _ => st.execute(s"ALTER TABLE ${q(staging)} RENAME TO ${q(table)}")
-          }
+          st.execute(dialect.renameTableSql(staging, table))
           c.commit()
         } catch { case e: Throwable => c.rollback(); throw e }
-        finally st.close()
       }
 
     case SaveStrategy.Upsert(pk) =>
       if (!tableExists(table)) { createTable(table, df.schema, Some(pk)); appendInto(df, table) }
-      else {
-        val cols = df.schema.fieldNames.toSeq
-        val types = df.schema.fields.map(f => dialect.typeName(f.dataType)).toSeq
-        dialect.upsertSql(table, cols, types, pk) match {
-          case Some(sql) =>
-            // dialect-native single-statement upsert, batched per partition
-            val schema = df.schema
-            val u = url
-            val reps = sql.count(_ == '?') / schema.size
-            df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-              val c = DriverManager.getConnection(u)
-              try {
-                c.setAutoCommit(false)
-                val ps = c.prepareStatement(sql)
-                var n = 0
-                rows.foreach { r =>
-                  var off = 0
-                  (0 until reps).foreach { _ =>
-                    JdbcExecutor.bindRow(ps, r, schema, off); off += schema.size
-                  }
-                  ps.addBatch(); n += 1
-                  if (n % 500 == 0) ps.executeBatch()
-                }
-                ps.executeBatch(); c.commit(); ps.close()
-              } catch { case e: Throwable => c.rollback(); throw e }
-              finally c.close()
-            }
-          case None =>
-            // the reference's physical plan (ec.rs:518-538) distributed:
-            // existing-id semi/anti split, then batched INSERT + UPDATE
-            val spark = df.sparkSession
-            val existingIds = readTable(spark, table).select(pk)
-            val cond = df(pk) === existingIds(pk)
-            val inserts = df.join(existingIds, cond, "left_anti")
-            val updates = df.join(existingIds, cond, "left_semi")
-            appendInto(inserts, table)
-            batchedUpdate(updates, table, pk)
-        }
+      else dialect.upsertSql(table, df.schema.fieldNames.toSeq, pk) match {
+        case Some(sql) =>
+          // dialect-native single-statement upsert, batched per partition
+          JdbcExecutor.batchPerPartition(url, df, sql)
+        case None =>
+          // the reference's physical plan (ec.rs:518-538) distributed:
+          // existing-id semi/anti split, then batched UPDATE + INSERT. The
+          // UPDATE runs first: it leaves the table's key set as it was, so
+          // the anti-join that re-reads the table still sees only the old
+          // keys (after an INSERT it would also UPDATE every new row)
+          val existingIds = readTable(df.sparkSession, table).select(pk)
+          val cond = df(pk) === existingIds(pk)
+          batchedUpdate(df.join(existingIds, cond, "left_semi"), table, pk)
+          appendInto(df.join(existingIds, cond, "left_anti"), table)
       }
   }
 
@@ -311,29 +278,11 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
     * UPDATE per row, mutation_dml.rs:44-84; ours batches them per partition).
     */
   private def batchedUpdate(df: DataFrame, table: String, pk: String): Unit = {
-    val schema = df.schema
-    val nonPk = schema.fields.filter(_.name != pk)
-    val sets = nonPk.map(f => s"${q(f.name)} = ?").mkString(", ")
-    val sql = s"UPDATE ${q(table)} SET $sets WHERE ${q(pk)} = ?"
-    // bind order: non-pk fields then pk — build a reordered projection
-    val reordered = df.select((nonPk.map(f => df(f.name)) :+ df(pk)).toIndexedSeq: _*)
-    val bindSchema = reordered.schema
-    val u = url
-    reordered.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      val c = DriverManager.getConnection(u)
-      try {
-        c.setAutoCommit(false)
-        val ps = c.prepareStatement(sql)
-        var n = 0
-        rows.foreach { r =>
-          JdbcExecutor.bindRow(ps, r, bindSchema, 0)
-          ps.addBatch(); n += 1
-          if (n % 500 == 0) ps.executeBatch()
-        }
-        ps.executeBatch(); c.commit(); ps.close()
-      } catch { case e: Throwable => c.rollback(); throw e }
-      finally c.close()
-    }
+    val nonPk = df.schema.fieldNames.filter(_ != pk)
+    val sets = nonPk.map(n => s"${q(n)} = ?").mkString(", ")
+    // bind order: non-pk fields then pk — a reordered projection
+    JdbcExecutor.batchPerPartition(url, df.select((nonPk :+ pk).map(df(_)).toIndexedSeq: _*),
+      s"UPDATE ${q(table)} SET $sets WHERE ${q(pk)} = ?")
   }
 
   /** Distributed batched INSERT (per-partition connections, one transaction
@@ -343,19 +292,30 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
     * PK'd table (idempotent) or Replace (staged swap, all-or-nothing).
     */
   private def appendInto(df: DataFrame, table: String): Unit = {
+    val cols = df.schema.fieldNames.map(q).mkString(", ")
+    val ph = df.schema.fieldNames.map(_ => "?").mkString(", ")
+    JdbcExecutor.batchPerPartition(url, df, s"INSERT INTO ${q(table)} ($cols) VALUES ($ph)")
+  }
+}
+
+object JdbcExecutor {
+
+  /** The one JDBC row-write loop: each partition opens one connection and
+    * one transaction, prepares `sql` once, binds every column of `df` in
+    * schema order per row, flushes every 500 rows, commits, and rolls back
+    * on failure. Lives here, not on the executor, so the partition closure
+    * captures only the URL, the SQL and the schema.
+    */
+  private def batchPerPartition(url: String, df: DataFrame, sql: String): Unit = {
     val schema = df.schema
-    val cols = schema.fieldNames.map(q).mkString(", ")
-    val ph = schema.fieldNames.map(_ => "?").mkString(", ")
-    val sql = s"INSERT INTO ${q(table)} ($cols) VALUES ($ph)"
-    val u = url
-    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      val c = DriverManager.getConnection(u)
+    df.foreachPartition { (rows: Iterator[Row]) =>
+      val c = DriverManager.getConnection(url)
       try {
         c.setAutoCommit(false)
         val ps = c.prepareStatement(sql)
         var n = 0
         rows.foreach { r =>
-          JdbcExecutor.bindRow(ps, r, schema, 0)
+          bindRow(ps, r, schema)
           ps.addBatch(); n += 1
           if (n % 500 == 0) ps.executeBatch()
         }
@@ -364,14 +324,11 @@ final class JdbcExecutor(url: String, dialect: Dialect) {
       finally c.close()
     }
   }
-}
 
-object JdbcExecutor {
-  private[sources] def bindRow(ps: PreparedStatement, r: org.apache.spark.sql.Row,
-                               schema: StructType, offset: Int): Unit = {
+  private def bindRow(ps: PreparedStatement, r: Row, schema: StructType): Unit = {
     schema.fields.zipWithIndex.foreach { case (f, i) =>
       val v = r.get(i)
-      val idx = offset + i + 1
+      val idx = i + 1
       if (v == null) ps.setNull(idx, java.sql.Types.NULL)
       else f.dataType match {
         case BooleanType      => ps.setBoolean(idx, v.asInstanceOf[Boolean])

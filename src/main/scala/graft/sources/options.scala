@@ -98,7 +98,16 @@ final case class JsonWriteOptions(format: JsonFormat = JsonFormat.JsonLines)
 /** Write-time conflict policy (fabrix-sql/src/builder/sql_adt.rs:893-900
   * SaveStrategy) — shared by every sink (file store, JDBC).
   */
-sealed trait SaveStrategy
+sealed trait SaveStrategy {
+  /** The strategy for every chunk after the first of a chunked write
+    * (xl_db.rs:217-239): the first chunk created the table, so Replace and
+    * FailIfExists become Append; Append and Upsert stay.
+    */
+  def laterChunk: SaveStrategy = this match {
+    case SaveStrategy.Replace | SaveStrategy.FailIfExists => SaveStrategy.Append
+    case s => s
+  }
+}
 object SaveStrategy {
   case object FailIfExists extends SaveStrategy
   /** drop + recreate atomically (ec.rs:602-651 transactional replace) */

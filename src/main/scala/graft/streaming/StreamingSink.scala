@@ -33,11 +33,10 @@ object StreamingSink {
       throw new IllegalStateException(s"table $table already exists")
     stream.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val effective = strategy match {
-          case SaveStrategy.Replace | SaveStrategy.FailIfExists =>
-            if (batchId == 0) SaveStrategy.Replace else SaveStrategy.Append
-          case other => other
-        }
+        val effective =
+          if (batchId > 0) strategy.laterChunk
+          else if (strategy == SaveStrategy.FailIfExists) SaveStrategy.Replace
+          else strategy
         store.write(batch, table, effective)
       }
       .start()

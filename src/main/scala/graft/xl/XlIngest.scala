@@ -97,8 +97,8 @@ object XlIngest {
 
   /** Chunked ingest state machine (reference xl_db.rs:217-289): the FIRST
     * chunk applies the caller's strategy (Replace / FailIfExists), later
-    * chunks degrade to Append / keep Upsert — so a streaming ingest creates
-    * the table once then appends.
+    * chunks take [[SaveStrategy.laterChunk]] (Append / keep Upsert) — so a
+    * streaming ingest creates the table once then appends.
     *
     * `transformCell` is the per-cell UDF hook (X1, reference
     * XlConsumer::transform, fabrix-xl/src/ec.rs:49-55) applied to every cell
@@ -134,11 +134,7 @@ object XlIngest {
             require(i >= 0 && i < df.columns.length, s"index position $i out of range")
             graft.core.Fabrix(df, df.columns(i))
         }
-        val eff = strategy match {
-          case SaveStrategy.Replace | SaveStrategy.FailIfExists if chunkIdx > 0 => SaveStrategy.Append
-          case s => s
-        }
-        sink(fx, eff)
+        sink(fx, if (chunkIdx == 0) strategy else strategy.laterChunk)
         consumed += batch.size
       }
       chunkIdx += 1

@@ -120,49 +120,6 @@ final class XlsxReader(path: String) extends AutoCloseable {
     }.getOrElse(Vector.empty)
   }
 
-  // ---- styles: cellXfs index → is-date / is-time format ---------------------
-  /** builtin date numFmt ids (ECMA-376 §18.8.30) */
-  private def builtinDate(id: Int): Boolean = (id >= 14 && id <= 22) || (id >= 45 && id <= 47)
-  private def builtinTimeOnly(id: Int): Boolean = (id >= 18 && id <= 21) || (id >= 45 && id <= 47)
-
-  private lazy val styleKinds: Vector[Int] = { // 0=none, 1=date, 2=time, 3=datetime
-    open("xl/styles.xml").map { in =>
-      val r = xif.createXMLStreamReader(in)
-      val custom = mutable.Map[Int, String]()
-      val xfs = Vector.newBuilder[Int]
-      var inCellXfs = false
-      while (r.hasNext) {
-        r.next() match {
-          case XMLStreamConstants.START_ELEMENT => r.getLocalName match {
-            case "numFmt" =>
-              val id = attr(r, "numFmtId").flatMap(_.toIntOption).getOrElse(-1)
-              custom(id) = attr(r, "formatCode").getOrElse("")
-            case "cellXfs" => inCellXfs = true
-            case "xf" if inCellXfs =>
-              val id = attr(r, "numFmtId").flatMap(_.toIntOption).getOrElse(0)
-              val kind =
-                if (custom.contains(id)) {
-                  val code = custom(id).toLowerCase.replaceAll("\\[[^]]*\\]", "")
-                  val hasDate = code.exists(c => c == 'y' || c == 'd') || code.contains("mmm")
-                  val hasTime = code.exists(c => c == 'h' || c == 's')
-                  if (hasDate && hasTime) 3 else if (hasTime) 2 else if (hasDate) 1 else 0
-                } else if (id == 22) 3
-                else if (builtinTimeOnly(id)) 2
-                else if (builtinDate(id)) 1
-                else 0
-              xfs += kind
-            case _ =>
-          }
-          case XMLStreamConstants.END_ELEMENT if r.getLocalName == "cellXfs" =>
-            inCellXfs = false
-          case _ =>
-        }
-      }
-      r.close(); in.close()
-      xfs.result()
-    }.getOrElse(Vector.empty)
-  }
-
   // ---- serial date conversion (1900 system epoch 1899-12-30; 1904 system) --
   private def serialToDateTime(serial: Double): java.time.LocalDateTime = {
     val epoch = if (date1904) java.time.LocalDate.of(1904, 1, 1)
@@ -208,7 +165,7 @@ final class XlsxReader(path: String) extends AutoCloseable {
     sb.toString
   }
 
-  // ---- styles: cellXfs index → number-format code string --------------------
+  // ---- styles: cellXfs index → number-format code and date kind -----------
   /** Builtin numFmt codes (ECMA-376 §18.8.30), mirroring the reference's
     * standard_styles table (fabrix-xl/src/wb.rs:512-519).
     */
@@ -221,10 +178,11 @@ final class XlsxReader(path: String) extends AutoCloseable {
     39 -> "#,##0.00;(#,##0.00)", 40 -> "#,##0.00;[Red](#,##0.00)",
     45 -> "mm:ss", 46 -> "[h]:mm:ss", 47 -> "mmss.0", 48 -> "##0.0E+0", 49 -> "@")
 
-  /** Per cellXfs xf: the number-format code string a cell's `s` attribute
-    * resolves to (custom formatCode wins over builtin; unknown ids → "" so
-    * indexes stay aligned). This is the reference XlCell's `style` field
-    * (fabrix-xl/src/ws.rs:38-39 via wb.rs find_styles).
+  /** Per cellXfs xf, from one walk of styles.xml: the number-format code
+    * string a cell's `s` attribute resolves to (custom formatCode wins over
+    * builtin; unknown ids → "" so indexes stay aligned). This is the
+    * reference XlCell's `style` field (fabrix-xl/src/ws.rs:38-39 via wb.rs
+    * find_styles).
     */
   private lazy val styleCodes: Vector[String] = {
     open("xl/styles.xml").map { in =>
@@ -252,6 +210,18 @@ final class XlsxReader(path: String) extends AutoCloseable {
       r.close(); in.close()
       xfs.result()
     }.getOrElse(Vector.empty)
+  }
+
+  /** Per cellXfs xf: 0=none, 1=date, 2=time, 3=datetime, read off its
+    * format code with `[…]` sections (colours, elapsed-hour brackets)
+    * stripped: y, d or mmm mark a date, h or s a time. Every builtin date
+    * and time id (14-22, 45-47) classifies by its code in the table above.
+    */
+  private lazy val styleKinds: Vector[Int] = styleCodes.map { fmt =>
+    val code = fmt.toLowerCase.replaceAll("\\[[^]]*\\]", "")
+    val hasDate = code.exists(c => c == 'y' || c == 'd') || code.contains("mmm")
+    val hasTime = code.exists(c => c == 'h' || c == 's')
+    if (hasDate && hasTime) 3 else if (hasTime) 2 else if (hasDate) 1 else 0
   }
 
   private def styleOf(s: Int): String =

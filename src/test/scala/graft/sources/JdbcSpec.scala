@@ -37,6 +37,38 @@ class JdbcSpec extends SparkSpec {
     assert(got.toSeq == Seq((1L, "a", 10.5), (2L, "B", 99.0), (3L, "c", 30.5), (4L, "d", 40.5)))
   }
 
+  test("split-path upsert UPDATEs only the keys that already existed") {
+    // Derby has no native upsert: the write splits into an UPDATE batch for
+    // existing keys and an INSERT batch for new ones. A row trigger logs
+    // every UPDATEd id, so a new key that is inserted and then UPDATEd
+    // again shows up in the log.
+    ex.write(df, "t8", SaveStrategy.Upsert("id"))
+    ex.execute("CREATE TABLE \"t8_log\" (\"id\" BIGINT)")
+    ex.execute("CREATE TRIGGER \"t8_upd\" AFTER UPDATE ON \"t8\" REFERENCING NEW AS N " +
+      "FOR EACH ROW INSERT INTO \"t8_log\" VALUES (N.\"id\")")
+    val up = Seq((2L, "B", 99.0), (4L, "d", 40.5), (5L, "e", 50.5)).toDF("id", "s", "v")
+    ex.write(up, "t8", SaveStrategy.Upsert("id"))
+    val logged = ex.fetchAllCustom("SELECT \"id\" FROM \"t8_log\" ORDER BY 1")(_.getLong(1))
+    assert(logged == Vector(2L))
+    val got = ex.fetchAllCustom("SELECT \"id\", \"s\", \"v\" FROM \"t8\" ORDER BY 1")(
+      rs => (rs.getLong(1), rs.getString(2), rs.getDouble(3)))
+    assert(got == Vector((1L, "a", 10.5), (2L, "B", 99.0), (3L, "c", 30.5),
+      (4L, "d", 40.5), (5L, "e", 50.5)))
+  }
+
+  test("native ON CONFLICT upsert through the Postgres dialect on DuckDB") {
+    val duck = new JdbcExecutor(
+      s"jdbc:duckdb:${Files.createTempDirectory("graft-duck")}/db", Dialect.Postgres)
+    duck.write(df, "u1", SaveStrategy.Upsert("id")) // creates with PK
+    assert(duck.tableExists("u1") && duck.listTables() == Seq("u1"))
+    assert(duck.primaryKey("u1").contains("id"))
+    duck.write(Seq((2L, "B", 99.0), (4L, "d", 40.5)).toDF("id", "s", "v"), "u1",
+      SaveStrategy.Upsert("id"))
+    val got = duck.fetchAllCustom("SELECT \"id\", \"s\", \"v\" FROM \"u1\" ORDER BY 1")(
+      rs => (rs.getLong(1), rs.getString(2), rs.getDouble(3)))
+    assert(got == Vector((1L, "a", 10.5), (2L, "B", 99.0), (3L, "c", 30.5), (4L, "d", 40.5)))
+  }
+
   test("select pushdown: filter + agg rendered to the DB") {
     ex.write(df, "t3", SaveStrategy.Replace)
     val sel = Select(

@@ -113,6 +113,40 @@ class XlsxSpec extends SparkSpec {
     r.close()
   }
 
+  test("custom date, time and datetime numFmts type their cells") {
+    val path = tmp("fmt.xlsx")
+    val zos = new ZipOutputStream(new java.io.FileOutputStream(path))
+    def entry(n: String, c: String): Unit = {
+      zos.putNextEntry(new ZipEntry(n)); zos.write(c.getBytes("UTF-8")); zos.closeEntry()
+    }
+    entry("xl/workbook.xml",
+      """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
+        |<sheets><sheet name="s1" sheetId="1" r:id="rId1"/></sheets></workbook>""".stripMargin)
+    entry("xl/_rels/workbook.xml.rels",
+      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+        |<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/></Relationships>""".stripMargin)
+    entry("xl/styles.xml",
+      """<styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
+        |<numFmts count="3"><numFmt numFmtId="164" formatCode="yyyy-mm-dd"/>
+        |<numFmt numFmtId="165" formatCode="hh:mm:ss"/><numFmt numFmtId="166" formatCode="yyyy-mm-dd hh:mm"/></numFmts>
+        |<cellXfs count="4"><xf numFmtId="0"/><xf numFmtId="164"/><xf numFmtId="165"/><xf numFmtId="166"/></cellXfs></styleSheet>""".stripMargin)
+    // serial 44256 = 2021-03-01; .75 = 18:00
+    entry("xl/worksheets/sheet1.xml",
+      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>
+        |<row r="1"><c r="A1" s="1"><v>44256</v></c><c r="B1" s="2"><v>0.75</v></c><c r="C1" s="3"><v>44256.75</v></c><c r="D1"><v>7</v></c></row>
+        |</sheetData></worksheet>""".stripMargin)
+    zos.close()
+    val r = new XlsxReader(path)
+    assert(r.rowBatches("s1").toVector.flatten.head == Vector(
+      ExcelValue.Date(java.time.LocalDate.of(2021, 3, 1)),
+      ExcelValue.Time(java.time.LocalTime.of(18, 0)),
+      ExcelValue.DateTime(java.time.LocalDateTime.of(2021, 3, 1, 18, 0)),
+      ExcelValue.Num(7.0)))
+    assert(r.cellBatches("s1").toVector.flatten.head.map(_.style) ==
+      Vector("yyyy-mm-dd", "hh:mm:ss", "yyyy-mm-dd hh:mm", ""))
+    r.close()
+  }
+
   test("sparse rows are null-filled by cell reference") {
     val path = tmp("sparse.xlsx")
     XlsxWriter.write(path, None, Iterator(Seq("a", null, "c"), Seq(null, "b", null)))
